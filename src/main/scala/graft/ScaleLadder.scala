@@ -156,7 +156,7 @@ object ScaleLadder {
         .localCheckpoint(true)
       val sec = (1 to passes).map(_ => time(force(
         Similarity.hierAssignCentroids(vecs, "vec_id", "qv", cents,
-          coarse, nprobeC = 2)))).min
+          coarse, nprobeCs = Seq(2))))).min
       Seq(vecs, cents, coarse).foreach(_.unpersist())
       sec
     }

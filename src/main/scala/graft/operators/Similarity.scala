@@ -21,6 +21,16 @@ import graft.functions.PortableHash
   *     the only shape that works: bucketing is map-only, candidate
   *     generation is an equi-join on (table, bucket), and the exact
   *     re-rank touches only candidates.
+  *
+  * The indexed ANN path has one kernel per stage: assign
+  * ([[ivfAssignCentroids]], [[hierAssignCentroids]]), shortlist
+  * ([[ivfPqSearch]], [[ivfPqResidualSearch]]), rerank ([[rerankExact]]),
+  * rank ([[nnGraphRank]]) and traverse ([[graphBeamSearch]]). Each takes
+  * `keys`, a sweep's branch columns: empty is the single-configuration
+  * call and adds no column and no partition key; otherwise every window,
+  * aggregation and join is keyed by them too, so each branch's rows are
+  * a one-branch call's while the stage runs once for the whole sweep.
+  * Width knobs branch through [[rankPrefix]].
   */
 object Similarity {
 
@@ -40,6 +50,42 @@ object Similarity {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  /** Squared L2 by the dot identity, |a|² − 2a·b + |b|² — exact over
+    * integer-quantized coordinates, so the double is an exact integer.
+    * Deliberately the composable dot tree and not `vec_l2sq_long`,
+    * whose wrap-on-overflow behaviour is a separately pinned
+    * divergence. */
+  def l2sq(a: Column, b: Column): Column =
+    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
+
+  /** The rank-prefix cut every ANN stage shares: keep the rows of a
+    * `ranked` frame whose `rank` is within a width.
+    *
+    * With no `keys` this is the single-configuration cut
+    * `rank ≤ widths.head`. With one key it is a width SWEEP: row_number
+    * ranks with a deterministic tie-break, so each width's rows are a
+    * prefix of the widest width's, and the frame is cut once at the
+    * widest width, tagged with every width as the branch column
+    * `keys.head`, and cut per branch — per-branch rows identical to a
+    * single-width call, ranking paid once for the whole sweep.
+    *
+    * Widths are checked here, at plan construction, for every kernel:
+    * an empty sweep or a zero width fails with IllegalArgumentException
+    * instead of building a plan that returns no rows. */
+  def rankPrefix(ranked: DataFrame, rank: Column, widths: Seq[Int],
+      keys: Seq[String] = Nil): DataFrame = {
+    require(widths.nonEmpty && widths.forall(_ >= 1),
+      s"rank-prefix widths must be non-empty and each >= 1, got $widths")
+    require(if (keys.isEmpty) widths.length == 1 else keys.length == 1,
+      "a single-configuration call takes one width and a sweep one " +
+        s"branch key, got widths $widths and keys $keys")
+    if (keys.isEmpty) ranked.filter(rank <= widths.head)
+    else ranked.filter(rank <= widths.max)
+      .withColumn(keys.head,
+        explode(array(widths.map(w => lit(w.toLong)): _*)))
+      .filter(rank <= col(keys.head))
+  }
 
   /** Deterministic hyperplane `p` of table `t`: 64 integer coordinates in
     * [-1000, 1000] derived from MD5 seeds. */
@@ -147,31 +193,22 @@ object Similarity {
 
   /** IVF (inverted-file) ANN — the other classic scale path next to LSH.
     *
-    * Centroids are a deterministic id-sample of the corpus (no RNG, no
-    * k-means iterations — reproducible in the oracle; a production build
-    * would train centroids offline and broadcast them the same way).
-    * Assignment = argmin of exact squared L2 distance to the broadcast
-    * centroid set: map-only over the corpus, ties broken by centroid id.
-    * Queries probe the `nprobe` nearest centroid cells and re-rank only
-    * those cells' members by exact cosine. Shuffle happens once, on the
-    * small (cell_id) key — never an all-pairs join.
-    */
-  def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centroidFilter: Column, nprobe: Int): (DataFrame, DataFrame) =
-    ivfAssignCentroids(corpus, idCol, vecCol,
-      corpus.filter(centroidFilter)
-        .select(col(idCol).as("cent_id"), col(vecCol).as("cent_v")),
-      nprobe)
-
-  /** [[ivfAssign]] against an EXPLICIT centroid frame (`cent_id`,
-    * `cent_v`) — the shape a trained index uses: centroids come out of
-    * [[kmeansTrain]] (or any offline build) and broadcast identically. */
+    * Centroids come as an explicit frame (`cent_id`, `cent_v`) — out of
+    * [[kmeansTrain]], or any deterministic id-sample of the corpus (no
+    * RNG — reproducible in the oracle); they broadcast identically
+    * either way. Assignment = argmin of exact squared L2 distance to
+    * the broadcast centroid set: map-only over the corpus, ties broken
+    * by centroid id. Queries probe the `nprobe` nearest centroid cells
+    * and re-rank only those cells' members by exact cosine. Shuffle
+    * happens once, on the small (cell_id) key — never an all-pairs
+    * join. Returns (assigned (__id, __v, cell_id), probes (query_id,
+    * cell_id)). */
   def ivfAssignCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, nprobe: Int): (DataFrame, DataFrame) = {
     val ranked = ivfAssignRanked(corpus, idCol, vecCol, cents)
     val assigned = ranked.filter(col("__cr") === 1)
       .select(col("__id"), col("__v"), col("cent_id").as("cell_id"))
-    val probes = ranked.filter(col("__cr") <= nprobe)
+    val probes = rankPrefix(ranked, col("__cr"), Seq(nprobe))
       .select(col("__id").as("query_id"), col("cent_id").as("cell_id"))
     (assigned, probes)
   }
@@ -179,20 +216,16 @@ object Similarity {
   /** The full centroid ranking behind [[ivfAssignCentroids]] —
     * (__id, __v, cent_id, __cr) with `__cr` the 1-based closeness rank
     * of each centroid for each vector. Exposed so a probe-width SWEEP
-    * can rank once and take every width as a `__cr ≤ w` filter instead
-    * of re-scoring the corpus against the broadcast centroids per
-    * width (the r16 entry-sweep fusion). */
+    * can rank once and take every width as a [[rankPrefix]] branch
+    * instead of re-scoring the corpus against the broadcast centroids
+    * per width (the r16 entry-sweep fusion). */
   def ivfAssignRanked(corpus: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame): DataFrame = {
-    // squared L2 in exact integer-valued doubles: |a|² - 2a·b + |b|²
-    val d2 = dot(col("__v"), col("__v")) -
-      lit(2.0) * dot(col("__v"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
     val w = Window.partitionBy(col("__id"))
       .orderBy(col("__d2").asc, col("cent_id").asc)
     corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .crossJoin(broadcast(cents))
-      .withColumn("__d2", d2)
+      .withColumn("__d2", l2sq(col("__v"), col("cent_v")))
       .withColumn("__cr", row_number().over(w))
       .select(col("__id"), col("__v"), col("cent_id"), col("__cr"))
   }
@@ -222,143 +255,74 @@ object Similarity {
     * sweep prices it per `nprobeC`). Both centroid frames broadcast;
     * every join is equi-keyed on broadcast-sized frames; ties break
     * by centroid id like the flat kernel. Returns (id, cell_id) —
-    * the flat assignment's columns, so consumers swap freely. */
+    * the flat assignment's columns, so consumers swap freely.
+    *
+    * `nprobeCs` is one width, or with a branch key in `keys` the swept
+    * widths: the coarse probe sets nest (prefixes of ONE vector→coarse
+    * ranking, [[rankPrefix]]), so one fine argmin keyed by (branch,
+    * id) serves every width. Returns (keys…, id, cell_id). */
   def hierAssignCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, coarse: DataFrame, nprobeC: Int): DataFrame = {
-    require(nprobeC >= 1, s"nprobeC must be >= 1, got $nprobeC")
-    def d2(v: Column, c: Column): Column =
-      dot(v, v) - lit(2.0) * dot(v, c) + dot(c, c)
+      cents: DataFrame, coarse: DataFrame, nprobeCs: Seq[Int],
+      keys: Seq[String] = Nil): DataFrame = {
+    val b = keys.map(col)
     // 1. fine centroid -> its coarse cell (metadata-sized cross)
     val cw = Window.partitionBy(col("cent_id"))
       .orderBy(col("__cd2").asc, col("co_id").asc)
     val centAss = cents.crossJoin(broadcast(coarse))
-      .withColumn("__cd2", d2(col("cent_v"), col("co_v")))
+      .withColumn("__cd2", l2sq(col("cent_v"), col("co_v")))
       .withColumn("__cr", row_number().over(cw))
       .filter(col("__cr") === 1)
       .select(col("cent_id"), col("cent_v"), col("co_id"))
     // 2. vector -> top-nprobeC coarse cells
     val vw = Window.partitionBy(col("__id"))
       .orderBy(col("__vd2").asc, col("co_id").asc)
-    val vecCoarse = corpus
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("__vd2", d2(col("__v"), col("co_v")))
-      .withColumn("__vr", row_number().over(vw))
-      .filter(col("__vr") <= nprobeC)
-      .select(col("__id"), col("__v"), col("co_id"))
+    val vecCoarse = rankPrefix(corpus
+        .select(col(idCol).as("__id"), col(vecCol).as("__v"))
+        .crossJoin(broadcast(coarse))
+        .withColumn("__vd2", l2sq(col("__v"), col("co_v")))
+        .withColumn("__vr", row_number().over(vw)),
+        col("__vr"), nprobeCs, keys)
+      .select((b ++ Seq(col("__id"), col("__v"), col("co_id"))): _*)
     // 3. argmin over the probed cells' fine centroids only
-    val fw = Window.partitionBy(col("__id"))
+    val fw = Window.partitionBy((b :+ col("__id")): _*)
       .orderBy(col("__fd2").asc, col("cent_id").asc)
     vecCoarse
       .join(broadcast(centAss), Seq("co_id"))
-      .withColumn("__fd2", d2(col("__v"), col("cent_v")))
+      .withColumn("__fd2", l2sq(col("__v"), col("cent_v")))
       .withColumn("__fr", row_number().over(fw))
       .filter(col("__fr") === 1)
-      .select(col("__id").as("id"), col("cent_id").as("cell_id"))
+      .select((b ++ Seq(col("__id").as("id"),
+        col("cent_id").as("cell_id"))): _*)
   }
 
-  /** Probe-width-BRANCHED [[hierAssignCentroids]] (r16 sweep fusion):
-    * the coarse probe sets nest (`__vr ≤ w` prefixes of ONE ranking),
-    * so the sweep ranks vector→coarse once, tags each width, and runs
-    * one fine argmin keyed by (probe_c, __id) — per-branch rows
-    * identical to the standalone kernel. Returns (probe_c, id,
-    * cell_id). */
-  def hierAssignCentroidsNp(corpus: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, coarse: DataFrame,
-      nprobeCs: Seq[Int]): DataFrame = {
-    def d2(v: Column, c: Column): Column =
-      dot(v, v) - lit(2.0) * dot(v, c) + dot(c, c)
-    val cw = Window.partitionBy(col("cent_id"))
-      .orderBy(col("__cd2").asc, col("co_id").asc)
-    val centAss = cents.crossJoin(broadcast(coarse))
-      .withColumn("__cd2", d2(col("cent_v"), col("co_v")))
-      .withColumn("__cr", row_number().over(cw))
-      .filter(col("__cr") === 1)
-      .select(col("cent_id"), col("cent_v"), col("co_id"))
-    val vw = Window.partitionBy(col("__id"))
-      .orderBy(col("__vd2").asc, col("co_id").asc)
-    val vecCoarseB = corpus
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("__vd2", d2(col("__v"), col("co_v")))
-      .withColumn("__vr", row_number().over(vw))
-      .filter(col("__vr") <= nprobeCs.max)
-      .withColumn("probe_c",
-        explode(array(nprobeCs.map(p => lit(p.toLong)): _*)))
-      .filter(col("__vr") <= col("probe_c"))
-      .select(col("probe_c"), col("__id"), col("__v"), col("co_id"))
-    val fw = Window.partitionBy(col("probe_c"), col("__id"))
-      .orderBy(col("__fd2").asc, col("cent_id").asc)
-    vecCoarseB
-      .join(broadcast(centAss), Seq("co_id"))
-      .withColumn("__fd2", d2(col("__v"), col("cent_v")))
-      .withColumn("__fr", row_number().over(fw))
-      .filter(col("__fr") === 1)
-      .select(col("probe_c"), col("__id").as("id"),
-        col("cent_id").as("cell_id"))
-  }
-
-  /** IVF top-k: probe `nprobe` cells per query, exact cosine re-rank of
-    * cell members only. Same output shape as [[knnBruteForce]]. */
-  def knnIvf(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      centroidFilter: Column, nprobe: Int = 3,
-      queryFilter: Column = lit(true)): DataFrame =
-    knnIvfCentroids(corpus, idCol, vecCol, k,
-      corpus.filter(centroidFilter)
-        .select(col(idCol).as("cent_id"), col(vecCol).as("cent_v")),
-      nprobe, queryFilter)
-
-  /** [[knnIvf]] against an explicit (typically trained) centroid frame. */
+  /** IVF top-k against an explicit (typically trained) centroid frame:
+    * probe `nprobe` cells per query, exact cosine re-rank of cell
+    * members only. Same output shape as [[knnBruteForce]].
+    *
+    * `allowed` makes it METADATA-FILTERED search — vector search
+    * restricted by a relational predicate (the "WHERE lang = 'en'" of
+    * vector search, the join every production vector store has to
+    * serve). The one-column id frame produced by the predicate
+    * left-semi-joins the assigned corpus BEFORE candidate generation,
+    * so each probed cell contributes only predicate-passing members and
+    * the k-shortlist never wastes slots on candidates a post-filter
+    * would discard (the recall difference between pre- and
+    * post-filtering is exactly the slots a post-pass drops). Queries
+    * are NOT filtered — asking from outside the predicate is legal. At
+    * 100 TB the predicate pushes down to the metadata table's scan and
+    * the semi-join is id-keyed (ids move, vectors don't); everything
+    * downstream is the unfiltered shape. */
   def knnIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, cents: DataFrame, nprobe: Int = 3,
-      queryFilter: Column = lit(true)): DataFrame = {
+      queryFilter: Column = lit(true),
+      allowed: Option[DataFrame] = None): DataFrame = {
     val (assigned, probes) =
       ivfAssignCentroids(corpus, idCol, vecCol, cents, nprobe)
     val queries = assigned.filter(queryFilter)
       .select(col("__id").as("query_id"), col("__v").as("__qv"),
         norm(col("__v")).as("__qn"))
-    val cand = queries
-      .join(probes, Seq("query_id"))
-      .join(assigned.select(col("__id").as("neighbor_id"), col("__v").as("__cv"),
-        norm(col("__v")).as("__cn"), col("cell_id")), Seq("cell_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos9").desc, col("neighbor_id").asc)
-    cand
-      .withColumn("cos9",
-        round(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 9))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos9"))
-  }
-
-  /** Metadata-FILTERED IVF top-k — vector search restricted by a
-    * relational predicate (the "WHERE lang = 'en'" of vector search,
-    * the join every production vector store has to serve). Same
-    * probe/re-rank shape as [[knnIvfCentroids]], with the NEIGHBOR
-    * side pre-filtered: `allowed` (a one-column id frame produced by
-    * the metadata predicate) left-semi-joins the assigned corpus
-    * BEFORE candidate generation, so each probed cell contributes only
-    * predicate-passing members and the k-shortlist never wastes slots
-    * on candidates a post-filter would discard (the recall difference
-    * between pre- and post-filtering is exactly the slots a post-pass
-    * drops). Queries are NOT filtered — asking from outside the
-    * predicate is legal. At 100 TB the predicate pushes down to the
-    * metadata table's scan and the semi-join is id-keyed (ids move,
-    * vectors don't); everything downstream is the pinned IVF shape. */
-  def knnIvfFiltered(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, cents: DataFrame, allowed: DataFrame, nprobe: Int = 3,
-      queryFilter: Column = lit(true)): DataFrame = {
-    val (assigned, probes) =
-      ivfAssignCentroids(corpus, idCol, vecCol, cents, nprobe)
-    val queries = assigned.filter(queryFilter)
-      .select(col("__id").as("query_id"), col("__v").as("__qv"),
-        norm(col("__v")).as("__qn"))
-    val nbrs = assigned.join(
-      allowed.select(col(allowed.columns.head).as("__id")),
-      Seq("__id"), "left_semi")
+    val nbrs = allowed.fold(assigned)(a => assigned.join(
+      a.select(col(a.columns.head).as("__id")), Seq("__id"), "left_semi"))
     val cand = queries
       .join(probes, Seq("query_id"))
       .join(nbrs.select(col("__id").as("neighbor_id"), col("__v").as("__cv"),
@@ -368,24 +332,24 @@ object Similarity {
       .distinct()
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos9").desc, col("neighbor_id").asc)
-    cand
+    rankPrefix(cand
       .withColumn("cos9",
         round(dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 9))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("rank", row_number().over(w)), col("rank"), Seq(k))
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos9"))
   }
 
-  /** Query-driven form of [[knnIvfFiltered]] — the SERVING kernel: the
-    * queries arrive as their own frame (a micro-batch of a request
-    * stream), while the searchable side is a PRE-BUILT
-    * `(__id, __v, cell_id)` frame (the assigned corpus already
-    * restricted to the predicate — built once offline, checkpointed,
-    * never re-derived per batch). Each query ranks the broadcast
-    * trained centroids for its `nprobe` nearest cells; candidates are
-    * the probed cells' members of the pre-filtered frame; exact cosine
-    * re-rank decides top-k. Per batch: one broadcast of k centroids +
-    * one cell-keyed equi-join — the corpus side never reshuffles.
+  /** Query-driven filtered IVF top-k — the SERVING form of
+    * [[knnIvfCentroids]] with `allowed`: the queries arrive as their own
+    * frame (a micro-batch of a request stream), while the searchable
+    * side is a PRE-BUILT `(__id, __v, cell_id)` frame (the assigned
+    * corpus already restricted to the predicate — built once offline,
+    * checkpointed, never re-derived per batch). Each query ranks the
+    * broadcast trained centroids for its `nprobe` nearest cells;
+    * candidates are the probed cells' members of the pre-filtered
+    * frame; exact cosine re-rank decides top-k. Per batch: one
+    * broadcast of k centroids + one cell-keyed equi-join — the corpus
+    * side never reshuffles.
     *
     * `excludeSelfId` (default true) is correct only when queries ARE
     * corpus members (the registry's self-query recall rows). External
@@ -395,21 +359,13 @@ object Similarity {
   def knnIvfFilteredQueries(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, assignedNbrs: DataFrame, cents: DataFrame,
       nprobe: Int, excludeSelfId: Boolean = true): DataFrame = {
-    val qd2 = dot(col("__qv"), col("__qv")) -
-      lit(2.0) * dot(col("__qv"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qd2").asc, col("cent_id").asc)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__qd2", qd2)
-      .withColumn("__pr", row_number().over(pw))
-      .filter(col("__pr") <= nprobe)
+    val probes = probeCells(
+        queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv")),
+        "__qv", cents, Seq(nprobe), Nil)
       .select(col("query_id"), col("__qv"), col("cent_id").as("cell_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos9").desc, col("neighbor_id").asc)
-    probes
+    rankPrefix(probes
       .join(assignedNbrs.select(col("__id").as("neighbor_id"),
         col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
       .filter(if (excludeSelfId) col("query_id") =!= col("neighbor_id")
@@ -419,13 +375,27 @@ object Similarity {
       .withColumn("cos9", round(
         dot(col("__qv"), col("__cv")) /
           (norm(col("__qv")) * norm(col("__cv"))), 9))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("rank", row_number().over(w)), col("rank"), Seq(k))
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos9"))
   }
 
+  /** Probe stage shared by the IVF serving kernels: each query ranks
+    * the broadcast centroids by exact squared L2 to its vector column
+    * `vec` (ties by centroid id) and keeps its `nprobes` prefix — one
+    * width, or a branch per swept width under `keys` ([[rankPrefix]]).
+    * Keeps the query columns plus (cent_id, cent_v, __qd2, __pr). */
+  private def probeCells(queries: DataFrame, vec: String, cents: DataFrame,
+      nprobes: Seq[Int], keys: Seq[String]): DataFrame = {
+    val wp = Window.partitionBy(col("query_id"))
+      .orderBy(col("__qd2").asc, col("cent_id").asc)
+    rankPrefix(queries.crossJoin(broadcast(cents))
+      .withColumn("__qd2", l2sq(col(vec), col("cent_v")))
+      .withColumn("__pr", row_number().over(wp)), col("__pr"), nprobes, keys)
+  }
+
   /** One distributed Lloyd (k-means) iteration — the training seam that
-    * produces [[ivfAssign]]'s centroids. Assignment reuses the IVF
+    * produces [[ivfAssignCentroids]]'s centroids, here from the
+    * `centroidFilter` id-pick of the corpus. Assignment reuses the IVF
     * argmin (broadcast centroids, map-only distance); the update step
     * emits per-(cluster, dim) member counts, sums and means.
     *
@@ -438,13 +408,51 @@ object Similarity {
     * reported dims (the full update is the same plan over all dims). */
   def kmeansStep(corpus: DataFrame, idCol: String, vecCol: String,
       centroidFilter: Column, outDims: Int): DataFrame = {
-    val (assigned, _) = ivfAssign(corpus, idCol, vecCol, centroidFilter, 1)
+    val (assigned, _) = ivfAssignCentroids(corpus, idCol, vecCol,
+      corpus.filter(centroidFilter)
+        .select(col(idCol).as("cent_id"), col(vecCol).as("cent_v")), 1)
     assigned
       .select(col("cell_id").as("cluster_id"),
         posexplode(slice(col("__v"), 1, outDims)))
       .groupBy(col("cluster_id"), col("pos").cast("long").as("dim"))
       .agg(count(lit(1)).as("n_members"), sum(col("col")).as("sum_q"))
       .withColumn("mean_q", col("sum_q") / col("n_members"))
+  }
+
+  /** Per-query ADC distance table: one row per (`carry`…, sub,
+    * codeword) with the exact int64 sub-distance of the `vec` column's
+    * 16-dim slice `sub` — |queries| × 64 rows (× nprobe for the
+    * residual search's per-probed-cell table), tiny by construction,
+    * the frame every ADC search BROADCASTS. */
+  private def adcDistTable(rows: DataFrame, vec: String, carry: Seq[String],
+      cb: DataFrame): DataFrame = {
+    val c = carry.map(col)
+    rows
+      .select((c :+ explode(sequence(lit(0), lit(3))).as("sub") :+
+        col(vec)): _*)
+      .withColumn("sv", slice(col(vec), col("sub") * 16 + 1, lit(16)))
+      .join(broadcast(cb), Seq("sub"))
+      .select((c ++ Seq(col("sub").cast("long").as("sub"), col("code"),
+        l2sq(col("sv"), col("cv")).cast("long").as("dt"))): _*)
+  }
+
+  /** The ADC top-k tail every PQ search shares: sum the looked-up
+    * sub-distances per (keys…, query, vec) — one map-side-combined
+    * aggregation — and keep each (keys…, query)'s `k` smallest by
+    * (adist, vec_id), planned as a WindowGroupLimit. `scan` carries
+    * (keys…, query_id, vec_id, dt). Returns (keys…, query_id, rank,
+    * vec_id, adist). */
+  private def adcTopK(scan: DataFrame, k: Int, keys: Seq[String]): DataFrame = {
+    val q = keys.map(col) :+ col("query_id")
+    val w = Window.partitionBy(q: _*)
+      .orderBy(col("adist").asc, col("vec_id").asc)
+    rankPrefix(scan
+      .filter(col("vec_id") =!= col("query_id"))
+      .groupBy((q :+ col("vec_id")): _*)
+      .agg(sum(col("dt")).as("adist"))
+      .withColumn("rank", row_number().over(w)), col("rank"), Seq(k))
+      .select((q ++ Seq(col("rank").cast("long").as("rank"), col("vec_id"),
+        col("adist"))): _*)
   }
 
   /** PQ asymmetric-distance (ADC) search kernel — how a PQ index is
@@ -461,37 +469,11 @@ object Similarity {
     * `queries`: (query_id, qv) with 64-dim integer-quantized vectors;
     * `codes`: (vec_id, sub: long, code) — the PQ-coded corpus;
     * `cb`: (sub, code, cv) — the trained 16-dim per-subspace codebook. */
-  /** Per-query ADC distance table: one row per (query, sub, codeword)
-    * with the exact int64 sub-distance — |queries| × 64 rows, tiny by
-    * construction, the frame both ADC searches BROADCAST. */
-  private def adcDistTable(queries: DataFrame, cb: DataFrame): DataFrame = {
-    val subD2 = (dot(col("sv"), col("sv")) -
-      lit(2.0) * dot(col("sv"), col("cv")) +
-      dot(col("cv"), col("cv"))).cast("long")
-    queries
-      .select(col("query_id"), explode(sequence(lit(0), lit(3))).as("sub"),
-        col("qv"))
-      .withColumn("sv", slice(col("qv"), col("sub") * 16 + 1, lit(16)))
-      .join(broadcast(cb), Seq("sub"))
-      .select(col("query_id"), col("sub").cast("long").as("sub"),
-        col("code"), subD2.as("dt"))
-  }
-
   def pqAdcSearch(queries: DataFrame, codes: DataFrame, cb: DataFrame,
-      k: Int): DataFrame = {
-    val dt = adcDistTable(queries, cb)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    codes
-      .join(broadcast(dt), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("dt")).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adist"))
-  }
+      k: Int): DataFrame =
+    adcTopK(codes.join(
+      broadcast(adcDistTable(queries, "qv", Seq("query_id"), cb)),
+      Seq("sub", "code")), k, Nil)
 
   /** The COMPOSED IVF-PQ search — the serving shape a production vector
     * index actually runs, and the scale fix for [[pqAdcSearch]]'s one
@@ -514,141 +496,92 @@ object Similarity {
     * NOT simply bounded by full-scan ADC: the cell restriction uses
     * exact query-to-centroid geometry, so it can evict quantization
     * false positives and RAISE recall while cutting work (measured
-    * 0.29 vs 0.22 at sf0.01 — the `sim_ivfpq_recall` gate pins it). */
+    * 0.29 vs 0.22 at sf0.01 — the `sim_ivfpq_recall` gate pins it).
+    *
+    * `nprobes` is one width, or with a branch key in `keys` the swept
+    * widths (r16 sweep fusion): every width's probe set is a
+    * [[rankPrefix]] of ONE centroid ranking, so one cell-pruned ADC
+    * scan + top-k keyed by (branch, query_id) serves the whole sweep,
+    * rows per branch identical to a one-width call. Returns (keys…,
+    * query_id, rank, vec_id, adist). */
   def ivfPqSearch(queries: DataFrame, cellCodes: DataFrame, cb: DataFrame,
-      cents: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val qd2 = dot(col("qv"), col("qv")) -
-      lit(2.0) * dot(col("qv"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qd2").asc, col("cent_id").asc)
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("__qd2", qd2)
-      .withColumn("__pr", row_number().over(wp))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("cent_id").as("cell_id"))
-    val dt = adcDistTable(queries, cb)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    cellCodes
+      cents: DataFrame, nprobes: Seq[Int], k: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val probes = probeCells(queries, "qv", cents, nprobes, keys)
+      .select((keys.map(col) ++
+        Seq(col("query_id"), col("cent_id").as("cell_id"))): _*)
+    val dt = adcDistTable(queries, "qv", Seq("query_id"), cb)
+    adcTopK(cellCodes
       .join(broadcast(probes), Seq("cell_id"))
-      .join(broadcast(dt), Seq("query_id", "sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("dt")).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adist"))
+      .join(broadcast(dt), Seq("query_id", "sub", "code")), k, keys)
   }
 
-  /** Probe-width-BRANCHED [[ivfPqSearch]] (r16 sweep fusion): every
-    * swept width's probe set is the `__pr ≤ w` prefix of ONE centroid
-    * ranking (row_number with deterministic tie-break ⇒ prefixes nest),
-    * so the sweep ranks the centroids once, tags each width as a
-    * branch, and runs ONE cell-pruned ADC scan + top-k keyed by
-    * (nprobe, query_id) — per-branch rows identical to the standalone
-    * search (the sweep specs pin it), per-stage cost paid once instead
-    * of once per width. Returns (nprobe, query_id, rank, vec_id,
+  /** The single-width [[ivfPqSearch]] — the scalar serving call of the
+    * streaming servers. */
+  def ivfPqSearch(queries: DataFrame, cellCodes: DataFrame, cb: DataFrame,
+      cents: DataFrame, nprobe: Int, k: Int): DataFrame =
+    ivfPqSearch(queries, cellCodes, cb, cents, Seq(nprobe), k)
+
+  /** Residual IVF-PQ serving — [[ivfPqSearch]] with the PQ half coding
+    * RESIDUALS (v − assigned centroid), the layout production IVF-PQ
+    * indexes actually store (the IVFADC scheme): residual norms are far
+    * smaller than vector norms, so the same 4×4-bit code budget
+    * quantizes much finer and recall rises at identical serving cost.
+    *
+    * The distance table becomes PER (query, probed cell) — the query's
+    * residual against each probed centroid, |queries| × nprobe × 64
+    * rows, still broadcast-sized by construction. Joining the
+    * cell-tagged residual codes on (cell_id, sub, code) restricts the
+    * scan to probed cells AND resolves the table lookup in the same
+    * broadcast join — pruning and ADC in one map-only stage, one
+    * exchange for the per-(query, vec) sum.
+    *
+    * `cellCodes`: (vec_id, cell_id, sub, code) with codes from the
+    * RESIDUAL codebook `cb`; `cents` must be the same trained centroids
+    * the codes were built against (the residual is centroid-relative).
+    * `nprobes`/`keys` sweep the probe width exactly as in
+    * [[ivfPqSearch]] (one ranking, one per-(branch, query, probed-cell)
+    * table, one ADC + top-k). Returns (keys…, query_id, rank, vec_id,
     * adist). */
-  def ivfPqSearchNp(queries: DataFrame, cellCodes: DataFrame,
-      cb: DataFrame, cents: DataFrame, nprobes: Seq[Int],
-      k: Int): DataFrame = {
-    val qd2 = dot(col("qv"), col("qv")) -
-      lit(2.0) * dot(col("qv"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qd2").asc, col("cent_id").asc)
-    val probesB = queries.crossJoin(broadcast(cents))
-      .withColumn("__qd2", qd2)
-      .withColumn("__pr", row_number().over(wp))
-      .filter(col("__pr") <= nprobes.max)
-      .withColumn("nprobe",
-        explode(array(nprobes.map(n => lit(n.toLong)): _*)))
-      .filter(col("__pr") <= col("nprobe"))
-      .select(col("nprobe"), col("query_id"), col("cent_id").as("cell_id"))
-    val dt = adcDistTable(queries, cb)
-    val w = Window.partitionBy(col("nprobe"), col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    cellCodes
-      .join(broadcast(probesB), Seq("cell_id"))
-      .join(broadcast(dt), Seq("query_id", "sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("nprobe"), col("query_id"), col("vec_id"))
-      .agg(sum(col("dt")).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("nprobe"), col("query_id"),
-        col("rank").cast("long").as("rank"), col("vec_id"), col("adist"))
-  }
-
-  /** Probe-width-BRANCHED [[ivfPqResidualSearch]] — the same r16
-    * fusion for the residual (IVFADC) chain: one centroid ranking, one
-    * per-(branch, query, probed-cell) residual distance table, one
-    * cell-restricted ADC + top-k keyed by (nprobe, query_id).
-    * Returns (nprobe, query_id, rank, vec_id, adist). */
-  def ivfPqResidualSearchNp(queries: DataFrame, cellCodes: DataFrame,
-      cb: DataFrame, cents: DataFrame, nprobes: Seq[Int],
-      k: Int): DataFrame = {
-    val qd2 = dot(col("qv"), col("qv")) -
-      lit(2.0) * dot(col("qv"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qd2").asc, col("cent_id").asc)
-    val probesB = queries.crossJoin(broadcast(cents))
-      .withColumn("__qd2", qd2)
-      .withColumn("__pr", row_number().over(wp))
-      .filter(col("__pr") <= nprobes.max)
-      .withColumn("nprobe",
-        explode(array(nprobes.map(n => lit(n.toLong)): _*)))
-      .filter(col("__pr") <= col("nprobe"))
-      .select(col("nprobe"), col("query_id"),
+  def ivfPqResidualSearch(queries: DataFrame, cellCodes: DataFrame,
+      cb: DataFrame, cents: DataFrame, nprobes: Seq[Int], k: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val probes = probeCells(queries, "qv", cents, nprobes, keys)
+      .select((keys.map(col) ++ Seq(col("query_id"),
         col("cent_id").as("cell_id"),
-        zip_with(col("qv"), col("cent_v"), (a, b) => a - b).as("qres"))
-    val subD2 = (dot(col("sv"), col("sv")) -
-      lit(2.0) * dot(col("sv"), col("cv")) +
-      dot(col("cv"), col("cv"))).cast("long")
-    val dt = probesB
-      .select(col("nprobe"), col("query_id"), col("cell_id"),
-        explode(sequence(lit(0), lit(3))).as("sub"), col("qres"))
-      .withColumn("sv", slice(col("qres"), col("sub") * 16 + 1, lit(16)))
-      .join(broadcast(cb), Seq("sub"))
-      .select(col("nprobe"), col("query_id"), col("cell_id"),
-        col("sub").cast("long").as("sub"), col("code"), subD2.as("dt"))
-    val w = Window.partitionBy(col("nprobe"), col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    cellCodes
-      .join(broadcast(dt), Seq("cell_id", "sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("nprobe"), col("query_id"), col("vec_id"))
-      .agg(sum(col("dt")).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("nprobe"), col("query_id"),
-        col("rank").cast("long").as("rank"), col("vec_id"), col("adist"))
+        zip_with(col("qv"), col("cent_v"), (a, b) => a - b).as("qres"))): _*)
+    val dt =
+      adcDistTable(probes, "qres", keys ++ Seq("query_id", "cell_id"), cb)
+    adcTopK(cellCodes.join(broadcast(dt), Seq("cell_id", "sub", "code")),
+      k, keys)
   }
 
-  /** Branch-keyed [[rerankExact]] (r16 sweep fusion): the shortlist
-    * carries a branch column; one gather + one (branch, query) window
-    * re-ranks every branch's shortlist at once, rows per branch
-    * identical to the standalone re-rank. */
-  def rerankExactBranched(bidCol: String, shortlist: DataFrame,
-      queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val d2 = (dot(col("xv"), col("xv")) -
-      lit(2.0) * dot(col("xv"), col("cv2")) +
-      dot(col("cv2"), col("cv2"))).cast("long")
-    val w = Window.partitionBy(col(bidCol), col("query_id"))
+  /** Exact re-rank refinement (the "+R" of IVFADC+R): re-score an ADC
+    * shortlist with exact squared-L2 on the raw vectors and keep the
+    * top-k. `shortlist` carries (keys…, query_id, vec_id) candidate
+    * pairs — |queries|×R rows, broadcast-small by construction — and
+    * `corpus` (vec_id, qv) / `queries` (query_id, qv) the raw vectors.
+    * Both the shortlist and the query frame broadcast onto the corpus
+    * scan, so the gather is a per-query point-lookup: R vector reads
+    * per query, vectors never shuffle. Shared by the batch
+    * `sim_ivfpq_rerank` query and the streaming serving twin. With
+    * branch columns in `keys` (a swept shortlist), one gather + one
+    * (branch, query) window re-ranks every branch at once. Returns
+    * (keys…, query_id, rank, vec_id, d2). */
+  def rerankExact(shortlist: DataFrame, queries: DataFrame,
+      corpus: DataFrame, k: Int, keys: Seq[String] = Nil): DataFrame = {
+    val q = keys.map(col) :+ col("query_id")
+    val w = Window.partitionBy(q: _*)
       .orderBy(col("d2").asc, col("vec_id").asc)
-    corpus.select(col("vec_id"), col("qv").as("cv2"))
-      .join(broadcast(shortlist.select(col(bidCol), col("query_id"),
-        col("vec_id"))), Seq("vec_id"))
+    rankPrefix(corpus.select(col("vec_id"), col("qv").as("cv2"))
+      .join(broadcast(shortlist.select((q :+ col("vec_id")): _*)),
+        Seq("vec_id"))
       .join(broadcast(queries.select(col("query_id"), col("qv").as("xv"))),
         Seq("query_id"))
-      .withColumn("d2", d2)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(bidCol), col("query_id"),
-        col("rank").cast("long").as("rank"), col("vec_id"), col("d2"))
+      .withColumn("d2", l2sq(col("xv"), col("cv2")).cast("long"))
+      .withColumn("rank", row_number().over(w)), col("rank"), Seq(k))
+      .select((q ++ Seq(col("rank").cast("long").as("rank"), col("vec_id"),
+        col("d2"))): _*)
   }
 
   /** Iterated integer-Lloyd k-means — the training loop that turns the
@@ -683,9 +616,7 @@ object Similarity {
   def kmeansTrain(points: DataFrame, init: DataFrame, iters: Int,
       groupCols: Seq[String] = Seq.empty): DataFrame = {
     val g = groupCols.map(col)
-    val d2 = dot(col("__v"), col("__v")) -
-      lit(2.0) * dot(col("__v"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
+    val d2 = l2sq(col("__v"), col("cent_v"))
     (1 to iters).foldLeft(init) { (cents, it) =>
       val joined =
         if (groupCols.isEmpty) points.crossJoin(broadcast(cents))
@@ -722,87 +653,6 @@ object Similarity {
     }
   }
 
-  /** Residual IVF-PQ serving — [[ivfPqSearch]] with the PQ half coding
-    * RESIDUALS (v − assigned centroid), the layout production IVF-PQ
-    * indexes actually store (the IVFADC scheme): residual norms are far
-    * smaller than vector norms, so the same 4×4-bit code budget
-    * quantizes much finer and recall rises at identical serving cost.
-    *
-    * The distance table becomes PER (query, probed cell) — the query's
-    * residual against each probed centroid, |queries| × nprobe × 64
-    * rows, still broadcast-sized by construction. Joining the
-    * cell-tagged residual codes on (cell_id, sub, code) restricts the
-    * scan to probed cells AND resolves the table lookup in the same
-    * broadcast join — pruning and ADC in one map-only stage, one
-    * exchange for the per-(query, vec) sum.
-    *
-    * `cellCodes`: (vec_id, cell_id, sub, code) with codes from the
-    * RESIDUAL codebook `cb`; `cents` must be the same trained centroids
-    * the codes were built against (the residual is centroid-relative). */
-  def ivfPqResidualSearch(queries: DataFrame, cellCodes: DataFrame,
-      cb: DataFrame, cents: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val qd2 = dot(col("qv"), col("qv")) -
-      lit(2.0) * dot(col("qv"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qd2").asc, col("cent_id").asc)
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("__qd2", qd2)
-      .withColumn("__pr", row_number().over(wp))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("cent_id").as("cell_id"),
-        zip_with(col("qv"), col("cent_v"), (a, b) => a - b).as("qres"))
-    val subD2 = (dot(col("sv"), col("sv")) -
-      lit(2.0) * dot(col("sv"), col("cv")) +
-      dot(col("cv"), col("cv"))).cast("long")
-    val dt = probes
-      .select(col("query_id"), col("cell_id"),
-        explode(sequence(lit(0), lit(3))).as("sub"), col("qres"))
-      .withColumn("sv", slice(col("qres"), col("sub") * 16 + 1, lit(16)))
-      .join(broadcast(cb), Seq("sub"))
-      .select(col("query_id"), col("cell_id"),
-        col("sub").cast("long").as("sub"), col("code"), subD2.as("dt"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    cellCodes
-      .join(broadcast(dt), Seq("cell_id", "sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("dt")).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("adist"))
-  }
-
-  /** Exact re-rank refinement (the "+R" of IVFADC+R): re-score an ADC
-    * shortlist with exact squared-L2 on the raw vectors and keep the
-    * top-k. `shortlist` carries (query_id, vec_id) candidate pairs —
-    * |queries|×R rows, broadcast-small by construction — and `corpus`
-    * (vec_id, qv) / `queries` (query_id, qv) the raw vectors. Both the
-    * shortlist and the query frame broadcast onto the corpus scan, so
-    * the gather is a per-query point-lookup: R vector reads per query,
-    * vectors never shuffle. Shared by the batch `sim_ivfpq_rerank`
-    * query and the streaming serving twin. */
-  def rerankExact(shortlist: DataFrame, queries: DataFrame,
-      corpus: DataFrame, k: Int): DataFrame = {
-    val d2 = (dot(col("xv"), col("xv")) -
-      lit(2.0) * dot(col("xv"), col("cv2")) +
-      dot(col("cv2"), col("cv2"))).cast("long")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col("vec_id").asc)
-    corpus.select(col("vec_id"), col("qv").as("cv2"))
-      .join(broadcast(shortlist.select(col("query_id"), col("vec_id"))),
-        Seq("vec_id"))
-      .join(broadcast(queries.select(col("query_id"), col("qv").as("xv"))),
-        Seq("query_id"))
-      .withColumn("d2", d2)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("d2"))
-  }
-
   /** Maximal-marginal-relevance diversification of a scored candidate
     * pool — the greedy diversity pass a retrieval server runs AFTER the
     * exact re-rank, when the top of the list is near-duplicates of one
@@ -831,9 +681,7 @@ object Similarity {
     val p = pool.select(col("query_id"), col("vec_id"), col("d2"))
       .localCheckpoint(true)
     val withV = p.join(corpus.select(col("vec_id"), col("qv")), Seq("vec_id"))
-    val dij = (dot(col("iv"), col("iv")) -
-      lit(2.0) * dot(col("iv"), col("jv")) +
-      dot(col("jv"), col("jv"))).cast("long")
+    val dij = l2sq(col("iv"), col("jv")).cast("long")
     val pairs = withV
       .select(col("query_id"), col("vec_id").as("i"), col("qv").as("iv"))
       .join(withV.select(col("query_id"), col("vec_id").as("j"),
@@ -945,9 +793,7 @@ object Similarity {
     pairs
       .join(vecs.select(col("vec_id").as("src"), col("v").as("__sv")), Seq("src"))
       .join(vecs.select(col("vec_id").as("dst"), col("v").as("__dv")), Seq("dst"))
-      .withColumn("d2", (dot(col("__sv"), col("__sv"))
-        - lit(2.0) * dot(col("__sv"), col("__dv"))
-        + dot(col("__dv"), col("__dv"))).cast("long"))
+      .withColumn("d2", l2sq(col("__sv"), col("__dv")).cast("long"))
       .select(col("src"), col("dst"), col("d2"))
 
   /** The UNCAPPED scored pair frame of [[nnGraph]]: every (src, dst)
@@ -972,27 +818,18 @@ object Similarity {
 
   /** The degree-rank cap over a scored pair frame — the tail of every
     * [[nnGraph]] variant: erank = row_number per src by (d2 asc, dst
-    * asc), capped at `degree`. `scored`: (src, dst, d2). Returns
-    * (src, dst, erank, d2). */
-  def nnGraphRank(scored: DataFrame, degree: Int): DataFrame = {
-    val w = Window.partitionBy(col("src"))
+    * asc), capped at `degree`. `scored`: (keys…, src, dst, d2) — with
+    * branch columns in `keys`, one window pass ranks every branch's
+    * cohort-filtered slice of a shared scored pair frame. Returns
+    * (keys…, src, dst, erank, d2). */
+  def nnGraphRank(scored: DataFrame, degree: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val s = keys.map(col) :+ col("src")
+    val w = Window.partitionBy(s: _*)
       .orderBy(col("d2").asc, col("dst").asc)
-    scored.withColumn("erank", row_number().over(w).cast("long"))
-      .filter(col("erank") <= degree)
-      .select(col("src"), col("dst"), col("erank"), col("d2"))
-  }
-
-  /** Branch-keyed [[nnGraphRank]]: one window pass ranks every
-    * branch's cohort-filtered slice of the shared scored pair frame.
-    * `scored`: (bidCol, src, dst, d2). Returns (bidCol, src, dst,
-    * erank, d2). */
-  def nnGraphRankBranched(bidCol: String, scored: DataFrame,
-      degree: Int): DataFrame = {
-    val w = Window.partitionBy(col(bidCol), col("src"))
-      .orderBy(col("d2").asc, col("dst").asc)
-    scored.withColumn("erank", row_number().over(w).cast("long"))
-      .filter(col("erank") <= degree)
-      .select(col(bidCol), col("src"), col("dst"), col("erank"), col("d2"))
+    rankPrefix(scored.withColumn("erank", row_number().over(w).cast("long")),
+        col("erank"), Seq(degree))
+      .select((s ++ Seq(col("dst"), col("erank"), col("d2"))): _*)
   }
 
   /** [[graphBeamSearch]] for an ARRIVING query frame — the serving
@@ -1026,30 +863,19 @@ object Similarity {
       hops: Int, beam: Int, k: Int,
       excludeSelfId: Boolean = true,
       entryCells: Int = 1): DataFrame = {
-    require(entryCells >= 1, s"entryCells must be >= 1, got $entryCells")
-    val qd2 = dot(col("qv"), col("qv")) -
-      lit(2.0) * dot(col("qv"), col("cent_v")) +
-      dot(col("cent_v"), col("cent_v"))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qd2").asc, col("cent_id").asc)
-    val ranked = queries.select(col("query_id"), col("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__qd2", qd2)
-      .withColumn("__pr", row_number().over(pw))
     // entryCells > 1 widens the SEED to the query's nearest cells (the
     // serving-time knob sim_graph_entry_sweep grades; a member belongs
     // to exactly one cell, so the probed-cell join cannot duplicate a
     // candidate); the traversal frame stays one row per query
-    val probes = ranked.filter(col("__pr") <= entryCells)
+    val probes = probeCells(queries.select(col("query_id"), col("qv")), "qv",
+        cents, Seq(entryCells), Nil)
       .select(col("query_id"), col("qv"), col("cent_id").as("cell_id"))
     val entry0 = probes
       .join(assigned.select(col("__id").as("cand"),
         col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
     val entry = (if (excludeSelfId)
         entry0.filter(col("cand") =!= col("query_id")) else entry0)
-      .withColumn("d2", (dot(col("qv"), col("qv"))
-        - lit(2.0) * dot(col("qv"), col("__cv"))
-        + dot(col("__cv"), col("__cv"))).cast("long"))
+      .withColumn("d2", l2sq(col("qv"), col("__cv")).cast("long"))
       .select("query_id", "cand", "d2")
     // the traversal's query side is the CALLER's frame, not the
     // centroid-ranked derivation (row-equivalent — the rank-1 filter
@@ -1060,7 +886,7 @@ object Similarity {
     // elision) instead of behind a checkpoint.
     graphBeamSearch(queries.select(col("query_id"), col("qv")), entry,
       edges, assigned.select(col("__id").as("vec_id"), col("__v").as("v")),
-      hops = hops, beam = beam, k = k, excludeSelfId = excludeSelfId)
+      hops = hops, beam = lit(beam), k = k, excludeSelfId = excludeSelfId)
   }
 
   /** Beam search over a bounded-degree neighbor graph, unrolled to a
@@ -1074,32 +900,29 @@ object Similarity {
     * serve where a cell scan can't. Bounded rounds (not
     * convergence-looped) keep the plan static and oracle-replayable.
     *
-    * `queries`: (query_id, qv). `entry`: (query_id, cand, d2) — the
-    * seed candidates, typically the query's nearest cell's members.
-    * `edges`: (src, dst, ...). `vecs`: (vec_id, v).
-    * Returns (query_id, neighbor_id, rank, d2). */
+    * Branch columns in `keys` run several traversal configurations
+    * (the beam/degree/entry/drift sweep points) in ONE set of jobs
+    * (r16 fusion): every window partitions by (keys…, query_id), the
+    * visited dedup is per (keys…, query_id, cand), and the expansion
+    * joins on whichever of `keys` the edge list carries — so each
+    * branch's rows evolve exactly as a keyless run at its
+    * configuration (SimilaritySpec pins the per-branch equality), while
+    * one window + one expansion join + one distinct + one checkpoint
+    * per hop serve the whole sweep.
+    *
+    * `queries`: (query_id, qv) — shared across branches. `entry`:
+    * (keys…, query_id, cand, d2) — the seed candidates, typically the
+    * query's nearest cell's members. `edges`: (src, dst, …), with any
+    * branch-specific edge list tagged by its key. `vecs`: (vec_id, v).
+    * `beam`: the per-hop beam width — a literal, or an expression of a
+    * branch column for a beam sweep. Returns (keys…, query_id,
+    * neighbor_id, rank, d2). */
   def graphBeamSearch(queries: DataFrame, entry: DataFrame, edges: DataFrame,
-      vecs: DataFrame, hops: Int, beam: Int, k: Int,
-      excludeSelfId: Boolean = true): DataFrame = {
-    val bw = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col("cand").asc)
-    var visited = entry.select("query_id", "cand", "d2")
-    for (h <- 1 to hops) {
-      val beamF = visited.withColumn("__r", row_number().over(bw))
-        .filter(col("__r") <= beam).select(col("query_id"), col("cand"))
-      val expanded0 = beamF
-        .join(edges.select(col("src").as("cand"), col("dst")), Seq("cand"))
-      val expanded = (if (excludeSelfId)
-          expanded0.filter(col("dst") =!= col("query_id")) else expanded0)
-        .select(col("query_id"), col("dst").as("cand")).distinct()
-      val scored = expanded
-        .join(queries, Seq("query_id"))
-        .join(vecs.select(col("vec_id").as("cand"), col("v").as("__cv")),
-          Seq("cand"))
-        .withColumn("d2", (dot(col("qv"), col("qv"))
-          - lit(2.0) * dot(col("qv"), col("__cv"))
-          + dot(col("__cv"), col("__cv"))).cast("long"))
-        .select("query_id", "cand", "d2")
+      vecs: DataFrame, hops: Int, beam: Column, k: Int,
+      excludeSelfId: Boolean = true, keys: Seq[String] = Nil): DataFrame = {
+    val start = entry.select(visitedCols(keys): _*)
+    visitedTopK((1 to hops).foldLeft(start) { (visited, h) =>
+      val u = beamHop(visited, queries, edges, vecs, beam, excludeSelfId, keys)
       // eager checkpoint per NON-FINAL hop (the mmrDiversify pattern): the
       // visited set feeds the NEXT hop twice (beam cut + union), and
       // materializing it keeps that hop's plan a checkpoint scan instead
@@ -1108,126 +931,74 @@ object Similarity {
       // checkpointing it would pay a materialization job + cache
       // write/read that buys nothing — r16 measured the elision, one
       // fewer job per search at identical rows.
-      val u = visited.unionByName(scored)
-        .select("query_id", "cand", "d2").distinct()
-      visited = if (h < hops) u.localCheckpoint(true) else u
-    }
-    visited.withColumn("rank", row_number().over(bw).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("cand").as("neighbor_id"),
-        col("rank"), col("d2"))
+      if (h < hops) u.localCheckpoint(true) else u
+    }, k, keys)
   }
 
-  /** Branch-FUSED form of [[graphBeamSearch]]: several traversal
-    * configurations ("branches" — e.g. the beam/degree/entry/drift
-    * sweep points) run in ONE set of jobs over a branch-keyed frame
-    * instead of one full traversal per configuration. Every operator is
-    * keyed by (`bidCol`, query_id), so each branch's rows evolve exactly
-    * as an independent [[graphBeamSearch]] run would produce them
-    * (SimilaritySpec pins the per-branch row equality): the windows
-    * partition by (branch, query), the expansion equi-join carries the
-    * branch key when the edge list is branch-specific, and the visited
-    * dedup is per (branch, query, cand). What fuses is the COST: one
-    * window + one expansion join + one distinct + one checkpoint per hop
-    * for the whole sweep, instead of per branch — at 100 TB the shared
-    * frames (assignment scan, edge list, vectors) are read once per hop
-    * rather than once per branch per hop, and at fixture scale the
-    * per-stage fixed costs collapse by the branch count.
-    *
-    * `queries`: (query_id, qv) — SHARED across branches (every sweep
-    * varies the serving knob, not the query set).
-    * `entry`: (bidCol, query_id, cand, d2) — per-branch seeds (tag a
-    * shared seed frame with the branch id when seeding doesn't vary).
-    * `edges`: (bidCol, src, dst) when `edgesBranched`, else (src, dst)
-    * shared by all branches.
-    * `beamLim`: per-row beam-width expression (a literal for uniform
-    * sweeps, a function of the branch column for the beam sweep). */
-  def graphBeamSearchBranched(bidCol: String, queries: DataFrame,
-      entry: DataFrame, edges: DataFrame, edgesBranched: Boolean,
-      vecs: DataFrame, hops: Int, beamLim: Column, k: Int,
-      excludeSelfId: Boolean = true): DataFrame = {
-    val bw = Window.partitionBy(col(bidCol), col("query_id"))
-      .orderBy(col("d2").asc, col("cand").asc)
-    var visited = entry.select(col(bidCol), col("query_id"), col("cand"),
-      col("d2"))
-    for (h <- 1 to hops) {
-      val beamF = visited.withColumn("__r", row_number().over(bw))
-        .filter(col("__r") <= beamLim)
-        .select(col(bidCol), col("query_id"), col("cand"))
-      val expanded0 =
-        if (edgesBranched) beamF.join(
-          edges.select(col(bidCol), col("src").as("cand"), col("dst")),
-          Seq(bidCol, "cand"))
-        else beamF.join(edges.select(col("src").as("cand"), col("dst")),
-          Seq("cand"))
-      val expanded = (if (excludeSelfId)
-          expanded0.filter(col("dst") =!= col("query_id")) else expanded0)
-        .select(col(bidCol), col("query_id"), col("dst").as("cand"))
-        .distinct()
-      val scored = expanded
-        .join(queries, Seq("query_id"))
-        .join(vecs.select(col("vec_id").as("cand"), col("v").as("__cv")),
-          Seq("cand"))
-        .withColumn("d2", (dot(col("qv"), col("qv"))
-          - lit(2.0) * dot(col("qv"), col("__cv"))
-          + dot(col("__cv"), col("__cv"))).cast("long"))
-        .select(col(bidCol), col("query_id"), col("cand"), col("d2"))
-      val u = visited.unionByName(scored)
-        .select(col(bidCol), col("query_id"), col("cand"), col("d2"))
-        .distinct()
-      visited = if (h < hops) u.localCheckpoint(true) else u
-    }
-    visited.withColumn("rank", row_number().over(bw).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col(bidCol), col("query_id"), col("cand").as("neighbor_id"),
-        col("rank"), col("d2"))
-  }
-
-  /** Hop-depth TRACE of one [[graphBeamSearch]] traversal: the top-K
-    * cut of the visited set AFTER EVERY hop 0..`hops`, tagged by hop
-    * depth — (hops, query_id, neighbor_id, rank, d2). A depth-h run's
-    * state is a prefix of a deeper run's evolution (same deterministic
-    * per-hop step), so the hop-h slice is ROW-IDENTICAL to a standalone
-    * `hops = h` search (SimilaritySpec pins it) — but the trace pays
-    * ONE traversal where the hop sweep previously paid one full
-    * traversal (entry scan included) per depth. Intermediate visited
-    * sets get the usual eager checkpoint (each now has two consumers:
-    * its snapshot cut and the next hop); the deepest set is consumed
-    * once and stays un-checkpointed. */
+  /** Hop-depth TRACE of one keyless [[graphBeamSearch]] traversal: the
+    * top-K cut of the visited set AFTER EVERY hop 0..`hops`, tagged by
+    * hop depth — (hops, query_id, neighbor_id, rank, d2). A depth-h
+    * run's state is a prefix of a deeper run's evolution (same
+    * deterministic per-hop step), so the hop-h slice is ROW-IDENTICAL
+    * to a standalone `hops = h` search (SimilaritySpec pins it) — but
+    * the trace pays ONE traversal where the hop sweep previously paid
+    * one full traversal (entry scan included) per depth. Intermediate
+    * visited sets get the usual eager checkpoint (each now has two
+    * consumers: its snapshot cut and the next hop); the deepest set is
+    * consumed once and stays un-checkpointed. */
   def graphBeamSearchTrace(queries: DataFrame, entry: DataFrame,
-      edges: DataFrame, vecs: DataFrame, hops: Int, beam: Int, k: Int,
+      edges: DataFrame, vecs: DataFrame, hops: Int, beam: Column, k: Int,
       excludeSelfId: Boolean = true): DataFrame = {
-    val bw = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col("cand").asc)
     def cut(v: DataFrame, h: Int): DataFrame =
-      v.withColumn("rank", row_number().over(bw).cast("long"))
-        .filter(col("rank") <= k)
-        .select(lit(h.toLong).as("hops"), col("query_id"),
-          col("cand").as("neighbor_id"), col("rank"), col("d2"))
-    var visited = entry.select("query_id", "cand", "d2")
-    if (hops > 0) visited = visited.localCheckpoint(true)
-    var out = cut(visited, 0)
-    for (h <- 1 to hops) {
-      val beamF = visited.withColumn("__r", row_number().over(bw))
-        .filter(col("__r") <= beam).select(col("query_id"), col("cand"))
-      val expanded0 = beamF
-        .join(edges.select(col("src").as("cand"), col("dst")), Seq("cand"))
-      val expanded = (if (excludeSelfId)
-          expanded0.filter(col("dst") =!= col("query_id")) else expanded0)
-        .select(col("query_id"), col("dst").as("cand")).distinct()
-      val scored = expanded
-        .join(queries, Seq("query_id"))
-        .join(vecs.select(col("vec_id").as("cand"), col("v").as("__cv")),
-          Seq("cand"))
-        .withColumn("d2", (dot(col("qv"), col("qv"))
-          - lit(2.0) * dot(col("qv"), col("__cv"))
-          + dot(col("__cv"), col("__cv"))).cast("long"))
-        .select("query_id", "cand", "d2")
-      val u = visited.unionByName(scored)
-        .select("query_id", "cand", "d2").distinct()
-      visited = if (h < hops) u.localCheckpoint(true) else u
-      out = out.unionByName(cut(visited, h))
-    }
-    out
+      visitedTopK(v, k, Nil).select(lit(h.toLong).as("hops"), col("*"))
+    val v0 = entry.select(visitedCols(Nil): _*)
+    val start = if (hops > 0) v0.localCheckpoint(true) else v0
+    (1 to hops).foldLeft((start, cut(start, 0))) { case ((visited, out), h) =>
+      val u = beamHop(visited, queries, edges, vecs, beam, excludeSelfId, Nil)
+      val next = if (h < hops) u.localCheckpoint(true) else u
+      (next, out.unionByName(cut(next, h)))
+    }._2
   }
+
+  private def visitedCols(keys: Seq[String]): Seq[Column] =
+    (keys :+ "query_id" :+ "cand" :+ "d2").map(col)
+
+  /** Per-(keys…, query) order of a visited set: d2, then candidate id. */
+  private def beamOrder(keys: Seq[String]) =
+    Window.partitionBy((keys.map(col) :+ col("query_id")): _*)
+      .orderBy(col("d2").asc, col("cand").asc)
+
+  /** One traversal hop: expand the `beam` best of `visited` along
+    * `edges`, exact-score the new candidates, and return the visited
+    * set ∪ them, deduplicated. */
+  private def beamHop(visited: DataFrame, queries: DataFrame,
+      edges: DataFrame, vecs: DataFrame, beam: Column,
+      excludeSelfId: Boolean, keys: Seq[String]): DataFrame = {
+    val b = keys.map(col)
+    val edgeKeys = keys.filter(edges.columns.contains)
+    val beamF = visited.withColumn("__r", row_number().over(beamOrder(keys)))
+      .filter(col("__r") <= beam)
+      .select((b ++ Seq(col("query_id"), col("cand"))): _*)
+    val expanded0 = beamF.join(edges.select((edgeKeys.map(col) ++
+      Seq(col("src").as("cand"), col("dst"))): _*), edgeKeys :+ "cand")
+    val expanded = (if (excludeSelfId)
+        expanded0.filter(col("dst") =!= col("query_id")) else expanded0)
+      .select((b ++ Seq(col("query_id"), col("dst").as("cand"))): _*)
+      .distinct()
+    val scored = expanded
+      .join(queries, Seq("query_id"))
+      .join(vecs.select(col("vec_id").as("cand"), col("v").as("__cv")),
+        Seq("cand"))
+      .withColumn("d2", l2sq(col("qv"), col("__cv")).cast("long"))
+      .select(visitedCols(keys): _*)
+    visited.unionByName(scored).select(visitedCols(keys): _*).distinct()
+  }
+
+  /** The final top-`k` cut of a visited set. */
+  private def visitedTopK(visited: DataFrame, k: Int,
+      keys: Seq[String]): DataFrame =
+    rankPrefix(visited.withColumn("rank",
+        row_number().over(beamOrder(keys)).cast("long")), col("rank"), Seq(k))
+      .select((keys.map(col) ++ Seq(col("query_id"),
+        col("cand").as("neighbor_id"), col("rank"), col("d2"))): _*)
 }

@@ -239,9 +239,10 @@ object SimilarityQueries {
 
   private def filteredIvfSpark(s: org.apache.spark.sql.SparkSession,
       d: String) =
-    Similarity.knnIvfFiltered(quantized(s, d), "vec_id", "qv", K,
-        cents = trainedCentroids(s, d), allowed = filteredAllowed(s, d),
-        nprobe = 3, queryFilter = pmod(col("__id"), lit(10)) === 0)
+    Similarity.knnIvfCentroids(quantized(s, d), "vec_id", "qv", K,
+        cents = trainedCentroids(s, d), nprobe = 3,
+        queryFilter = pmod(col("__id"), lit(10)) === 0,
+        allowed = Some(filteredAllowed(s, d)))
       .withColumn("rank", col("rank").cast("long"))
 
   private def filteredIvfSql: String = {
@@ -395,9 +396,7 @@ object SimilarityQueries {
           .select(col("vec_id"), col("label").cast("long").as("label"),
             transform(col("embedding"),
               x => round(x.cast("double") * 1000)).as("qv"))
-        val d2 = Similarity.dot(col("qv"), col("qv")) -
-          lit(2.0) * Similarity.dot(col("qv"), col("cvec")) +
-          Similarity.dot(col("cvec"), col("cvec"))
+        val d2 = Similarity.l2sq(col("qv"), col("cvec"))
         e.crossJoin(broadcast(labelCentroidVecs(s, d)))
           .select(col("vec_id"), col("label"),
             when(pmod(col("vec_id"), lit(10)) === 0, "heldout")
@@ -494,8 +493,9 @@ object SimilarityQueries {
         val coarse = trainedCentroids(s, d)
           .filter(pmod(col("cent_id"), lit(HierCoarseMod)) === 0)
           .select(col("cent_id").as("co_id"), col("cent_v").as("co_v"))
-        val hierB = Similarity.hierAssignCentroidsNp(quantized(s, d),
-            "vec_id", "qv", trainedCentroids(s, d), coarse, HierProbeSweep)
+        val hierB = Similarity.hierAssignCentroids(quantized(s, d),
+            "vec_id", "qv", trainedCentroids(s, d), coarse, HierProbeSweep,
+            keys = Seq("probe_c"))
           .select(col("probe_c"), col("id").as("vec_id"),
             col("cell_id").as("cell_hier"))
         flat.join(hierB, Seq("vec_id"))
@@ -619,9 +619,7 @@ object SimilarityQueries {
         import org.apache.spark.sql.expressions.Window
         val ef = quantized(s, d)
         val cents = cohortCentroids(s, d)
-        val d2 = (Similarity.dot(col("qv"), col("qv"))
-          - lit(2.0) * Similarity.dot(col("qv"), col("cent_v"))
-          + Similarity.dot(col("cent_v"), col("cent_v"))).cast("long")
+        val d2 = Similarity.l2sq(col("qv"), col("cent_v")).cast("long")
         val w = Window.partitionBy(col("vec_id"))
           .orderBy(col("d2").asc, col("cent_id").asc)
         val asg = ef.crossJoin(broadcast(cents))
@@ -695,9 +693,7 @@ object SimilarityQueries {
         import org.apache.spark.sql.expressions.Window
         val ef = quantized(s, d)
         def fit(cents: org.apache.spark.sql.DataFrame, gen: Long) = {
-          val d2 = (Similarity.dot(col("qv"), col("qv"))
-            - lit(2.0) * Similarity.dot(col("qv"), col("cent_v"))
-            + Similarity.dot(col("cent_v"), col("cent_v"))).cast("long")
+          val d2 = Similarity.l2sq(col("qv"), col("cent_v")).cast("long")
           val w = Window.partitionBy(col("vec_id"))
             .orderBy(col("d2").asc, col("cent_id").asc)
           ef.crossJoin(broadcast(cents))
@@ -826,8 +822,8 @@ object SimilarityQueries {
     // space; capping each IVF cell at a fixed quota keeps every region
     // represented (the cheap, deterministic cousin of k-center greedy,
     // which is inherently sequential). Broadcast centroids + map-only
-    // argmin assignment (ivfAssign), then one shuffle on cell_id with
-    // the quota pushed below the exchange as WindowGroupLimit
+    // argmin assignment (ivfAssignCentroids), then one shuffle on
+    // cell_id with the quota pushed below the exchange as WindowGroupLimit
     // (PlanSpec-pinned) — the op_reservoir_sample shape stratified by
     // learned cluster instead of a categorical column. Selection order
     // within a cell is portable-hash (replay-safe, engine-portable).
@@ -927,9 +923,7 @@ object SimilarityQueries {
         val pts = e.select(col("vec_id").as("__id"), col("qv").as("__v"))
         val init = e.filter(pmod(col("vec_id"), lit(50)) === 0)
           .select(col("vec_id").as("cent_id"), col("qv").as("cent_v"))
-        val d2 = Similarity.dot(col("__v"), col("__v")) -
-          lit(2.0) * Similarity.dot(col("__v"), col("cent_v")) +
-          Similarity.dot(col("cent_v"), col("cent_v"))
+        val d2 = Similarity.l2sq(col("__v"), col("cent_v"))
         (0 to TrainIters).map { t =>
           // the final iteration's centroids are exactly the shared
           // trained frame, and t = 1 is the shared training PREFIX
@@ -1142,9 +1136,7 @@ object SimilarityQueries {
         def intra(list: org.apache.spark.sql.DataFrame, method: String) = {
           val withV = list.select(col("query_id"), col("vec_id"))
             .join(e, Seq("vec_id"))
-          val dij = (Similarity.dot(col("iv"), col("iv")) -
-            lit(2.0) * Similarity.dot(col("iv"), col("jv")) +
-            Similarity.dot(col("jv"), col("jv"))).cast("long")
+          val dij = Similarity.l2sq(col("iv"), col("jv")).cast("long")
           withV.select(col("query_id"), col("vec_id").as("i"),
               col("qv").as("iv"))
             .join(withV.select(col("query_id"), col("vec_id").as("j"),
@@ -1454,7 +1446,7 @@ object SimilarityQueries {
         val (q, entry) = graphQueryEntry(s, d)
         val traced = Similarity.graphBeamSearchTrace(q, entry,
           nnGraphEdges(s, d), graphVecs(s, d),
-          hops = GraphHops, beam = GraphBeam, k = K)
+          hops = GraphHops, beam = lit(GraphBeam), k = K)
         recallBranched(s, d, "hops",
           (0 to GraphHops).map(h => lit(h.toLong)),
           traced.select(col("hops"), col("query_id"), col("neighbor_id")))
@@ -1523,9 +1515,9 @@ object SimilarityQueries {
             .select(lit((100 / m).toLong).as("delta_pct"),
               col("src"), col("dst"))
         }.reduce(_ unionByName _)
-        val searched = Similarity.graphBeamSearchBranched("delta_pct",
-          q, entryB, edgesB, edgesBranched = true, graphVecs(s, d),
-          hops = GraphHops, beamLim = lit(GraphBeam), k = K)
+        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
+          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
+          keys = Seq("delta_pct"))
         recallBranched(s, d, "delta_pct", bids,
           searched.select(col("delta_pct"), col("query_id"),
             col("neighbor_id")))
@@ -1563,9 +1555,9 @@ object SimilarityQueries {
           .select(lit("stale").as("state"), col("src"), col("dst"))
           .unionByName(patched
             .select(lit("patched").as("state"), col("src"), col("dst")))
-        val searched = Similarity.graphBeamSearchBranched("state",
-          q, entryB, edgesB, edgesBranched = true, graphVecs(s, d),
-          hops = GraphHops, beamLim = lit(GraphBeam), k = K)
+        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
+          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
+          keys = Seq("state"))
         recallBranched(s, d, "state", bids,
           searched.select(col("state"), col("query_id"),
             col("neighbor_id")))
@@ -1610,9 +1602,9 @@ object SimilarityQueries {
             .select(lit((100 / m).toLong).as("delta_pct"),
               col("src"), col("dst"))
         }.reduce(_ unionByName _)
-        val searched = Similarity.graphBeamSearchBranched("delta_pct",
-          q, entryB, edgesB, edgesBranched = true, graphVecs(s, d),
-          hops = GraphHops, beamLim = lit(GraphBeam), k = K)
+        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
+          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
+          keys = Seq("delta_pct"))
         recallBranched(s, d, "delta_pct", bids,
           searched.select(col("delta_pct"), col("query_id"),
             col("neighbor_id")))
@@ -1650,31 +1642,29 @@ object SimilarityQueries {
     "sim_graph_entry_sweep" -> QueryDef(
       (s, d) => {
         val assigned = graphAssigned(s, d)
-        val widths = GraphEntrySweep.map(ew => lit(ew.toLong))
         val ranked = Similarity.ivfAssignRanked(quantized(s, d),
           "vec_id", "qv", trainedCentroids(s, d))
         val q = assigned.filter(pmod(col("__id"), lit(50)) === 0)
           .select(col("__id").as("query_id"), col("__v").as("qv"))
-        val probesB = ranked.filter(pmod(col("__id"), lit(50)) === 0)
-          .withColumn("entry_cells", explode(array(widths: _*)))
-          .filter(col("__cr") <= col("entry_cells"))
+        val probesB = Similarity.rankPrefix(
+            ranked.filter(pmod(col("__id"), lit(50)) === 0), col("__cr"),
+            GraphEntrySweep, Seq("entry_cells"))
           .select(col("entry_cells"), col("__id").as("query_id"),
             col("cent_id").as("cell_id"))
         val entryB = q.join(probesB, Seq("query_id"))
           .join(assigned.select(col("__id").as("cand"),
             col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
           .filter(col("cand") =!= col("query_id"))
-          .withColumn("d2", (Similarity.dot(col("qv"), col("qv"))
-            - lit(2.0) * Similarity.dot(col("qv"), col("__cv"))
-            + Similarity.dot(col("__cv"), col("__cv"))).cast("long"))
+          .withColumn("d2",
+            Similarity.l2sq(col("qv"), col("__cv")).cast("long"))
           .select(col("entry_cells"), col("query_id"), col("cand"),
             col("d2"))
           .dropDuplicates("entry_cells", "query_id", "cand")
-        val searched = Similarity.graphBeamSearchBranched("entry_cells",
-          q, entryB, nnGraphEdges(s, d), edgesBranched = false,
-          graphVecs(s, d), hops = GraphHops, beamLim = lit(GraphBeam),
-          k = K)
-        recallBranched(s, d, "entry_cells", widths,
+        val searched = Similarity.graphBeamSearch(q, entryB,
+          nnGraphEdges(s, d), graphVecs(s, d), hops = GraphHops,
+          beam = lit(GraphBeam), k = K, keys = Seq("entry_cells"))
+        recallBranched(s, d, "entry_cells",
+          GraphEntrySweep.map(ew => lit(ew.toLong)),
           searched.select(col("entry_cells"), col("query_id"),
             col("neighbor_id")))
       },
@@ -1705,10 +1695,9 @@ object SimilarityQueries {
         val (q, entry) = graphQueryEntry(s, d)
         val bids = GraphBeamSweep.map(b => lit(b.toLong))
         val entryB = entry.withColumn("beam", explode(array(bids: _*)))
-        val searched = Similarity.graphBeamSearchBranched("beam",
-          q, entryB, nnGraphEdges(s, d), edgesBranched = false,
-          graphVecs(s, d), hops = GraphHops, beamLim = col("beam"),
-          k = K)
+        val searched = Similarity.graphBeamSearch(q, entryB,
+          nnGraphEdges(s, d), graphVecs(s, d), hops = GraphHops,
+          beam = col("beam"), k = K, keys = Seq("beam"))
         recallBranched(s, d, "beam", bids,
           searched.select(col("beam"), col("query_id"),
             col("neighbor_id")))
@@ -1739,13 +1728,12 @@ object SimilarityQueries {
         val (q, entry) = graphQueryEntry(s, d)
         val bids = GraphDegSweep.map(dg => lit(dg.toLong))
         val entryB = entry.withColumn("degree", explode(array(bids: _*)))
-        val edgesB = nnGraphEdgesWide(s, d)
-          .withColumn("degree", explode(array(bids: _*)))
-          .filter(col("erank") <= col("degree"))
+        val edgesB = Similarity.rankPrefix(nnGraphEdgesWide(s, d),
+            col("erank"), GraphDegSweep, Seq("degree"))
           .select(col("degree"), col("src"), col("dst"))
-        val searched = Similarity.graphBeamSearchBranched("degree",
-          q, entryB, edgesB, edgesBranched = true, graphVecs(s, d),
-          hops = GraphHops, beamLim = lit(GraphBeam), k = K)
+        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
+          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
+          keys = Seq("degree"))
         recallBranched(s, d, "degree", bids,
           searched.select(col("degree"), col("query_id"),
             col("neighbor_id")))
@@ -1784,9 +1772,9 @@ object SimilarityQueries {
         val q = quantized(s, d)
           .filter(pmod(col("vec_id"), lit(50)) === 0)
           .select(col("vec_id").as("query_id"), col("qv"))
-        val searched = Similarity.ivfPqSearchNp(q, indexedCodes(s, d),
+        val searched = Similarity.ivfPqSearch(q, indexedCodes(s, d),
           trainedCodebook(s, d), trainedCentroids(s, d),
-          nprobes = Seq(1, 3, 5), k = K)
+          nprobes = Seq(1, 3, 5), k = K, keys = Seq("nprobe"))
         recallBranched(s, d, "nprobe",
           Seq(1, 3, 5).map(np => lit(np.toLong)),
           searched.select(col("nprobe"), col("query_id"),
@@ -1821,12 +1809,12 @@ object SimilarityQueries {
         val e = quantized(s, d)
         val q = e.filter(pmod(col("vec_id"), lit(50)) === 0)
           .select(col("vec_id").as("query_id"), col("qv"))
-        val sl = Similarity.ivfPqResidualSearchNp(q,
+        val sl = Similarity.ivfPqResidualSearch(q,
           residualCellCodes(s, d), trainedResCodebook(s, d),
-          trainedCentroids(s, d), nprobes = Seq(1, 3, 5), k = RerankR)
-        val reranked = Similarity.rerankExactBranched("nprobe",
-          sl.select(col("nprobe"), col("query_id"), col("vec_id")),
-          q, e, K)
+          trainedCentroids(s, d), nprobes = Seq(1, 3, 5), k = RerankR,
+          keys = Seq("nprobe"))
+        val reranked = Similarity.rerankExact(sl, q, e, K,
+          keys = Seq("nprobe"))
         recallBranched(s, d, "nprobe",
           Seq(1, 3, 5).map(np => lit(np.toLong)),
           reranked.select(col("nprobe"), col("query_id"),
@@ -1864,14 +1852,12 @@ object SimilarityQueries {
         val q = e.filter(pmod(col("vec_id"), lit(50)) === 0)
           .select(col("vec_id").as("query_id"), col("qv"))
         val widths = Seq(K, RerankR, 10 * K)
-        val bids = widths.map(r => lit(r.toLong))
-        val sl = ivfpqResSpark(s, d, k = widths.max, np = Nprobe)
-          .withColumn("rerank_r", explode(array(bids: _*)))
-          .filter(col("rank") <= col("rerank_r"))
-          .select(col("rerank_r"), col("query_id"), col("vec_id"))
-        val reranked = Similarity.rerankExactBranched("rerank_r",
-          sl, q, e, K)
-        recallBranched(s, d, "rerank_r", bids,
+        val sl = Similarity.rankPrefix(
+          ivfpqResSpark(s, d, k = widths.max, np = Nprobe), col("rank"),
+          widths, Seq("rerank_r"))
+        val reranked = Similarity.rerankExact(sl, q, e, K,
+          keys = Seq("rerank_r"))
+        recallBranched(s, d, "rerank_r", widths.map(r => lit(r.toLong)),
           reranked.select(col("rerank_r"), col("query_id"),
             col("vec_id").as("neighbor_id")))
       },
@@ -2303,9 +2289,7 @@ object SimilarityQueries {
     val coded = sq8Frame(s, d)
     val q = coded.filter(pmod(col("vec_id"), lit(50)) === 0)
       .select(col("vec_id").as("query_id"), col("sv").as("xv"))
-    val d2 = (Similarity.dot(col("xv"), col("xv"))
-      - lit(2.0) * Similarity.dot(col("xv"), col("cv2"))
-      + Similarity.dot(col("cv2"), col("cv2"))).cast("long")
+    val d2 = Similarity.l2sq(col("xv"), col("cv2")).cast("long")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("d2").asc, col("vec_id").asc)
     coded.select(col("vec_id"), col("sv").as("cv2"))
@@ -2374,9 +2358,7 @@ object SimilarityQueries {
     val coded = sq8Frame(s, d)
     val q = coded.filter(pmod(col("vec_id"), lit(50)) === 0)
       .select(col("vec_id").as("query_id"), col("sv").as("xv"))
-    val d2 = (Similarity.dot(col("xv"), col("xv"))
-      - lit(2.0) * Similarity.dot(col("xv"), col("cv2"))
-      + Similarity.dot(col("cv2"), col("cv2"))).cast("long")
+    val d2 = Similarity.l2sq(col("xv"), col("cv2")).cast("long")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("d2").asc, col("vec_id").asc)
     coded.select(col("vec_id"), col("sv").as("cv2"))
@@ -2525,7 +2507,7 @@ object SimilarityQueries {
       quantized(s, d).filter(pmod(col("vec_id"), lit(50)) === 0)
         .select(col("vec_id").as("query_id"), col("qv")),
       residualCellCodes(s, d), trainedResCodebook(s, d),
-      trainedCentroids(s, d), nprobe = np, k = k)
+      trainedCentroids(s, d), nprobes = Seq(np), k = k)
 
   /** DuckDB text of the residual IVF-PQ search: IVF training, residual
     * computation, residual-codebook training, coding, per-(query,
@@ -2726,9 +2708,7 @@ object SimilarityQueries {
       val e = quantized(s, d)
       val q = e.filter(pmod(col("vec_id"), lit(50)) === 0)
         .select(col("vec_id").as("query_id"), col("qv").as("xv"))
-      val d2full = (Similarity.dot(col("xv"), col("xv"))
-        - lit(2.0) * Similarity.dot(col("xv"), col("cv2"))
-        + Similarity.dot(col("cv2"), col("cv2"))).cast("long")
+      val d2full = Similarity.l2sq(col("xv"), col("cv2")).cast("long")
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("d2").asc, col("neighbor_id").asc)
       q.crossJoin(
@@ -2905,7 +2885,7 @@ object SimilarityQueries {
         .filter(pmod(col("src"), col("__m")) =!= 0 &&
           pmod(col("dst"), col("__m")) =!= 0)
         .select(col("__m"), col("src"), col("dst"), col("d2"))
-      Similarity.nnGraphRankBranched("__m", b, GraphDeg)
+      Similarity.nnGraphRank(b, GraphDeg, keys = Seq("__m"))
     }
   }
 
@@ -2935,7 +2915,7 @@ object SimilarityQueries {
           explode(array(GraphDriftMods.map(m => lit(m.toLong)): _*)))
         .filter(pmod(col("src"), col("__m")) === 0)
         .select(col("__m"), col("src"), col("dst"), col("d2"))
-      Similarity.nnGraphRankBranched("__m", b, GraphDeg)
+      Similarity.nnGraphRank(b, GraphDeg, keys = Seq("__m"))
     }
   }
 
@@ -2982,7 +2962,7 @@ object SimilarityQueries {
       q, entry,
       edges.getOrElse(nnGraphEdges(s, d)),
       graphVecs(s, d),
-      hops = hops, beam = beam, k = K)
+      hops = hops, beam = lit(beam), k = K)
   }
 
   /** [[graphSearchAt]] with the ENTRY stage widened to the query's
@@ -3008,15 +2988,13 @@ object SimilarityQueries {
       .join(assigned.select(col("__id").as("cand"),
         col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
       .filter(col("cand") =!= col("query_id"))
-      .withColumn("d2", (Similarity.dot(col("qv"), col("qv"))
-        - lit(2.0) * Similarity.dot(col("qv"), col("__cv"))
-        + Similarity.dot(col("__cv"), col("__cv"))).cast("long"))
+      .withColumn("d2", Similarity.l2sq(col("qv"), col("__cv")).cast("long"))
       .select("query_id", "cand", "d2")
       .dropDuplicates("query_id", "cand")
     Similarity.graphBeamSearch(
       q, entry, nnGraphEdges(s, d),
       e.select(col("vec_id"), col("qv").as("v")),
-      hops = hops, beam = beam, k = K)
+      hops = hops, beam = lit(beam), k = K)
   }
 
   /** The corpus' nprobe = 1 cell assignment under the trained
@@ -3057,9 +3035,7 @@ object SimilarityQueries {
       .join(assigned.select(col("__id").as("cand"),
         col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
       .filter(col("cand") =!= col("query_id"))
-      .withColumn("d2", (Similarity.dot(col("qv"), col("qv"))
-        - lit(2.0) * Similarity.dot(col("qv"), col("__cv"))
-        + Similarity.dot(col("__cv"), col("__cv"))).cast("long"))
+      .withColumn("d2", Similarity.l2sq(col("qv"), col("__cv")).cast("long"))
       .select("query_id", "cand", "d2")
     (q.select("query_id", "qv"), entry)
   }
@@ -3416,7 +3392,7 @@ object SimilarityQueries {
       .filter(pmod(col("cent_id"), lit(HierCoarseMod)) === 0)
       .select(col("cent_id").as("co_id"), col("cent_v").as("co_v"))
     val hier = Similarity.hierAssignCentroids(quantized(s, d), "vec_id",
-        "qv", trainedCentroids(s, d), coarse, nprobeC)
+        "qv", trainedCentroids(s, d), coarse, Seq(nprobeC))
       .select(col("id").as("vec_id"), col("cell_id").as("cell_hier"))
     flat.join(hier, Seq("vec_id"))
       .withColumn("agree",
@@ -3505,9 +3481,7 @@ object SimilarityQueries {
     * dot identity — integer-valued quantized coords, so the result is
     * an exact int64. */
   private def pqD2 =
-    (Similarity.dot(col("sv"), col("sv"))
-      - lit(2.0) * Similarity.dot(col("sv"), col("cv"))
-      + Similarity.dot(col("cv"), col("cv"))).cast("long")
+    Similarity.l2sq(col("sv"), col("cv")).cast("long")
 
   private def pqD2Sql: String =
     s"""CAST(${dot("sv", "sv", 16)} - 2 * ${dot("sv", "cv", 16)}

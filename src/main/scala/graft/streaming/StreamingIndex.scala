@@ -35,13 +35,6 @@ object StreamingIndex {
   private def entryLit(id: Long, v: Seq[Double]): Column =
     struct(lit(id).as("id"), array(v.map(lit): _*).as("v"))
 
-  /** Exact squared L2 by the dot identity — integer-valued quantized
-    * coords, so the double is an exact integer (same doctrine as the
-    * batch PQ/IVF family). */
-  private def d2(a: Column, b: Column): Column =
-    Similarity.dot(a, a) - lit(2.0) * Similarity.dot(a, b) +
-      Similarity.dot(b, b)
-
   /** First-minimum argmin of `vec` against a literal entry array:
     * returns struct(d2, id) — ties fall to the earliest (lowest-id)
     * entry, matching `min(struct(d2, id))`. Runs as the native
@@ -68,7 +61,7 @@ object StreamingIndex {
       array(entries.sortBy(_._1).map { case (id, v) => entryLit(id, v) }: _*),
       struct(lit(Double.MaxValue).as("d2"), lit(Long.MaxValue).as("id")),
       (acc, e) => {
-        val dd = d2(vec, e.getField("v"))
+        val dd = Similarity.l2sq(vec, e.getField("v"))
         when(dd < acc.getField("d2"),
           struct(dd.as("d2"), e.getField("id").as("id"))).otherwise(acc)
       })

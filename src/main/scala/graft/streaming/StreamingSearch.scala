@@ -97,7 +97,7 @@ object StreamingSearch {
     queries.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val shortlist = Similarity.ivfPqResidualSearch(
-          batch, resCellCodes, resCb, cents, nprobe, rWidth)
+          batch, resCellCodes, resCb, cents, Seq(nprobe), rWidth)
         sink(Similarity.rerankExact(shortlist, batch, corpus, k))
       }
 

@@ -106,9 +106,10 @@ class SimilaritySpec extends SparkSpec {
       corpus.filter(pmod(col("vec_id"), lit(6)) === 0), corpus, "vec_id", "v", 5)
       .select("query_id", "neighbor_id", "cos9").as[(Long, Long, Double)]
       .collect().map { case (q, n, c) => (q, n) -> c }.toMap
-    val ivf = Similarity.knnIvf(corpus, "vec_id", "v", 5,
-      centroidFilter = pmod(col("vec_id"), lit(12)) === 0, nprobe = 2,
-      queryFilter = pmod(col("__id"), lit(6)) === 0)
+    val ivf = Similarity.knnIvfCentroids(corpus, "vec_id", "v", 5,
+      cents = corpus.filter(pmod(col("vec_id"), lit(12)) === 0)
+        .select(col("vec_id").as("cent_id"), col("v").as("cent_v")),
+      nprobe = 2, queryFilter = pmod(col("__id"), lit(6)) === 0)
       .select("query_id", "neighbor_id", "cos9").as[(Long, Long, Double)].collect()
     ivf should not be empty
     ivf.foreach { case (q, n, c) => brute.get((q, n)).foreach(_ shouldBe c) }
@@ -429,9 +430,9 @@ class SimilaritySpec extends SparkSpec {
       (5L, Seq(0.5, 0.8))).toDF("vec_id", "v")
     val cents = Seq((0L, Seq(0.0, 0.0))).toDF("cent_id", "cent_v")
     val allowed = Seq(4L, 5L).toDF("vec_id")
-    val pre = Similarity.knnIvfFiltered(corpus, "vec_id", "v", 2,
-        cents = cents, allowed = allowed, nprobe = 1,
-        queryFilter = col("__id") === 1L)
+    val pre = Similarity.knnIvfCentroids(corpus, "vec_id", "v", 2,
+        cents = cents, nprobe = 1, queryFilter = col("__id") === 1L,
+        allowed = Some(allowed))
       .collect()
     pre.map(_.getAs[Long]("neighbor_id")).toSet shouldBe Set(4L, 5L)
     val post = Similarity.knnIvfCentroids(corpus, "vec_id", "v", 2,
@@ -1090,7 +1091,7 @@ class SimilaritySpec extends SparkSpec {
     val coarseAsFine = cents
       .select(col("cent_id").as("co_id"), col("cent_v").as("co_v"))
     val same = Similarity.hierAssignCentroids(vecs, "vec_id", "qv",
-        cents, coarseAsFine, nprobeC = 1)
+        cents, coarseAsFine, nprobeCs = Seq(1))
       .as[(Long, Long)].collect().toMap
     same shouldBe flat
     // a 2-cell coarse level at 0 and 210: fine 0/100 hang off coarse
@@ -1104,7 +1105,7 @@ class SimilaritySpec extends SparkSpec {
       .toDF("co_id", "co_v")
     def agreeAt(w: Int): (Int, Int) = {
       val rows = Similarity.hierAssignCentroids(vecs, "vec_id", "qv",
-        cents, coarse2, nprobeC = w).as[(Long, Long)].collect()
+        cents, coarse2, nprobeCs = Seq(w)).as[(Long, Long)].collect()
       rows.map(_._1).distinct.length shouldBe 40
       rows.length shouldBe 40
       (rows.count(r => flat(r._1) == r._2), rows.length)
@@ -1144,5 +1145,116 @@ class SimilaritySpec extends SparkSpec {
     got should not be empty
     mean(got) should be > 0.0
     mean(got) should be >= mean(floor)
+  }
+
+  test("rank-prefix widths and k are validated at plan construction") {
+    val q = Seq((1L, Seq.fill(64)(1.0))).toDF("query_id", "qv")
+    val cents = Seq((0L, Seq.fill(64)(0.0))).toDF("cent_id", "cent_v")
+    val codes = Seq((2L, 0L, 0L, 0L)).toDF("vec_id", "cell_id", "sub", "code")
+    val cb = Seq((0, 0L, Seq.fill(16)(0.0))).toDF("sub", "code", "cv")
+    val vecs = Seq((2L, Seq.fill(64)(1.0))).toDF("vec_id", "qv")
+    val coarse = cents.select(col("cent_id").as("co_id"),
+      col("cent_v").as("co_v"))
+    for (bad <- Seq(Seq.empty[Int], Seq(0))) withClue(s"widths $bad: ") {
+      an[IllegalArgumentException] should be thrownBy
+        Similarity.ivfPqSearch(q, codes, cb, cents, bad, 5, Seq("nprobe"))
+      an[IllegalArgumentException] should be thrownBy
+        Similarity.ivfPqResidualSearch(q, codes, cb, cents, bad, 5,
+          Seq("nprobe"))
+      an[IllegalArgumentException] should be thrownBy
+        Similarity.hierAssignCentroids(vecs, "vec_id", "qv", cents, coarse,
+          bad, Seq("probe_c"))
+    }
+    // the scalar-width calls that used to return no rows silently
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.ivfPqSearch(q, codes, cb, cents, 0, 5)
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.knnIvfFilteredQueries(q, "query_id", "qv", 5,
+        vecs.select(col("vec_id").as("__id"), col("qv").as("__v"),
+          lit(0L).as("cell_id")), cents, nprobe = 0)
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.ivfPqSearch(q, codes, cb, cents, 1, 0)
+    // several widths without a branch key have no column to land in
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.ivfPqSearch(q, codes, cb, cents, Seq(1, 3), 5)
+  }
+
+  test("every branch of a 3-branch kernel call equals its one-branch call") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    val rnd = new scala.util.Random(29)
+    def vec(dims: Int) = Seq.fill(dims)((rnd.nextInt(201) - 100).toDouble)
+    val e = (0L until 300L).map(i => (i, vec(64))).toDF("vec_id", "qv")
+    val cents = e.filter(pmod(col("vec_id"), lit(20)) === 0)
+      .select(col("vec_id").as("cent_id"), col("qv").as("cent_v"))
+    val coarse = cents.filter(pmod(col("cent_id"), lit(60)) === 0)
+      .select(col("cent_id").as("co_id"), col("cent_v").as("co_v"))
+    val q = e.filter(pmod(col("vec_id"), lit(10)) === 0)
+      .select(col("vec_id").as("query_id"), col("qv"))
+    // a 4×8-codeword codebook and a deterministic code per (vec, sub):
+    // branch isolation needs a valid index shape, not a trained one
+    val cb = (for (sub <- 0 until 4; code <- 0L until 8L)
+      yield (sub, code, vec(16))).toDF("sub", "code", "cv")
+    val (assigned, probes) = Similarity.ivfAssignCentroids(e, "vec_id", "qv",
+      cents, nprobe = 2)
+    val cellCodes = assigned.select(col("__id").as("vec_id"), col("cell_id"))
+      .crossJoin((0L until 4L).toDF("sub"))
+      .withColumn("code", pmod(col("vec_id") * 7 + col("sub") * 3, lit(8L)))
+    val shortlist = Similarity.ivfPqResidualSearch(q, cellCodes, cb, cents,
+      Seq(3), 100)
+    val scored = Similarity.nnGraphPairsScored(
+      probes.select(col("query_id").as("id"), col("cell_id")),
+      e.select(col("vec_id"), col("qv").as("v")))
+    val entry = q.join(assigned.select(col("__id").as("query_id"),
+        col("cell_id")), Seq("query_id"))
+      .join(assigned.select(col("__id").as("cand"), col("__v").as("cv"),
+        col("cell_id")), Seq("cell_id"))
+      .filter(col("cand") =!= col("query_id"))
+      .select(col("query_id"), col("cand"),
+        Similarity.l2sq(col("qv"), col("cv")).cast("long").as("d2"))
+    // tag a frame with every configuration as the branch column (no
+    // key: the one configuration, untagged), keeping the rows `keep`
+    // admits for its branch
+    def branches(df: DataFrame, ws: Seq[Int], ks: Seq[String])(
+        keep: Column => Column): DataFrame =
+      if (ks.isEmpty) df.filter(keep(lit(ws.head)))
+      else df.withColumn(ks.head, explode(array(ws.map(w => lit(w)): _*)))
+        .filter(keep(col(ks.head)))
+    val coprime = (m: Column) =>
+      pmod(col("src"), m) =!= 0 && pmod(col("dst"), m) =!= 0
+    // one row per branch-keyed kernel: its configurations and a call
+    // taking (configurations, keys)
+    val kernels: Seq[(String, Seq[Int], (Seq[Int], Seq[String]) => DataFrame)] =
+      Seq(
+        ("hier assign", Seq(1, 2, 4), (ws, ks) =>
+          Similarity.hierAssignCentroids(e, "vec_id", "qv", cents, coarse,
+            ws, ks)),
+        ("ivf-pq", Seq(1, 3, 5), (ws, ks) =>
+          Similarity.ivfPqSearch(q, cellCodes, cb, cents, ws, 10, ks)),
+        ("residual ivf-pq", Seq(1, 3, 5), (ws, ks) =>
+          Similarity.ivfPqResidualSearch(q, cellCodes, cb, cents, ws, 10,
+            ks)),
+        ("rerank", Seq(10, 30, 100), (ws, ks) =>
+          Similarity.rerankExact(
+            Similarity.rankPrefix(shortlist, col("rank"), ws, ks), q, e, 10,
+            ks)),
+        ("graph rank", Seq(10, 3, 2), (ws, ks) =>
+          Similarity.nnGraphRank(
+            branches(scored, ws, ks)(coprime), 6, ks)),
+        ("beam search", Seq(3, 6, 12), (ws, ks) =>
+          Similarity.graphBeamSearch(q, branches(entry, ws, ks)(_ => lit(true)),
+            Similarity.rankPrefix(Similarity.nnGraphRank(scored, 12),
+              col("erank"), ws, ks),
+            e.select(col("vec_id"), col("qv").as("v")), hops = 2,
+            beam = lit(10), k = 10, keys = ks)))
+    for ((name, ws, run) <- kernels) withClue(s"$name: ") {
+      val swept = run(ws, Seq("b")).collect()
+      swept.map(_.getAs[Number]("b").intValue).toSet shouldBe ws.toSet
+      for (w <- ws) withClue(s"branch $w: ") {
+        val one = run(Seq(w), Nil).collect().map(_.toSeq).toSet
+        one should not be empty
+        swept.filter(_.getAs[Number]("b").intValue == w)
+          .map(_.toSeq.tail).toSet shouldBe one
+      }
+    }
   }
 }
