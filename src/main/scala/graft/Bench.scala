@@ -9,7 +9,7 @@ object Bench {
   /** Force FULL evaluation of every output column via the no-op sink.
     * `.count()` would let Catalyst prune unused projections, so map-only
     * queries would time the scan instead of their expression work. */
-  private def force(df: DataFrame): Unit =
+  private[graft] def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   /** Headline queries reported per-query on the metric line. The driver
@@ -106,23 +106,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // A stale detail file from a prior run must not masquerade as this
     // run's results if the run (or the final write) fails mid-way.
     try {
       Files.deleteIfExists(Paths.get("bench_detail.json"))
       Files.deleteIfExists(Paths.get("bench_plans.txt"))
     } catch { case _: Throwable => () }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Same UTC pin as Verify: the events fixture is TIMESTAMP_NTZ, so
-      // without it the bench would bucket/filter in the host's JVM zone
-      // and time a DIFFERENT selectivity than the verified path.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     val known = queries.map(_._1).toSet
     // A renamed query must not silently fall off the metric line.
@@ -162,7 +152,7 @@ object Bench {
       // phash) start cold each pass: each pass pays the compute once,
       // its reusers read the cache — the curation-run cost model, kept
       // honest under min-of-passes.
-      graft.queries.DedupQueries.clearSharedCaches()
+      graft.queries.FrameCache.clearAll()
       // Ambient-load fingerprint first: host loadavg, then the pinned
       // constant-work probe — if the probe drifts with the board, the
       // drift is ambient; if the probe is steady, it's code.
@@ -172,13 +162,8 @@ object Bench {
       // item BEFORE the per-query loop, so no query absorbs the whole
       // clique as a first-consumer payment (round-7 `curate_scorecard`
       // read as 6.7 s of which ~half was the near-dup frames).
-      try {
-        graft.queries.DedupQueries.prewarmShared(spark, sfDir)
-        graft.queries.AnalyticsQueries.prewarmShared(spark, sfDir)
-        graft.queries.MultimodalQueries.prewarmShared(spark, sfDir)
-        graft.queries.SimilarityQueries.prewarmShared(spark, sfDir)
-        graft.queries.TextQueries.prewarmShared(spark, sfDir)
-      } catch { case e: Throwable =>
+      try SparkEntry.prewarmShared(spark, sfDir)
+      catch { case e: Throwable =>
         System.err.println(s"WARN bench: shared-frame prewarm failed: " +
           s"${e.getClass.getName}: ${e.getMessage}")
       }

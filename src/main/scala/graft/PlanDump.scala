@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: `runMain graft.PlanDump <sfDir> [query...]`
   * prints the formatted physical plan of each named query (all queries
   * when none named) — the iteration loop for checking pushdown, pruning,
@@ -11,13 +9,9 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 8 cores whatever the host: the committed dumps under plans/ carry
+    // `hashpartitioning(…, 8)`, so a dump stays diffable against them.
+    val spark = LocalSession(8)
     names.foreach { n =>
       println(s"======== $n")
       try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

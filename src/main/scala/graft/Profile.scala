@@ -2,29 +2,26 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ShuffleExchangeExec}
 
-/** Optimization-round profiler (dev-only, like [[Prof]]): for each named
-  * query, separates DATAFRAME CONSTRUCTION cost (analysis + any eager
-  * side-effects — FrameCache memo builds, localCheckpoints fired during
-  * build) from EXECUTION cost (the noop-sink write), and counts the
+/** Batch-query profiler (dev-only): for each named query, separates
+  * DATAFRAME CONSTRUCTION cost (analysis + any eager side-effects —
+  * FrameCache memo builds, localCheckpoints fired during build) from
+  * EXECUTION cost (the noop-sink write), and counts the
   * Spark jobs / stages / tasks each phase launched plus the executed
   * plan's exchange nodes. At fixture scale wall time is dominated by
   * job/stage fixed costs, so these counts say WHERE a query's seconds
   * live — the measurement §1 of the optimization guide asks for before
   * any change.
   *
-  * `runMain graft.OptProf <sfDir> <query,query,...|all> [passes]`
+  * `runMain graft.Profile <sfDir> <query,query,...|all> [passes] [noprewarm]`
+  * (`noprewarm`: each query pays its own shared-frame builds).
   */
-object OptProf {
-  private def force(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
+object Profile {
   private final class Counter extends SparkListener {
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -70,27 +67,11 @@ object OptProf {
       System.err.println(s"unknown queries: ${unknown.mkString(",")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Config A/B hook (dev-only): SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    // applies session confs on top of the bench-identical base, so a
-    // candidate config change is measured here before touching Bench.
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0)((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    if (extra.nonEmpty)
-      System.err.println(s"[optprof] extra conf: ${extra.mkString(",")}")
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val counter = new Counter
     spark.sparkContext.addSparkListener(counter)
-    try force(all("cdc_enrich")(spark, sfDir)) catch { case _: Throwable => () }
+    try Bench.force(all("cdc_enrich")(spark, sfDir))
+    catch { case _: Throwable => () }
 
     // Bench-shaped passes: shared caches cleared and prewarmed ONCE per
     // pass, then every named query measured in sorted order — so a
@@ -100,20 +81,15 @@ object OptProf {
     println("query,pass,build_s,exec_s,build_jobs,exec_jobs,stages,tasks," +
       "shuffles,bcasts")
     (1 to passes).foreach { p =>
-      graft.queries.DedupQueries.clearSharedCaches()
+      graft.queries.FrameCache.clearAll()
       if (prewarm) {
         val w0 = System.nanoTime()
-        try {
-          graft.queries.DedupQueries.prewarmShared(spark, sfDir)
-          graft.queries.AnalyticsQueries.prewarmShared(spark, sfDir)
-          graft.queries.MultimodalQueries.prewarmShared(spark, sfDir)
-          graft.queries.SimilarityQueries.prewarmShared(spark, sfDir)
-          graft.queries.TextQueries.prewarmShared(spark, sfDir)
-        } catch { case e: Throwable =>
+        try SparkEntry.prewarmShared(spark, sfDir)
+        catch { case e: Throwable =>
           System.err.println(s"prewarm failed: $e")
         }
         System.err.println(
-          f"[optprof] pass $p prewarm ${(System.nanoTime() - w0) / 1e9}%.1f s")
+          f"[profile] pass $p prewarm ${(System.nanoTime() - w0) / 1e9}%.1f s")
       }
       names.foreach { name =>
         val (j0, s0, t0c) = counter.snap()
@@ -125,7 +101,7 @@ object OptProf {
         val w1 = System.nanoTime()
         val (j1, _, _) = counter.snap()
         if (df != null) {
-          try force(df) catch { case e: Throwable =>
+          try Bench.force(df) catch { case e: Throwable =>
             System.err.println(s"$name exec failed: $e") }
           val w2 = System.nanoTime()
           val (j2, s2, t2c) = counter.snap()

@@ -46,9 +46,6 @@ import graft.operators.{ShardExport, Similarity}
   */
 object ScaleLadder {
 
-  private def force(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
@@ -83,14 +80,7 @@ object ScaleLadder {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val passes = math.max(1,
       scala.util.Try(sys.env("SPARK_GRAFT_LADDER_PASSES").toInt).getOrElse(2))
 
@@ -101,7 +91,7 @@ object ScaleLadder {
     val shardNs = Seq(2000000L, 6000000L, 20000000L)
     def shardPoint(n: Long): Double = {
       val units = syntheticUnits(spark, n).localCheckpoint(true)
-      val secs = (1 to passes).map(_ => time(force(
+      val secs = (1 to passes).map(_ => time(Bench.force(
         ShardExport.shardPlan(units, "doc_id", "n_tokens", nShards = 8))))
       units.unpersist()
       secs.min
@@ -130,7 +120,7 @@ object ScaleLadder {
     val assignNs = Seq(20000L, 60000L, 200000L)
     def assignPoint(n: Long): Double = {
       val (vecs, cents) = vecsAt(n)
-      val sec = (1 to passes).map(_ => time(force(
+      val sec = (1 to passes).map(_ => time(Bench.force(
         Similarity.ivfAssignCentroids(vecs, "vec_id", "qv", cents,
           nprobe = 2)._2))).min
       Seq(vecs, cents).foreach(_.unpersist())
@@ -154,7 +144,7 @@ object ScaleLadder {
       val coarse = cents.filter(pmod(col("cent_id"), lit(step)) === 0)
         .select(col("cent_id").as("co_id"), col("cent_v").as("co_v"))
         .localCheckpoint(true)
-      val sec = (1 to passes).map(_ => time(force(
+      val sec = (1 to passes).map(_ => time(Bench.force(
         Similarity.hierAssignCentroids(vecs, "vec_id", "qv", cents,
           coarse, nprobeCs = Seq(2))))).min
       Seq(vecs, cents, coarse).foreach(_.unpersist())
@@ -174,7 +164,7 @@ object ScaleLadder {
           cents, nprobe = 2)._2
         .select(col("query_id").as("id"), col("cell_id"))
         .localCheckpoint(true)
-      val sec = (1 to passes).map(_ => time(force(
+      val sec = (1 to passes).map(_ => time(Bench.force(
         Similarity.nnGraph(probes,
           vecs.select(col("vec_id"), col("qv").as("v")), degree = 6)))).min
       Seq(vecs, cents, probes).foreach(_.unpersist())

@@ -24,6 +24,17 @@ object SparkEntry {
       MultimodalQueries.defs ++ AdvancedQueries.defs ++ GenQueries.defs ++
       WarehouseQueries.defs ++ AnalyticsQueries.defs
 
+  /** Build every family's registry-shared frames eagerly, so a timed
+    * pass can itemize them ([[graft.queries.FrameCache.buildSeconds]])
+    * instead of charging them to whichever query touches them first. */
+  private[graft] def prewarmShared(spark: SparkSession, sfDir: String): Unit = {
+    DedupQueries.prewarmShared(spark, sfDir)
+    AnalyticsQueries.prewarmShared(spark, sfDir)
+    MultimodalQueries.prewarmShared(spark, sfDir)
+    SimilarityQueries.prewarmShared(spark, sfDir)
+    TextQueries.prewarmShared(spark, sfDir)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (k, v) => k -> v.build }
 

@@ -143,9 +143,6 @@ object StreamBench {
           Option(p.durationMs.get("triggerExecution"))
             .map(_.longValue / 1e3).getOrElse(0.0)
         }
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          q.recentProgress.foreach(p => System.err.println(
-            s"DBG $name batch=${p.batchId} rows=${p.numInputRows} ${p.durationMs}"))
         name -> ms
       }
       Drive(sec, batches, chunkSec.result(), perQuery,
@@ -495,13 +492,9 @@ object StreamBench {
       "doc_id", "text", k = 8, occCap = 32).localCheckpoint()
     // the trained-artifact pre-filter, built before the clock next to
     // the index: most arriving grams miss the reference, and the
-    // sketch drops them scan-side before the join's exchange. A/B
-    // knob (the STREAM_ONLY doctrine — diagnostic only, never set in
-    // driver runs): SPARK_GRAFT_XSTRIP_SKETCH=off serves the bare
-    // join, isolating the sketch's contribution on one box.
-    val refSketch =
-      if (sys.env.get("SPARK_GRAFT_XSTRIP_SKETCH").contains("off")) None
-      else graft.operators.SpanDedup.refGramSketch(refGrams)
+    // sketch drops them scan-side before the join's exchange
+    // (docs/AB_r15.md measured it on vs off)
+    val refSketch = graft.operators.SpanDedup.refGramSketch(refGrams)
     val base = docs0.filter(splitOf(col("doc_id")) === "train")
       .select(col("doc_id").cast("long"), col("text").cast("string"))
       .as[ScoreIn].collect().toIndexedSeq
@@ -1076,9 +1069,11 @@ object StreamBench {
     * throws is dropped with a warning — one broken twin must not zero
     * the perf signal of the others. `volumeFloor` is the per-section row
     * target the document-driven sections replicate up to (tests pass a
-    * small floor; the bench uses [[DefaultVolumeFloor]]). */
+    * small floor; the bench uses [[DefaultVolumeFloor]]). `only` keeps
+    * just the named sections (None = all). */
   def run(spark: SparkSession, sfDir: String,
-      volumeFloor: Int = DefaultVolumeFloor): Seq[Section] = {
+      volumeFloor: Int = DefaultVolumeFloor,
+      only: Option[Set[String]] = None): Seq[Section] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // untimed warm-up: first streaming query pays micro-batch engine +
@@ -1140,9 +1135,8 @@ object StreamBench {
       "media" -> (mediaSection(_, _, volumeFloor)),
       "curation" -> (curationSection(_, _, volumeFloor)),
       "anomaly" -> anomalySection)
-    // ad-hoc profiling filter (the stream-side ProfileOne): run only the
-    // named sections — NEVER set in driver runs, which time the full board
-    val only = sys.env.get("SPARK_GRAFT_STREAM_ONLY").map(_.split(",").toSet)
+    // `only`: the dev filter from [[main]]'s argument; Bench passes
+    // none, so the official metric line always times the full board
     try sections.filter { case (n, _) => only.forall(_.contains(n)) }
       .flatMap { case (name, fn) =>
       try {
@@ -1163,22 +1157,32 @@ object StreamBench {
     }
   }
 
-  /** Ad-hoc stream-section profiler (the stream-side ProfileOne):
-    * `runMain graft.StreamBench`, honoring SPARK_GRAFT_SF_DIR /
-    * SPARK_GRAFT_CPUS / SPARK_GRAFT_STREAM_ONLY. One line per section;
-    * the OFFICIAL numbers come from [[graft.Bench]], which embeds the
-    * same [[run]]. */
+  /** Stream-section profiler: `runMain graft.StreamBench [section,...]`
+    * (all sections when none named), honoring SPARK_GRAFT_SF_DIR and
+    * SPARK_GRAFT_CPUS. One line per section; the OFFICIAL numbers come
+    * from [[graft.Bench]], which embeds the same [[run]]. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, sfDir).foreach { s =>
+    val only = args.headOption.map(_.split(",").toSet)
+    val spark = LocalSession()
+    // Discarded small-volume pass of the SAME selected sections first:
+    // a scoped run would otherwise time its first sections against a
+    // colder JIT/codegen state than the full bench ever does (the full
+    // protocol's batch passes warm the serving kernels long before the
+    // stream clock starts) — docs/AB_r14.md measured fsearch ~15 % low
+    // in scoped runs for exactly this reason. The warm-up pass pays
+    // micro-batch engine + codegen + broadcast init for every section
+    // it will time, then its numbers are thrown away.
+    // NonFatal only, and loudly: a warm-up that dies (broken fixture,
+    // bad config) must surface as a WARN, not as mysteriously cold
+    // timings in the real pass; fatal errors (OOM) still propagate.
+    try { run(spark, sfDir, volumeFloor = 2000, only); () }
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"WARN stream bench: warm-up pass failed: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
+    }
+    run(spark, sfDir, only = only).foreach { s =>
       println(f"STREAM ${s.name}%-14s rows=${s.rows} sec=${s.sec}%.3f " +
         f"rps=${s.rps}%.0f calib=${s.calibSec}%.3f")
     }

@@ -25,9 +25,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * for micros fixtures (no nanos column exists to reinterpret).
   *
   * The NTZ branch casts wall-clock values in the session timezone, so
-  * every entry point that reads events (Verify, Bench, Prof, ProfileOne,
-  * PlanDump, the test harness) pins `spark.sql.session.timeZone=UTC` —
-  * the invariant stated in Schemas.scala.
+  * every entry point that reads events pins
+  * `spark.sql.session.timeZone=UTC` ([[graft.LocalSession]] for the
+  * entry points, SparkSpec for the test harness) — the invariant stated
+  * in Schemas.scala.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -39,12 +40,12 @@ object Tables {
     * schema-inference job per call, and with ten fixture tables a
     * `registerAll` consumer paid ~10 driver jobs (~0.5 s at
     * `local[32]`) of pure plan construction per query (r16 measured it
-    * with OptProf). A catalog-backed production table resolves its
-    * schema from the metastore exactly once; this map is that. The
-    * frames stay lazy scans — no rows are materialized — so the
-    * pay-once-per-pass compute model is untouched (FrameCache clears
-    * do not apply to schema handles). Entries of stopped sessions are
-    * dropped like FrameCache's. */
+    * with the batch profiler, [[graft.Profile]]). A catalog-backed
+    * production table resolves its schema from the metastore exactly
+    * once; this map is that. The frames stay lazy scans — no rows are
+    * materialized — so the pay-once-per-pass compute model is untouched
+    * (FrameCache clears do not apply to schema handles). Entries of
+    * stopped sessions are dropped like FrameCache's. */
   private val handles = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]
 

@@ -78,12 +78,6 @@ object DedupQueries {
     }
   }
 
-  /** Timing-fairness hook for [[graft.Bench]]/[[graft.ProfileOne]] —
-    * clears EVERY registry-shared frame (near-dup pairs/labels here,
-    * the co-purchase frame in [[AnalyticsQueries]]); see [[FrameCache]]
-    * for the pay-once-per-pass rationale. */
-  def clearSharedCaches(): Unit = FrameCache.clearAll()
-
   /** Build this family's shared frames eagerly (pairs, then the labels
     * derived from them) so a bench pass can time them as their own line
     * item instead of charging the whole clique to whichever query

@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * assumes fixture data under `sfDir` is immutable for the session
   * lifetime — regenerating parquet in place requires [[clearAll]].
   *
-  * Timing fairness: [[graft.Bench]]/[[graft.ProfileOne]] call
+  * Timing fairness: [[graft.Bench]]/[[graft.Profile]] call
   * [[clearAll]] at pass start so each bench pass PAYS every shared
   * computation exactly once — min-over-passes can never discard the
   * compute cost entirely.

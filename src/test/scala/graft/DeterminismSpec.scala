@@ -25,7 +25,7 @@ class DeterminismSpec extends SparkSpec {
           // cold shared frames per run — otherwise the second run of the
           // near-dup queries reads the first run's localCheckpoint and
           // the pin compares the cache to itself (vacuous)
-          graft.queries.DedupQueries.clearSharedCaches()
+          graft.queries.FrameCache.clearAll()
           val df = fn(spark, d)
           val cols = df.columns.sorted
             .map(c => coalesce(col(c).cast("string"), lit("␀")))

@@ -12,8 +12,9 @@ runs of the same plan:
     `localCheckpoint` call (`Similarity.scala:1113`), which moves with any
     edit to that file;
   - the counter suffix of lambda variables (`lambda x_17`) and the
-    JVM's generated lambda class names (`$$Lambda$3132/0x00007fb580ecdbb8`)
-    in typed-operator arguments.
+    JVM's generated lambda class names and instance identity hashes
+    (`$$Lambda$3132/0x00007fb580ecdbb8@6d3a56ea`) in typed-operator
+    arguments.
 sbt's own `[info]`/`[warn]`/`[error]` lines are ignored.
 
 Prints one line per query: `identical`, or `differs` with its exchange
@@ -30,7 +31,7 @@ NORMALIZE = [
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1"),
     (re.compile(r"(lambda \w+?)_\d+"), r"\1_"),
-    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+(@[0-9a-f]+)?"), "$Lambda$"),
 ]
 EXCHANGE = re.compile(r"^\(\d+\) (?:Broadcast)?Exchange\b", re.M)
 SBT_LOG = re.compile(r"^\[(info|warn|error|success)\]")
