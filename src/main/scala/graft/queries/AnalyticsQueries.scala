@@ -134,9 +134,7 @@ object AnalyticsQueries {
   /** Power-iteration rounds for the trained PageRank — enough for the
     * convergence audit to show genuine contraction (the per-round L1
     * movement drops by ~the damping factor); each extra round adds one
-    * edges-join to the build and one unrolled CTE block to the oracle.
-    * MUST initialize before `defs` (the oracle CTE generators read it
-    * while `defs` initializes). */
+    * edges-join to the build and one unrolled CTE block to the oracle. */
   private val PrIters = 3
 
   /** The engagement graph the PageRank queries run on: distinct
@@ -215,14 +213,12 @@ object AnalyticsQueries {
   /** Synchronous LPA rounds — enough for the co-purchase graph to
     * coarsen visibly while keeping the unrolled oracle readable; each
     * extra round adds one vote join to the build and one CTE block to
-    * the oracle. MUST initialize before `defs` (the oracle CTE
-    * generators read it while `defs` initializes). */
+    * the oracle. */
   private val LpaIters = 3
 
   /** Multi-source BFS rounds and source count: distances are exact
     * within BfsIters hops of the BfsSources highest-weighted-degree
-    * hubs (deterministic pick: weighted degree DESC, node ASC). MUST
-    * initialize before `defs`. */
+    * hubs (deterministic pick: weighted degree DESC, node ASC). */
   private val BfsIters = 3
   private val BfsSources = 4
 
@@ -231,21 +227,19 @@ object AnalyticsQueries {
     * plateaus at round 3 after peeling 1,880 → 1,535 nodes; sf0.1 at
     * round 5 after 5,922 → 3) — so the committed audit itself shows
     * the plateau that proves convergence, and the spec's
-    * one-more-round check holds everywhere. MUST initialize before
-    * `defs`. */
+    * one-more-round check holds everywhere. */
   private val KcoreK = 2L
   private val KcoreIters = 6
 
   /** Weighted-shortest-path Bellman–Ford rounds (same source hubs as
     * the BFS): weighted minimal paths can use more hops than the
     * hop-metric diameter, so the weighted run iterates deeper than
-    * [[BfsIters]]. GraphSpec pins the fixed point at the fixture SFs.
-    * MUST initialize before `defs`. */
+    * [[BfsIters]]. GraphSpec pins the fixed point at the fixture SFs. */
   private val WspIters = 10
 
   /** Personalized-PageRank rounds from the same hubs — enough for the
     * walk to spread past the hubs' 2-hop neighborhood while keeping
-    * the unrolled oracle readable. MUST initialize before `defs`. */
+    * the unrolled oracle readable. */
   private val PprIters = 3
 
   /** The symmetrized weighted co-purchase adjacency both LPA queries
@@ -581,7 +575,7 @@ object AnalyticsQueries {
       |  SELECT p2, p1, CAST(support AS BIGINT) FROM pairs
       |  WHERE support >= 2)""".stripMargin
 
-  val defs: Map[String, QueryDef] = Map(
+  lazy val defs: Map[String, QueryDef] = Map(
 
     // The pagerank STEP kernel iterated into an actual training run
     // (PrIters damped power-iteration rounds from the uniform start) —

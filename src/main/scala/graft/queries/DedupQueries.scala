@@ -28,8 +28,7 @@ object DedupQueries {
     * per 2^18 units of cumulative importance (scores are ~1000 per
     * feature × ~45 features per doc, so ≈ one keeper per ~5 docs at any
     * SF — 98/500 measured at sf0.01; the kept count tracks corpus
-    * size). MUST initialize before
-    * `defs` (the oracle text reads it while `defs` initializes). */
+    * size). */
   private val DsirStep = 262144L
 
   /** Systematic-sampling step for the `curate_pipeline` capstone's
@@ -38,7 +37,7 @@ object DedupQueries {
     * semantic-dropped) SURVIVORS — a far smaller, importance-skewed
     * population — and the audit manifest should stay populated at the
     * smallest fixture (≈40 % of survivors kept at the measured ~50k
-    * mean importance). Same init-before-`defs` rule. */
+    * mean importance). */
   private val PipelineStep = 131072L
 
   /** The capstone resampler's step, package-visible for the streaming
@@ -124,8 +123,7 @@ object DedupQueries {
   /** Band configurations of `dedup_band_sweep`: every divisor split of
     * the K=12 signature into (bands × rows-per-band). More bands /
     * shorter rows move the LSH s-curve threshold (≈ (1/b)^(1/r)) down:
-    * recall rises, precision falls. Declared before `defs` (the oracle
-    * generator reads it while `defs` initializes). */
+    * recall rises, precision falls. */
   private val SweepBands = Seq(2, 3, 4, 6)
 
   /** Per-config candidate CTEs for the band sweep: same signature CTE
@@ -471,7 +469,7 @@ object DedupQueries {
       .stripMargin
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  lazy val defs: Map[String, QueryDef] = Map(
 
     // Exact dedup: hash-groupBy on the 32-byte digest of normalized text
     // (the shuffle carries digests, not documents — the only shape that

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
@@ -10,8 +11,10 @@ import graft.operators.Similarity
   * every dot/norm is exact integer arithmetic — order-independent and
   * bit-identical in the DuckDB oracle.
   *
-  *   - brute-force top-k = correctness baseline (quadratic — query set
-  *     is a 1-in-10 sample; at 100 TB you never run this shape, you run:)
+  *   - brute-force top-k = correctness baseline (quadratic — the cosine
+  *     rows query a 1-in-10 sample ([[CosSample]]), the squared-L2 rows
+  *     a 1-in-50 one ([[L2Sample]]); at 100 TB you never run this
+  *     shape, you run:)
   *   - LSH top-k = the scale path: map-only bucketing, equi-join on
   *     (table, bucket) keys, exact re-rank of candidates only.
   */
@@ -26,22 +29,19 @@ object SimilarityQueries {
   /** Lloyd iterations for the trained IVF centroids / PQ codebook. Two
     * is enough to move every centroid off its id-pick init (the recall
     * gates measure the improvement); each extra iteration adds one
-    * corpus pass to the build and one unrolled CTE block to the oracle.
-    * MUST initialize before `defs` (the oracle CTE generators read it
-    * while `defs` initializes — a later declaration would be 0 there). */
+    * corpus pass to the build and one unrolled CTE block to the oracle. */
   private val TrainIters = 2
 
   /** Codewords per PQ subspace. 16 (4 bits per code — a 16-bit packed
     * row for 4 subspaces) lifted recall@10 from 0.16 to 0.22 at sf0.01
     * over the round-8 8-codeword book at the same training depth:
     * codebook CAPACITY was the binding constraint, not Lloyd
-    * convergence (inertia was already near-flat at 2 iterations). Same
-    * init-before-`defs` rule as [[TrainIters]]. */
+    * convergence (inertia was already near-flat at 2 iterations). */
   private val PqCodes = 16
 
   /** Cells probed per query in the composed IVF-PQ search — same probe
     * width as the exact-re-rank IVF path (`sim_knn_ivf`), so the two
-    * serving shapes are comparable. Init-before-`defs` rule applies. */
+    * serving shapes are comparable. */
   private val Nprobe = 3
 
   /** ADC shortlist width for the exact re-rank stage (IVFADC+R): each
@@ -49,15 +49,14 @@ object SimilarityQueries {
     * refinement stage re-scores against the RAW vectors. 3× is the
     * classic refinement factor — wide enough that ADC ordering errors
     * inside the probed cells are repaired, narrow enough that the
-    * gather stays a per-query point-lookup. Init-before-`defs` rule
-    * applies (see [[TrainIters]]). */
+    * gather stays a per-query point-lookup. */
   private val RerankR = 3 * K
 
   /** MMR diversification: the re-ranked pool widened past the final
     * cut (the diversity pass needs slack to trade relevance away), and
     * the served list length. λ is fixed at 0.5, which drops out of the
     * integer argmax entirely (margin = min-distance-to-selected −
-    * query-distance). Init-before-`defs` rule applies. */
+    * query-distance). */
   private val MmrPool = 20
   private val MmrK = 5
 
@@ -65,27 +64,26 @@ object SimilarityQueries {
     * pair at or above this exact cosine marks the higher id as a
     * semantic duplicate. Same threshold as `dedup_embedding_cosine`, so
     * the cluster-scoped and LSH-scoped near-dup surfaces are directly
-    * comparable. Init-before-`defs` rule applies (see [[TrainIters]]). */
+    * comparable. */
   private val SemTau = 0.35
 
   /** Per-cluster admission quota of `curate_cluster_balance`: a member
     * is kept when its portable hash mod the cluster's size falls under
     * the quota — keep-probability min(1, quota/|cell|), i.e. clusters
     * at or under the quota keep everything and oversized clusters are
-    * down-sampled toward it. Init-before-`defs` rule applies. */
+    * down-sampled toward it. */
   private val BalQuota = 32L
 
   /** Power-iteration rounds for the SVD family. Three moves the
     * Rayleigh quotient visibly off the uniform init; each round costs
     * one corpus pass + one 64-key shuffle + one 64-row collect, and one
-    * unrolled oracle CTE block. Init-before-`defs` rule applies. */
+    * unrolled oracle CTE block. */
   private val SvdIters = 3
 
   /** ∞-norm scale of the re-quantized SVD direction. 100 keeps every
     * bound exact: |u| ≤ 64·578·100 ≈ 3.7e6, |w| ≤ n·578·|u| ≈ 4.3e12 at
     * sf0.1, w·100 ≈ 4.3e14 < 2^53 (the re-quantization quotient's
-    * operands stay exact doubles), Rayleigh numerator ≤ 2.7e16 < 2^63.
-    * Init-before-`defs` rule applies. */
+    * operands stay exact doubles), Rayleigh numerator ≤ 2.7e16 < 2^63. */
   private val SvdScale = 100L
 
   /** Graph-ANN family: out-degree of the bounded-degree neighbor
@@ -94,32 +92,93 @@ object SimilarityQueries {
     * O(6n) while the 2nd-cell probes supply the cross-cell bridge
     * edges pure Voronoi membership lacks; 2 hops × beam 10 bound
     * per-query traversal work at |entry cell| + 2·10·6 scored rows
-    * regardless of corpus size. Init-before-`defs` rule applies (see
-    * [[TrainIters]]). */
+    * regardless of corpus size. */
   private val GraphDeg = 6
   private val GraphBeam = 10
   private val GraphHops = 2
 
-  /** The degree sweep's widest build (and its branch list with
-    * [[GraphDeg]] in the middle): edge-list size is n·degree rows, so
-    * the sweep grades recall per byte of index. */
-  private val GraphDegMax = 12
-  private val GraphDegSweep = Seq(3, 6, 12)
+  /** An id-modulus sample: the rows whose id is ≡ 0 mod `every`.
+    * `apply` is the Spark predicate and `sql` its oracle text, so both
+    * halves of a query read the same modulus. */
+  private final case class IdSample(every: Int) {
+    def apply(id: Column): Column = pmod(id, lit(every)) === 0
+    def sql(id: String): String = s"$id % $every = 0"
+  }
+
+  /** The cosine family's query sample (brute force, LSH, IVF, filtered
+    * search): 1 vector in 10. */
+  private val CosSample = IdSample(10)
+
+  /** The squared-L2 family's query sample (PQ, SQ8, JL, graph, and the
+    * exact-L2 baseline all their recall gates grade against): 1 vector
+    * in 50. */
+  private val L2Sample = IdSample(50)
+
+  /** The id-pick init of every IVF k-means: each 50th vector seeds a
+    * centroid. */
+  private val IvfInit = IdSample(50)
+
+  /** The nearest-centroid classifier's held-out slice (the other 9/10
+    * train it). */
+  private val HeldOut = IdSample(10)
+
+  /** A sweep's branch list, read by both halves of its [[QueryDef]]:
+    * `key` names the branch column and `id` maps each knob value to its
+    * branch tag — a Long, printed `CAST(id AS BIGINT)` in the oracle, or
+    * a String, printed quoted. */
+  private[graft] final case class Sweep[A](key: String, knobs: Seq[A],
+      id: A => Any) {
+    /** `df` repeated once per branch, tagged with the branch id. */
+    def tag(df: DataFrame): DataFrame =
+      df.withColumn(key, explode(array(knobs.map(a => lit(id(a))): _*)))
+
+    /** The sweep's oracle: each branch's `body`, tagged with its id. */
+    def sql(body: A => String): String = knobs.map { a =>
+      val tag = id(a) match {
+        case s: String => s"'$s'"
+        case n => s"CAST($n AS BIGINT)"
+      }
+      s"SELECT $tag AS $key, r.* FROM (\n${body(a)}) r"
+    }.mkString("\nUNION ALL\n")
+  }
+
+  /** A sweep over integer knob values, each its own branch id. */
+  private def widths(key: String, ws: Seq[Int]) = Sweep[Int](key, ws, _.toLong)
+
+  /** The hop sweep's depths: every prefix of the production traversal. */
+  private val GraphHopSweep = widths("hops", 0 to GraphHops)
+
+  /** The degree sweep's index widths ([[GraphDeg]] in the middle; the
+    * widest is the one scored build every narrower list is a prefix
+    * of): edge-list size is n·degree rows, so the sweep grades recall
+    * per byte of index. */
+  private val GraphDegSweep = widths("degree", Seq(3, 6, 12))
 
   /** The beam sweep's widths ([[GraphBeam]] in the middle): beam is
     * the SERVING-TIME knob — per-query cost is |entry| +
     * hops·beam·degree scored rows, no index rebuild. */
-  private val GraphBeamSweep = Seq(5, 10, 20)
+  private val GraphBeamSweep = widths("beam", Seq(5, 10, 20))
 
   /** The delta-drift sweep's moduli: edges built over the
     * `vec_id % m ≠ 0` base cohort only, so the edge-less admitted
-    * delta is ≈ 100/m % of the served corpus (10 / 33 / 50 %). */
+    * delta is ≈ 100/m % of the served corpus (10 / 33 / 50 %) — the
+    * branch id. */
   private val GraphDriftMods = Seq(10, 3, 2)
+  private val GraphDriftSweep =
+    Sweep[Int]("delta_pct", GraphDriftMods, m => (100 / m).toLong)
+
+  /** The delta-patch row's two edge lists at the drift sweep's 50 %
+    * branch: the stale base build, and the base plus the delta cohort's
+    * patch. */
+  private val GraphPatchMod = 2
+  private val GraphPatchSweep =
+    Sweep[Boolean]("state", Seq(false, true),
+      p => if (p) "patched" else "stale")
 
   /** The entry-seeding sweep's widths (1 = the production single-cell
     * entry every other graph row uses): serving-time only, like beam —
     * seeding scans the query's `w` nearest cells' members. */
-  private val GraphEntrySweep = Seq(1, 2, 3)
+  private val GraphEntrySweep = widths("entry_cells", Seq(1, 2, 3))
 
   /** Hierarchical (coarse→fine) assignment: the coarse level is every
     * 8th trained fine centroid (fine init ids are multiples of 50, so
@@ -127,19 +186,32 @@ object SimilarityQueries {
     * scaling ladder's harness picks k_c ≈ √k dynamically, which a
     * fixed SQL modulus cannot express), probing [[HierProbeC]] coarse
     * cells per vector. The sweep prices the approximation per probe
-    * width. Init-before-`defs` rule applies (see [[TrainIters]]). */
+    * width. */
   private val HierCoarseMod = 400
   private val HierProbeC = 2
-  private val HierProbeSweep = Seq(1, 2, 4)
+  private val HierProbeSweep = widths("probe_c", Seq(1, 2, 4))
 
-  private def quantized(s: org.apache.spark.sql.SparkSession, d: String) =
+  /** The probe widths both nprobe sweeps grade ([[Nprobe]] in the
+    * middle). */
+  private val NprobeSweep = widths("nprobe", Seq(1, 3, 5))
+
+  /** The re-rank shortlist widths of `sim_rwidth_sweep` ([[RerankR]] in
+    * the middle). */
+  private val RerankSweep = widths("rerank_r", Seq(K, RerankR, 10 * K))
+
+  private def quantized(s: SparkSession, d: String) =
     Tables.embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"), x => round(x.cast("double") * 1000)).as("qv"))
 
-  private def bruteSpark(s: org.apache.spark.sql.SparkSession, d: String) = {
+  /** [[L2Sample]]'s query vectors (query_id, qv). */
+  private def l2Queries(s: SparkSession, d: String): DataFrame =
+    quantized(s, d).filter(L2Sample(col("vec_id")))
+      .select(col("vec_id").as("query_id"), col("qv"))
+
+  private def bruteSpark(s: SparkSession, d: String) = {
     val e = quantized(s, d)
-    val q = e.filter(pmod(col("vec_id"), lit(10)) === 0)
-    Similarity.knnBruteForce(q, e, "vec_id", "qv", K)
+    Similarity.knnBruteForce(e.filter(CosSample(col("vec_id"))), e,
+        "vec_id", "qv", K)
       .withColumn("rank", col("rank").cast("long"))
   }
 
@@ -149,17 +221,17 @@ object SimilarityQueries {
        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
        |    round(${cosine("q.v", "c.v", Dims)}, 9) AS cos9
        |  FROM e q, e c
-       |  WHERE q.vec_id % 10 = 0 AND c.vec_id <> q.vec_id)
+       |  WHERE ${CosSample.sql("q.vec_id")} AND c.vec_id <> q.vec_id)
        |SELECT query_id, neighbor_id, rank, cos9 FROM (
        |  SELECT *, row_number() OVER (
        |    PARTITION BY query_id ORDER BY cos9 DESC, neighbor_id) AS rank
        |  FROM s)
        |WHERE rank <= $K""".stripMargin
 
-  private def lshSpark(s: org.apache.spark.sql.SparkSession, d: String) =
+  private def lshSpark(s: SparkSession, d: String) =
     Similarity.knnLsh(quantized(s, d), "vec_id", "qv", K,
         tables = Tbls, planes = Planes, dims = Dims,
-        queryFilter = pmod(col("__id"), lit(10)) === 0)
+        queryFilter = CosSample(col("__id")))
       .withColumn("rank", col("rank").cast("long"))
 
   private val lshSql = {
@@ -171,7 +243,7 @@ object SimilarityQueries {
        |cand AS (
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
        |  FROM b q JOIN b c ON q.bkt = c.bkt
-       |  WHERE q.vec_id % 10 = 0 AND c.vec_id <> q.vec_id),
+       |  WHERE ${CosSample.sql("q.vec_id")} AND c.vec_id <> q.vec_id),
        |scored AS (
        |  SELECT cand.query_id, cand.neighbor_id,
        |    round(${cosine("eq.v", "ec.v", Dims)}, 9) AS cos9
@@ -186,21 +258,25 @@ object SimilarityQueries {
   }
 
   /** The IVF search (trained centroids, 3-probe, exact re-rank) —
-    * shared by `sim_knn_ivf` and its recall gate. */
-  private def ivfSpark(s: org.apache.spark.sql.SparkSession, d: String) =
+    * shared by `sim_knn_ivf` and its recall gate. `filtered` is the
+    * filtered-search family's PRE-filter form: the [[filteredAllowed]]
+    * ids semi-join the assigned corpus before candidate generation. */
+  private def ivfSpark(s: SparkSession, d: String,
+      filtered: Boolean = false) =
     Similarity.knnIvfCentroids(quantized(s, d), "vec_id", "qv", K,
         cents = trainedCentroids(s, d), nprobe = 3,
-        queryFilter = pmod(col("__id"), lit(10)) === 0)
+        queryFilter = CosSample(col("__id")),
+        allowed = if (filtered) Some(filteredAllowed(s, d)) else None)
       .withColumn("rank", col("rank").cast("long"))
 
-  private def ivfSql: String = {
-    def d2(v: String, c: String) =
-      s"(${dot(v, v, Dims)} - 2.0 * ${dot(v, c, Dims)} + ${dot(c, c, Dims)})"
+  private def ivfSql(filtered: Boolean = false): String = {
+    val (al, alJoin) = if (!filtered) ("", "")
+      else (s"\n$filteredAllowedCte,", "\n  JOIN al ON al.vec_id = a.id")
     s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
-       |$ivfTrainCtes,
+       |$ivfTrainCtes,$al
        |scored AS (
        |  SELECT e.vec_id AS id, e.v, c.cent_id,
-       |    ${d2("e.v", "c.cent_v")} AS d2
+       |    ${d2Sql("e.v", "c.cent_v", Dims)} AS d2
        |  FROM e, c),
        |ranked AS (
        |  SELECT *, row_number() OVER (
@@ -212,8 +288,8 @@ object SimilarityQueries {
        |  SELECT DISTINCT q.id AS query_id, q.v AS qv, a.id AS neighbor_id, a.v AS cv
        |  FROM assigned q
        |  JOIN probes p ON p.query_id = q.id
-       |  JOIN assigned a ON a.cell_id = p.cell_id AND a.id <> q.id
-       |  WHERE q.id % 10 = 0),
+       |  JOIN assigned a ON a.cell_id = p.cell_id AND a.id <> q.id$alJoin
+       |  WHERE ${CosSample.sql("q.id")}),
        |s2 AS (
        |  SELECT query_id, neighbor_id,
        |    round(${cosine("qv", "cv", Dims)}, 9) AS cos9
@@ -230,54 +306,12 @@ object SimilarityQueries {
     * selective at sf0.01 — restrictive enough that filtered and
     * unfiltered top-10 differ, dense enough that probed cells still
     * hold candidates. */
-  private def filteredAllowed(s: org.apache.spark.sql.SparkSession,
-      d: String) = Tables.documents(s, d)
-    .filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
+  private def filteredAllowed(s: SparkSession, d: String) =
+    Tables.documents(s, d)
+      .filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
 
   private val filteredAllowedCte =
     "al AS (SELECT doc_id AS vec_id FROM documents WHERE lang = 'en')"
-
-  private def filteredIvfSpark(s: org.apache.spark.sql.SparkSession,
-      d: String) =
-    Similarity.knnIvfCentroids(quantized(s, d), "vec_id", "qv", K,
-        cents = trainedCentroids(s, d), nprobe = 3,
-        queryFilter = pmod(col("__id"), lit(10)) === 0,
-        allowed = Some(filteredAllowed(s, d)))
-      .withColumn("rank", col("rank").cast("long"))
-
-  private def filteredIvfSql: String = {
-    def d2(v: String, c: String) =
-      s"(${dot(v, v, Dims)} - 2.0 * ${dot(v, c, Dims)} + ${dot(c, c, Dims)})"
-    s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
-       |$ivfTrainCtes,
-       |$filteredAllowedCte,
-       |scored AS (
-       |  SELECT e.vec_id AS id, e.v, c.cent_id,
-       |    ${d2("e.v", "c.cent_v")} AS d2
-       |  FROM e, c),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY id ORDER BY d2 ASC, cent_id ASC) AS cr
-       |  FROM scored),
-       |assigned AS (SELECT id, v, cent_id AS cell_id FROM ranked WHERE cr = 1),
-       |probes AS (SELECT id AS query_id, cent_id AS cell_id FROM ranked WHERE cr <= 3),
-       |cand AS (
-       |  SELECT DISTINCT q.id AS query_id, q.v AS qv, a.id AS neighbor_id, a.v AS cv
-       |  FROM assigned q
-       |  JOIN probes p ON p.query_id = q.id
-       |  JOIN assigned a ON a.cell_id = p.cell_id AND a.id <> q.id
-       |  JOIN al ON al.vec_id = a.id
-       |  WHERE q.id % 10 = 0),
-       |s2 AS (
-       |  SELECT query_id, neighbor_id,
-       |    round(${cosine("qv", "cv", Dims)}, 9) AS cos9
-       |  FROM cand)
-       |SELECT query_id, neighbor_id, rank, cos9 FROM (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cos9 DESC, neighbor_id) AS rank
-       |  FROM s2)
-       |WHERE rank <= $K""".stripMargin
-  }
 
   /** The predicate-restricted assigned corpus `(__id, __v, cell_id)` —
     * the pre-built searchable side of filtered SERVING
@@ -297,12 +331,11 @@ object SimilarityQueries {
     * (the exact_l2_topk doctrine): both the pre-filter and post-filter
     * recall rows grade against it, so the board computes the filtered
     * scan once per session/pass. */
-  private def filteredBruteSpark(s: org.apache.spark.sql.SparkSession,
-      d: String) =
+  private def filteredBruteSpark(s: SparkSession, d: String) =
     FrameCache.memo(s, d, "exact_filtered_topk") {
       val e = quantized(s, d)
       Similarity.knnBruteForce(
-          e.filter(pmod(col("vec_id"), lit(10)) === 0),
+          e.filter(CosSample(col("vec_id"))),
           e.join(filteredAllowed(s, d), Seq("vec_id"), "left_semi"),
           "vec_id", "qv", K)
         .withColumn("rank", col("rank").cast("long"))
@@ -317,7 +350,7 @@ object SimilarityQueries {
        |  FROM e q
        |  JOIN e c ON c.vec_id <> q.vec_id
        |  JOIN al ON al.vec_id = c.vec_id
-       |  WHERE q.vec_id % 10 = 0)
+       |  WHERE ${CosSample.sql("q.vec_id")})
        |SELECT query_id, neighbor_id, rank, cos9 FROM (
        |  SELECT *, row_number() OVER (
        |    PARTITION BY query_id ORDER BY cos9 DESC, neighbor_id) AS rank
@@ -335,7 +368,7 @@ object SimilarityQueries {
       d: String): org.apache.spark.sql.DataFrame =
     FrameCache.memo(s, d, "label_cents") {
       Tables.embeddings(s, d)
-        .filter(pmod(col("vec_id"), lit(10)) =!= 0)
+        .filter(!HeldOut(col("vec_id")))
         .select(col("label").cast("long").as("label"),
           posexplode(transform(col("embedding"),
             x => round(x.cast("double") * 1000))))
@@ -363,10 +396,10 @@ object SimilarityQueries {
        |  SELECT label AS cl, CAST(i - 1 AS BIGINT) AS dim,
        |    CAST(FLOOR(SUM(v[i]) / COUNT(*)) AS BIGINT) AS c
        |  FROM el, (SELECT unnest(range(1, ${Dims + 1})) AS i) di(i)
-       |  WHERE vec_id % 10 <> 0
+       |  WHERE vec_id % ${HeldOut.every} <> 0
        |  GROUP BY 1, 2)""".stripMargin
 
-  val defs: Map[String, QueryDef] = Map(
+  lazy val defs: Map[String, QueryDef] = Map(
 
     // Nearest-centroid classifier, training half: per-label integer
     // centroids over the 9/10 labeled pool — the standard auto-labeling
@@ -399,7 +432,7 @@ object SimilarityQueries {
         val d2 = Similarity.l2sq(col("qv"), col("cvec"))
         e.crossJoin(broadcast(labelCentroidVecs(s, d)))
           .select(col("vec_id"), col("label"),
-            when(pmod(col("vec_id"), lit(10)) === 0, "heldout")
+            when(HeldOut(col("vec_id")), "heldout")
               .otherwise("train").as("split"),
             col("cl"), d2.as("d2"))
           .groupBy(col("vec_id"), col("label"), col("split"))
@@ -412,7 +445,7 @@ object SimilarityQueries {
          |       FROM cent GROUP BY cl),
          |scored AS (
          |  SELECT el.vec_id, el.label,
-         |    CASE WHEN el.vec_id % 10 = 0 THEN 'heldout'
+         |    CASE WHEN ${HeldOut.sql("el.vec_id")} THEN 'heldout'
          |         ELSE 'train' END AS split,
          |    cv.cl, ${d2Sql("el.v", "cv.cvec", Dims)} AS d2
          |  FROM el, cv),
@@ -430,34 +463,14 @@ object SimilarityQueries {
     // IVF ANN top-10: TRAINED centroids (2 integer-Lloyd iterations off
     // the 1-in-50 id-pick init — see ivfTrainPipeline), broadcast
     // argmin-L2 cell assignment, 3-cell probe, exact re-rank.
-    "sim_knn_ivf" -> QueryDef((s, d) => ivfSpark(s, d), ivfSql),
+    "sim_knn_ivf" -> QueryDef((s, d) => ivfSpark(s, d), ivfSql()),
 
     // IVF quality gate: recall@10 of the probe-limited IVF path against
-    // the exact brute force — the third of the three ANN recall gates
-    // (LSH: sim_ann_recall; PQ: sim_pq_recall), so every approximate
-    // path the engine serves has its accuracy pinned. Same shape: the
-    // join keys on (query, neighbor) id pairs, one IEEE division of two
-    // exact counts at the edge.
-    "sim_ivf_recall" -> QueryDef(
-      (s, d) => {
-        val exact = bruteSpark(s, d).select(col("query_id"), col("neighbor_id"))
-        val approx = ivfSpark(s, d)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-          .select(col("query_id"), col("n_exact"), col("n_hit"),
-            (col("n_hit").cast("double") / col("n_exact").cast("double"))
-              .as("recall_at_k"))
-      },
-      s"""WITH brute AS (SELECT query_id, neighbor_id FROM ($bruteSql)),
-         |approx AS (SELECT query_id, neighbor_id, 1 AS hit FROM ($ivfSql))
-         |SELECT b.query_id, COUNT(*) AS n_exact, COUNT(a.hit) AS n_hit,
-         |  CAST(COUNT(a.hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall_at_k
-         |FROM brute b
-         |LEFT JOIN approx a
-         |  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id""".stripMargin),
+    // the exact cosine brute force — one of the family's recall gates
+    // (see `recall`), so every approximate path the engine serves has
+    // its accuracy pinned.
+    "sim_ivf_recall" -> cosGate(bruteSpark, bruteSql, ivfSpark(_, _),
+      s"approx AS (SELECT query_id, neighbor_id, 1 AS hit FROM (${ivfSql()}))"),
 
     // HIERARCHICAL (coarse→fine) assignment vs the flat argmin — the
     // r16 scaling ladder measured the flat assignment's exponent at
@@ -471,7 +484,7 @@ object SimilarityQueries {
     // oracle replays both assignments off the SAME trained-centroid
     // CTE chain.
     "sim_hier_assign" -> QueryDef(
-      (s, d) => hierJoined(s, d, HierProbeC)
+      (s, d) => hierJoined(s, d, Seq(HierProbeC))
         .select(col("vec_id"), col("cell_flat"), col("cell_hier"),
           col("agree")),
       s"""WITH ${hierCtes(HierProbeC)}
@@ -487,35 +500,19 @@ object SimilarityQueries {
     // vector→coarse ranking), so one branch-keyed fine argmin + one
     // (branch)-grouped agreement aggregate replace three full kernels.
     "sim_hier_probe_sweep" -> QueryDef(
-      (s, d) => {
-        val flat = graphAssigned(s, d)
-          .select(col("__id").as("vec_id"), col("cell_id").as("cell_flat"))
-        val coarse = trainedCentroids(s, d)
-          .filter(pmod(col("cent_id"), lit(HierCoarseMod)) === 0)
-          .select(col("cent_id").as("co_id"), col("cent_v").as("co_v"))
-        val hierB = Similarity.hierAssignCentroids(quantized(s, d),
-            "vec_id", "qv", trainedCentroids(s, d), coarse, HierProbeSweep,
-            keys = Seq("probe_c"))
-          .select(col("probe_c"), col("id").as("vec_id"),
-            col("cell_id").as("cell_hier"))
-        flat.join(hierB, Seq("vec_id"))
-          .withColumn("agree",
-            (col("cell_flat") === col("cell_hier")).cast("long"))
-          .groupBy(col("probe_c"))
-          .agg(count(lit(1)).as("n_vecs"), sum(col("agree")).as("n_agree"))
-          .select(col("probe_c"), col("n_vecs"), col("n_agree"),
-            (col("n_agree").cast("double") / col("n_vecs").cast("double"))
-              .as("agree_rate"))
-      },
-      HierProbeSweep.map(p =>
-        s"SELECT CAST($p AS BIGINT) AS probe_c, r.* FROM (\n" +
-          s"WITH ${hierCtes(p)}\n" +
+      (s, d) => hierJoined(s, d, HierProbeSweep.knobs, Seq("probe_c"))
+        .groupBy(col("probe_c"))
+        .agg(count(lit(1)).as("n_vecs"), sum(col("agree")).as("n_agree"))
+        .select(col("probe_c"), col("n_vecs"), col("n_agree"),
+          (col("n_agree").cast("double") / col("n_vecs").cast("double"))
+            .as("agree_rate")),
+      HierProbeSweep.sql(p =>
+        s"WITH ${hierCtes(p)}\n" +
           "SELECT COUNT(*) AS n_vecs,\n" +
           "  CAST(SUM(CAST(f.cell_flat = h.cell_hier AS BIGINT)) AS BIGINT) AS n_agree,\n" +
           "  CAST(SUM(CAST(f.cell_flat = h.cell_hier AS BIGINT)) AS DOUBLE)\n" +
           "    / CAST(COUNT(*) AS DOUBLE) AS agree_rate\n" +
-          "FROM hflat f JOIN hier h ON h.vec_id = f.vec_id) r")
-        .mkString("\nUNION ALL\n")),
+          "FROM hflat f JOIN hier h ON h.vec_id = f.vec_id")),
 
     // FILTERED vector search — ANN under a relational predicate (the
     // embedding's document is English; shared id space), served by the
@@ -530,34 +527,16 @@ object SimilarityQueries {
     // predicate pushes to the documents scan, the semi-join moves ids
     // only, and the rest is the pinned trained-IVF probe shape.
     "sim_filtered_search" -> QueryDef(
-      (s, d) => filteredIvfSpark(s, d), filteredIvfSql),
+      (s, d) => ivfSpark(s, d, filtered = true), ivfSql(filtered = true)),
 
     // Its recall gate, against the FILTERED exact baseline (brute
     // force over predicate-passing vectors only — measuring against
     // the unfiltered baseline would conflate predicate selectivity
     // with index quality).
-    "sim_filtered_recall" -> QueryDef(
-      (s, d) => {
-        val exact = filteredBruteSpark(s, d)
-          .select(col("query_id"), col("neighbor_id"))
-        val approx = filteredIvfSpark(s, d)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-          .select(col("query_id"), col("n_exact"), col("n_hit"),
-            (col("n_hit").cast("double") / col("n_exact").cast("double"))
-              .as("recall_at_k"))
-      },
-      s"""WITH brute AS (SELECT query_id, neighbor_id FROM ($filteredBruteSql)),
-         |approx AS (SELECT query_id, neighbor_id, 1 AS hit
-         |           FROM ($filteredIvfSql))
-         |SELECT b.query_id, COUNT(*) AS n_exact, COUNT(a.hit) AS n_hit,
-         |  CAST(COUNT(a.hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall_at_k
-         |FROM brute b
-         |LEFT JOIN approx a
-         |  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id""".stripMargin),
+    "sim_filtered_recall" -> cosGate(filteredBruteSpark, filteredBruteSql,
+      ivfSpark(_, _, filtered = true),
+      s"""approx AS (SELECT query_id, neighbor_id, 1 AS hit
+         |           FROM (${ivfSql(filtered = true)}))""".stripMargin),
 
     // The POST-filter strategy, measured against the same filtered
     // exact baseline — the comparison row that turns the pre-vs-post
@@ -568,34 +547,15 @@ object SimilarityQueries {
     // filter row (`sim_filtered_recall`) fills all k slots with
     // predicate-passing candidates. A spec pins pre ≥ post in total
     // hits on the fixture.
-    "sim_postfilter_recall" -> QueryDef(
-      (s, d) => {
-        val exact = filteredBruteSpark(s, d)
-          .select(col("query_id"), col("neighbor_id"))
-        val approx = ivfSpark(s, d)
-          .join(filteredAllowed(s, d)
-            .withColumnRenamed("vec_id", "neighbor_id"),
-            Seq("neighbor_id"), "left_semi")
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-          .select(col("query_id"), col("n_exact"), col("n_hit"),
-            (col("n_hit").cast("double") / col("n_exact").cast("double"))
-              .as("recall_at_k"))
-      },
-      s"""WITH brute AS (SELECT query_id, neighbor_id FROM ($filteredBruteSql)),
-         |approx AS (
+    "sim_postfilter_recall" -> cosGate(filteredBruteSpark, filteredBruteSql,
+      (s, d) => ivfSpark(s, d).join(
+        filteredAllowed(s, d).withColumnRenamed("vec_id", "neighbor_id"),
+        Seq("neighbor_id"), "left_semi"),
+      s"""approx AS (
          |  SELECT f.query_id, f.neighbor_id, 1 AS hit
-         |  FROM ($ivfSql) f
+         |  FROM (${ivfSql()}) f
          |  JOIN documents dd ON dd.doc_id = f.neighbor_id
-         |    AND dd.lang = 'en')
-         |SELECT b.query_id, COUNT(*) AS n_exact, COUNT(a.hit) AS n_hit,
-         |  CAST(COUNT(a.hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall_at_k
-         |FROM brute b
-         |LEFT JOIN approx a
-         |  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id""".stripMargin),
+         |    AND dd.lang = 'en')""".stripMargin),
 
     // Index STALENESS / drift audit — the retraining trigger the
     // streaming-index story needs: a production index is trained at
@@ -779,8 +739,8 @@ object SimilarityQueries {
         val (deltaAsg, _) = Similarity.ivfAssignCentroids(
           e.filter(pmod(col("vec_id"), lit(2)) =!= 0), "vec_id", "qv",
           cents, nprobe = 1)
-        val queries = e.filter(pmod(col("vec_id"), lit(10)) === 0)
-        Similarity.knnIvfFilteredQueries(queries, "vec_id", "qv", K,
+        Similarity.knnIvfFilteredQueries(e.filter(CosSample(col("vec_id"))),
+            "vec_id", "qv", K,
             assignedNbrs = baseAsg.unionByName(deltaAsg), cents = cents,
             nprobe = 3)
           .withColumn("rank", col("rank").cast("long"))
@@ -800,7 +760,7 @@ object SimilarityQueries {
          |assigned AS (SELECT id, v, cent_id AS cell_id FROM ranked WHERE cr = 1),
          |probes AS (
          |  SELECT id AS query_id, v AS qv, cent_id AS cell_id
-         |  FROM ranked WHERE cr <= 3 AND id % 10 = 0),
+         |  FROM ranked WHERE cr <= 3 AND ${CosSample.sql("id")}),
          |cand AS (
          |  SELECT DISTINCT p.query_id, p.qv, a.id AS neighbor_id, a.v AS cv
          |  FROM probes p
@@ -841,14 +801,12 @@ object SimilarityQueries {
           .select(col("cell_id"), col("__id").as("vec_id"),
             col("pick").cast("long").as("pick"))
       }, {
-        def d2(v: String, c: String) =
-          s"(${dot(v, v, Dims)} - 2.0 * ${dot(v, c, Dims)} + ${dot(c, c, Dims)})"
         val hSql = graft.functions.PortableHash.hash60Sql(
           "CAST(id AS VARCHAR) || '|coreset'")
         s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
            |$ivfTrainCtes,
            |scored AS (
-           |  SELECT e.vec_id AS id, c.cent_id, ${d2("e.v", "c.cent_v")} AS d2
+           |  SELECT e.vec_id AS id, c.cent_id, ${d2Sql("e.v", "c.cent_v", Dims)} AS d2
            |  FROM e, c),
            |assigned AS (
            |  SELECT id, cent_id AS cell_id FROM (
@@ -871,25 +829,22 @@ object SimilarityQueries {
     // IEEE division — bit-reproducible in the oracle.
     "sim_kmeans_step" -> QueryDef(
       (s, d) => Similarity.kmeansStep(quantized(s, d), "vec_id", "qv",
-        centroidFilter = pmod(col("vec_id"), lit(50)) === 0, outDims = 4), {
-        def d2(v: String, c: String) =
-          s"(${dot(v, v, Dims)} - 2.0 * ${dot(v, c, Dims)} + ${dot(c, c, Dims)})"
-        s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cent_id, v AS cent_v FROM e WHERE vec_id % 50 = 0),
-           |scored AS (
-           |  SELECT e.vec_id AS id, e.v, c.cent_id, ${d2("e.v", "c.cent_v")} AS d2
-           |  FROM e, c),
-           |assigned AS (
-           |  SELECT id, v, cent_id AS cluster_id FROM (
-           |    SELECT *, row_number() OVER (
-           |      PARTITION BY id ORDER BY d2 ASC, cent_id ASC) AS cr
-           |    FROM scored) WHERE cr = 1)
-           |SELECT cluster_id, CAST(i - 1 AS BIGINT) AS dim,
-           |  COUNT(*) AS n_members, SUM(v[i]) AS sum_q,
-           |  SUM(v[i]) / COUNT(*) AS mean_q
-           |FROM assigned, (SELECT unnest(range(1, 5)) AS i) dims(i)
-           |GROUP BY cluster_id, i""".stripMargin
-      }),
+        centroidFilter = IvfInit(col("vec_id")), outDims = 4),
+      s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
+         |c AS (SELECT vec_id AS cent_id, v AS cent_v FROM e WHERE ${IvfInit.sql("vec_id")}),
+         |scored AS (
+         |  SELECT e.vec_id AS id, e.v, c.cent_id, ${d2Sql("e.v", "c.cent_v", Dims)} AS d2
+         |  FROM e, c),
+         |assigned AS (
+         |  SELECT id, v, cent_id AS cluster_id FROM (
+         |    SELECT *, row_number() OVER (
+         |      PARTITION BY id ORDER BY d2 ASC, cent_id ASC) AS cr
+         |    FROM scored) WHERE cr = 1)
+         |SELECT cluster_id, CAST(i - 1 AS BIGINT) AS dim,
+         |  COUNT(*) AS n_members, SUM(v[i]) AS sum_q,
+         |  SUM(v[i]) / COUNT(*) AS mean_q
+         |FROM assigned, (SELECT unnest(range(1, 5)) AS i) dims(i)
+         |GROUP BY cluster_id, i""".stripMargin),
 
     // The TRAINED IVF centroids themselves (cent_id, dim, coord) — the
     // sim_kmeans_step Lloyd kernel ITERATED into an actual training run
@@ -921,7 +876,7 @@ object SimilarityQueries {
       (s, d) => {
         val e = quantized(s, d)
         val pts = e.select(col("vec_id").as("__id"), col("qv").as("__v"))
-        val init = e.filter(pmod(col("vec_id"), lit(50)) === 0)
+        val init = e.filter(IvfInit(col("vec_id")))
           .select(col("vec_id").as("cent_id"), col("qv").as("cent_v"))
         val d2 = Similarity.l2sq(col("__v"), col("cent_v"))
         (0 to TrainIters).map { t =>
@@ -1018,10 +973,7 @@ object SimilarityQueries {
     // round-9 16-codeword capacity lift it — see
     // docs/SCALE.md) — the row pins the MEASURED value, so any codebook
     // / packing / lookup regression moves it and turns the row red.
-    "sim_pq_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        pqAdc(s, d).select(col("query_id"), col("vec_id").as("neighbor_id"))),
-      recallAgainstExactL2Sql(pqAdcSql)),
+    "sim_pq_recall" -> l2Gate(pqAdc, pqAdcSql),
 
     // The COMPOSED IVF-PQ search — probe-pruned ADC, the serving shape
     // a production vector index runs (and the scale fix for sim_pq_adc,
@@ -1047,11 +999,7 @@ object SimilarityQueries {
     // quantized codes masquerade as near (ADC false positives), the
     // classic reason production indexes run IVF-PQ rather than PQ
     // full scans even ignoring the ~nprobe/k_cells work reduction.
-    "sim_ivfpq_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        ivfpqSpark(s, d).select(col("query_id"),
-          col("vec_id").as("neighbor_id"))),
-      recallAgainstExactL2Sql(ivfpqSql)),
+    "sim_ivfpq_recall" -> l2Gate(ivfpqSpark, ivfpqSql),
 
     // RESIDUAL IVF-PQ search (the IVFADC scheme) — the layout a
     // production index actually stores: PQ codes the residual
@@ -1073,11 +1021,7 @@ object SimilarityQueries {
     // shape) — the entire margin is the residual book quantizing the
     // smaller field finer, which is exactly why IVFADC is the
     // production layout. This row pins the margin.
-    "sim_ivfpq_res_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        ivfpqResSpark(s, d).select(col("query_id"),
-          col("vec_id").as("neighbor_id"))),
-      recallAgainstExactL2Sql(ivfpqResSql)),
+    "sim_ivfpq_res_recall" -> l2Gate(ivfpqResSpark(_, _), ivfpqResSql),
 
     // IVFADC+R — the refinement stage that completes the production
     // serving pipeline: the residual-ADC ranking keeps a 3·K shortlist
@@ -1099,11 +1043,8 @@ object SimilarityQueries {
     // recall@10 at sf0.01 is 0.70 vs 0.34 for the same residual-ADC
     // ranking without refinement — same probes, same codes, plus R
     // raw-vector reads per query. SimilaritySpec pins rerank >= ADC.
-    "sim_ivfpq_rerank_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        ivfpqRerankSpark(s, d).select(col("query_id"),
-          col("vec_id").as("neighbor_id"))),
-      recallAgainstExactL2Sql(ivfpqRerankSql)),
+    "sim_ivfpq_rerank_recall" ->
+      l2Gate(ivfpqRerankSpark(_, _), ivfpqRerankSql),
 
     // MMR-diversified serving: the greedy maximal-marginal-relevance
     // pass over the production IVFADC+R pool widened to MmrPool — what
@@ -1190,11 +1131,7 @@ object SimilarityQueries {
     // still below the residual-ADC generator's 0.70 at 64× its
     // per-vector memory, which is why sketches prefilter and codes
     // serve.
-    "sim_rp_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        rpSpark(s, d).select(col("query_id"),
-          col("vec_id").as("neighbor_id"))),
-      recallAgainstExactL2Sql(rpSql)),
+    "sim_rp_recall" -> l2Gate(rpSpark, rpSql),
 
     // SQ8 scalar quantization — the third compression family on the
     // quality ladder (hash sketch / product code / per-dim affine
@@ -1226,11 +1163,7 @@ object SimilarityQueries {
     // sf0.01 (vs full-scan SQ8 0.99, pruned residual-PQ 0.34): the
     // ceiling is high, confirming the re-rank sweep's finding that
     // code quality, not cell coverage, binds the PQ rows.
-    "sim_ivfsq_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        ivfSq8Spark(s, d).select(col("query_id"),
-          col("vec_id").as("neighbor_id"))),
-      recallAgainstExactL2Sql(ivfSq8Sql)),
+    "sim_ivfsq_recall" -> l2Gate(ivfSq8Spark, ivfSq8Sql),
 
     // SQ8 quality gate — pins where 8-bit-per-dim lands on the recall
     // ladder: near-exact (the quantization step is ~range/255 per dim),
@@ -1239,11 +1172,7 @@ object SimilarityQueries {
     // PQ 0.22 < IVF-PQ 0.29 < residual IVF-PQ 0.34 < rerank 0.70 <
     // SQ8 0.99 (sf0.01); SimilaritySpec pins SQ8 above the sub-byte
     // codes.
-    "sim_sq8_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        sq8Spark(s, d).select(col("query_id"),
-          col("vec_id").as("neighbor_id"))),
-      recallAgainstExactL2Sql(sq8Sql)),
+    "sim_sq8_recall" -> l2Gate(sq8Spark, sq8Sql),
 
     // Power-iteration SVD — the dominant right singular direction of
     // the embedding matrix, trained by iterating the audited step (the
@@ -1295,7 +1224,7 @@ object SimilarityQueries {
       (s, d) => {
         val (v, _) = svdIterations(s, d)
         val vlit = array(v.toIndexedSeq.map(x => lit(x.toDouble)): _*)
-        quantized(s, d).filter(pmod(col("vec_id"), lit(10)) === 0)
+        quantized(s, d).filter(CosSample(col("vec_id")))
           .select(col("vec_id"),
             Similarity.dot(col("qv"), vlit).cast("long").as("proj"))
       },
@@ -1303,7 +1232,7 @@ object SimilarityQueries {
          |$svdCtes
          |SELECT e.vec_id, CAST(${dot("e.v", "v.vl", Dims)} AS BIGINT) AS proj
          |FROM e, v${SvdIters}l v
-         |WHERE e.vec_id % 10 = 0""".stripMargin),
+         |WHERE ${CosSample.sql("e.vec_id")}""".stripMargin),
 
     // ANN index-build capstone — the composition proof for the
     // similarity family (curate_recipe's role for curation): ONE DAG
@@ -1357,26 +1286,8 @@ object SimilarityQueries {
     // still hash-match its own oracle. The join keys on
     // (query_id, neighbor_id) pairs (k×|queries| rows — tiny), and the
     // recall is one IEEE division of two exact counts at the edge.
-    "sim_ann_recall" -> QueryDef(
-      (s, d) => {
-        val exact = bruteSpark(s, d).select(col("query_id"), col("neighbor_id"))
-        val approx = lshSpark(s, d)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-          .select(col("query_id"), col("n_exact"), col("n_hit"),
-            (col("n_hit").cast("double") / col("n_exact").cast("double"))
-              .as("recall_at_k"))
-      },
-      s"""WITH brute AS (SELECT query_id, neighbor_id FROM ($bruteSql)),
-         |approx AS (SELECT query_id, neighbor_id, 1 AS hit FROM ($lshSql))
-         |SELECT b.query_id, COUNT(*) AS n_exact, COUNT(a.hit) AS n_hit,
-         |  CAST(COUNT(a.hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall_at_k
-         |FROM brute b
-         |LEFT JOIN approx a
-         |  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id""".stripMargin),
+    "sim_ann_recall" -> cosGate(bruteSpark, bruteSql, lshSpark,
+      s"approx AS (SELECT query_id, neighbor_id, 1 AS hit FROM ($lshSql))"),
 
     // Graph-traversal ANN, the build half: a bounded-degree neighbor
     // graph (the DiskANN / HNSW-base-layer structure) assembled
@@ -1415,13 +1326,8 @@ object SimilarityQueries {
     // scan, so recall ≥ the nprobe=1 floor by construction
     // (SimilaritySpec pins the monotonicity); how far past is a
     // property of the fixture's geometry and must be measured.
-    "sim_graph_recall" -> QueryDef(
-      (s, d) => recallAgainstExactL2(s, d,
-        graphSearchAt(s, d, GraphHops)
-          .select(col("query_id"), col("neighbor_id"))),
-      recallAgainstExactL2Sql(
-        s"WITH $graphSearchCtes\n" +
-          "SELECT query_id, neighbor_id AS vec_id FROM gsearch")),
+    "sim_graph_recall" -> l2Gate(graphSearchAt(_, _, GraphHops),
+      graphSearchSql(graphSearchCtes)),
 
     // The traversal's serving-knob frontier — recall@10 at hop depths
     // 0/1/2 (the nprobe-sweep doctrine applied to the graph index):
@@ -1441,23 +1347,12 @@ object SimilarityQueries {
     // every hop — one entry scan + one traversal + one fused recall
     // compare instead of three of each (rows identical per branch,
     // SimilaritySpec pins the hop-2 slice against the standalone gate).
-    "sim_graph_hop_sweep" -> QueryDef(
-      (s, d) => {
-        val (q, entry) = graphQueryEntry(s, d)
-        val traced = Similarity.graphBeamSearchTrace(q, entry,
-          nnGraphEdges(s, d), graphVecs(s, d),
-          hops = GraphHops, beam = lit(GraphBeam), k = K)
-        recallBranched(s, d, "hops",
-          (0 to GraphHops).map(h => lit(h.toLong)),
-          traced.select(col("hops"), col("query_id"), col("neighbor_id")))
-      },
-      Seq(0, 1, 2).map(h =>
-        s"SELECT CAST($h AS BIGINT) AS hops, r.* FROM (\n" +
-          recallAgainstExactL2Sql(
-            s"WITH ${graphSearchCtesAt(h)}\n" +
-              "SELECT query_id, neighbor_id AS vec_id FROM gsearch") +
-          ") r")
-        .mkString("\nUNION ALL\n")),
+    "sim_graph_hop_sweep" -> l2Sweep(GraphHopSweep)(
+        h => graphSearchSql(graphSearchCtesAt(h))) { (s, d) =>
+      val (q, entry) = graphQueryEntry(s, d)
+      Similarity.graphBeamSearchTrace(q, entry, nnGraphEdges(s, d),
+        graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K)
+    },
 
     // Graph-index ADD path — serving base ∪ admitted-delta BETWEEN
     // rebuilds, the lifecycle beat the IVF family already has
@@ -1476,9 +1371,7 @@ object SimilarityQueries {
     // top-10s at both SFs).
     "sim_graph_serve_delta" -> QueryDef(
       (s, d) => Similarity.graphSearchQueries(
-          quantized(s, d).filter(pmod(col("vec_id"), lit(50)) === 0)
-            .select(col("vec_id").as("query_id"), col("qv")),
-          trainedCentroids(s, d), graphDeltaAssigned(s, d),
+          l2Queries(s, d), trainedCentroids(s, d), graphDeltaAssigned(s, d),
           nnGraphEdgesBase(s, d),
           hops = GraphHops, beam = GraphBeam, k = K)
         .withColumn("from_delta", pmod(col("neighbor_id"), lit(2))),
@@ -1504,31 +1397,8 @@ object SimilarityQueries {
     // share) but the three traversals + three recall compares fuse
     // into one branch-keyed run over the tagged edge union — one
     // window/join/distinct per hop for the whole sweep.
-    "sim_graph_delta_drift" -> QueryDef(
-      (s, d) => {
-        val (q, entry) = graphQueryEntry(s, d)
-        val bids = GraphDriftMods.map(m => lit((100 / m).toLong))
-        val entryB = entry.withColumn("delta_pct",
-          explode(array(bids: _*)))
-        val edgesB = GraphDriftMods.map { m =>
-          nnGraphEdgesBaseAt(s, d, m)
-            .select(lit((100 / m).toLong).as("delta_pct"),
-              col("src"), col("dst"))
-        }.reduce(_ unionByName _)
-        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
-          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
-          keys = Seq("delta_pct"))
-        recallBranched(s, d, "delta_pct", bids,
-          searched.select(col("delta_pct"), col("query_id"),
-            col("neighbor_id")))
-      },
-      GraphDriftMods.map(m =>
-        s"SELECT CAST(${100 / m} AS BIGINT) AS delta_pct, r.* FROM (\n" +
-          recallAgainstExactL2Sql(
-            s"WITH ${graphSearchCtesAt(GraphHops, s" AND id % $m <> 0")}\n" +
-              "SELECT query_id, neighbor_id AS vec_id FROM gsearch") +
-          ") r")
-        .mkString("\nUNION ALL\n")),
+    "sim_graph_delta_drift" ->
+      driftSweep(GraphDriftSweep)(m => (m, false)),
 
     // Incremental edge PATCH — the lifecycle rung BETWEEN the free
     // ADD (entry-reachable, edge-less) and the full REBUILD: build
@@ -1544,32 +1414,8 @@ object SimilarityQueries {
     // drift cost.
     // r16 fusion: stale/patched differ only through the edge list —
     // same branch-keyed single traversal as the drift row (2 branches).
-    "sim_graph_delta_patch" -> QueryDef(
-      (s, d) => {
-        val stale = nnGraphEdgesBaseAt(s, d, 2)
-        val patched = stale.unionByName(graphPatchedEdges(s, d, 2))
-        val (q, entry) = graphQueryEntry(s, d)
-        val bids = Seq(lit("stale"), lit("patched"))
-        val entryB = entry.withColumn("state", explode(array(bids: _*)))
-        val edgesB = stale
-          .select(lit("stale").as("state"), col("src"), col("dst"))
-          .unionByName(patched
-            .select(lit("patched").as("state"), col("src"), col("dst")))
-        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
-          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
-          keys = Seq("state"))
-        recallBranched(s, d, "state", bids,
-          searched.select(col("state"), col("query_id"),
-            col("neighbor_id")))
-      },
-      Seq(("stale", ""), ("patched", " % 2 = 0")).map { case (tag, pp) =>
-        s"SELECT '$tag' AS state, r.* FROM (\n" +
-          recallAgainstExactL2Sql(
-            s"WITH ${graphSearchCtesAt(GraphHops, " AND id % 2 <> 0",
-              patchSrcPred = pp)}\n" +
-              "SELECT query_id, neighbor_id AS vec_id FROM gsearch") +
-          ") r"
-      }.mkString("\nUNION ALL\n")),
+    "sim_graph_delta_patch" ->
+      driftSweep(GraphPatchSweep)(p => (GraphPatchMod, p)),
 
     // The PATCHED drift curve — the r15 patch row measured one point
     // (the 50 % branch); the trigger rule ("rebuild before ~1/3")
@@ -1590,33 +1436,8 @@ object SimilarityQueries {
     // patched half.
     // r16 fusion: the delta-drift shape — per-fraction base∪patch edge
     // frames tagged into one branch-keyed traversal + one fused recall.
-    "sim_graph_patch_sweep" -> QueryDef(
-      (s, d) => {
-        val (q, entry) = graphQueryEntry(s, d)
-        val bids = GraphDriftMods.map(m => lit((100 / m).toLong))
-        val entryB = entry.withColumn("delta_pct",
-          explode(array(bids: _*)))
-        val edgesB = GraphDriftMods.map { m =>
-          nnGraphEdgesBaseAt(s, d, m)
-            .unionByName(graphPatchedEdges(s, d, m))
-            .select(lit((100 / m).toLong).as("delta_pct"),
-              col("src"), col("dst"))
-        }.reduce(_ unionByName _)
-        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
-          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
-          keys = Seq("delta_pct"))
-        recallBranched(s, d, "delta_pct", bids,
-          searched.select(col("delta_pct"), col("query_id"),
-            col("neighbor_id")))
-      },
-      GraphDriftMods.map(m =>
-        s"SELECT CAST(${100 / m} AS BIGINT) AS delta_pct, r.* FROM (\n" +
-          recallAgainstExactL2Sql(
-            s"WITH ${graphSearchCtesAt(GraphHops, s" AND id % $m <> 0",
-              patchSrcPred = s" % $m = 0")}\n" +
-              "SELECT query_id, neighbor_id AS vec_id FROM gsearch") +
-          ") r")
-        .mkString("\nUNION ALL\n")),
+    "sim_graph_patch_sweep" ->
+      driftSweep(GraphDriftSweep)(m => (m, true)),
 
     // Entry-seeding sweep — the traversal's THIRD serving-time knob
     // (beside hops and beam), acting on the r14 scale observation
@@ -1639,42 +1460,9 @@ object SimilarityQueries {
     // recall compares fuse into one branch-keyed run — the corpus is
     // scored against the broadcast centroids once per query, not once
     // per width.
-    "sim_graph_entry_sweep" -> QueryDef(
-      (s, d) => {
-        val assigned = graphAssigned(s, d)
-        val ranked = Similarity.ivfAssignRanked(quantized(s, d),
-          "vec_id", "qv", trainedCentroids(s, d))
-        val q = assigned.filter(pmod(col("__id"), lit(50)) === 0)
-          .select(col("__id").as("query_id"), col("__v").as("qv"))
-        val probesB = Similarity.rankPrefix(
-            ranked.filter(pmod(col("__id"), lit(50)) === 0), col("__cr"),
-            GraphEntrySweep, Seq("entry_cells"))
-          .select(col("entry_cells"), col("__id").as("query_id"),
-            col("cent_id").as("cell_id"))
-        val entryB = q.join(probesB, Seq("query_id"))
-          .join(assigned.select(col("__id").as("cand"),
-            col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
-          .filter(col("cand") =!= col("query_id"))
-          .withColumn("d2",
-            Similarity.l2sq(col("qv"), col("__cv")).cast("long"))
-          .select(col("entry_cells"), col("query_id"), col("cand"),
-            col("d2"))
-          .dropDuplicates("entry_cells", "query_id", "cand")
-        val searched = Similarity.graphBeamSearch(q, entryB,
-          nnGraphEdges(s, d), graphVecs(s, d), hops = GraphHops,
-          beam = lit(GraphBeam), k = K, keys = Seq("entry_cells"))
-        recallBranched(s, d, "entry_cells",
-          GraphEntrySweep.map(ew => lit(ew.toLong)),
-          searched.select(col("entry_cells"), col("query_id"),
-            col("neighbor_id")))
-      },
-      GraphEntrySweep.map(ew =>
-        s"SELECT CAST($ew AS BIGINT) AS entry_cells, r.* FROM (\n" +
-          recallAgainstExactL2Sql(
-            s"WITH ${graphSearchCtesAt(GraphHops, "", entryCells = ew)}\n" +
-              "SELECT query_id, neighbor_id AS vec_id FROM gsearch") +
-          ") r")
-        .mkString("\nUNION ALL\n")),
+    "sim_graph_entry_sweep" -> graphSweep(GraphEntrySweep)(
+        ew => graphSearchCtesAt(GraphHops, "", entryCells = ew))(
+      nnGraphEdges(_, _), seed = Some(graphEntrySweepSeed _)),
 
     // Beam-width sweep of the graph search — the SERVING-TIME knob
     // (per-query work is |entry| + hops·beam·degree scored rows; no
@@ -1690,25 +1478,9 @@ object SimilarityQueries {
     // r16 fusion: the widths share entry seed and edge list; only the
     // per-hop beam cut differs, so one branch-keyed traversal runs all
     // three with the cut as a per-branch limit (`__r ≤ beam`).
-    "sim_graph_beam_sweep" -> QueryDef(
-      (s, d) => {
-        val (q, entry) = graphQueryEntry(s, d)
-        val bids = GraphBeamSweep.map(b => lit(b.toLong))
-        val entryB = entry.withColumn("beam", explode(array(bids: _*)))
-        val searched = Similarity.graphBeamSearch(q, entryB,
-          nnGraphEdges(s, d), graphVecs(s, d), hops = GraphHops,
-          beam = col("beam"), k = K, keys = Seq("beam"))
-        recallBranched(s, d, "beam", bids,
-          searched.select(col("beam"), col("query_id"),
-            col("neighbor_id")))
-      },
-      GraphBeamSweep.map(b =>
-        s"SELECT CAST($b AS BIGINT) AS beam, r.* FROM (\n" +
-          recallAgainstExactL2Sql(
-            s"WITH ${graphSearchCtesAt(GraphHops, "", beam = b)}\n" +
-              "SELECT query_id, neighbor_id AS vec_id FROM gsearch") +
-          ") r")
-        .mkString("\nUNION ALL\n")),
+    "sim_graph_beam_sweep" -> graphSweep(GraphBeamSweep)(
+        b => graphSearchCtesAt(GraphHops, "", beam = b))(
+      nnGraphEdges(_, _), beam = col("beam")),
 
     // Degree sweep of the graph index — the INDEX-SIZE knob (the edge
     // list is n·degree rows; serving cost scales with degree through
@@ -1723,28 +1495,12 @@ object SimilarityQueries {
     // r16 fusion: every width serves an erank-prefix of the ONE wide
     // build (unchanged), and the three traversals + recall compares
     // fuse into one branch-keyed run over the prefix-tagged edge union.
-    "sim_graph_degree_sweep" -> QueryDef(
-      (s, d) => {
-        val (q, entry) = graphQueryEntry(s, d)
-        val bids = GraphDegSweep.map(dg => lit(dg.toLong))
-        val entryB = entry.withColumn("degree", explode(array(bids: _*)))
-        val edgesB = Similarity.rankPrefix(nnGraphEdgesWide(s, d),
-            col("erank"), GraphDegSweep, Seq("degree"))
-          .select(col("degree"), col("src"), col("dst"))
-        val searched = Similarity.graphBeamSearch(q, entryB, edgesB,
-          graphVecs(s, d), hops = GraphHops, beam = lit(GraphBeam), k = K,
-          keys = Seq("degree"))
-        recallBranched(s, d, "degree", bids,
-          searched.select(col("degree"), col("query_id"),
-            col("neighbor_id")))
-      },
-      GraphDegSweep.map(dg =>
-        s"SELECT CAST($dg AS BIGINT) AS degree, r.* FROM (\n" +
-          recallAgainstExactL2Sql(
-            s"WITH ${graphSearchCtesAt(GraphHops, "", deg = dg)}\n" +
-              "SELECT query_id, neighbor_id AS vec_id FROM gsearch") +
-          ") r")
-        .mkString("\nUNION ALL\n")),
+    "sim_graph_degree_sweep" -> graphSweep(GraphDegSweep)(
+        dg => graphSearchCtesAt(GraphHops, "", deg = dg)) { (s, d) =>
+      Similarity.rankPrefix(nnGraphEdgesWide(s, d), col("erank"),
+          GraphDegSweep.knobs, Seq("degree"))
+        .select(col("degree"), col("src"), col("dst"))
+    },
 
     // The nprobe frontier — recall@10 of the composed IVF-PQ search at
     // probe widths 1/3/5, each against the exact-L2 baseline: the
@@ -1767,23 +1523,11 @@ object SimilarityQueries {
     // r16 fusion: the widths' probe sets nest (rank-prefix of one
     // centroid ranking), so one branch-keyed ADC scan + one fused
     // recall compare replace three of each.
-    "sim_nprobe_sweep" -> QueryDef(
-      (s, d) => {
-        val q = quantized(s, d)
-          .filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select(col("vec_id").as("query_id"), col("qv"))
-        val searched = Similarity.ivfPqSearch(q, indexedCodes(s, d),
-          trainedCodebook(s, d), trainedCentroids(s, d),
-          nprobes = Seq(1, 3, 5), k = K, keys = Seq("nprobe"))
-        recallBranched(s, d, "nprobe",
-          Seq(1, 3, 5).map(np => lit(np.toLong)),
-          searched.select(col("nprobe"), col("query_id"),
-            col("vec_id").as("neighbor_id")))
-      },
-      Seq(1, 3, 5).map(np =>
-        s"SELECT CAST($np AS BIGINT) AS nprobe, r.* FROM (\n" +
-          s"${recallAgainstExactL2Sql(ivfpqSqlAt(np))}) r")
-        .mkString("\nUNION ALL\n")),
+    "sim_nprobe_sweep" -> l2Sweep(NprobeSweep)(ivfpqSqlAt) { (s, d) =>
+      Similarity.ivfPqSearch(l2Queries(s, d), indexedCodes(s, d),
+        trainedCodebook(s, d), trainedCentroids(s, d),
+        nprobes = NprobeSweep.knobs, k = K, keys = Seq("nprobe"))
+    },
 
     // The nprobe frontier on the PRODUCTION path — the sweep above
     // characterizes the raw ADC ranking, but nobody serves that when
@@ -1804,26 +1548,15 @@ object SimilarityQueries {
     // above its raw-ADC counterpart.
     // r16 fusion: one branch-keyed residual-ADC chain (probe prefixes
     // nest) + one fused exact re-rank + one fused recall compare.
-    "sim_nprobe_rerank_sweep" -> QueryDef(
-      (s, d) => {
-        val e = quantized(s, d)
-        val q = e.filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select(col("vec_id").as("query_id"), col("qv"))
-        val sl = Similarity.ivfPqResidualSearch(q,
-          residualCellCodes(s, d), trainedResCodebook(s, d),
-          trainedCentroids(s, d), nprobes = Seq(1, 3, 5), k = RerankR,
-          keys = Seq("nprobe"))
-        val reranked = Similarity.rerankExact(sl, q, e, K,
-          keys = Seq("nprobe"))
-        recallBranched(s, d, "nprobe",
-          Seq(1, 3, 5).map(np => lit(np.toLong)),
-          reranked.select(col("nprobe"), col("query_id"),
-            col("vec_id").as("neighbor_id")))
-      },
-      Seq(1, 3, 5).map(np =>
-        s"SELECT CAST($np AS BIGINT) AS nprobe, r.* FROM (\n" +
-          s"${recallAgainstExactL2Sql(ivfpqRerankSqlAt(RerankR, np))}) r")
-        .mkString("\nUNION ALL\n")),
+    "sim_nprobe_rerank_sweep" -> l2Sweep(NprobeSweep)(
+        ivfpqRerankSqlAt(RerankR, _)) { (s, d) =>
+      val q = l2Queries(s, d)
+      val sl = Similarity.ivfPqResidualSearch(q,
+        residualCellCodes(s, d), trainedResCodebook(s, d),
+        trainedCentroids(s, d), nprobes = NprobeSweep.knobs, k = RerankR,
+        keys = Seq("nprobe"))
+      Similarity.rerankExact(sl, q, quantized(s, d), K, keys = Seq("nprobe"))
+    },
 
     // The re-rank width frontier — the SECOND serving knob: how many
     // ADC candidates the exact stage re-scores (R raw-vector reads per
@@ -1846,25 +1579,15 @@ object SimilarityQueries {
     // for this implementation), so the sweep runs the ADC chain once
     // at the widest width and serves every branch as a prefix filter
     // through one fused re-rank + recall compare.
-    "sim_rwidth_sweep" -> QueryDef(
-      (s, d) => {
-        val e = quantized(s, d)
-        val q = e.filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select(col("vec_id").as("query_id"), col("qv"))
-        val widths = Seq(K, RerankR, 10 * K)
-        val sl = Similarity.rankPrefix(
-          ivfpqResSpark(s, d, k = widths.max, np = Nprobe), col("rank"),
-          widths, Seq("rerank_r"))
-        val reranked = Similarity.rerankExact(sl, q, e, K,
-          keys = Seq("rerank_r"))
-        recallBranched(s, d, "rerank_r", widths.map(r => lit(r.toLong)),
-          reranked.select(col("rerank_r"), col("query_id"),
-            col("vec_id").as("neighbor_id")))
-      },
-      Seq(K, RerankR, 10 * K).map(r =>
-        s"SELECT CAST($r AS BIGINT) AS rerank_r, r.* FROM (\n" +
-          s"${recallAgainstExactL2Sql(ivfpqRerankSqlAt(r, Nprobe))}) r")
-        .mkString("\nUNION ALL\n")),
+    "sim_rwidth_sweep" -> l2Sweep(RerankSweep)(
+        ivfpqRerankSqlAt(_, Nprobe)) { (s, d) =>
+      val widths = RerankSweep.knobs
+      val sl = Similarity.rankPrefix(
+        ivfpqResSpark(s, d, k = widths.max, np = Nprobe), col("rank"),
+        widths, Seq("rerank_r"))
+      Similarity.rerankExact(sl, l2Queries(s, d), quantized(s, d), K,
+        keys = Seq("rerank_r"))
+    },
 
     // SemDeDup — cluster-scoped SEMANTIC deduplication (Abbas et al.
     // 2023): assign every embedding to its trained k-means cell, then
@@ -2064,7 +1787,7 @@ object SimilarityQueries {
        |qx AS (
        |  SELECT p.vec_id AS query_id, p.sub, cb.code, p.sv, cb.cv
        |  FROM p16 p JOIN cb ON cb.sub = p.sub
-       |  WHERE p.vec_id % 50 = 0),
+       |  WHERE ${L2Sample.sql("p.vec_id")}),
        |dt AS (
        |  SELECT query_id, CAST(sub AS BIGINT) AS sub, code,
        |    ${pqD2Sql} AS dt
@@ -2083,10 +1806,8 @@ object SimilarityQueries {
   /** ADC top-k (the sim_pq_adc body) — shared with the recall gate. */
   private def pqAdc(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Similarity.pqAdcSearch(
-      quantized(s, d).filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("qv")),
-      pqCodesFrame(s, d), trainedCodebook(s, d), K)
+    Similarity.pqAdcSearch(l2Queries(s, d), pqCodesFrame(s, d),
+      trainedCodebook(s, d), K)
 
   /** The stored index as search input: (vec_id, cell_id, sub, code) —
     * `sim_index_build`'s row shape with the codes unpacked. One
@@ -2117,11 +1838,8 @@ object SimilarityQueries {
     * with its recall gate and the streaming serving twin's bench. */
   private def ivfpqSpark(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Similarity.ivfPqSearch(
-      quantized(s, d).filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("qv")),
-      indexedCodes(s, d), trainedCodebook(s, d), trainedCentroids(s, d),
-      nprobe = Nprobe, k = K)
+    Similarity.ivfPqSearch(l2Queries(s, d), indexedCodes(s, d),
+      trainedCodebook(s, d), trainedCentroids(s, d), nprobe = Nprobe, k = K)
 
   /** DuckDB text of the composed IVF-PQ search: training (both
     * families), coding, cell assignment, per-query probing, and the
@@ -2146,12 +1864,12 @@ object SimilarityQueries {
        |    SELECT e.vec_id, c.cent_id, row_number() OVER (
        |      PARTITION BY e.vec_id
        |      ORDER BY ${d2Sql("e.v", "c.cent_v", Dims)} ASC, c.cent_id ASC) AS cr
-       |    FROM e, c WHERE e.vec_id % 50 = 0)
+       |    FROM e, c WHERE ${L2Sample.sql("e.vec_id")})
        |  WHERE cr <= $np),
        |qx AS (
        |  SELECT p.vec_id AS query_id, p.sub, cb.code, p.sv, cb.cv
        |  FROM p16 p JOIN cb ON cb.sub = p.sub
-       |  WHERE p.vec_id % 50 = 0),
+       |  WHERE ${L2Sample.sql("p.vec_id")}),
        |dt AS (
        |  SELECT query_id, CAST(sub AS BIGINT) AS sub, code,
        |    ${pqD2Sql} AS dt
@@ -2195,7 +1913,7 @@ object SimilarityQueries {
       d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val coded = rpFrame(s, d)
-    val q = coded.filter(pmod(col("vec_id"), lit(50)) === 0)
+    val q = coded.filter(L2Sample(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("pv").as("xp"))
     // exact int64 sketch-space distance as the native codegen'd
     // expression — the composable aggregate(zip_with(...)) form ran
@@ -2213,11 +1931,7 @@ object SimilarityQueries {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= RerankR)
       .select(col("query_id"), col("vec_id"))
-    val e = quantized(s, d)
-    Similarity.rerankExact(shortlist,
-      e.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("qv")),
-      e, k = K)
+    Similarity.rerankExact(shortlist, l2Queries(s, d), quantized(s, d), k = K)
   }
 
   /** DuckDB text of the JL search: projection (same hyperplane
@@ -2233,7 +1947,7 @@ object SimilarityQueries {
        |    CAST(list_sum(list_transform(generate_series(1, ${Tbls * Planes}),
        |      i -> (q.pv[i] - c.pv[i]) * (q.pv[i] - c.pv[i]))) AS BIGINT) AS d2p
        |  FROM rp q, rp c
-       |  WHERE q.vec_id % 50 = 0 AND c.vec_id <> q.vec_id),
+       |  WHERE ${L2Sample.sql("q.vec_id")} AND c.vec_id <> q.vec_id),
        |sl AS (
        |  SELECT query_id, vec_id FROM (
        |    SELECT *, row_number() OVER (PARTITION BY query_id
@@ -2287,7 +2001,7 @@ object SimilarityQueries {
       d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val coded = sq8Frame(s, d)
-    val q = coded.filter(pmod(col("vec_id"), lit(50)) === 0)
+    val q = coded.filter(L2Sample(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("sv").as("xv"))
     val d2 = Similarity.l2sq(col("xv"), col("cv2")).cast("long")
     val w = Window.partitionBy(col("query_id"))
@@ -2328,7 +2042,7 @@ object SimilarityQueries {
        |    CAST(${dot("q.sv", "q.sv", Dims)} - 2 * ${dot("q.sv", "c.sv", Dims)}
        |      + ${dot("c.sv", "c.sv", Dims)} AS BIGINT) AS d2
        |  FROM sq q, sq c
-       |  WHERE q.vec_id % 50 = 0 AND c.vec_id <> q.vec_id)
+       |  WHERE ${L2Sample.sql("q.vec_id")} AND c.vec_id <> q.vec_id)
        |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, d2 FROM (
        |  SELECT *, row_number() OVER (PARTITION BY query_id
        |    ORDER BY d2 ASC, vec_id ASC) AS rank FROM sc)
@@ -2353,10 +2067,10 @@ object SimilarityQueries {
     val cells = graphAssigned(s, d)
       .select(col("__id").as("vec_id"), col("cell_id"))
     val (_, probes) = Similarity.ivfAssignCentroids(
-      e.filter(pmod(col("vec_id"), lit(50)) === 0), "vec_id", "qv",
+      e.filter(L2Sample(col("vec_id"))), "vec_id", "qv",
       cents = cents, nprobe = Nprobe)
     val coded = sq8Frame(s, d)
-    val q = coded.filter(pmod(col("vec_id"), lit(50)) === 0)
+    val q = coded.filter(L2Sample(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("sv").as("xv"))
     val d2 = Similarity.l2sq(col("xv"), col("cv2")).cast("long")
     val w = Window.partitionBy(col("query_id"))
@@ -2396,7 +2110,7 @@ object SimilarityQueries {
        |    SELECT e.vec_id, c.cent_id AS cell_id, row_number() OVER (
        |      PARTITION BY e.vec_id
        |      ORDER BY ${d2Sql("e.v", "c.cent_v", Dims)} ASC, c.cent_id ASC) AS cr
-       |    FROM e, c WHERE e.vec_id % 50 = 0)
+       |    FROM e, c WHERE ${L2Sample.sql("e.vec_id")})
        |  WHERE cr <= $Nprobe),
        |rng AS (
        |  SELECT t.i AS dim, MIN(v[t.i]) AS mn, MAX(v[t.i]) AS mx
@@ -2503,9 +2217,7 @@ object SimilarityQueries {
   private def ivfpqResSpark(s: org.apache.spark.sql.SparkSession,
       d: String, k: Int = K,
       np: Int = Nprobe): org.apache.spark.sql.DataFrame =
-    Similarity.ivfPqResidualSearch(
-      quantized(s, d).filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("qv")),
+    Similarity.ivfPqResidualSearch(l2Queries(s, d),
       residualCellCodes(s, d), trainedResCodebook(s, d),
       trainedCentroids(s, d), nprobes = Seq(np), k = k)
 
@@ -2552,7 +2264,7 @@ object SimilarityQueries {
        |    SELECT e.vec_id, e.v, c.cent_id AS cell_id, c.cent_v,
        |      row_number() OVER (PARTITION BY e.vec_id
        |        ORDER BY ${d2Sql("e.v", "c.cent_v", Dims)} ASC, c.cent_id ASC) AS cr
-       |    FROM e, c WHERE e.vec_id % 50 = 0)
+       |    FROM e, c WHERE ${L2Sample.sql("e.vec_id")})
        |  WHERE cr <= $np),
        |rqx AS (
        |  SELECT q.query_id, q.cell_id, t.m AS sub,
@@ -2585,12 +2297,8 @@ object SimilarityQueries {
   private def ivfpqRerankSpark(s: org.apache.spark.sql.SparkSession,
       d: String, r: Int = RerankR,
       np: Int = Nprobe, finalK: Int = K): org.apache.spark.sql.DataFrame = {
-    val e = quantized(s, d)
-    Similarity.rerankExact(
-      ivfpqResSpark(s, d, k = r, np = np),
-      e.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("qv")),
-      e, k = finalK)
+    Similarity.rerankExact(ivfpqResSpark(s, d, k = r, np = np),
+      l2Queries(s, d), quantized(s, d), k = finalK)
   }
 
   /** DuckDB text of the re-rank: the full IVFADC chain at shortlist
@@ -2692,27 +2400,21 @@ object SimilarityQueries {
     (base +: rounds).mkString(",\n")
   }
 
-  /** Recall@K of `approx` (query_id, neighbor_id) against the exact
-    * squared-L2 top-K over the 1-in-50 query sample — the shared body
-    * of the PQ-family recall gates. */
-  /** The exact squared-L2 top-K of the 1-in-50 query sample — the
-    * grading baseline EVERY recall gate compares against, memoized so
-    * the board computes the brute-force scan once per session/pass
-    * instead of once per gate (ten gate rows plus six sweep branches
-    * re-derived it — the same first-consumer duplication the trained
+  /** The exact squared-L2 top-K of [[L2Sample]] — the grading
+    * baseline every L2 recall gate compares against, memoized so the
+    * board computes the brute-force scan once per session/pass instead
+    * of once per gate (ten gate rows plus six sweep branches re-derived
+    * it — the same first-consumer duplication the trained
     * centroids/codebooks already avoid). */
-  private def exactL2TopK(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+  private[graft] def exactL2TopK(s: SparkSession, d: String): DataFrame =
     FrameCache.memo(s, d, "exact_l2_topk") {
       import org.apache.spark.sql.expressions.Window
-      val e = quantized(s, d)
-      val q = e.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("qv").as("xv"))
+      val q = l2Queries(s, d).select(col("query_id"), col("qv").as("xv"))
       val d2full = Similarity.l2sq(col("xv"), col("cv2")).cast("long")
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("d2").asc, col("neighbor_id").asc)
-      q.crossJoin(
-          e.select(col("vec_id").as("neighbor_id"), col("qv").as("cv2")))
+      q.crossJoin(quantized(s, d)
+          .select(col("vec_id").as("neighbor_id"), col("qv").as("cv2")))
         .filter(col("neighbor_id") =!= col("query_id"))
         .withColumn("d2", d2full)
         .withColumn("rank", row_number().over(w))
@@ -2720,23 +2422,55 @@ object SimilarityQueries {
         .select(col("query_id"), col("neighbor_id"))
     }
 
-  private def recallAgainstExactL2(s: org.apache.spark.sql.SparkSession,
-      d: String,
-      approx: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val exact = exactL2TopK(s, d)
-    exact.join(approx.withColumn("hit", lit(1)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
+  /** The recall gate: recall@K of `approx` against `exact` per query —
+    * one exact ⋈ approx LEFT join on (query, neighbor) id pairs, two
+    * exact counts, one IEEE division at the edge. `exact` carries
+    * (query_id, neighbor_id, …); `approx` carries query_id and
+    * `neighbor_id` or, for the ranked ADC/SQ8/JL shapes, `vec_id`.
+    * With a `sweep`, `approx` also carries the branch column and the
+    * exact baseline is tagged with every branch id, so each branch's
+    * rows are exactly its single gate's (the sweeps' branch-equality
+    * specs pin it) at one join and one aggregate for the whole sweep. */
+  private[graft] def recall(exact: DataFrame, approx: DataFrame,
+      sweep: Option[Sweep[_]] = None): DataFrame = {
+    val keys = sweep.map(_.key).toSeq
+    val nbr =
+      if (approx.columns.contains("neighbor_id")) "neighbor_id" else "vec_id"
+    val hits = approx.select((keys.map(col) ++
+        Seq(col("query_id"), col(nbr).as("neighbor_id"))): _*)
+      .withColumn("hit", lit(1))
+    val base = exact.select(col("query_id"), col("neighbor_id"))
+    sweep.fold(base)(_.tag(base))
+      .join(hits, keys ++ Seq("query_id", "neighbor_id"), "left")
+      .groupBy((keys :+ "query_id").map(col): _*)
       .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .select(col("query_id"), col("n_exact"), col("n_hit"),
+      .select((keys ++ Seq("query_id", "n_exact", "n_hit")).map(col) :+
         (col("n_hit").cast("double") / col("n_exact").cast("double"))
-          .as("recall_at_k"))
+          .as("recall_at_k"): _*)
   }
 
-  /** Oracle text for [[recallAgainstExactL2]]: `approxSql` must return
-    * (query_id, …, vec_id, …) ranked rows (the two ADC search shapes). */
-  private def recallAgainstExactL2Sql(approxSql: String): String =
-    s"""WITH exact AS (
+  /** Oracle text of [[recall]]: `base` is the baseline CTE — `brute`
+    * for the cosine gates, [[exactL2Cte]] for the L2 ones — and
+    * `approx` the caller's `approx(query_id, neighbor_id, hit)` CTE,
+    * both passed through verbatim. */
+  private def recallSql(base: String, approx: String): String = {
+    val cte = base.takeWhile(_ != ' ')
+    val b = cte.take(1) // the baseline's alias: brute b, exact e
+    // the L2 gates have always printed the ratio on its own line
+    val br = if (b == "e") "\n    " else " "
+    s"""WITH $base,
+       |$approx
+       |SELECT $b.query_id, COUNT(*) AS n_exact, COUNT(a.hit) AS n_hit,
+       |  CAST(COUNT(a.hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)${br}AS recall_at_k
+       |FROM $cte $b
+       |LEFT JOIN approx a
+       |  ON a.query_id = $b.query_id AND a.neighbor_id = $b.neighbor_id
+       |GROUP BY $b.query_id""".stripMargin
+  }
+
+  /** The oracle's [[exactL2TopK]]. */
+  private def exactL2Cte: String =
+    s"""exact AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
        |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
@@ -2744,29 +2478,85 @@ object SimilarityQueries {
        |          + ${dot("c.v", "c.v", Dims)} ASC,
        |        c.vec_id ASC) AS rank
        |    FROM (SELECT vec_id, ${quantVec("embedding")} AS v
-       |          FROM embeddings WHERE vec_id % 50 = 0) q,
+       |          FROM embeddings WHERE ${L2Sample.sql("vec_id")}) q,
        |         (SELECT vec_id, ${quantVec("embedding")} AS v
        |          FROM embeddings) c
        |    WHERE c.vec_id <> q.vec_id)
-       |  WHERE rank <= $K),
-       |approx AS (
-       |  SELECT query_id, vec_id AS neighbor_id, 1 AS hit
-       |  FROM ($approxSql))
-       |SELECT e.query_id, COUNT(*) AS n_exact, COUNT(a.hit) AS n_hit,
-       |  CAST(COUNT(a.hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-       |    AS recall_at_k
-       |FROM exact e
-       |LEFT JOIN approx a
-       |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-       |GROUP BY e.query_id""".stripMargin
+       |  WHERE rank <= $K)""".stripMargin
 
-  /** Spec bridge: [[recallAgainstExactL2]] over an arbitrary approx
-    * frame carrying (query_id, neighbor_id, …). */
-  private[graft] def recallOfApprox(s: org.apache.spark.sql.SparkSession,
-      d: String,
-      approx: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    recallAgainstExactL2(s, d,
-      approx.select(col("query_id"), col("neighbor_id")))
+  /** [[recallSql]] against [[exactL2Cte]]: `approxSql` returns ranked
+    * (query_id, …, vec_id, …) rows. */
+  private def l2RecallSql(approxSql: String): String =
+    recallSql(exactL2Cte,
+      s"""approx AS (
+         |  SELECT query_id, vec_id AS neighbor_id, 1 AS hit
+         |  FROM ($approxSql))""".stripMargin)
+
+  /** A cosine-family recall gate: `approx` graded against the cosine
+    * brute-force baseline `exact` (oracle `exactSql`); `approxCte` is the
+    * oracle's `approx` CTE. */
+  private def cosGate(exact: (SparkSession, String) => DataFrame,
+      exactSql: String, approx: (SparkSession, String) => DataFrame,
+      approxCte: String): QueryDef =
+    QueryDef((s, d) => recall(exact(s, d), approx(s, d)),
+      recallSql(s"brute AS (SELECT query_id, neighbor_id FROM ($exactSql))",
+        approxCte))
+
+  /** An L2 recall gate: `approx` (oracle `approxSql`) graded against
+    * [[exactL2TopK]]. */
+  private def l2Gate(approx: (SparkSession, String) => DataFrame,
+      approxSql: String): QueryDef =
+    QueryDef((s, d) => recall(exactL2TopK(s, d), approx(s, d)),
+      l2RecallSql(approxSql))
+
+  /** An L2 recall sweep: ONE branch-keyed `approx` (carrying `sw.key`)
+    * graded by one fused [[recall]]; the oracle unions each branch's
+    * standalone gate over `approxSql(knob)`. */
+  private def l2Sweep[A](sw: Sweep[A])(approxSql: A => String)(
+      approx: (SparkSession, String) => DataFrame): QueryDef =
+    QueryDef((s, d) => recall(exactL2TopK(s, d), approx(s, d), Some(sw)),
+      sw.sql(a => l2RecallSql(approxSql(a))))
+
+  /** The graph traversal as an L2 approx side: `ctes` end in `gsearch`. */
+  private def graphSearchSql(ctes: String): String =
+    s"WITH $ctes\nSELECT query_id, neighbor_id AS vec_id FROM gsearch"
+
+  /** A graph-traversal sweep: the production query sample and entry
+    * seed ([[graphQueryEntry]]) tagged with every branch id — or
+    * `seed`'s per-branch entry, built from the query frame — then ONE
+    * branch-keyed [[Similarity.graphBeamSearch]] over `edges` (tagged
+    * by the branch key where the branches' edge lists differ) at `beam`,
+    * graded by one fused recall. `ctes(knob)` is the branch's oracle
+    * search ([[graphSearchCtesAt]]). */
+  private def graphSweep[A](sw: Sweep[A])(ctes: A => String)(
+      edges: (SparkSession, String) => DataFrame,
+      beam: Column = lit(GraphBeam),
+      seed: Option[(SparkSession, String, DataFrame) => DataFrame] = None)
+      : QueryDef =
+    l2Sweep(sw)(a => graphSearchSql(ctes(a))) { (s, d) =>
+      val (q, entry) = graphQueryEntry(s, d)
+      Similarity.graphBeamSearch(q, seed.fold(sw.tag(entry))(_(s, d, q)),
+        edges(s, d), graphVecs(s, d), hops = GraphHops, beam = beam, k = K,
+        keys = Seq(sw.key))
+    }
+
+  /** A graph sweep over delta-drift edge lists: `at(knob)` = (m,
+    * patched) picks the `vec_id % m ≠ 0` base build, plus the delta
+    * cohort's patch when patched — each branch's list tagged with its
+    * id. */
+  private def driftSweep[A](sw: Sweep[A])(at: A => (Int, Boolean)): QueryDef =
+    graphSweep(sw) { a =>
+      val (m, patched) = at(a)
+      graphSearchCtesAt(GraphHops, s" AND id % $m <> 0",
+        patchSrcPred = if (patched) s" % $m = 0" else "")
+    } { (s, d) =>
+      sw.knobs.map { a =>
+        val (m, patched) = at(a)
+        val base = nnGraphEdgesBaseAt(s, d, m)
+        (if (patched) base.unionByName(graphPatchedEdges(s, d, m)) else base)
+          .select(lit(sw.id(a)).as(sw.key), col("src"), col("dst"))
+      }.reduce(_ unionByName _)
+    }
 
   /** The bounded-degree neighbor graph (src, dst, erank, d2) — an
     * INDEX: built once per (session, sf) off the trained centroids'
@@ -2781,12 +2571,11 @@ object SimilarityQueries {
     // of the same scored frame
     nnGraphEdgesWide(s, d).filter(col("erank") <= GraphDeg)
 
-  /** The widest edge list of the degree sweep, built ONCE at
-    * [[GraphDegMax]]: because erank is assigned before any cap, every
-    * smaller degree's edge list is exactly the `erank ≤ deg` prefix
-    * of this build — the sweep re-ranks one scored pair frame instead
-    * of paying three index builds (the verdict's "re-ranks the same
-    * scored pair frame" economy). */
+  /** The widest edge list of the degree sweep, built ONCE at its
+    * widest degree ([[GraphDegSweep]]): because erank is assigned
+    * before any cap, every smaller degree's edge list is exactly the
+    * `erank ≤ deg` prefix of this build — the sweep re-ranks one scored
+    * pair frame instead of paying three index builds. */
   private[graft] def nnGraphEdgesWide(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     // r17: the pair-construction/scoring pass is the shared
@@ -2795,7 +2584,7 @@ object SimilarityQueries {
     // degree-sweep spec pins the production prefix row for row).
     val scored = graphPairScored(s, d)
     FrameCache.memo(s, d, "nn_graph_edges_wide") {
-      Similarity.nnGraphRank(scored, GraphDegMax)
+      Similarity.nnGraphRank(scored, GraphDegSweep.knobs.max)
     }
   }
 
@@ -2854,13 +2643,6 @@ object SimilarityQueries {
     }
   }
 
-  /** [[nnGraphEdgesBase]] parametrized on the delta fraction — edges
-    * over the `vec_id % m ≠ 0` cohort only, so the excluded 1/m of
-    * the corpus models the vectors ADMITTED since the last rebuild
-    * (m = 10/3/2 → delta ≈ 10/33/50 %). The drift row serves the full
-    * corpus against each base build and measures what recall the
-    * edge-less delta costs — the degradation curve that prices the
-    * rebuild trigger. */
   /** ALL drift-fraction base builds in ONE branch-keyed pass (r16
     * build fusion): the per-m cohorts can't share pairs, but they CAN
     * share the pair-join/score/rank machinery — one tagged probe
@@ -2889,16 +2671,18 @@ object SimilarityQueries {
     }
   }
 
+  /** [[nnGraphEdgesBase]] parametrized on the delta fraction — edges
+    * over the `vec_id % m ≠ 0` cohort only, so the excluded 1/m of
+    * the corpus models the vectors ADMITTED since the last rebuild
+    * (m = 10/3/2 → delta ≈ 10/33/50 %). The drift row serves the full
+    * corpus against each base build and measures what recall the
+    * edge-less delta costs — the degradation curve that prices the
+    * rebuild trigger. */
   private[graft] def nnGraphEdgesBaseAt(s: org.apache.spark.sql.SparkSession,
       d: String, m: Int): org.apache.spark.sql.DataFrame =
     nnGraphEdgesBaseByM(s, d).filter(col("__m") === m.toLong)
       .select(col("src"), col("dst"), col("erank"), col("d2"))
 
-  /** The incremental edge PATCH for the `vec_id % m = 0` delta cohort
-    * ([[Similarity.nnGraphPatch]]): out-edges for the admitted
-    * vectors against the full probe space — row-identical to a full
-    * rebuild's rows for those srcs (spec-pinned), built without
-    * touching the base list. */
   /** ALL drift-fraction PATCH builds in one branch-keyed pass —
     * [[nnGraphEdgesBaseByM]]'s fusion applied to the delta-src patch
     * kernel (srcs = the `id % m = 0` cohort per branch, probe space =
@@ -2919,6 +2703,11 @@ object SimilarityQueries {
     }
   }
 
+  /** The incremental edge PATCH for the `vec_id % m = 0` delta cohort
+    * ([[Similarity.nnGraphPatch]]): out-edges for the admitted
+    * vectors against the full probe space — row-identical to a full
+    * rebuild's rows for those srcs (spec-pinned), built without
+    * touching the base list. */
   private[graft] def graphPatchedEdges(s: org.apache.spark.sql.SparkSession,
       d: String, m: Int): org.apache.spark.sql.DataFrame =
     graphPatchedEdgesByM(s, d).filter(col("__m") === m.toLong)
@@ -2980,10 +2769,10 @@ object SimilarityQueries {
     val e = quantized(s, d)
     val (assigned, probes) = Similarity.ivfAssignCentroids(
       e, "vec_id", "qv", trainedCentroids(s, d), nprobe = entryCells)
-    val q = assigned.filter(pmod(col("__id"), lit(50)) === 0)
+    val q = assigned.filter(L2Sample(col("__id")))
       .select(col("__id").as("query_id"), col("__v").as("qv"))
     val entry = q
-      .join(probes.filter(pmod(col("query_id"), lit(50)) === 0),
+      .join(probes.filter(L2Sample(col("query_id"))),
         Seq("query_id"))
       .join(assigned.select(col("__id").as("cand"),
         col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
@@ -3028,7 +2817,7 @@ object SimilarityQueries {
       d: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
     val assigned = graphAssigned(s, d)
-    val q = assigned.filter(pmod(col("__id"), lit(50)) === 0)
+    val q = assigned.filter(L2Sample(col("__id")))
       .select(col("__id").as("query_id"), col("__v").as("qv"),
         col("cell_id"))
     val entry = q
@@ -3040,26 +2829,28 @@ object SimilarityQueries {
     (q.select("query_id", "qv"), entry)
   }
 
-  /** Branch-fused [[recallAgainstExactL2]]: ONE exact⋈approx join and
-    * ONE (branch, query) aggregate for a whole sweep, instead of one
-    * join + aggregate per branch. The exact baseline is tagged with
-    * every branch id, so each branch's LEFT-JOIN/count semantics — and
-    * therefore its rows — are exactly the per-branch gate's (the
-    * sweeps' existing branch-equality specs pin it). `approx` carries
-    * (bidCol, query_id, neighbor_id). */
-  private def recallBranched(s: org.apache.spark.sql.SparkSession,
-      d: String, bidCol: String, bids: Seq[org.apache.spark.sql.Column],
-      approx: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val exact = exactL2TopK(s, d)
-      .withColumn(bidCol, explode(array(bids: _*)))
-    exact.join(approx.withColumn("hit", lit(1)),
-        Seq(bidCol, "query_id", "neighbor_id"), "left")
-      .groupBy(col(bidCol), col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .select(col(bidCol), col("query_id"), col("n_exact"), col("n_hit"),
-        (col("n_hit").cast("double") / col("n_exact").cast("double"))
-          .as("recall_at_k"))
+  /** The entry sweep's seeds: each width's probe set is a `__cr ≤ w`
+    * prefix of ONE centroid ranking ([[Similarity.ivfAssignRanked]]),
+    * and a query seeds from every member of its probed cells, DISTINCT
+    * across cells — (entry_cells, query_id, cand, d2) for the query
+    * frame `q`. */
+  private def graphEntrySweepSeed(s: SparkSession, d: String,
+      q: DataFrame): DataFrame = {
+    val assigned = graphAssigned(s, d)
+    val ranked = Similarity.ivfAssignRanked(quantized(s, d),
+      "vec_id", "qv", trainedCentroids(s, d))
+    val probesB = Similarity.rankPrefix(
+        ranked.filter(L2Sample(col("__id"))), col("__cr"),
+        GraphEntrySweep.knobs, Seq("entry_cells"))
+      .select(col("entry_cells"), col("__id").as("query_id"),
+        col("cent_id").as("cell_id"))
+    q.join(probesB, Seq("query_id"))
+      .join(assigned.select(col("__id").as("cand"),
+        col("__v").as("__cv"), col("cell_id")), Seq("cell_id"))
+      .filter(col("cand") =!= col("query_id"))
+      .withColumn("d2", Similarity.l2sq(col("qv"), col("__cv")).cast("long"))
+      .select(col("entry_cells"), col("query_id"), col("cand"), col("d2"))
+      .dropDuplicates("entry_cells", "query_id", "cand")
   }
 
   /** Shared oracle CTEs of the graph-ANN family: quantized vectors,
@@ -3175,7 +2966,7 @@ object SimilarityQueries {
     val seed = if (entryCells == 1)
       s"""gq AS (
          |  SELECT id AS query_id, v AS qv, cent_id AS cell_id
-         |  FROM gcs WHERE cr = 1 AND id % 50 = 0),
+         |  FROM gcs WHERE cr = 1 AND ${L2Sample.sql("id")}),
          |gasg AS (SELECT id, v, cent_id AS cell_id FROM gcs WHERE cr = 1),
          |gv0 AS (
          |  SELECT q.query_id, m.id AS cand,
@@ -3185,10 +2976,10 @@ object SimilarityQueries {
     else
       s"""gq AS (
          |  SELECT id AS query_id, v AS qv, cent_id AS cell_id
-         |  FROM gcs WHERE cr = 1 AND id % 50 = 0),
+         |  FROM gcs WHERE cr = 1 AND ${L2Sample.sql("id")}),
          |gqp AS (
          |  SELECT id AS query_id, cent_id AS cell_id
-         |  FROM gcs WHERE cr <= $entryCells AND id % 50 = 0),
+         |  FROM gcs WHERE cr <= $entryCells AND ${L2Sample.sql("id")}),
          |gasg AS (SELECT id, v, cent_id AS cell_id FROM gcs WHERE cr = 1),
          |gv0 AS (
          |  SELECT DISTINCT q.query_id, m.id AS cand,
@@ -3224,11 +3015,6 @@ object SimilarityQueries {
       d: String): org.apache.spark.sql.DataFrame =
     trainedCentroids(s, d)
 
-  /** TRAINED IVF centroids (cent_id, cent_v): the deterministic id-pick
-    * (vec_id % 50) is only the INIT — [[Similarity.kmeansTrain]] runs
-    * [[TrainIters]] integer-Lloyd iterations over the corpus, exactly
-    * replayed by [[ivfTrainCtes]]. Un-memoized so PlanSpec can pin the
-    * training plan's shape directly. */
   /** The FIRST Lloyd iteration's centroids, memoized (r16): the shared
     * prefix of the trained-centroid pipeline. Training is a
     * deterministic fold, so continuing from this checkpoint for the
@@ -3241,11 +3027,16 @@ object SimilarityQueries {
     FrameCache.memo(s, d, "ivf_centroids_it1")(
       Similarity.kmeansTrain(
         e.select(col("vec_id").as("__id"), col("qv").as("__v")),
-        e.filter(pmod(col("vec_id"), lit(50)) === 0)
+        e.filter(IvfInit(col("vec_id")))
           .select(col("vec_id").as("cent_id"), col("qv").as("cent_v")),
         iters = 1))
   }
 
+  /** TRAINED IVF centroids (cent_id, cent_v): the deterministic id-pick
+    * (vec_id % 50) is only the INIT — [[Similarity.kmeansTrain]] runs
+    * [[TrainIters]] integer-Lloyd iterations over the corpus, exactly
+    * replayed by [[ivfTrainCtes]]. Un-memoized so PlanSpec can pin the
+    * training plan's shape directly. */
   private[graft] def ivfTrainPipeline(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val e = quantized(s, d)
@@ -3277,7 +3068,7 @@ object SimilarityQueries {
       val evens = quantized(s, d).filter(pmod(col("vec_id"), lit(2)) === 0)
       Similarity.kmeansTrain(
         evens.select(col("vec_id").as("__id"), col("qv").as("__v")),
-        evens.filter(pmod(col("vec_id"), lit(50)) === 0)
+        evens.filter(IvfInit(col("vec_id")))
           .select(col("vec_id").as("cent_id"), col("qv").as("cent_v")),
         iters = TrainIters)
     }
@@ -3351,7 +3142,7 @@ object SimilarityQueries {
     * retrain row trains on the drift cohort AND the full corpus). */
   private def ivfTrainChain(src: String, pre: String): String = {
     val init =
-      s"${pre}ct0 AS (SELECT vec_id AS cent_id, v AS cent_v FROM $src WHERE vec_id % 50 = 0)"
+      s"${pre}ct0 AS (SELECT vec_id AS cent_id, v AS cent_v FROM $src WHERE ${IvfInit.sql("vec_id")})"
     val steps = (1 to TrainIters).map { i =>
       s"""${pre}asg$i AS (
          |  SELECT vec_id, v, cent_id AS cluster_id FROM (
@@ -3379,11 +3170,13 @@ object SimilarityQueries {
   private def ivfTrainCtes: String = ivfTrainChain("e", "")
 
   /** Flat vs hierarchical assignment joined per vector — shared by
-    * `sim_hier_assign` and its probe-width sweep. Both kernels read
-    * the SAME trained fine centroids; the coarse level is the fixed
-    * [[HierCoarseMod]] id-pick of them. */
-  private def hierJoined(s: org.apache.spark.sql.SparkSession, d: String,
-      nprobeC: Int): org.apache.spark.sql.DataFrame = {
+    * `sim_hier_assign` (one probe width) and its probe-width sweep
+    * (every width, tagged by the branch column in `keys`: the coarse
+    * probe sets nest, so one branch-keyed fine argmin serves them
+    * all). Both kernels read the SAME trained fine centroids; the
+    * coarse level is the fixed [[HierCoarseMod]] id-pick of them. */
+  private def hierJoined(s: SparkSession, d: String, probeCs: Seq[Int],
+      keys: Seq[String] = Nil): DataFrame = {
     // the flat baseline IS the memoized serving assignment (r16: was a
     // fresh per-call argmin re-derivation of the same rows)
     val flat = graphAssigned(s, d)
@@ -3392,8 +3185,9 @@ object SimilarityQueries {
       .filter(pmod(col("cent_id"), lit(HierCoarseMod)) === 0)
       .select(col("cent_id").as("co_id"), col("cent_v").as("co_v"))
     val hier = Similarity.hierAssignCentroids(quantized(s, d), "vec_id",
-        "qv", trainedCentroids(s, d), coarse, Seq(nprobeC))
-      .select(col("id").as("vec_id"), col("cell_id").as("cell_hier"))
+        "qv", trainedCentroids(s, d), coarse, probeCs, keys)
+      .select(keys.map(col) ++
+        Seq(col("id").as("vec_id"), col("cell_id").as("cell_hier")): _*)
     flat.join(hier, Seq("vec_id"))
       .withColumn("agree",
         (col("cell_flat") === col("cell_hier")).cast("long"))
@@ -3487,10 +3281,6 @@ object SimilarityQueries {
     s"""CAST(${dot("sv", "sv", 16)} - 2 * ${dot("sv", "cv", 16)}
        |      + ${dot("cv", "cv", 16)} AS BIGINT)""".stripMargin
 
-  /** PQ code assignment (vec_id, sub, code, d2): each 16-dim subvector
-    * snaps to its nearest codeword; the argmin rides a MIN over the
-    * collision-free key d2·16+code, so assignment is one map-side-
-    * combined aggregation — no per-vector window. */
   /** The PQ coding plan UN-memoized — the build inside [[pqCodes]]'s
     * memo, package-visible so PlanSpec keeps pinning the coding SHAPE
     * (broadcast codebook equi-join + min-key aggregation, no window)
@@ -3511,6 +3301,10 @@ object SimilarityQueries {
         shiftright(col("k"), 4).as("d2"))
   }
 
+  /** PQ code assignment (vec_id, sub, code, d2): each 16-dim subvector
+    * snaps to its nearest codeword; the argmin rides a MIN over the
+    * collision-free key d2·16+code, so assignment is one map-side-
+    * combined aggregation — no per-vector window. */
   private def pqCodes(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     // memoized since r16 — same persisted-index doctrine as

@@ -33,15 +33,12 @@ object TextQueries {
        |        / greatest(len(w)::DOUBLE, 1.0)) * 4.0, 1.0)
        |  ) / 3.0, 6)""".stripMargin
 
-  /** Merge rounds for the BPE training/apply pair. Declared before
-    * `defs` — the oracle CTE generator reads it while `defs`
-    * initializes. */
+  /** Merge rounds for the BPE training/apply pair. */
   private val BpeSteps = 5
 
   /** Count-min sketch geometry — mirrors
     * [[graft.operators.Sketch.Rows]]/[[graft.operators.Sketch.Width]]
-    * (the shared batch/streaming kernel). Init-before-`defs` rule
-    * applies. */
+    * (the shared batch/streaming kernel). */
   private val CmsRows = graft.operators.Sketch.Rows
   private val CmsWidth = graft.operators.Sketch.Width
 
@@ -135,9 +132,7 @@ object TextQueries {
     * language model, score every document, gate on in-distribution
     * perplexity). Token buckets per position — 256 keeps the bigram
     * grid at 65,536 rows (a broadcastable weight table) while leaving
-    * enough resolution that target-language docs separate. Declared
-    * before `defs` (the oracle CTE generator reads these during `defs`
-    * initialization — see the BpeSteps note). */
+    * enough resolution that target-language docs separate. */
   private val LmB = 256
 
   /** Probability scale of the LM weight staircase: the smoothed bigram
@@ -1139,7 +1134,7 @@ object TextQueries {
         col("rk").cast("long").as("lex_rk"))
   }
 
-  val defs: Map[String, QueryDef] = Map(
+  lazy val defs: Map[String, QueryDef] = Map(
 
     // Token / punctuation / stopword counting (BPE-ish subword proxy
     // included): the unit economics of a corpus.

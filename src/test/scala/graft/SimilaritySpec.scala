@@ -925,7 +925,8 @@ class SimilaritySpec extends SparkSpec {
     def meanOf(rows: Array[(Long, Long, Long, Double)]) =
       rows.map(_._4).sum / rows.length
     val floor = meanOf(
-      graft.queries.SimilarityQueries.recallOfApprox(spark, d,
+      graft.queries.SimilarityQueries.recall(
+        graft.queries.SimilarityQueries.exactL2TopK(spark, d),
         graft.queries.SimilarityQueries.graphSearchAt(spark, d, 0))
         .as[(Long, Long, Long, Double)].collect())
     for (pct <- Seq(10L, 33L, 50L)) mean(pct) should be >= floor
@@ -989,8 +990,9 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Long, Long, Double)].collect()
     sweep should not be empty
     for (h <- 0 to 2) {
-      val standalone = graft.queries.SimilarityQueries.recallOfApprox(
-          spark, d, graft.queries.SimilarityQueries.graphSearchAt(spark, d, h))
+      val standalone = graft.queries.SimilarityQueries.recall(
+          graft.queries.SimilarityQueries.exactL2TopK(spark, d),
+          graft.queries.SimilarityQueries.graphSearchAt(spark, d, h))
         .as[(Long, Long, Long, Double)].collect().toSet
       withClue(s"hops=$h: ") {
         sweep.filter(_._1 == h.toLong)
@@ -1007,8 +1009,9 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Long, Long, Double)].collect()
     sweep should not be empty
     for (m <- Seq(10, 3, 2)) {
-      val standalone = graft.queries.SimilarityQueries.recallOfApprox(
-          spark, d, graft.queries.SimilarityQueries.graphSearchAt(spark, d,
+      val standalone = graft.queries.SimilarityQueries.recall(
+          graft.queries.SimilarityQueries.exactL2TopK(spark, d),
+          graft.queries.SimilarityQueries.graphSearchAt(spark, d,
             2, 10, Some(graft.queries.SimilarityQueries
               .nnGraphEdgesBaseAt(spark, d, m))))
         .as[(Long, Long, Long, Double)].collect().toSet
@@ -1137,7 +1140,8 @@ class SimilaritySpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     def mean(rows: Array[(Long, Long, Long, Double)]) =
       rows.map(_._4).sum / rows.length
-    val floor = graft.queries.SimilarityQueries.recallOfApprox(spark, d,
+    val floor = graft.queries.SimilarityQueries.recall(
+      graft.queries.SimilarityQueries.exactL2TopK(spark, d),
       graft.queries.SimilarityQueries.graphSearchAt(spark, d, 0))
       .as[(Long, Long, Long, Double)].collect()
     val got = SparkEntry.queries("sim_graph_recall")(spark, d)

@@ -15,7 +15,8 @@ runs of the same plan:
     JVM's generated lambda class names and instance identity hashes
     (`$$Lambda$3132/0x00007fb580ecdbb8@6d3a56ea`) in typed-operator
     arguments.
-sbt's own `[info]`/`[warn]`/`[error]` lines are ignored.
+sbt's own `[info]`/`[warn]`/`[error]` lines and Spark's log4j lines are
+ignored.
 
 Prints one line per query: `identical`, or `differs` with its exchange
 count (shuffle + broadcast exchange operators) before -> after, then a
@@ -35,6 +36,9 @@ NORMALIZE = [
 ]
 EXCHANGE = re.compile(r"^\(\d+\) (?:Broadcast)?Exchange\b", re.M)
 SBT_LOG = re.compile(r"^\[(info|warn|error|success)\]")
+# Spark's own log4j lines (`26/10/19 04:04:42 WARN DAGScheduler: …`) land
+# between plans when the dump captures stderr too (`2>&1`).
+SPARK_LOG = re.compile(r"^\d\d/\d\d/\d\d \d\d:\d\d:\d\d [A-Z]+ ")
 
 
 def plans(path):
@@ -45,7 +49,8 @@ def plans(path):
                 if name is not None:
                     out[name] = "".join(body)
                 name, body = line[len("======== "):].strip(), []
-            elif name is not None and not SBT_LOG.match(line):
+            elif (name is not None and not SBT_LOG.match(line)
+                  and not SPARK_LOG.match(line)):
                 body.append(line)
     if name is not None:
         out[name] = "".join(body)
