@@ -212,16 +212,11 @@ object SketchAggregates {
         c: IndexedSeq[Expression]): HllSketchAgg = copy(child = c.head)
   }
 
-  /** [[HllSketchAgg]] as an aggregate Column over a token-array column. */
-  def hllSketchAgg(tokens: Column, m: Int): Column =
-    CatalystBridge.column(
-      HllSketchAgg(CatalystBridge.expression(tokens), m)
-        .toAggregateExpression())
-
   /** [[HllSketchAgg]] in fused word-n-gram mode: registers over the
-    * n-gram shingle space of a TOKEN array — bit-identical to
-    * `hllSketchAgg(shingles(text, n), m)` (spec-pinned) without the
-    * per-document shingle-string materialization. */
+    * n-gram shingle space of a TOKEN array, without the per-document
+    * shingle-string materialization. TextHashFunctionsSpec pins
+    * `Sketch.hllRegisters` (this aggregate) equal to the explode/groupBy
+    * register table over the shingle strings. */
   def hllShingleSketchAgg(tokens: Column, n: Int, m: Int): Column =
     CatalystBridge.column(
       HllSketchAgg(CatalystBridge.expression(tokens), m, gramN = n)
@@ -362,16 +357,11 @@ object SketchAggregates {
         c: IndexedSeq[Expression]): KmvSketchAgg = copy(child = c.head)
   }
 
-  /** [[KmvSketchAgg]] as an aggregate Column over a token-array column. */
-  def kmvSketchAgg(tokens: Column, k: Int): Column =
-    CatalystBridge.column(
-      KmvSketchAgg(CatalystBridge.expression(tokens), k)
-        .toAggregateExpression())
-
   /** [[KmvSketchAgg]] in fused word-n-gram mode: the k smallest
-    * distinct gram hashes of a TOKEN array — bit-identical to
-    * `kmvSketchAgg(shingles(text, n), k)` (spec-pinned) without the
-    * per-document shingle-string materialization. */
+    * distinct gram hashes of a TOKEN array, without the per-document
+    * shingle-string materialization. TextHashFunctionsSpec pins
+    * `Sketch.kmvMins` (this aggregate) equal to the distinct/sort/take-k
+    * minima over the shingle strings. */
   def kmvShingleSketchAgg(tokens: Column, n: Int, k: Int): Column =
     CatalystBridge.column(
       KmvSketchAgg(CatalystBridge.expression(tokens), k, gramN = n)

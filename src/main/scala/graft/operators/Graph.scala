@@ -141,24 +141,6 @@ object Graph {
   def pagerank(edges: DataFrame, iters: Int): DataFrame =
     pagerankTrace(edges, iters).last
 
-  /** The convergence audit of a [[pagerank]] run: one row per iteration
-    * with the L1 rank movement (iter, n_nodes, total_delta =
-    * Σ|rankᵢ − rankᵢ₋₁|) — THE number that says the power iteration is
-    * actually contracting toward its fixed point (damping bounds the
-    * contraction factor at ~[[Damping]] per round; the fixed-point
-    * floors add at most ±1 per node of noise), and the row a broken
-    * step (wrong degree, dropped node, swapped direction) bends
-    * immediately. Same doctrine as the k-means `sim_kmeans_inertia`
-    * audit: all-integer deltas, so the sums are exact and replay
-    * bit-for-bit in the oracle's unrolled CTEs.
-    *
-    * Scale shape: each iteration adds one node-keyed equi-join of two
-    * (node, rank) frames plus a map-side-combined global sum — strictly
-    * cheaper than the step itself; `localCheckpoint` per round caps
-    * plan growth exactly as in [[pagerank]]. */
-  def pagerankConvergence(edges: DataFrame, iters: Int): DataFrame =
-    convergenceOf(pagerankTrace(edges, iters))
-
   /** The L1-delta audit derived from an already-materialized
     * [[pagerankTrace]] — each row one node-keyed equi-join of two
     * checkpointed (node, rank) frames plus a map-side-combined global

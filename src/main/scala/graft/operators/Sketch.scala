@@ -51,15 +51,19 @@ object Sketch {
       .groupBy(col("r"), col("b"))
       .agg(count(lit(1)).cast("long").as("c"))
 
+  /** Saturation point of the quantile-histogram token count: 55,108 is
+    * the largest value whose 4th power fits int64, so longer documents
+    * land in the top bucket instead of silently wrapping (Spark) or
+    * raising (DuckDB). */
+  val QhistMaxN = 55108L
+
   /** Quarter-bit quantile-histogram bucket of a token-count column:
     * length(bin(n⁴)) ≈ 4·log₂ n — consecutive buckets a factor
     * 2^(1/4) ≈ 1.19 apart, so the ≤ ~128-cell histogram is a ≤ 19 %
     * relative-error quantile summary at ANY corpus size. `n` saturates
-    * at 55,108 (the largest value whose 4th power fits int64), so
-    * longer documents land in the top bucket instead of silently
-    * wrapping (Spark) or raising (DuckDB). */
+    * at [[QhistMaxN]]. */
   def qhistBucket(n: Column): Column = {
-    val m = least(n, lit(55108L))
+    val m = least(n, lit(QhistMaxN))
     length(bin(m * m * m * m)).cast("long")
   }
 

@@ -19,7 +19,6 @@ import graft.operators.{Dedup, Similarity, TextAnalysis}
 object DedupQueries {
   import OracleSql._
 
-  private val P = graft.functions.PortableHash.P
   private val K = 12
   private val Bands = 4
   private val RowsPerBand = K / Bands
@@ -246,7 +245,7 @@ object DedupQueries {
         // stage 3(+3b): the _cls variant runs the ratio gate AND the NB
         // classifier gate as ONE fused corpus pass (each token hashed
         // once, all three trained grids folded together —
-        // TextQueries.lmNbFusedAdmittedIds; the two-pass form paid a
+        // TextQueries.lmNbFusedAdmittedIdsCalib; the two-pass form paid a
         // second full tokenize+MD5 sweep for the classifier); the plain
         // variant keeps the ratio-only score frame
         val clsGated = if (classifierGate)

@@ -52,6 +52,11 @@ object OracleSql {
       s" ELSE $maxRho - length(bin($h >> $bits)) END)"
   }
 
+  /** Quantile-histogram bucket of an already-saturated token count `n`
+    * — mirrors [[graft.operators.Sketch.qhistBucket]] past its
+    * [[graft.operators.Sketch.QhistMaxN]] clamp. */
+  def qhistBucketSql(n: String): String = s"length(bin($n * $n * $n * $n))"
+
   /** One present register's scaled harmonic term 2^(maxRho - r) —
     * mirrors [[graft.operators.Sketch.hllTerm]]. */
   def hllTermSql(r: String): String =

@@ -1798,10 +1798,7 @@ object SimilarityQueries {
        |  FROM codes JOIN dt ON codes.sub = dt.sub AND codes.code = dt.code
        |  WHERE codes.vec_id <> dt.query_id
        |  GROUP BY dt.query_id, codes.vec_id)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, adist FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adist ASC, vec_id ASC) AS rank FROM ad)
-       |WHERE rank <= $K""".stripMargin
+       |${l2TopKSql("adist", "ad", K)}""".stripMargin
 
   /** ADC top-k (the sim_pq_adc body) — shared with the recall gate. */
   private def pqAdc(s: org.apache.spark.sql.SparkSession,
@@ -1884,10 +1881,7 @@ object SimilarityQueries {
        |    AND dt.sub = codes.sub AND dt.code = codes.code
        |  WHERE codes.vec_id <> pr.query_id
        |  GROUP BY pr.query_id, codes.vec_id)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, adist FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adist ASC, vec_id ASC) AS rank FROM ad)
-       |WHERE rank <= $K""".stripMargin
+       |${l2TopKSql("adist", "ad", K)}""".stripMargin
 
   /** The 16 JL projection planes: both LSH tables' hyperplane sets —
     * deterministic integer entries in [-1000, 1000], shared constants
@@ -1960,10 +1954,7 @@ object SimilarityQueries {
        |  FROM sl
        |  JOIN e q ON q.vec_id = sl.query_id
        |  JOIN e c ON c.vec_id = sl.vec_id)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, d2 FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY d2 ASC, vec_id ASC) AS rank FROM sc)
-       |WHERE rank <= $K""".stripMargin
+       |${l2TopKSql("d2", "sc", K)}""".stripMargin
   }
 
   /** SQ8-coded corpus as RANGE-WEIGHTED values (vec_id, sv): per dim,
@@ -2016,38 +2007,18 @@ object SimilarityQueries {
         col("vec_id"), col("d2"))
   }
 
-  /** DuckDB text of the SQ8 search: the same range aggregate, coding
-    * expression (identical operation tree — both engines floor the same
-    * correctly rounded quotient of exact integer-valued doubles), and
-    * code-space ranking. */
-  private def sq8Sql: String = {
-    val code = (v: String) =>
-      s"""list_transform(generate_series(1, $Dims), i -> CASE
-         |    WHEN mxl[i] = mnl[i] THEN 0.0
-         |    ELSE floor((($v[i] - mnl[i]) * 510 + (mxl[i] - mnl[i]))
-         |      / ((mxl[i] - mnl[i]) * 2)) * (mxl[i] - mnl[i]) END)""".stripMargin
+  /** DuckDB text of the SQ8 search: [[sq8Ctes]] and the code-space
+    * ranking. */
+  private def sq8Sql: String =
     s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
-       |rng AS (
-       |  SELECT t.i AS dim, MIN(v[t.i]) AS mn, MAX(v[t.i]) AS mx
-       |  FROM e CROSS JOIN UNNEST(generate_series(1, $Dims)) AS t(i)
-       |  GROUP BY t.i),
-       |rngl AS (
-       |  SELECT list(mn ORDER BY dim) AS mnl, list(mx ORDER BY dim) AS mxl
-       |  FROM rng),
-       |sq AS (
-       |  SELECT vec_id, ${code("v")} AS sv
-       |  FROM e, rngl),
+       |$sq8Ctes,
        |sc AS (
        |  SELECT q.vec_id AS query_id, c.vec_id,
        |    CAST(${dot("q.sv", "q.sv", Dims)} - 2 * ${dot("q.sv", "c.sv", Dims)}
        |      + ${dot("c.sv", "c.sv", Dims)} AS BIGINT) AS d2
        |  FROM sq q, sq c
        |  WHERE ${L2Sample.sql("q.vec_id")} AND c.vec_id <> q.vec_id)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, d2 FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY d2 ASC, vec_id ASC) AS rank FROM sc)
-       |WHERE rank <= $K""".stripMargin
-  }
+       |${l2TopKSql("d2", "sc", K)}""".stripMargin
 
   /** Probe-pruned SQ8 search (IVF + SQ8): the bandwidth point of the
     * compression frontier composed with cell pruning — the SAME probe
@@ -2090,12 +2061,7 @@ object SimilarityQueries {
   /** DuckDB text of the probe-pruned SQ8 search: IVF training, cell
     * assignment, probing, the SQ8 range/coding chain, and the
     * cell-restricted code-space ranking in one CTE chain. */
-  private def ivfSq8Sql: String = {
-    val code = (v: String) =>
-      s"""list_transform(generate_series(1, $Dims), i -> CASE
-         |    WHEN mxl[i] = mnl[i] THEN 0.0
-         |    ELSE floor((($v[i] - mnl[i]) * 510 + (mxl[i] - mnl[i]))
-         |      / ((mxl[i] - mnl[i]) * 2)) * (mxl[i] - mnl[i]) END)""".stripMargin
+  private def ivfSq8Sql: String =
     s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
        |$ivfTrainCtes,
        |cellv AS (
@@ -2112,16 +2078,7 @@ object SimilarityQueries {
        |      ORDER BY ${d2Sql("e.v", "c.cent_v", Dims)} ASC, c.cent_id ASC) AS cr
        |    FROM e, c WHERE ${L2Sample.sql("e.vec_id")})
        |  WHERE cr <= $Nprobe),
-       |rng AS (
-       |  SELECT t.i AS dim, MIN(v[t.i]) AS mn, MAX(v[t.i]) AS mx
-       |  FROM e CROSS JOIN UNNEST(generate_series(1, $Dims)) AS t(i)
-       |  GROUP BY t.i),
-       |rngl AS (
-       |  SELECT list(mn ORDER BY dim) AS mnl, list(mx ORDER BY dim) AS mxl
-       |  FROM rng),
-       |sq AS (
-       |  SELECT vec_id, ${code("v")} AS sv
-       |  FROM e, rngl),
+       |$sq8Ctes,
        |sc AS (
        |  SELECT p.query_id, c2.vec_id,
        |    CAST(${dot("q.sv", "q.sv", Dims)} - 2 * ${dot("q.sv", "c2.sv", Dims)}
@@ -2131,11 +2088,7 @@ object SimilarityQueries {
        |  JOIN qprobe p ON p.cell_id = cellv.cell_id
        |  JOIN sq q ON q.vec_id = p.query_id
        |  WHERE c2.vec_id <> p.query_id)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, d2 FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY d2 ASC, vec_id ASC) AS rank FROM sc)
-       |WHERE rank <= $K""".stripMargin
-  }
+       |${l2TopKSql("d2", "sc", K)}""".stripMargin
 
   /** Residual frame (vec_id, cell_id, rv): each vector minus its
     * assigned trained centroid — integer-valued (both operands are),
@@ -2284,10 +2237,7 @@ object SimilarityQueries {
        |    AND rdt.sub = rcodes.sub AND rdt.code = rcodes.code
        |  WHERE rcodes.vec_id <> rdt.query_id
        |  GROUP BY rdt.query_id, rcodes.vec_id)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, adist FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adist ASC, vec_id ASC) AS rank FROM rad)
-       |WHERE rank <= $k""".stripMargin
+       |${l2TopKSql("adist", "rad", k)}""".stripMargin
   }
 
   /** IVFADC+R: exact re-rank of the residual-ADC shortlist (the
@@ -2319,10 +2269,7 @@ object SimilarityQueries {
        |  FROM sl
        |  JOIN eq q ON q.vec_id = sl.query_id
        |  JOIN eq c ON c.vec_id = sl.vec_id)
-       |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, d2 FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id
-       |    ORDER BY d2 ASC, vec_id ASC) AS rank FROM sc)
-       |WHERE rank <= $finalK""".stripMargin
+       |${l2TopKSql("d2", "sc", finalK)}""".stripMargin
 
   /** The MMR candidate pool: the production IVFADC+R chain with its
     * final cut widened to [[MmrPool]] — memoized because both the MMR
@@ -3131,6 +3078,35 @@ object SimilarityQueries {
 
   private def d2Sql(v: String, c: String, dims: Int) =
     s"(${dot(v, v, dims)} - 2.0 * ${dot(v, c, dims)} + ${dot(c, c, dims)})"
+
+  /** The squared-L2 top-k tail of the ranked oracles: per query the
+    * `k` nearest `vec_id`s of CTE `src` by `dist` (ties by vec_id), as
+    * (query_id, rank, vec_id, dist). */
+  private def l2TopKSql(dist: String, src: String, k: Int): String =
+    s"""SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, $dist FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY $dist ASC, vec_id ASC) AS rank FROM $src)
+       |WHERE rank <= $k""".stripMargin
+
+  /** The SQ8 range/coding CTEs over a preceding `e(vec_id, v)`: the
+    * per-dim range aggregate `rng`, its ordered lists `rngl`, and the
+    * range-weighted codes `sq(vec_id, sv)` — the oracle twin of
+    * [[sq8Frame]] (identical operation tree: both engines floor the
+    * same correctly rounded quotient of exact integer-valued doubles). */
+  private def sq8Ctes: String =
+    s"""rng AS (
+       |  SELECT t.i AS dim, MIN(v[t.i]) AS mn, MAX(v[t.i]) AS mx
+       |  FROM e CROSS JOIN UNNEST(generate_series(1, $Dims)) AS t(i)
+       |  GROUP BY t.i),
+       |rngl AS (
+       |  SELECT list(mn ORDER BY dim) AS mnl, list(mx ORDER BY dim) AS mxl
+       |  FROM rng),
+       |sq AS (
+       |  SELECT vec_id, list_transform(generate_series(1, $Dims), i -> CASE
+       |    WHEN mxl[i] = mnl[i] THEN 0.0
+       |    ELSE floor(((v[i] - mnl[i]) * 510 + (mxl[i] - mnl[i]))
+       |      / ((mxl[i] - mnl[i]) * 2)) * (mxl[i] - mnl[i]) END) AS sv
+       |  FROM e, rngl)""".stripMargin
 
   /** Unrolled integer-Lloyd training CTEs for the IVF centroids —
     * requires a preceding `$src(vec_id, v)` CTE, ends by defining

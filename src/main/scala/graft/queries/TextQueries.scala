@@ -1,9 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.{Similarity, Sketch, TextAnalysis}
 
 /** Text-analysis query surface over the `documents` fixture: token
   * counting, quality scoring, language identification, fingerprinting.
@@ -43,23 +44,19 @@ object TextQueries {
   private val CmsWidth = graft.operators.Sketch.Width
 
   /** The per-token (row, bucket) pairs of the sketch, as DuckDB UNION
-    * ALL text over a CTE `src` carrying column `tok` (plus `carry`
-    * extra columns threaded through, e.g. the token's exact count). */
-  private def cmsEntriesSql(carry: String): String = {
+    * ALL text over a CTE `from` carrying column `tok` (plus `carry`
+    * extra columns threaded through, e.g. the token's exact count),
+    * each line indented by `pad` — the oracle twin of
+    * [[graft.operators.Sketch.cmsEntries]]. */
+  private def cmsEntriesSql(carry: String = "", from: String = "src",
+      pad: String = ""): String = {
     val h = graft.functions.PortableHash.hash60Sql("tok")
     (0 until CmsRows).map { i =>
-      s"""SELECT $carry CAST($i AS BIGINT) AS r,
-         |  ${graft.functions.PortableHash.affineSql(h, i)} % $CmsWidth AS b
-         |FROM src""".stripMargin
-    }.mkString("\nUNION ALL\n")
+      s"""${pad}SELECT $carry CAST($i AS BIGINT) AS r,
+         |$pad  ${graft.functions.PortableHash.affineSql(h, i)} % $CmsWidth AS b
+         |${pad}FROM $from""".stripMargin
+    }.mkString(s"\n${pad}UNION ALL\n")
   }
-
-  /** Spark twin of [[cmsEntriesSql]]:
-    * [[graft.operators.Sketch.cmsEntries]] — the kernel shared with
-    * the streaming maintenance twin. */
-  private def cmsEntries(tok: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    graft.operators.Sketch.cmsEntries(tok)
 
   /** The iterated BPE trainer shared by `text_bpe_train` (reports the
     * elected merges) and `text_bpe_apply` (consumes the final
@@ -176,39 +173,19 @@ object TextQueries {
       (a, b) => a * LmB + b)
   }
 
-  /** The trained LM weight grid (g, c12, c1, wbits), one row per bigram
-    * code 0..65535: c12/c1 = target-slice (en) bigram/context counts,
-    * wbits = the quarter-bit add-one-smoothed conditional log-prob (see
-    * [[LmScale]]). At 100 TB: two map-side-combined count aggregates
-    * (≤65,536 / ≤256 result rows) and a grid join of aggregate-sized
-    * frames — the corpus is touched exactly once, map-only. */
-  private[graft] def lmGridPipeline(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    lmGridOver(s, Tables.documents(s, d).filter(col("lang") === "en"))
+  /** The add-one-smoothed bigram ratio x = (c12+1)·LmScale div
+    * (c1+LmB) over the SQL count expressions `c12`/`c1` — the grid
+    * column [[wbits]] reads. */
+  private def smoothedX(c12: String, c1: String) =
+    expr(s"(($c12 + 1) * $LmScale) DIV ($c1 + $LmB)").as("x")
 
-  /** [[lmGridPipeline]] over an arbitrary training slice — the TARGET
-    * grid trains on the in-domain slice (lang = 'en', CCNet's
-    * Wikipedia stand-in); the BACKGROUND grid on the whole corpus
-    * (CCNet's raw-CommonCrawl stand-in). Identical arithmetic. */
-  private def lmGridOver(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ex = docs.select(explode(lmBigrams(col("text"))).as("g"))
-    val c12 = ex.groupBy(col("g")).agg(count(lit(1)).as("c12"))
-    val c1 = ex.select(expr(s"g DIV $LmB").as("b1"))
-      .groupBy(col("b1")).agg(count(lit(1)).as("c1"))
-    s.range(1)
-      .select(explode(sequence(lit(0L), lit((LmB.toLong * LmB) - 1))).as("g"))
-      .withColumn("b1", expr(s"g DIV $LmB"))
-      .join(c12, Seq("g"), "left")
-      .join(c1, Seq("b1"), "left")
-      .select(col("g"),
-        coalesce(col("c12"), lit(0L)).as("c12"),
-        coalesce(col("c1"), lit(0L)).as("c1"))
-      .withColumn("x", expr(s"((c12 + 1) * $LmScale) DIV (c1 + $LmB)"))
-      .select(col("g"), col("c12"), col("c1"),
-        length(bin(col("x") * col("x") * col("x") * col("x")))
-          .cast("long").as("wbits"))
-  }
+  /** A grid row's trained weight off its [[smoothedX]] column: the
+    * quarter-bit conditional log-prob length(bin(x⁴)) (see [[LmScale]]).
+    * Every trained grid — target, background, per class — derives its
+    * wbits here; [[gridSql]] is the oracle twin. */
+  private def wbits =
+    length(bin(col("x") * col("x") * col("x") * col("x"))).cast("long")
+      .as("wbits")
 
   /** Grid memoized per (session, sf) — trained once, every consumer
     * (train report, scorer, gate, streaming twin) reads the checkpoint
@@ -239,17 +216,10 @@ object TextQueries {
     FrameCache.memo(s, d, "lm_grid_bg")(
       nb.groupBy(col("g"))
         .agg(sum(col("c12")).as("c12"), sum(col("c1")).as("c1"))
-        .withColumn("x", expr(s"((c12 + 1) * $LmScale) DIV (c1 + $LmB)"))
-        .select(col("g"), col("c12"), col("c1"),
-          length(bin(col("x") * col("x") * col("x") * col("x")))
-            .cast("long").as("wbits")))
+        .select(col("g"), col("c12"), col("c1"), smoothedX("c12", "c1"))
+        .select(col("g"), col("c12"), col("c1"), wbits))
   }
 
-  /** The per-document LM score frame (doc_id, lang, n_bigrams,
-    * lp_bits): the 65,536-entry wbits grid folds into ONE array on a
-    * 1-row broadcast frame (512 KB — index metadata), and scoring is a
-    * map-only `aggregate()` fold per document. No shuffle touches the
-    * corpus after the training counts — the DSIR serving shape. */
   /** A trained grid collapsed to its code-ordered wbits array on a
     * 1-row frame — the broadcastable serving form. */
   private def gridArray(grid: org.apache.spark.sql.DataFrame,
@@ -258,12 +228,17 @@ object TextQueries {
       .agg(sort_array(collect_list(struct(col("g"), col("wbits")))).as("ws"))
       .select(transform(col("ws"), x => x.getField("wbits")).as(as))
 
+  /** The per-document LM score frame (doc_id, lang, n_bigrams,
+    * lp_bits): the 65,536-entry wbits grid folds into ONE array on a
+    * 1-row broadcast frame (512 KB — index metadata), and scoring is a
+    * map-only fold per document. No shuffle touches the corpus after
+    * the training counts — the DSIR serving shape. */
   private def lmScoreSpark(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val wl = gridArray(lmGrid(s, d), "wl")
     // scoring rides the native one-pass [[TextHashFunctions.LmScoreBits]]
     // (hash + grid lookup per token in compiled code) — bit-identical to
-    // the composable bucket/zip_with/aggregate fold, which walks the
+    // a composable bucket/zip_with/aggregate fold, which walks the
     // token array five times through interpreted lambdas
     // (TextHashFunctionsSpec pins the equivalence; n_bigrams =
     // max(|tokens| − 1, 0) ≡ the fold's |zip_with| length — the
@@ -308,23 +283,6 @@ object TextQueries {
       .select(col("doc_id"), col("lang"), col("n_bigrams"),
         element_at(col("lps"), 1).as("lp_t"),
         element_at(col("lps"), 2).as("lp_bg"))
-  }
-
-  /** The composable form of the LM scorer — buckets, sliced bigrams,
-    * `aggregate` fold with `element_at` — kept as the semantic
-    * reference for the native expression; TextHashFunctionsSpec pins
-    * the two bit-identical on the fixture corpus. */
-  private[graft] def lmScoreComposable(
-      s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val wl = gridArray(lmGrid(s, d), "wl")
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), lmBigrams(col("text")).as("gs"))
-      .crossJoin(broadcast(wl))
-      .select(col("doc_id"), col("lang"),
-        size(col("gs")).cast("long").as("n_bigrams"),
-        aggregate(col("gs"), lit(0L), (acc, g) =>
-          acc + element_at(col("wl"), (g + 1).cast("int"))).as("lp_bits"))
   }
 
   /** Driver-side cache of the COLLECTED serving forms of the trained
@@ -420,12 +378,6 @@ object TextQueries {
     lmCalibThetaFrame(s, d)
     ()
   }
-
-  /** The ratio-score frame, package-visible for the `curate_pipeline`
-    * capstone (its LM stage admits on the target-vs-background
-    * ratio) — same frame `text_lm_ratio_score` registers. */
-  private[queries] def lmRatioScoreFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = lmRatioScoreSpark(s, d)
 
   /** Ratio-gate threshold as a rational (num, den): admit iff
     * den·(lp_t − lp_bg) ≥ num·n_bigrams. Package-visible so the
@@ -552,6 +504,25 @@ object TextQueries {
     lmRatioScoreSpark(s, d).filter(calibAdmit(theta)).select(col("doc_id"))
   }
 
+  /** A text gate's per-language admission manifest (lang, n_total,
+    * n_kept): the per-document `score` frame grouped by lang, the
+    * documents meeting `keep` counted — Spark and oracle in one call.
+    * The oracle groups CTE `from` of `ctes`; `kept` is its n_kept column
+    * text. */
+  private def manifest(score: (SparkSession, String) => DataFrame,
+      keep: (SparkSession, String) => Column)(
+      ctes: String, from: String, kept: String): QueryDef =
+    QueryDef(
+      (s, d) => {
+        val k = keep(s, d)
+        score(s, d).groupBy(col("lang"))
+          .agg(count(lit(1)).as("n_total"), count(when(k, 1)).as("n_kept"))
+      },
+      s"""WITH $ctes
+         |SELECT lang, CAST(count(*) AS BIGINT) AS n_total,
+         |  $kept
+         |FROM $from GROUP BY lang""".stripMargin)
+
   /** 2×2 gate-agreement contingency + Cohen's kappa over a (lm, nb)
     * 0/1-flag frame — ONE kernel for the fixed-threshold and
     * calibrated agreement rows, so the two audits can never drift on
@@ -608,9 +579,8 @@ object TextQueries {
        |FROM gcnt""".stripMargin
 
   /** Ids admitted by the CALIBRATED ratio gate AND the NB classifier,
-    * from the same ONE fused tokenize+MD5 pass as
-    * [[lmNbFusedAdmittedIds]] — the capstone `_cls` composition on the
-    * scale-transferring threshold. */
+    * from ONE fused tokenize+MD5 pass ([[lmNbFusedFrame]]) — the
+    * capstone `_cls` composition on the scale-transferring threshold. */
   private[queries] def lmNbFusedAdmittedIdsCalib(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
@@ -630,8 +600,8 @@ object TextQueries {
   /** Multinomial Naive Bayes over hashed-BIGRAM buckets — the trained
     * CLASSIFIER gate real curation recipes run beside the LM perplexity
     * gate (the fastText-classifier role in CCNet-style pipelines). One
-    * add-one-smoothed conditional bigram grid PER CLASS (the exact
-    * [[lmGridOver]] formula restricted to each class's slice — per-
+    * add-one-smoothed conditional bigram grid PER CLASS (the [[wbits]]
+    * smoothing restricted to each class's slice — per-
     * context normalization cancels the class-size smoothing bias that
     * makes unigram-bucket NB degenerate), class priors on the same
     * [[LmScale]] quarter-bit staircase, scoring = |classes| native
@@ -660,11 +630,8 @@ object TextQueries {
       .select(col("cls").as("lang"), col("g"),
         coalesce(col("c12"), lit(0L)).as("c12"),
         coalesce(col("c1"), lit(0L)).as("c1"),
-        expr(s"((coalesce(c12, 0L) + 1L) * $LmScale) " +
-          s"DIV (coalesce(c1, 0L) + $LmB)").as("x"))
-      .select(col("lang"), col("g"), col("c12"), col("c1"),
-        length(bin(col("x") * col("x") * col("x") * col("x")))
-          .cast("long").as("wbits"))
+        smoothedX("coalesce(c12, 0L)", "coalesce(c1, 0L)"))
+      .select(col("lang"), col("g"), col("c12"), col("c1"), wbits)
   }
 
   private def nbGrid(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -725,44 +692,15 @@ object TextQueries {
         col("best.cls").as("pred_lang"), col("best.s").as("nb_cbits"))
   }
 
-  /** The NB score frame, package-visible for the streaming twin spec. */
-  private[graft] def nbScoreFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = nbScoreSpark(s, d)
-
-  /** Ids the NB classifier admits (argmax = target class 'en') — the
-    * classifier-gate stage the pipeline capstone's `_cls` variant
-    * composes beside the LM ratio gate. */
-  private[queries] def nbAdmittedIds(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    nbScoreSpark(s, d).filter(col("pred_lang") === "en").select(col("doc_id"))
-
-  /** Ids admitted by BOTH text gates — the CCNet perplexity RATIO
-    * (rDen·(lp_t − lp_bg) ≥ rNum·n_bigrams) AND the NB classifier
-    * argmax (pred = 'en') — from ONE fused corpus pass
+  /** The fused-scorer frame (doc_id, n_bigrams, f struct(lp_t, lp_bg,
+    * s, cls)) — ONE tokenize+MD5 pass carrying BOTH text gates' verdicts
     * ([[graft.functions.TextHashFunctions.LmNbFusedBits]]): each token
     * occurrence is MD5-hashed once and all 2+|classes| trained grids
-    * fold over the shared bucket sequence in a byte-interleaved table.
-    * The separate forms ([[lmRatioScoreFrame]] + [[nbAdmittedIds]])
-    * each re-tokenize and re-hash the same documents — the measured
-    * residue the `_cls` capstone paid for running the two gates as two
-    * corpus passes. All three trained models ship as plan literals (the
-    * streaming-scorer doctrine); map-only, bit-identical admission set
-    * (the fused expression is spec-pinned against the separate folds). */
-  private[queries] def lmNbFusedAdmittedIds(
-      s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val (rNum, rDen) = lmRatioThreshold
-    lmNbFusedFrame(s, d)
-      .filter(lit(rDen) * (col("f.lp_t") - col("f.lp_bg")) >=
-        lit(rNum) * col("n_bigrams"))
-      .filter(col("f.cls") === "en")
-      .select(col("doc_id"))
-  }
-
-  /** The raw fused-scorer frame behind [[lmNbFusedAdmittedIds]]:
-    * (doc_id, n_bigrams, f struct(lp_t, lp_bg, s, cls)) — ONE
-    * tokenize+MD5 pass carrying BOTH gates' verdicts, unfiltered so
-    * consumers can read the full 2×2 contingency, not just the
+    * fold over the shared bucket sequence, where the separate score
+    * frames would each re-tokenize and re-hash the same documents. All
+    * three trained models ship as plan literals; map-only; the fused
+    * expression is spec-pinned against the separate folds. Unfiltered,
+    * so consumers read the full 2×2 contingency, not just the
     * both-admitted corner. */
   private[queries] def lmNbFusedFrame(
       s: org.apache.spark.sql.SparkSession,
@@ -789,24 +727,8 @@ object TextQueries {
     * fan-out) — consumers that already inline [[lmCtes]] (the pipeline
     * capstone's oracle embeds [[lmRatioCtes]]) append just the body,
     * avoiding duplicate CTE names. */
-  private[queries] def nbCtesBody: String = {
-    val x = s"((COALESCE(nbc12.c12, 0) + 1) * $LmScale " +
-      s"// (COALESCE(nbc1.c1, 0) + $LmB))"
-    s"""nbc12 AS (SELECT lang AS cls, g, CAST(count(*) AS BIGINT) AS c12
-       |          FROM lmex GROUP BY 1, 2),
-       |nbc1 AS (SELECT lang AS cls, g // $LmB AS b1,
-       |           CAST(count(*) AS BIGINT) AS c1
-       |         FROM lmex GROUP BY 1, 2),
-       |nbgrid AS (
-       |  SELECT d.cls AS lang, gg.g,
-       |    CAST(COALESCE(nbc12.c12, 0) AS BIGINT) AS c12,
-       |    CAST(COALESCE(nbc1.c1, 0) AS BIGINT) AS c1,
-       |    CAST(length(bin($x * $x * $x * $x)) AS BIGINT) AS wbits
-       |  FROM (SELECT DISTINCT cls FROM nbc12) d
-       |  CROSS JOIN (SELECT CAST(t.m AS BIGINT) AS g
-       |              FROM UNNEST(generate_series(0, ${LmB * LmB - 1})) AS t(m)) gg
-       |  LEFT JOIN nbc12 ON nbc12.cls = d.cls AND nbc12.g = gg.g
-       |  LEFT JOIN nbc1 ON nbc1.cls = d.cls AND nbc1.b1 = gg.g // $LmB),
+  private[queries] def nbCtesBody: String =
+    s"""${gridSql("nb", perClass = true)},
        |nbe AS (
        |  SELECT lang AS cls,
        |    CAST(($LmScale * CAST(sum(c12 * wbits) AS BIGINT))
@@ -828,6 +750,46 @@ object TextQueries {
        |  FROM (
        |    SELECT *, row_number() OVER (PARTITION BY doc_id
        |      ORDER BY s DESC, cls DESC) AS rn FROM nbsp) WHERE rn = 1)""".stripMargin
+
+  /** Oracle twin of the trained grids over [[lmCtes]]'s `lmex` bigram
+    * fan-out: for CTE-name prefix `p`, the count CTEs `<p>c12`/`<p>c1`
+    * and the full-code-domain grid `<p>grid(g, c12, c1, wbits)` —
+    * [[smoothedX]] → [[wbits]] in DuckDB text. `where` restricts the
+    * training slice (the target grid trains on en, the background grid
+    * on the whole corpus); `perClass` keys the counts and the grid by
+    * class (the NB grid, which carries a `lang` column). */
+  private def gridSql(p: String, where: String = "",
+      perClass: Boolean = false): String = {
+    val x = s"((COALESCE(${p}c12.c12, 0) + 1) * $LmScale " +
+      s"// (COALESCE(${p}c1.c1, 0) + $LmB))"
+    val codes = (pad: Int) => s"(SELECT CAST(t.m AS BIGINT) AS g\n" +
+      s"${" " * pad}FROM UNNEST(generate_series(0, ${LmB * LmB - 1})) AS t(m)) gg"
+    val w = if (where.isEmpty) "" else s" WHERE $where"
+    val (counts, key, domain, on) =
+      if (perClass) (
+        s"""${p}c12 AS (SELECT lang AS cls, g, CAST(count(*) AS BIGINT) AS c12
+           |          FROM lmex GROUP BY 1, 2),
+           |${p}c1 AS (SELECT lang AS cls, g // $LmB AS b1,
+           |           CAST(count(*) AS BIGINT) AS c1
+           |         FROM lmex GROUP BY 1, 2)""".stripMargin,
+        "d.cls AS lang, ",
+        s"(SELECT DISTINCT cls FROM ${p}c12) d\n  CROSS JOIN ${codes(14)}",
+        (t: String) => s"$t.cls = d.cls AND ")
+      else (
+        s"""${p}c12 AS (SELECT g, CAST(count(*) AS BIGINT) AS c12
+           |          FROM lmex$w GROUP BY g),
+           |${p}c1 AS (SELECT g // $LmB AS b1, CAST(count(*) AS BIGINT) AS c1
+           |         FROM lmex$w GROUP BY 1)""".stripMargin,
+        "", codes(8), (_: String) => "")
+    s"""$counts,
+       |${p}grid AS (
+       |  SELECT ${key}gg.g,
+       |    CAST(COALESCE(${p}c12.c12, 0) AS BIGINT) AS c12,
+       |    CAST(COALESCE(${p}c1.c1, 0) AS BIGINT) AS c1,
+       |    CAST(length(bin($x * $x * $x * $x)) AS BIGINT) AS wbits
+       |  FROM $domain
+       |  LEFT JOIN ${p}c12 ON ${on(s"${p}c12")}${p}c12.g = gg.g
+       |  LEFT JOIN ${p}c1 ON ${on(s"${p}c1")}${p}c1.b1 = gg.g // $LmB)""".stripMargin
   }
 
   /** Shared LM oracle CTEs: bigram codes (`lmg`/`lmex`), target counts,
@@ -837,39 +799,14 @@ object TextQueries {
   private def lmCtes: String = {
     val hs = s"list_transform(${tokens("text")}, " +
       s"t -> ${graft.functions.PortableHash.hash60Sql("t")} % $LmB)"
-    val x = s"((COALESCE(lmc12.c12, 0) + 1) * $LmScale " +
-      s"// (COALESCE(lmc1.c1, 0) + $LmB))"
     s"""lmb AS (SELECT doc_id, lang, $hs AS bs FROM documents),
        |lmg AS (
        |  SELECT doc_id, lang, list_transform(
        |    generate_series(1, len(bs) - 1), i -> bs[i] * $LmB + bs[i+1]) AS gs
        |  FROM lmb),
        |lmex AS (SELECT doc_id, lang, unnest(gs) AS g FROM lmg),
-       |lmc12 AS (SELECT g, CAST(count(*) AS BIGINT) AS c12
-       |          FROM lmex WHERE lang = 'en' GROUP BY g),
-       |lmc1 AS (SELECT g // $LmB AS b1, CAST(count(*) AS BIGINT) AS c1
-       |         FROM lmex WHERE lang = 'en' GROUP BY 1),
-       |lmgrid AS (
-       |  SELECT gg.g,
-       |    CAST(COALESCE(lmc12.c12, 0) AS BIGINT) AS c12,
-       |    CAST(COALESCE(lmc1.c1, 0) AS BIGINT) AS c1,
-       |    CAST(length(bin($x * $x * $x * $x)) AS BIGINT) AS wbits
-       |  FROM (SELECT CAST(t.m AS BIGINT) AS g
-       |        FROM UNNEST(generate_series(0, ${LmB * LmB - 1})) AS t(m)) gg
-       |  LEFT JOIN lmc12 ON lmc12.g = gg.g
-       |  LEFT JOIN lmc1 ON lmc1.b1 = gg.g // $LmB)""".stripMargin
+       |${gridSql("lm", "lang = 'en'")}""".stripMargin
   }
-
-  /** The per-document LM score frame, package-visible for the
-    * `curate_pipeline` capstone (which applies the LM gate as one of
-    * its stages) — same frame `text_lm_score` registers. */
-  private[queries] def lmScoreFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = lmScoreSpark(s, d)
-
-  /** The LM admission predicate threshold (quarter-bits per bigram),
-    * package-visible so the capstone's gate stage and `curate_lm_gate`
-    * share one constant. */
-  private[graft] def lmGateT4: Long = LmGateT4
 
   /** Score + per-doc CTEs shared by `text_lm_score` and the gate. */
   private[queries] def lmScoreCtes: String =
@@ -882,32 +819,12 @@ object TextQueries {
        |    CAST(COALESCE(lmlp.lp, 0) AS BIGINT) AS lp_bits
        |  FROM lmg g2 LEFT JOIN lmlp ON lmlp.doc_id = g2.doc_id)""".stripMargin
 
-  /** Background-grid CTEs (`bgc12`/`bgc1`/`bggrid`): the SAME formula
-    * as the target grid with the `lang = 'en'` training filter
-    * dropped. Appends to [[lmCtes]] (reuses `lmb`/`lmg`/`lmex`). */
-  private def lmBgGridCtes: String = {
-    val x = s"((COALESCE(bgc12.c12, 0) + 1) * $LmScale " +
-      s"// (COALESCE(bgc1.c1, 0) + $LmB))"
-    s"""bgc12 AS (SELECT g, CAST(count(*) AS BIGINT) AS c12
-       |          FROM lmex GROUP BY g),
-       |bgc1 AS (SELECT g // $LmB AS b1, CAST(count(*) AS BIGINT) AS c1
-       |         FROM lmex GROUP BY 1),
-       |bggrid AS (
-       |  SELECT gg.g,
-       |    CAST(COALESCE(bgc12.c12, 0) AS BIGINT) AS c12,
-       |    CAST(COALESCE(bgc1.c1, 0) AS BIGINT) AS c1,
-       |    CAST(length(bin($x * $x * $x * $x)) AS BIGINT) AS wbits
-       |  FROM (SELECT CAST(t.m AS BIGINT) AS g
-       |        FROM UNNEST(generate_series(0, ${LmB * LmB - 1})) AS t(m)) gg
-       |  LEFT JOIN bgc12 ON bgc12.g = gg.g
-       |  LEFT JOIN bgc1 ON bgc1.b1 = gg.g // $LmB)""".stripMargin
-  }
-
   /** Ratio-score CTEs: [[lmScoreCtes]] (target score) + the background
-    * grid + both per-document sums side by side in `lmrsc`. */
+    * grid (`bggrid`: the target grid's formula without the en training
+    * filter) + both per-document sums side by side in `lmrsc`. */
   private[queries] def lmRatioCtes: String =
     s"""$lmScoreCtes,
-       |$lmBgGridCtes,
+       |${gridSql("bg")},
        |bglp AS (
        |  SELECT lmex.doc_id, CAST(sum(bggrid.wbits) AS BIGINT) AS lp
        |  FROM lmex JOIN bggrid ON bggrid.g = lmex.g GROUP BY lmex.doc_id),
@@ -920,93 +837,7 @@ object TextQueries {
     * chain (no score stage). */
   private[queries] def lmBgTrainCtes: String =
     s"""$lmCtes,
-       |$lmBgGridCtes""".stripMargin
-
-  /** BM25 top-5 frame (query_doc, rk, doc_id, n_shared, score) — the
-    * whole `corpus_bm25` chain, factored out so the hybrid RRF fusion
-    * reuses the EXACT lexical ranking it fuses (a drifted copy would
-    * hash-green both queries while fusing a different ranking). */
-  private def bm25TopSpark(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the memoized lexical index (r16) — one tf/df/dl build + one
-    // stats pass per session/pass, shared with corpus_search, the
-    // hybrid rows, and the streaming writer
-    val ix = lexIndex(s, d)
-    val (tf, dfT, dl) = (ix.tf, ix.df, ix.dl)
-    val (n, a) = (ix.n, ix.avgdl)
-    val qw = Window.partitionBy(col("doc_id"))
-      .orderBy((col("tf") * lit(n) / col("df")).desc, col("term").asc)
-    val qterms = tf.filter(pmod(col("doc_id"), lit(100)) === 0)
-      .join(dfT, "term")
-      .withColumn("qrk", row_number().over(qw))
-      .filter(col("qrk") <= 3)
-      .select(col("doc_id").as("query_doc"), col("term"), col("df"))
-    val cw = Window.partitionBy(col("query_doc"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    tf.join(broadcast(qterms), Seq("term"))
-      .filter(col("doc_id") =!= col("query_doc"))
-      .join(dl, "doc_id")
-      .groupBy(col("query_doc"), col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_shared"),
-        sum(TextAnalysis.bm25Weight(col("tf"), col("df"), col("dl"),
-          n, a)).as("score"))
-      .withColumn("rk", row_number().over(cw))
-      .filter(col("rk") <= 5)
-      .select(col("query_doc"), col("rk").cast("long").as("rk"),
-        col("doc_id"), col("n_shared"), col("score"))
-  }
-
-  /** The `corpus_bm25` CTE chain through `lexr` (the rk ≤ 5 ranked
-    * frame) — shared verbatim by the BM25 oracle, the hybrid fusion
-    * oracle, and (with its own query-set predicate) the cross-modal
-    * fusion oracle in [[MultimodalQueries]]. */
-  private def bm25Ctes: String = bm25CtesFor("tf.doc_id % 100 = 0")
-
-  /** [[bm25Ctes]] parametrized on the query-set predicate (the `q`
-    * CTE's WHERE) — the text queries pick doc_id % 100, the cross-modal
-    * row uses mm_knn's % 25 query set. */
-  private[queries] def bm25CtesFor(qWhere: String): String =
-    s"""toks AS (
-       |  SELECT doc_id, unnest(${tokens("text")}) AS term FROM documents),
-       |tf AS (
-       |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-       |  FROM toks GROUP BY doc_id, term),
-       |df AS (
-       |  SELECT term, CAST(count(*) AS BIGINT) AS df
-       |  FROM tf GROUP BY term),
-       |dl AS (
-       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-       |  FROM toks GROUP BY doc_id),
-       |n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n
-       |      FROM documents),
-       |st AS (SELECT tot.l // n.n AS a
-       |       FROM (SELECT CAST(count(*) AS BIGINT) AS l FROM toks) tot, n),
-       |q AS (
-       |  SELECT doc_id AS query_doc, term, df FROM (
-       |    SELECT tf.doc_id, tf.term, df.df,
-       |      row_number() OVER (PARTITION BY tf.doc_id
-       |        ORDER BY tf.tf * n.n / df.df DESC, tf.term ASC) AS qrk
-       |    FROM tf JOIN df USING (term), n
-       |    WHERE $qWhere)
-       |  WHERE qrk <= 3),
-       |cand AS (
-       |  SELECT q.query_doc, tf.doc_id,
-       |    CAST(count(*) AS BIGINT) AS n_shared,
-       |    CAST(sum(CAST(floor(
-       |      ((2 * n.n - 2 * q.df + 1) * (44 * st.a * 1000) * tf.tf)
-       |      / ((q.df * 2 + 1)
-       |        * (tf.tf * (20 * st.a) + 6 * st.a + dl.dl * 18)))
-       |      AS BIGINT)) AS BIGINT) AS score
-       |  FROM q JOIN tf USING (term) JOIN dl ON dl.doc_id = tf.doc_id, n, st
-       |  WHERE tf.doc_id <> q.query_doc
-       |  GROUP BY q.query_doc, tf.doc_id),
-       |lexr AS (
-       |  SELECT query_doc, CAST(rk AS BIGINT) AS rk, doc_id, n_shared, score
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_doc
-       |      ORDER BY score DESC, doc_id ASC) AS rk FROM cand)
-       |  WHERE rk <= 5)""".stripMargin
+       |${gridSql("bg")}""".stripMargin
 
   /** Reciprocal-rank-fusion constant: LCM(61..65) — with fused ranks
     * capped at 5 and the standard RRF offset 60, every per-branch
@@ -1105,34 +936,205 @@ object TextQueries {
     LexIndex(lexTf(s, d), lexDf(s, d), lexDl(s, d), n, a)
   }
 
-  /** BM25 top-5 per query against a [[LexIndex]], with the query terms
-    * taken from `qtf` (query_doc, term, tf) — the shared serving
-    * kernel: the batch chain's qterms/candidate/rank construction with
-    * the query-side tf frame as a parameter instead of a corpus
-    * filter. */
-  private[graft] def bm25Serve(qtf: org.apache.spark.sql.DataFrame,
-      ix: LexIndex): org.apache.spark.sql.DataFrame = {
+  /** Lexical top-5 per query against a [[LexIndex]] — the one
+    * qterms → candidates → rank kernel behind `corpus_search`,
+    * `corpus_bm25`, the hybrid rows and the streaming serving writers.
+    * `qtf` (`key`, term, tf) holds each query's terms; its top-3 by
+    * tf·N/df (ties by term) form the broadcast query bag, and a
+    * candidate scores the sum of the per-term `weight` (over tf, df
+    * and, with `lengths`, the candidate's dl) across the terms it
+    * shares. Returns (query_doc, rk, doc_id, n_shared, score). */
+  private def lexTopK(qtf: DataFrame, key: String, ix: LexIndex,
+      weight: Column, lengths: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qw = Window.partitionBy(col("query_doc"))
+    val qw = Window.partitionBy(col(key))
       .orderBy((col("tf") * lit(ix.n) / col("df")).desc, col("term").asc)
     val qterms = qtf
       .join(ix.df, "term")
       .withColumn("qrk", row_number().over(qw))
       .filter(col("qrk") <= 3)
-      .select(col("query_doc"), col("term"), col("df"))
+      .select(col(key).as("query_doc"), col("term"), col("df"))
     val cw = Window.partitionBy(col("query_doc"))
       .orderBy(col("score").desc, col("doc_id").asc)
-    ix.tf.join(broadcast(qterms), Seq("term"))
+    val cand = ix.tf.join(broadcast(qterms), Seq("term"))
       .filter(col("doc_id") =!= col("query_doc"))
-      .join(ix.dl, "doc_id")
+    (if (lengths) cand.join(ix.dl, "doc_id") else cand)
       .groupBy(col("query_doc"), col("doc_id"))
-      .agg(sum(TextAnalysis.bm25Weight(col("tf"), col("df"), col("dl"),
-        ix.n, ix.avgdl)).as("score"))
+      .agg(count(lit(1)).cast("long").as("n_shared"),
+        sum(weight).as("score"))
       .withColumn("rk", row_number().over(cw))
       .filter(col("rk") <= 5)
-      .select(col("query_doc"), col("doc_id"),
-        col("rk").cast("long").as("lex_rk"))
+      .select(col("query_doc"), col("rk").cast("long").as("rk"),
+        col("doc_id"), col("n_shared"), col("score"))
   }
+
+  /** [[lexTopK]] under the BM25 weight ([[TextAnalysis.bm25Weight]]). */
+  private def bm25Top(qtf: DataFrame, key: String,
+      ix: LexIndex): DataFrame =
+    lexTopK(qtf, key, ix, TextAnalysis.bm25Weight(col("tf"), col("df"),
+      col("dl"), ix.n, ix.avgdl), lengths = true)
+
+  /** BM25 top-5 per query as (query_doc, doc_id, lex_rk) — the lexical
+    * branch every RRF fusion reads, batch and streaming. */
+  private[graft] def bm25Serve(qtf: DataFrame, ix: LexIndex,
+      key: String = "query_doc"): DataFrame =
+    bm25Top(qtf, key, ix)
+      .select(col("query_doc"), col("doc_id"), col("rk").as("lex_rk"))
+
+  /** The corpus rows' query set, every doc_id % 100 = 0 document: its
+    * index terms as [[lexTopK]]'s `qtf` (keyed by doc_id), and the
+    * oracle's `q` predicate. */
+  private def corpusQueryTerms(ix: LexIndex): DataFrame =
+    ix.tf.filter(pmod(col("doc_id"), lit(100)) === 0)
+  private val CorpusQueryWhere = "tf.doc_id % 100 = 0"
+
+  /** Oracle twin of [[lexTopK]] over the corpus: the index CTEs
+    * `toks`/`tf`/`df`/`n` (with `bm25` also the lengths `dl` and the
+    * integer avgdl `st`), the query bag `q` of the documents matching
+    * `qWhere`, and the scored candidates `cand(query_doc, doc_id,
+    * n_shared, score)` under the tf·⌊1000·N/df⌋ or the BM25 weight. */
+  private def lexCtes(qWhere: String, bm25: Boolean): String = {
+    val lengths = if (!bm25) "" else
+      s"""
+         |dl AS (
+         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
+         |  FROM toks GROUP BY doc_id),""".stripMargin
+    val avgdl = if (!bm25) "" else
+      s"""
+         |st AS (SELECT tot.l // n.n AS a
+         |       FROM (SELECT CAST(count(*) AS BIGINT) AS l FROM toks) tot, n),""".stripMargin
+    val (weight, from) =
+      if (bm25) (
+        s"""CAST(floor(
+           |      ((2 * n.n - 2 * q.df + 1) * (44 * st.a * 1000) * tf.tf)
+           |      / ((q.df * 2 + 1)
+           |        * (tf.tf * (20 * st.a) + 6 * st.a + dl.dl * 18)))
+           |      AS BIGINT)""".stripMargin,
+        "q JOIN tf USING (term) JOIN dl ON dl.doc_id = tf.doc_id, n, st")
+      else (
+        s"""tf.tf *
+           |      CAST(floor((n.n * 1000) / q.df) AS BIGINT)""".stripMargin,
+        "q JOIN tf USING (term), n")
+    s"""toks AS (
+       |  SELECT doc_id, unnest(${tokens("text")}) AS term FROM documents),
+       |tf AS (
+       |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+       |  FROM toks GROUP BY doc_id, term),
+       |df AS (
+       |  SELECT term, CAST(count(*) AS BIGINT) AS df
+       |  FROM tf GROUP BY term),$lengths
+       |n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n
+       |      FROM documents),$avgdl
+       |q AS (
+       |  SELECT doc_id AS query_doc, term, df FROM (
+       |    SELECT tf.doc_id, tf.term, df.df,
+       |      row_number() OVER (PARTITION BY tf.doc_id
+       |        ORDER BY tf.tf * n.n / df.df DESC, tf.term ASC) AS qrk
+       |    FROM tf JOIN df USING (term), n
+       |    WHERE $qWhere)
+       |  WHERE qrk <= 3),
+       |cand AS (
+       |  SELECT q.query_doc, tf.doc_id,
+       |    CAST(count(*) AS BIGINT) AS n_shared,
+       |    CAST(sum($weight) AS BIGINT) AS score
+       |  FROM $from
+       |  WHERE tf.doc_id <> q.query_doc
+       |  GROUP BY q.query_doc, tf.doc_id)""".stripMargin
+  }
+
+  /** [[lexTopK]]'s rank cut in DuckDB text: the top-5 of `cand` per
+    * query by (score DESC, doc_id). */
+  private val lexRankSql =
+    """SELECT query_doc, CAST(rk AS BIGINT) AS rk, doc_id, n_shared, score
+      |FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY query_doc
+      |    ORDER BY score DESC, doc_id ASC) AS rk FROM cand)
+      |WHERE rk <= 5""".stripMargin
+
+  /** The BM25 oracle chain through `lexr` (the rk ≤ 5 ranked frame) for
+    * the query set `qWhere` — shared verbatim by the BM25 oracle, the
+    * hybrid fusion oracle, and (with mm_knn's % 25 query set) the
+    * cross-modal fusion oracle in [[MultimodalQueries]]. */
+  private[queries] def bm25CtesFor(qWhere: String): String =
+    s"""${lexCtes(qWhere, bm25 = true)},
+       |lexr AS (
+       |${lexRankSql.linesIterator.map("  " + _).mkString("\n")})""".stripMargin
+
+  /** The sketch rows' shingle source CTE: every document's distinct
+    * [[Sketch.HllShingleN]]-gram shingles as `tok(tok)`, or, with a
+    * cohort `tag` column leading, as `t(tag, tok)`. */
+  private def shingleSql(tag: String = ""): String = {
+    val sh = s"unnest(${shingles(tokens("text"), Sketch.HllShingleN)}) AS tok"
+    if (tag.isEmpty) s"tok AS (SELECT $sh FROM documents)"
+    else s"t AS (\n  SELECT $tag, $sh\n  FROM documents)"
+  }
+
+  /** CTE `name` hashing the shingles of `from` to `h` (hash60), with
+    * `sel` leading the select list. */
+  private def shingleHashSql(name: String, sel: String,
+      from: String): String = {
+    val h = graft.functions.PortableHash.hash60Sql("tok")
+    s"$name AS (SELECT $sel$h AS h\n${" " * (name.length + 5)}FROM $from)"
+  }
+
+  /** The KMV min-k of `src`'s hashes `h`: its [[Sketch.KmvK]] smallest. */
+  private def kmvMinSql(src: String, sep: String = " "): String =
+    s"SELECT h FROM $src${sep}ORDER BY h LIMIT ${Sketch.KmvK}"
+
+  /** [[kmvMinSql]] as CTE `name`. */
+  private def kmvCteSql(name: String, src: String): String =
+    s"$name AS (${kmvMinSql(src, "\n" + " " * (name.length + 5))})"
+
+  /** A cardinality sketch's 1-row summary `sk` graded against the exact
+    * distinct shingle count of `docs`: (cols…, est, n_exact, err_bp),
+    * err_bp the estimate's ratio to the truth in basis points. The
+    * exact side exists only to grade. */
+  private def cardGrade(docs: DataFrame, sk: DataFrame, est: Column,
+      cols: Column*): DataFrame = {
+    val exact = docs
+      .select(explode(graft.operators.Dedup.shingles(col("text"),
+        Sketch.HllShingleN)).as("sh"))
+      .agg(countDistinct(col("sh")).as("n_exact"))
+    // 1-row × 1-row scalar pair — the registered wh_dq_checks shape
+    sk.crossJoin(broadcast(exact))
+      .select(cols ++ Seq(est.as("est"), col("n_exact"),
+        floor(lit(10000.0) * est / col("n_exact").cast("double"))
+          .as("err_bp")): _*)
+  }
+
+  /** The oracle's tail of [[cardGrade]]: `cols`, est, n_exact, err_bp
+    * off the CTEs `from`. */
+  private def cardGradeSql(cols: String, from: String): String =
+    s"""SELECT $cols, est, n_exact,
+       |  CAST(FLOOR(10000.0 * est / CAST(n_exact AS DOUBLE)) AS BIGINT)
+       |    AS err_bp
+       |FROM $from""".stripMargin
+
+  /** The exact en / non-en shingle union and intersection sizes
+    * (exact_union, exact_inter) of an (is_en, sh) frame — the grade of
+    * the set-algebra sketches. */
+  private def exactOverlap(t: DataFrame): DataFrame =
+    t.groupBy(col("sh"))
+      .agg(max(when(col("is_en"), 1L).otherwise(0L)).as("in_en"),
+        max(when(!col("is_en"), 1L).otherwise(0L)).as("in_other"))
+      .agg(count(lit(1)).as("exact_union"),
+        sum(col("in_en") * col("in_other")).as("exact_inter"))
+
+  /** [[exactOverlap]] as oracle CTE `ex`, over the cohort-tagged
+    * (is_en, `key`) CTE `src`. */
+  private def exactOverlapSql(src: String, key: String): String =
+    s"""ex AS (
+       |  SELECT CAST(COUNT(*) AS BIGINT) AS exact_union,
+       |    CAST(SUM(in_en * in_other) AS BIGINT) AS exact_inter
+       |  FROM (
+       |    SELECT MAX(CASE WHEN is_en THEN 1 ELSE 0 END) AS in_en,
+       |      MAX(CASE WHEN NOT is_en THEN 1 ELSE 0 END) AS in_other
+       |    FROM $src GROUP BY $key))""".stripMargin
+
+  /** The quantile-histogram rows' saturated token count `n`
+    * ([[Sketch.QhistMaxN]]), in DuckDB text. */
+  private val qhistLenSql =
+    s"LEAST(CAST(len(${tokens("text")}) AS BIGINT), ${Sketch.QhistMaxN})"
 
   lazy val defs: Map[String, QueryDef] = Map(
 
@@ -1262,21 +1264,13 @@ object TextQueries {
     // shuffle carries (term, counts), never documents.
     "corpus_tfidf" -> QueryDef(
       (s, d) => {
-        val docs = Tables.documents(s, d)
-        val toks = docs
-          .select(col("doc_id"), explode(split(
-            graft.operators.Dedup.normalize(col("text")), " ")).as("term"))
-        val tf = toks.groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-        // df from tf (rows already distinct per (doc, term)) — no second
-        // corpus explode + distinct shuffle
-        val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        val n = docs.select(countDistinct(col("doc_id"))).first().getLong(0)
+        // tf/df/N off the memoized lexical index the retrieval rows share
+        val ix = lexIndex(s, d)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("doc_id"))
           .orderBy(col("score").desc, col("term").asc)
-        tf.join(df_, "term")
-          .withColumn("score", col("tf") * lit(n) / col("df"))
+        ix.tf.join(ix.df, "term")
+          .withColumn("score", col("tf") * lit(ix.n) / col("df"))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= 3 && pmod(col("doc_id"), lit(10)) === 0)
           .select(col("doc_id"), col("term"),
@@ -1518,62 +1512,13 @@ object TextQueries {
     // the exchange, not a global sort.
     "corpus_search" -> QueryDef(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        // the memoized lexical index (r16) — tf/df/n shared with the
-        // BM25/hybrid family instead of a per-row rebuild
         val ix = lexIndex(s, d)
-        val (tf, dfT, n) = (ix.tf, ix.df, ix.n)
-        val qw = Window.partitionBy(col("doc_id"))
-          .orderBy((col("tf") * lit(n) / col("df")).desc, col("term").asc)
-        val qterms = tf.filter(pmod(col("doc_id"), lit(100)) === 0)
-          .join(dfT, "term")
-          .withColumn("qrk", row_number().over(qw))
-          .filter(col("qrk") <= 3)
-          .select(col("doc_id").as("query_doc"), col("term"), col("df"))
-        val cw = Window.partitionBy(col("query_doc"))
-          .orderBy(col("score").desc, col("doc_id").asc)
-        tf.join(broadcast(qterms), Seq("term"))
-          .filter(col("doc_id") =!= col("query_doc"))
-          .groupBy(col("query_doc"), col("doc_id"))
-          .agg(count(lit(1)).cast("long").as("n_shared"),
-            sum(col("tf") *
-              floor(lit(1000L * n) / col("df")).cast("long")).as("score"))
-          .withColumn("rk", row_number().over(cw))
-          .filter(col("rk") <= 5)
-          .select(col("query_doc"), col("rk").cast("long").as("rk"),
-            col("doc_id"), col("n_shared"), col("score"))
+        lexTopK(corpusQueryTerms(ix), "doc_id", ix,
+          col("tf") * floor(lit(1000L * ix.n) / col("df")).cast("long"),
+          lengths = false)
       },
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${tokens("text")}) AS term FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |  FROM toks GROUP BY doc_id, term),
-         |df AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df
-         |  FROM tf GROUP BY term),
-         |n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n
-         |      FROM documents),
-         |q AS (
-         |  SELECT doc_id AS query_doc, term, df FROM (
-         |    SELECT tf.doc_id, tf.term, df.df,
-         |      row_number() OVER (PARTITION BY tf.doc_id
-         |        ORDER BY tf.tf * n.n / df.df DESC, tf.term ASC) AS qrk
-         |    FROM tf JOIN df USING (term), n
-         |    WHERE tf.doc_id % 100 = 0)
-         |  WHERE qrk <= 3),
-         |cand AS (
-         |  SELECT q.query_doc, tf.doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_shared,
-         |    CAST(sum(tf.tf *
-         |      CAST(floor((n.n * 1000) / q.df) AS BIGINT)) AS BIGINT) AS score
-         |  FROM q JOIN tf USING (term), n
-         |  WHERE tf.doc_id <> q.query_doc
-         |  GROUP BY q.query_doc, tf.doc_id)
-         |SELECT query_doc, CAST(rk AS BIGINT) AS rk, doc_id, n_shared, score
-         |FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_doc
-         |    ORDER BY score DESC, doc_id ASC) AS rk FROM cand)
-         |WHERE rk <= 5""".stripMargin),
+      s"""WITH ${lexCtes(CorpusQueryWhere, bm25 = false)}
+         |$lexRankSql""".stripMargin),
 
     // BM25 ranked retrieval — corpus_search's scoring upgraded with the
     // two ideas that make BM25 the lexical-retrieval standard: tf
@@ -1595,8 +1540,11 @@ object TextQueries {
     // query-term frame broadcast onto the tf aggregate, candidates
     // carried as id pairs; the corpus never reshuffles for scoring.
     "corpus_bm25" -> QueryDef(
-      (s, d) => bm25TopSpark(s, d),
-      s"""WITH $bm25Ctes
+      (s, d) => {
+        val ix = lexIndex(s, d)
+        bm25Top(corpusQueryTerms(ix), "doc_id", ix)
+      },
+      s"""WITH ${bm25CtesFor(CorpusQueryWhere)}
          |SELECT query_doc, rk, doc_id, n_shared, score
          |FROM lexr""".stripMargin),
 
@@ -1621,8 +1569,8 @@ object TextQueries {
     // fusion only reads (query, doc, rank).
     "corpus_hybrid_rrf" -> QueryDef(
       (s, d) => {
-        val lex = bm25TopSpark(s, d)
-          .select(col("query_doc"), col("doc_id"), col("rk").as("lex_rk"))
+        val ix = lexIndex(s, d)
+        val lex = bm25Serve(corpusQueryTerms(ix), ix, "doc_id")
         val e = Tables.embeddings(s, d).select(col("vec_id"),
           transform(col("embedding"),
             x => round(x.cast("double") * 1000)).as("qv"))
@@ -1634,7 +1582,7 @@ object TextQueries {
             col("rank").cast("long").as("dense_rk"))
         rrfFuse(lex, den)
       },
-      s"""WITH $bm25Ctes,
+      s"""WITH ${bm25CtesFor(CorpusQueryWhere)},
          |e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
          |denr AS (
          |  SELECT query_doc, doc_id, rank FROM (
@@ -1709,7 +1657,7 @@ object TextQueries {
       (s, d) => graft.operators.Sketch.cmsSketch(Tables.documents(s, d)),
       s"""WITH src AS (
          |  SELECT unnest(${tokens("text")}) AS tok FROM documents),
-         |e AS (${cmsEntriesSql("")})
+         |e AS (${cmsEntriesSql()})
          |SELECT r, b, CAST(count(*) AS BIGINT) AS c
          |FROM e GROUP BY r, b""".stripMargin),
 
@@ -1733,7 +1681,8 @@ object TextQueries {
           .agg(count(lit(1)).cast("long").as("true_cnt"))
           .orderBy(col("true_cnt").desc, col("tok").asc)
           .limit(20)
-        top.select(col("tok"), col("true_cnt"), cmsEntries(col("tok")).as("e"))
+        top.select(col("tok"), col("true_cnt"),
+            Sketch.cmsEntries(col("tok")).as("e"))
           .select(col("tok"), col("true_cnt"),
             col("e.r").as("r"), col("e.b").as("b"))
           .join(broadcast(sketch), Seq("r", "b"))
@@ -1747,18 +1696,13 @@ object TextQueries {
          |  SELECT unnest(${tokens("text")}) AS tok FROM documents),
          |sk AS (
          |  SELECT r, b, CAST(count(*) AS BIGINT) AS c
-         |  FROM (${cmsEntriesSql("")}) GROUP BY r, b),
+         |  FROM (${cmsEntriesSql()}) GROUP BY r, b),
          |top AS (
          |  SELECT tok, CAST(count(*) AS BIGINT) AS true_cnt
          |  FROM src GROUP BY tok
          |  ORDER BY true_cnt DESC, tok ASC LIMIT 20),
          |tb AS (
-         |${(0 until CmsRows).map { i =>
-          val h = graft.functions.PortableHash.hash60Sql("tok")
-          s"""  SELECT tok, true_cnt, CAST($i AS BIGINT) AS r,
-             |    ${graft.functions.PortableHash.affineSql(h, i)} % $CmsWidth AS b
-             |  FROM top""".stripMargin
-        }.mkString("\n  UNION ALL\n")})
+         |${cmsEntriesSql("tok, true_cnt,", "top", "  ")})
          |SELECT tb.tok, tb.true_cnt,
          |  CAST(min(sk.c) AS BIGINT) AS est_cnt,
          |  CAST(min(sk.c) - tb.true_cnt AS BIGINT) AS overcount,
@@ -1779,9 +1723,9 @@ object TextQueries {
     "corpus_qhist" -> QueryDef(
       (s, d) => graft.operators.Sketch.qhistSketch(Tables.documents(s, d)),
       s"""WITH t AS (
-         |  SELECT LEAST(CAST(len(${tokens("text")}) AS BIGINT), 55108) AS n
+         |  SELECT $qhistLenSql AS n
          |  FROM documents)
-         |SELECT CAST(length(bin(n * n * n * n)) AS BIGINT) AS bucket,
+         |SELECT CAST(${qhistBucketSql("n")} AS BIGINT) AS bucket,
          |  COUNT(*) AS cnt
          |FROM t GROUP BY 1""".stripMargin),
 
@@ -1813,10 +1757,10 @@ object TextQueries {
       },
       s"""WITH t AS (
          |  SELECT doc_id,
-         |    LEAST(CAST(len(${tokens("text")}) AS BIGINT), 55108) AS n
+         |    $qhistLenSql AS n
          |  FROM documents),
          |b AS (SELECT doc_id,
-         |        CAST(length(bin(n * n * n * n)) AS BIGINT) AS bucket
+         |        CAST(${qhistBucketSql("n")} AS BIGINT) AS bucket
          |      FROM t),
          |halves AS (
          |  SELECT bucket,
@@ -1854,13 +1798,13 @@ object TextQueries {
           graft.operators.Sketch.qhistBucket(c)
         val vhc = FrameCache.memo(s, d, "qhist_vhc") {
           // saturate n exactly like qhistBucket (and the oracle's base
-          // CTE): past 55,108 tokens the bucket is pinned anyway, and an
+          // CTE): past QhistMaxN tokens the bucket is pinned anyway, and an
           // unsaturated value histogram would report a DIFFERENT
           // exact_value than the oracle's saturated walk for documents
           // beyond the staircase's int64 range
           val vh = Tables.documents(s, d)
             .select(least(size(TextAnalysis.tokens(col("text"))).cast("long"),
-              lit(55108L)).as("n"))
+              lit(Sketch.QhistMaxN)).as("n"))
             .groupBy(col("n")).agg(count(lit(1)).as("c"))
           // bucket(n) is monotone in n, so the bucket-level cumulative
           // AT bucket b equals the value-level walk's max within b —
@@ -1889,13 +1833,13 @@ object TextQueries {
         }.reduce(_.union(_))
       },
       s"""WITH t AS (
-         |  SELECT LEAST(CAST(len(${tokens("text")}) AS BIGINT), 55108) AS n
+         |  SELECT $qhistLenSql AS n
          |  FROM documents),
          |vh AS (SELECT n, COUNT(*) AS c FROM t GROUP BY n),
          |cum AS (SELECT n, SUM(c) OVER (ORDER BY n) AS cum FROM vh),
          |tot AS (SELECT SUM(c) AS total FROM vh),
          |bh AS (
-         |  SELECT CAST(length(bin(n * n * n * n)) AS BIGINT) AS bucket,
+         |  SELECT CAST(${qhistBucketSql("n")} AS BIGINT) AS bucket,
          |    SUM(c) AS c
          |  FROM vh GROUP BY 1),
          |bcum AS (SELECT bucket, SUM(c) OVER (ORDER BY bucket) AS bc FROM bh),
@@ -1934,9 +1878,8 @@ object TextQueries {
     // HLLs the full register table replays bit-for-bit in DuckDB.
     "corpus_hll_build" -> QueryDef(
       (s, d) => graft.operators.Sketch.hllRegisters(Tables.documents(s, d)),
-      s"""WITH tok AS (SELECT unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok FROM documents),
-         |h AS (SELECT ${graft.functions.PortableHash.hash60Sql("tok")} AS h
-         |      FROM tok)
+      s"""WITH ${shingleSql()},
+         |${shingleHashSql("h", "", "tok")}
          |SELECT CAST(${hllBucketSql("h")} AS BIGINT) AS bucket,
          |  CAST(MAX(${hllRhoSql("h")}) AS BIGINT) AS r
          |FROM h GROUP BY 1""".stripMargin),
@@ -1956,29 +1899,18 @@ object TextQueries {
     "corpus_hll_card" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val sk = graft.operators.Sketch.hllRegisters(docs)
+        val sk = Sketch.hllRegisters(docs)
           .agg(count(lit(1)).as("n_present"),
-            sum(graft.operators.Sketch.hllTerm(col("r"))).as("s_present"))
-        val exact = docs
-          .select(explode(graft.operators.Dedup.shingles(col("text"),
-            graft.operators.Sketch.HllShingleN)).as("sh"))
-          .agg(countDistinct(col("sh")).as("n_exact"))
-        val m = graft.operators.Sketch.HllM.toLong
-        val est = graft.operators.Sketch.hllEstimate(
-          col("n_present"), col("s_present"))
-        // 1-row × 1-row scalar pair — the registered wh_dq_checks shape
-        sk.crossJoin(broadcast(exact))
-          .select(col("n_present"),
-            (lit(m) - col("n_present")).as("v_zero"),
-            (col("s_present") + (lit(m) - col("n_present")) *
-              lit(1L << graft.operators.Sketch.HllMaxRho)).as("s_scaled"),
-            est.as("est"), col("n_exact"),
-            floor(lit(10000.0) * est / col("n_exact").cast("double"))
-              .as("err_bp"))
+            sum(Sketch.hllTerm(col("r"))).as("s_present"))
+        val m = Sketch.HllM.toLong
+        cardGrade(docs, sk,
+          Sketch.hllEstimate(col("n_present"), col("s_present")),
+          col("n_present"), (lit(m) - col("n_present")).as("v_zero"),
+          (col("s_present") + (lit(m) - col("n_present")) *
+            lit(1L << Sketch.HllMaxRho)).as("s_scaled"))
       },
-      s"""WITH tok AS (SELECT unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok FROM documents),
-         |h AS (SELECT ${graft.functions.PortableHash.hash60Sql("tok")} AS h
-         |      FROM tok),
+      s"""WITH ${shingleSql()},
+         |${shingleHashSql("h", "", "tok")},
          |regs AS (
          |  SELECT ${hllBucketSql("h")} AS bucket, MAX(${hllRhoSql("h")}) AS r
          |  FROM h GROUP BY 1),
@@ -1998,10 +1930,7 @@ object TextQueries {
          |      AS est,
          |    n_exact
          |  FROM sk, ex)
-         |SELECT n_present, v_zero, s_scaled, est, n_exact,
-         |  CAST(FLOOR(10000.0 * est / CAST(n_exact AS DOUBLE)) AS BIGINT)
-         |    AS err_bp
-         |FROM est""".stripMargin),
+         |${cardGradeSql("n_present, v_zero, s_scaled", "est")}""".stripMargin),
 
     // The MAX-merge law that makes HLL a per-partition/per-hour sketch
     // (the corpus_qhist_merge doctrine, with max instead of sum): the
@@ -2029,9 +1958,7 @@ object TextQueries {
             ge.as("r_merged"), col("r_full"),
             when(ge === col("r_full"), 1L).otherwise(0L).as("merge_exact"))
       },
-      s"""WITH t AS (
-         |  SELECT doc_id % 2 AS p, unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok
-         |  FROM documents),
+      s"""WITH ${shingleSql("doc_id % 2 AS p")},
          |br AS (
          |  SELECT p, ${hllBucketSql(graft.functions.PortableHash.hash60Sql("tok"))} AS bucket,
          |    ${hllRhoSql(graft.functions.PortableHash.hash60Sql("tok"))} AS rho
@@ -2085,11 +2012,7 @@ object TextQueries {
               graft.operators.Sketch.hllTerm(col("r_other")))).as("s_other"),
             count(col("r_all")).as("n_all"),
             sum(graft.operators.Sketch.hllTerm(col("r_all"))).as("s_all"))
-        val exact = t.groupBy(col("sh"))
-          .agg(max(when(col("is_en"), 1L).otherwise(0L)).as("in_en"),
-            max(when(!col("is_en"), 1L).otherwise(0L)).as("in_other"))
-          .agg(count(lit(1)).as("exact_union"),
-            sum(col("in_en") * col("in_other")).as("exact_inter"))
+        val exact = exactOverlap(t)
         def est(n: String, sp: String) =
           graft.operators.Sketch.hllEstimate(col(n), col(sp))
         // 1-row × 1-row scalar pair — the registered wh_dq_checks shape
@@ -2109,9 +2032,7 @@ object TextQueries {
         def estSql(n: String, sp: String) =
           s"(${graft.operators.Sketch.HllAlphaNum} / " +
             s"CAST($sp + ($m - $n) * $shift AS DOUBLE))"
-        s"""WITH t AS (
-           |  SELECT lang = 'en' AS is_en, unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok
-           |  FROM documents),
+        s"""WITH ${shingleSql("lang = 'en' AS is_en")},
            |br AS (
            |  SELECT is_en,
            |    ${hllBucketSql(graft.functions.PortableHash.hash60Sql("tok"))} AS bucket,
@@ -2133,13 +2054,7 @@ object TextQueries {
            |    CAST(COUNT(r_all) AS BIGINT) AS n_all,
            |    CAST(SUM(${hllTermSql("r_all")}) AS BIGINT) AS s_all
            |  FROM regs),
-           |ex AS (
-           |  SELECT CAST(COUNT(*) AS BIGINT) AS exact_union,
-           |    CAST(SUM(in_en * in_other) AS BIGINT) AS exact_inter
-           |  FROM (
-           |    SELECT MAX(CASE WHEN is_en THEN 1 ELSE 0 END) AS in_en,
-           |      MAX(CASE WHEN NOT is_en THEN 1 ELSE 0 END) AS in_other
-           |    FROM t GROUP BY tok))
+           |${exactOverlapSql("t", "tok")}
            |SELECT ${estSql("n_en", "s_en")} AS est_en,
            |  ${estSql("n_other", "s_other")} AS est_other,
            |  ${estSql("n_all", "s_all")} AS est_union,
@@ -2162,10 +2077,9 @@ object TextQueries {
     // DuckDB oracle.
     "corpus_kmv_build" -> QueryDef(
       (s, d) => graft.operators.Sketch.kmvMins(Tables.documents(s, d)),
-      s"""WITH tok AS (SELECT unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok FROM documents),
-         |hd AS (SELECT DISTINCT ${graft.functions.PortableHash.hash60Sql("tok")} AS h
-         |       FROM tok),
-         |mins AS (SELECT h FROM hd ORDER BY h LIMIT ${graft.operators.Sketch.KmvK})
+      s"""WITH ${shingleSql()},
+         |${shingleHashSql("hd", "DISTINCT ", "tok")},
+         |mins AS (${kmvMinSql("hd")})
          |SELECT CAST(row_number() OVER (ORDER BY h) AS BIGINT) AS rk, h
          |FROM mins""".stripMargin),
 
@@ -2199,19 +2113,12 @@ object TextQueries {
             when(col("z.h_merged") === col("z.h_full"), 1L).otherwise(0L)
               .as("merge_exact"))
       },
-      s"""WITH t AS (
-         |  SELECT doc_id % 2 AS p, unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok
-         |  FROM documents),
-         |hh AS (SELECT p, ${graft.functions.PortableHash.hash60Sql("tok")} AS h
-         |       FROM t),
-         |me AS (SELECT h FROM (SELECT DISTINCT h FROM hh WHERE p = 0)
-         |       ORDER BY h LIMIT ${graft.operators.Sketch.KmvK}),
-         |mo AS (SELECT h FROM (SELECT DISTINCT h FROM hh WHERE p = 1)
-         |       ORDER BY h LIMIT ${graft.operators.Sketch.KmvK}),
-         |mm AS (SELECT h FROM (SELECT h FROM me UNION SELECT h FROM mo)
-         |       ORDER BY h LIMIT ${graft.operators.Sketch.KmvK}),
-         |mf AS (SELECT h FROM (SELECT DISTINCT h FROM hh)
-         |       ORDER BY h LIMIT ${graft.operators.Sketch.KmvK}),
+      s"""WITH ${shingleSql("doc_id % 2 AS p")},
+         |${shingleHashSql("hh", "p, ", "t")},
+         |${kmvCteSql("me", "(SELECT DISTINCT h FROM hh WHERE p = 0)")},
+         |${kmvCteSql("mo", "(SELECT DISTINCT h FROM hh WHERE p = 1)")},
+         |${kmvCteSql("mm", "(SELECT h FROM me UNION SELECT h FROM mo)")},
+         |${kmvCteSql("mf", "(SELECT DISTINCT h FROM hh)")},
          |rm AS (SELECT row_number() OVER (ORDER BY h) AS rk, h FROM mm),
          |rf AS (SELECT row_number() OVER (ORDER BY h) AS rk, h FROM mf)
          |SELECT CAST(rm.rk AS BIGINT) AS rk, rm.h AS h_merged,
@@ -2234,26 +2141,16 @@ object TextQueries {
     "corpus_kmv_estimate" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val sk = graft.operators.Sketch.kmvMins(docs)
+        val sk = Sketch.kmvMins(docs)
           .agg(count(lit(1)).as("k_filled"), max(col("h")).as("h_k"))
-        val exact = docs
-          .select(explode(graft.operators.Dedup.shingles(col("text"),
-            graft.operators.Sketch.HllShingleN)).as("sh"))
-          .agg(countDistinct(col("sh")).as("n_exact"))
-        val est = graft.operators.Sketch.kmvEstimate(col("k_filled"),
-          col("h_k"))
-        // 1-row × 1-row scalar pair — the registered wh_dq_checks shape
-        sk.crossJoin(broadcast(exact))
-          .select(col("k_filled"), col("h_k"), est.as("est"), col("n_exact"),
-            floor(lit(10000.0) * est / col("n_exact").cast("double"))
-              .as("err_bp"))
+        cardGrade(docs, sk, Sketch.kmvEstimate(col("k_filled"), col("h_k")),
+          col("k_filled"), col("h_k"))
       },
-      s"""WITH tok AS (SELECT unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok FROM documents),
-         |hd AS (SELECT DISTINCT ${graft.functions.PortableHash.hash60Sql("tok")} AS h
-         |       FROM tok),
+      s"""WITH ${shingleSql()},
+         |${shingleHashSql("hd", "DISTINCT ", "tok")},
          |sk AS (
          |  SELECT CAST(COUNT(*) AS BIGINT) AS k_filled, MAX(h) AS h_k
-         |  FROM (SELECT h FROM hd ORDER BY h LIMIT ${graft.operators.Sketch.KmvK})),
+         |  FROM (${kmvMinSql("hd")})),
          |ex AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM hd),
          |es AS (
          |  SELECT k_filled, h_k,
@@ -2262,10 +2159,7 @@ object TextQueries {
          |      ELSE ${(graft.operators.Sketch.KmvK - 1).toDouble * math.pow(2.0, 60)}
          |        / CAST(h_k AS DOUBLE) END AS est
          |  FROM sk)
-         |SELECT k_filled, h_k, est, n_exact,
-         |  CAST(FLOOR(10000.0 * est / CAST(n_exact AS DOUBLE)) AS BIGINT)
-         |    AS err_bp
-         |FROM es, ex""".stripMargin),
+         |${cardGradeSql("k_filled, h_k", "es, ex")}""".stripMargin),
 
     // KMV SET OVERLAP — what the value-sample state buys beyond one
     // count, and the reason this sketch earns its place beside HLL:
@@ -2299,45 +2193,27 @@ object TextQueries {
               col("b"))).cast("long").as("overlap"))
           .select(col("k_m"), col("overlap"),
             expr("overlap * 10000 DIV k_m").as("jac_est_bp"))
-        val exact = Tables.documents(s, d)
+        val exact = exactOverlap(Tables.documents(s, d)
           .select((col("lang") === "en").as("is_en"),
             explode(graft.operators.Dedup.shingles(col("text"),
-              graft.operators.Sketch.HllShingleN)).as("sh"))
-          .groupBy(col("sh"))
-          .agg(max(when(col("is_en"), 1L).otherwise(0L)).as("in_en"),
-            max(when(!col("is_en"), 1L).otherwise(0L)).as("in_other"))
-          .agg(count(lit(1)).as("exact_union"),
-            sum(col("in_en") * col("in_other")).cast("long")
-              .as("exact_inter"))
+              Sketch.HllShingleN)).as("sh")))
         // 1-row × 1-row scalar pair — the registered wh_dq_checks shape
         sk.crossJoin(broadcast(exact))
           .select(col("k_m"), col("overlap"), col("jac_est_bp"),
             col("exact_union"), col("exact_inter"),
             expr("exact_inter * 10000 DIV exact_union").as("jac_exact_bp"))
       },
-      s"""WITH t AS (
-         |  SELECT lang = 'en' AS is_en, unnest(${shingles(tokens("text"), graft.operators.Sketch.HllShingleN)}) AS tok
-         |  FROM documents),
-         |hh AS (SELECT is_en, ${graft.functions.PortableHash.hash60Sql("tok")} AS h
-         |       FROM t),
-         |ma AS (SELECT h FROM (SELECT DISTINCT h FROM hh WHERE is_en)
-         |       ORDER BY h LIMIT ${graft.operators.Sketch.KmvK}),
-         |mb AS (SELECT h FROM (SELECT DISTINCT h FROM hh WHERE NOT is_en)
-         |       ORDER BY h LIMIT ${graft.operators.Sketch.KmvK}),
-         |mm AS (SELECT h FROM (SELECT h FROM ma UNION SELECT h FROM mb)
-         |       ORDER BY h LIMIT ${graft.operators.Sketch.KmvK}),
+      s"""WITH ${shingleSql("lang = 'en' AS is_en")},
+         |${shingleHashSql("hh", "is_en, ", "t")},
+         |${kmvCteSql("ma", "(SELECT DISTINCT h FROM hh WHERE is_en)")},
+         |${kmvCteSql("mb", "(SELECT DISTINCT h FROM hh WHERE NOT is_en)")},
+         |${kmvCteSql("mm", "(SELECT h FROM ma UNION SELECT h FROM mb)")},
          |sk AS (
          |  SELECT CAST((SELECT COUNT(*) FROM mm) AS BIGINT) AS k_m,
          |    CAST((SELECT COUNT(*) FROM mm
          |          WHERE h IN (SELECT h FROM ma)
          |            AND h IN (SELECT h FROM mb)) AS BIGINT) AS overlap),
-         |ex AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS exact_union,
-         |    CAST(SUM(in_en * in_other) AS BIGINT) AS exact_inter
-         |  FROM (
-         |    SELECT MAX(CASE WHEN is_en THEN 1 ELSE 0 END) AS in_en,
-         |      MAX(CASE WHEN NOT is_en THEN 1 ELSE 0 END) AS in_other
-         |    FROM hh GROUP BY h))
+         |${exactOverlapSql("hh", "h")}
          |SELECT k_m, overlap,
          |  CAST(overlap * 10000 // k_m AS BIGINT) AS jac_est_bp,
          |  exact_union, exact_inter,
@@ -2450,17 +2326,11 @@ object TextQueries {
     // reordering), because the background term cancels
     // frequent-everywhere mass the target-only gate mistakes for
     // in-domain quality.
-    "curate_lm_ratio_gate" -> QueryDef(
-      (s, d) => lmRatioScoreSpark(s, d)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_total"),
-          count(when(lit(LmRatioDen) * (col("lp_t") - col("lp_bg")) >=
-            lit(LmRatioNum) * col("n_bigrams"), 1)).as("n_kept")),
-      s"""WITH $lmRatioCtes
-         |SELECT lang, CAST(count(*) AS BIGINT) AS n_total,
-         |  CAST(count(CASE WHEN $LmRatioDen * (lp_t - lp_bg) >=
-         |             $LmRatioNum * n_bigrams THEN 1 END) AS BIGINT) AS n_kept
-         |FROM lmrsc GROUP BY lang""".stripMargin),
+    "curate_lm_ratio_gate" -> manifest(lmRatioScoreSpark,
+      (_, _) => lit(LmRatioDen) * (col("lp_t") - col("lp_bg")) >=
+        lit(LmRatioNum) * col("n_bigrams"))(lmRatioCtes, "lmrsc",
+      s"""CAST(count(CASE WHEN $LmRatioDen * (lp_t - lp_bg) >=
+         |             $LmRatioNum * n_bigrams THEN 1 END) AS BIGINT) AS n_kept""".stripMargin),
 
     // The calibration itself, auditable: (theta, k, n_train) — the
     // k-th smallest fixed-point ratio key over the en training slice,
@@ -2485,20 +2355,11 @@ object TextQueries {
     // and stays strictly non-saturated at every scale (measured: en
     // 90 %/90.2 %, others 10–24 %/4.5–13 % at sf0.01/sf0.1). The
     // fixed-threshold row stays registered for history.
-    "curate_lm_calib_gate" -> QueryDef(
-      (s, d) => {
-        val theta = lmCalibTheta(s, d)
-        lmRatioScoreSpark(s, d)
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_total"),
-            count(when(calibAdmit(theta), 1)).as("n_kept"))
-      },
-      s"""WITH $lmRatioCtes,
-         |$calibThetaCtes
-         |SELECT lang, CAST(count(*) AS BIGINT) AS n_total,
-         |  CAST(count(CASE WHEN ${calibAdmitSql("lmrsc")} THEN 1 END)
-         |    AS BIGINT) AS n_kept
-         |FROM lmrsc GROUP BY lang""".stripMargin),
+    "curate_lm_calib_gate" -> manifest(lmRatioScoreSpark,
+      (s, d) => calibAdmit(lmCalibTheta(s, d)))(
+      s"$lmRatioCtes,\n$calibThetaCtes", "lmrsc",
+      s"""CAST(count(CASE WHEN ${calibAdmitSql("lmrsc")} THEN 1 END)
+         |    AS BIGINT) AS n_kept""".stripMargin),
 
     // LM perplexity gate — the filter CCNet actually applies: keep
     // documents whose mean LM score clears the threshold (4·lp ≥
@@ -2507,17 +2368,11 @@ object TextQueries {
     // ~30-40 % for the rest at sf0.01 (TextAnalysisSpec pins en as the
     // top admission rate) — exactly the in-distribution selection the
     // recipe is for.
-    "curate_lm_gate" -> QueryDef(
-      (s, d) => lmScoreSpark(s, d)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_total"),
-          count(when(lit(4L) * col("lp_bits") >=
-            lit(LmGateT4) * col("n_bigrams"), 1)).as("n_kept")),
-      s"""WITH $lmScoreCtes
-         |SELECT lang, CAST(count(*) AS BIGINT) AS n_total,
-         |  CAST(count(CASE WHEN 4 * lp_bits >= $LmGateT4 * n_bigrams
-         |             THEN 1 END) AS BIGINT) AS n_kept
-         |FROM lmsc GROUP BY lang""".stripMargin),
+    "curate_lm_gate" -> manifest(lmScoreSpark,
+      (_, _) => lit(4L) * col("lp_bits") >= lit(LmGateT4) * col("n_bigrams"))(
+      lmScoreCtes, "lmsc",
+      s"""CAST(count(CASE WHEN 4 * lp_bits >= $LmGateT4 * n_bigrams
+         |             THEN 1 END) AS BIGINT) AS n_kept""".stripMargin),
 
     // Multinomial NB training report: the observed-support rows of the
     // per-class conditional bigram grids — (class, code, counts, prior
@@ -2525,7 +2380,7 @@ object TextQueries {
     // quarter-bit staircase. The trained-classifier quality gate beside
     // the LM perplexity gate (the fastText role in CCNet-style
     // recipes); training is ONE class×code count aggregate over one
-    // corpus pass (the lmGridOver formula, per class).
+    // corpus pass (the wbits smoothing, per class).
     "text_nb_train" -> QueryDef(
       (s, d) => nbGrid(s, d).filter(col("c12") > 0),
       s"""WITH $nbCtes
@@ -2553,16 +2408,10 @@ object TextQueries {
     // winner-take-all: TextAnalysisSpec pins en's admission above
     // every other language's under both gates and pins the two gates
     // disagreeing on a measurable slice of documents.
-    "curate_nb_gate" -> QueryDef(
-      (s, d) => nbScoreSpark(s, d)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_total"),
-          count(when(col("pred_lang") === "en", 1)).as("n_kept")),
-      s"""WITH $nbCtes
-         |SELECT lang, CAST(count(*) AS BIGINT) AS n_total,
-         |  CAST(count(CASE WHEN pred_lang = 'en' THEN 1 END) AS BIGINT)
-         |    AS n_kept
-         |FROM nbscd GROUP BY lang""".stripMargin),
+    "curate_nb_gate" -> manifest(nbScoreSpark,
+      (_, _) => col("pred_lang") === "en")(nbCtes, "nbscd",
+      """CAST(count(CASE WHEN pred_lang = 'en' THEN 1 END) AS BIGINT)
+        |    AS n_kept""".stripMargin),
 
     // Gate-ensemble agreement audit: the 2×2 contingency of the two
     // trained admission gates (CCNet perplexity RATIO vs NB argmax)

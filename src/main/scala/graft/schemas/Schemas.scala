@@ -36,13 +36,6 @@ object Schemas {
     StructField("device", StringType, nullable = true),         // NULLs possible (generator off-by-one)
     StructField("raw_payload", StringType, nullable = true)))   // opaque JSON
 
-  /** Same fact schema but with `event_ts` already typed. */
-  val engagementEventsTyped: StructType = StructType(
-    engagementEvents.fields.map {
-      case f if f.name == "event_ts" => f.copy(dataType = TimestampType)
-      case f => f
-    })
-
   /** Debezium envelope (unflattened shape) around a row payload.
     * The reference parser expects `payload.after`
     * (`EngagementStreamingJob.java:219-227`). `before` is carried for

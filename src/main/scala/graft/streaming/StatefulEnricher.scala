@@ -3,8 +3,7 @@ package graft.streaming
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Reference-exact J1 semantics (SURVEY.md §2.3 option (c)): the Flink
@@ -129,22 +128,5 @@ object StatefulEnricher {
       case Some(ttl) => grouped.flatMapGroupsWithState(
         OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(processGroupTtl(ttl))
     }
-  }
-
-  /** Typed view over a parsed events DataFrame (post-timestamp-parse). */
-  def asEvents(rows: DataFrame): Dataset[EventRec] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.select(col("id"), col("content_id"), col("user_id"), col("event_type"),
-      col("event_ts"), col("duration_ms"), col("device"), col("raw_payload"))
-      .as[EventRec]
-  }
-
-  /** Typed view over a parsed content DataFrame. */
-  def asContent(rows: DataFrame): Dataset[ContentRec] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.select(col("id"), col("slug"), col("title"), col("content_type"),
-      col("length_seconds"), col("publish_ts")).as[ContentRec]
   }
 }

@@ -39,9 +39,9 @@ object StreamingIndex {
     * returns struct(d2, id) — ties fall to the earliest (lowest-id)
     * entry, matching `min(struct(d2, id))`. Runs as the native
     * compiled loop ([[graft.functions.VectorFunctions.ArgminD2]]);
-    * [[argminComposable]] is the `aggregate`-fold reference form it
-    * must match bit-for-bit (VectorFunctionsSpec pins the pair, and the
-    * streamed-equals-batch StreamingSpec pin covers the end-to-end). */
+    * VectorFunctionsSpec pins it bit-for-bit against an `aggregate`-fold
+    * argmin, and the streamed-equals-batch StreamingSpec pin covers the
+    * end-to-end. */
   private def argmin(entries: Seq[(Long, Seq[Double])], vec: Column): Column = {
     // fail-loud doctrine (see Tables): an empty entry list would fold the
     // (Double.MaxValue, Long.MaxValue) sentinel into every output row —
@@ -49,22 +49,6 @@ object StreamingIndex {
     require(entries.nonEmpty, "argmin over an empty centroid/codeword list")
     graft.functions.VectorFunctions.vecArgminD2(vec,
       array(entries.sortBy(_._1).map { case (id, v) => entryLit(id, v) }: _*))
-  }
-
-  /** The composable `aggregate`-fold argmin — kept as the semantic
-    * reference for the native expression (interpreted per entry, so
-    * only the spec runs it). */
-  private[graft] def argminComposable(
-      entries: Seq[(Long, Seq[Double])], vec: Column): Column = {
-    require(entries.nonEmpty, "argmin over an empty centroid/codeword list")
-    aggregate(
-      array(entries.sortBy(_._1).map { case (id, v) => entryLit(id, v) }: _*),
-      struct(lit(Double.MaxValue).as("d2"), lit(Long.MaxValue).as("id")),
-      (acc, e) => {
-        val dd = Similarity.l2sq(vec, e.getField("v"))
-        when(dd < acc.getField("d2"),
-          struct(dd.as("d2"), e.getField("id").as("id"))).otherwise(acc)
-      })
   }
 
   /** `vecs`: streaming frame with (vec_id long, qv array<double>,
