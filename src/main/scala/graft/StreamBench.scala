@@ -480,22 +480,17 @@ object StreamBench {
       floor: Int): Section = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.functions.PortableHash
-    def splitOf(c: org.apache.spark.sql.Column) = {
-      val b = PortableHash.hash60(
-        concat(c.cast("string"), lit("|split"))) % 100
-      when(b < 80, "train").when(b < 90, "val").otherwise("test")
-    }
+    import graft.operators.HashSplit
     val docs0 = Tables.documents(spark, sfDir)
     val refGrams = graft.operators.SpanDedup.cappedGrams(
-      docs0.filter(splitOf(col("doc_id")) === "test"),
+      docs0.filter(HashSplit.label(col("doc_id")) === "test"),
       "doc_id", "text", k = 8, occCap = 32).localCheckpoint()
     // the trained-artifact pre-filter, built before the clock next to
     // the index: most arriving grams miss the reference, and the
     // sketch drops them scan-side before the join's exchange
     // (docs/AB_r15.md measured it on vs off)
     val refSketch = graft.operators.SpanDedup.refGramSketch(refGrams)
-    val base = docs0.filter(splitOf(col("doc_id")) === "train")
+    val base = docs0.filter(HashSplit.label(col("doc_id")) === "train")
       .select(col("doc_id").cast("long"), col("text").cast("string"))
       .as[ScoreIn].collect().toIndexedSeq
     val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
@@ -674,7 +669,7 @@ object StreamBench {
     val q = graft.streaming.StreamingIntake.pipelineStream(
         in.toDF().toDF("source", "doc_id", "lang", "text", "ts"),
         cutoffs, semDrops, lmW, lmBg, lmTheta,
-        dsirW, graft.queries.DedupQueries.pipelineStep,
+        dsirW, graft.queries.DedupQueries.PipelineStep,
         // 64-way sharded resampler: at the section's replicated volume
         // every stratum's weight is far above the step, so the
         // stratified scale path is healthy here (see resampleStream)

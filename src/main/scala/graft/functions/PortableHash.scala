@@ -43,6 +43,16 @@ object PortableHash {
   def hash60Sql(e: String): String =
     s"(('0x' || substr(md5($e), 1, 15))::BIGINT)"
 
+  /** [[hash60]] of an id's decimal text followed by `salt`: the per-id
+    * pseudo-random order or draw of a curation stage, one salt per
+    * stage. */
+  def salted(id: Column, salt: String): Column =
+    hash60(concat(id.cast("string"), lit(salt)))
+
+  /** Same, as DuckDB SQL text over id expression `e`. */
+  def saltedSql(e: String, salt: String): String =
+    hash60Sql(s"CAST($e AS VARCHAR) || '$salt'")
+
   /** i-th member of the affine family applied to a pre-hashed column. */
   def affine(h: Column, i: Int): Column =
     (h % P * lit(constantA(i)) + lit(constantB(i))) % P

@@ -112,4 +112,23 @@ object PrefixSum {
         (col("__local_cum") + col("__offset")).cast("long"))
       .drop("__local_cum", "__bkt_sum", "__offset")
   }
+
+  /** Hash buckets of the hash-ordered entry points below; the oracles'
+    * `OracleSql.hashOrderSql` prints the same modulus. */
+  val Buckets = 64
+
+  /** Appends the hash order the kernel needs: `bktCol` = hash % Buckets,
+    * `ordCol` = hash, so `(bktCol, ordCol)` sorts as the hash does. */
+  def hashOrdered(df: DataFrame, hash: Column, bktCol: String = "bkt",
+      ordCol: String = "ord"): DataFrame =
+    df.withColumn(bktCol, hash % Buckets).withColumn(ordCol, hash)
+
+  /** [[bucketedRunningSum]] over the pseudo-random order `hash` defines
+    * (a salted [[graft.functions.PortableHash]] of the row's id), ties
+    * broken by `ids`, which must make the order total. */
+  def hashOrderedRunningSum(df: DataFrame, hash: Column,
+      partCols: Seq[String], ids: Seq[Column], valueCol: String,
+      cumCol: String): DataFrame =
+    bucketedRunningSum(hashOrdered(df, hash), partCols, "bkt",
+      col("ord") +: ids, valueCol, cumCol)
 }

@@ -44,10 +44,6 @@ import graft.functions.PortableHash
   */
 object ShardExport {
 
-  /** The per-unit shard assignment: input columns plus
-    * `cum_tokens` (global running token count in the interleave
-    * order, inclusive) and `shard` (0-based). `idCol` must be unique;
-    * `tokCol` the unit's token count (≥ 0). */
   /** Column names the kernel appends or uses internally: a pre-existing
     * column with one of these names would silently collide with the
     * kernel's own (`cum_tokens` in particular would be overwritten by
@@ -55,8 +51,12 @@ object ShardExport {
   private val ReservedCols =
     Seq("cum_tokens", "shard", "__bkt", "__ord", "__start", "__total")
 
+  /** The per-unit shard assignment: input columns plus
+    * `cum_tokens` (global running token count in the interleave
+    * order, inclusive) and `shard` (0-based). `idCol` must be unique;
+    * `tokCol` the unit's token count (≥ 0). */
   def shardPlan(units: DataFrame, idCol: String, tokCol: String,
-      nShards: Int, buckets: Int = 64): DataFrame = {
+      nShards: Int): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     val clash = units.columns.filter(c =>
       ReservedCols.contains(c) && c != idCol && c != tokCol)
@@ -66,11 +66,8 @@ object ShardExport {
     require(!ReservedCols.contains(idCol) && !ReservedCols.contains(tokCol),
       s"idCol/tokCol must not use a reserved kernel name " +
         s"(${ReservedCols.mkString(", ")})")
-    val h = PortableHash.hash60(
-      concat(col(idCol).cast("string"), lit("|shard")))
-    val base = units
-      .withColumn("__bkt", h % buckets)
-      .withColumn("__ord", h)
+    val base = PrefixSum.hashOrdered(units,
+      PortableHash.salted(col(idCol), "|shard"), "__bkt", "__ord")
     val cum = PrefixSum.bucketedRunningSum(base, Seq.empty, "__bkt",
       Seq(col("__ord"), col(idCol)), tokCol, "cum_tokens")
     // the corpus-total scalar: summed from the SAME per-bucket totals

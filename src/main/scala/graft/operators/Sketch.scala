@@ -290,8 +290,8 @@ object Sketch {
   /** Sketch-gated decontamination monitor — the ONE kernel behind the
     * batch `curate_kmv_decontam` row AND its streaming twin (the
     * serve-twin doctrine: the two can never drift). Works on a batch OR
-    * streaming (doc_id, text) frame: per-split (train / holdout by the
-    * batch manifest's "|split" hash buckets) KMV sketches of the
+    * streaming (doc_id, text) frame: per-split (train / holdout by
+    * [[HashSplit]], the batch manifest's split) KMV sketches of the
     * [[DecontamShingleN]]-gram shingle space are ONE conditional
     * two-sketch aggregation — on a stream the two ≤ k·8-byte buffers
     * ARE the aggregation state (constant regardless of ingest volume,
@@ -307,13 +307,10 @@ object Sketch {
     * gates the expensive exact cross-shard scan, flagged at ≥ 50 bp. */
   def kmvDecontam(docs: DataFrame, k: Int = DecontamK,
       n: Int = DecontamShingleN): DataFrame = {
-    import graft.functions.PortableHash
     val two60 = math.pow(2.0, 60)
-    val bucket = PortableHash.hash60(
-      concat(col("doc_id").cast("string"), lit("|split"))) % 100
     // fused gram mode (r17): the aggregate hashes the n-grams straight
     // off the token array — no per-document shingle-string frame
-    val t = docs.select((bucket < 80).as("is_train"),
+    val t = docs.select(HashSplit.isTrain(col("doc_id")).as("is_train"),
       TextAnalysis.tokens(col("text")).as("tk"))
     val merged = slice(array_sort(array_distinct(
       concat(col("a"), col("b")))), 1, k)

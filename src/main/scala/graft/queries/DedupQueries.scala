@@ -1,9 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.PortableHash
 import graft.ingest.Tables
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{Dedup, HashSplit, PrefixSum, ShardExport, Similarity,
+  Sketch, TextAnalysis}
 
 /** Deduplication query surface over the `documents` / `embeddings`
   * fixtures — the operator family a 100 TB training-data pipeline needs.
@@ -21,7 +24,11 @@ object DedupQueries {
 
   private val K = 12
   private val Bands = 4
-  private val RowsPerBand = K / Bands
+
+  /** The shared near-dup graph's verify threshold and band-bucket cap,
+    * read by [[nearDupPairs]] and by its oracle CTEs. */
+  private val NearDupTau = 0.9
+  private val NearDupCap = 48
 
   /** Systematic-sampling step for the DSIR resampler: one document kept
     * per 2^18 units of cumulative importance (scores are ~1000 per
@@ -37,11 +44,7 @@ object DedupQueries {
     * population — and the audit manifest should stay populated at the
     * smallest fixture (≈40 % of survivors kept at the measured ~50k
     * mean importance). */
-  private val PipelineStep = 131072L
-
-  /** The capstone resampler's step, package-visible for the streaming
-    * pipeline twin and its spec. */
-  private[graft] def pipelineStep: Long = PipelineStep
+  private[graft] val PipelineStep = 131072L
 
   /** Shared near-dup frames. A real curation run computes the MinHash
     * candidate→verify PAIR frame once and every downstream step reads
@@ -56,17 +59,15 @@ object DedupQueries {
     * five times for one answer. Both frames live in the shared
     * [[FrameCache]] memo (`localCheckpoint`ed, pairs-scale: one row per
     * candidate pair / one (node, label) row per clustered doc). */
-  private def nearDupPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+  private def nearDupPairs(s: SparkSession, d: String): DataFrame =
     FrameCache.memo(s, d, "pairs") {
       Dedup.nearDuplicates(Tables.documents(s, d),
-        "doc_id", "text", n = 1, k = K, bands = Bands, threshold = 0.9,
-        bucketCap = 48)
+        "doc_id", "text", n = 1, k = K, bands = Bands,
+        threshold = NearDupTau, bucketCap = NearDupCap)
     }
 
   /** Connected-component labels over [[nearDupPairs]]. */
-  private def nearDupLabels(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+  private def nearDupLabels(s: SparkSession, d: String): DataFrame = {
     // resolve the pairs frame BEFORE entering the labels memo (see the
     // FrameCache nesting note)
     val pairs = nearDupPairs(s, d)
@@ -80,44 +81,87 @@ object DedupQueries {
     * derived from them) so a bench pass can time them as their own line
     * item instead of charging the whole clique to whichever query
     * happens to consume them first. */
-  private[graft] def prewarmShared(s: org.apache.spark.sql.SparkSession,
-      d: String): Unit = {
+  private[graft] def prewarmShared(s: SparkSession, d: String): Unit = {
     nearDupPairs(s, d)
     nearDupLabels(s, d)
     pipelineGatedMemo(s, d)
     ()
   }
 
-  /** DuckDB CTEs for the shared MinHash pipeline (hashed shingle → sign →
-    * band → capped bucket). `cap` mirrors the Spark side's deterministic
-    * LSH bucket-size cap — the fixture vocabulary is 31 words, so 1-gram
-    * near-dup density is pathological and band buckets degenerate toward
-    * all-pairs without it. */
-  private def minhashCtes(n: Int, where: String, cap: Int): String = {
-    val sigs = (0 until K).map(i => s"${minhash("__sh", i)} AS s$i").mkString(", ")
-    val bandKeys = (0 until Bands).map { b =>
-      val cols = (b * RowsPerBand until (b + 1) * RowsPerBand).map(i => s"s$i")
-      s"concat_ws(',', $b, ${cols.mkString(", ")})"
+  /** The MinHash signature select items `s0`..`s{K-1}` over the
+    * pre-hashed shingle list `hs`. */
+  private def sigsSql(hs: String): String =
+    (0 until K).map(i => s"${minhash(hs, i)} AS s$i").mkString(", ")
+
+  /** The band-key list of an `nb`-band split of `s0`..`s{K-1}`. */
+  private def bandKeysSql(nb: Int): String = {
+    val r = K / nb
+    (0 until nb).map { j =>
+      val cols = (j * r until (j + 1) * r).map(i => s"s$i")
+      s"concat_ws(',', $j, ${cols.mkString(", ")})"
     }.mkString("[", ", ", "]")
+  }
+
+  /** DuckDB CTEs for the shared MinHash pipeline (hashed shingle → sign →
+    * band → capped bucket → `cand`). The cap mirrors the Spark side's
+    * deterministic LSH bucket-size cap — the fixture vocabulary is 31
+    * words, so 1-gram near-dup density is pathological and band buckets
+    * degenerate toward all-pairs without it. */
+  private def nearDupCtes: String =
     s"""sh AS (
        |  SELECT doc_id AS __id,
-       |    list_transform(${shingles(tokens("text"), n)},
-       |      s -> ${graft.functions.PortableHash.hash60Sql("s")}) AS __sh
-       |  FROM documents WHERE $where),
+       |    ${hashedShinglesSql(1)} AS __sh
+       |  FROM documents WHERE doc_id >= 0),
        |signed AS (
-       |  SELECT __id, $sigs FROM sh),
+       |  SELECT __id, ${sigsSql("__sh")} FROM sh),
        |bands AS (
-       |  SELECT __id, unnest($bandKeys) AS __band FROM signed),
+       |  SELECT __id, unnest(${bandKeysSql(Bands)}) AS __band FROM signed),
        |capped AS (
        |  SELECT __id, __band FROM (
        |    SELECT __id, __band,
        |      row_number() OVER (PARTITION BY __band ORDER BY __id) AS __rn
        |    FROM bands)
-       |  WHERE __rn <= $cap),
+       |  WHERE __rn <= $NearDupCap),
        |cand AS (
        |  SELECT DISTINCT x.__id AS a, y.__id AS b
        |  FROM capped x JOIN capped y ON x.__band = y.__band AND x.__id < y.__id)""".stripMargin
+
+  /** The oracle of [[nearDupPairs]] over [[nearDupCtes]]: the candidates
+    * whose exact Jaccard clears [[NearDupTau]], as `SELECT a, b` plus
+    * `jaccard` when `withJaccard`; `ind` leads every line after the
+    * first. */
+  private def verifiedSql(withJaccard: Boolean, ind: String): String = {
+    val j = jaccard("sa.__sh", "sb.__sh")
+    val from =
+      if (withJaccard) s", $j AS jaccard\n${ind}FROM cand c" else " FROM cand c"
+    s"SELECT c.a, c.b$from\n${ind}JOIN sh sa ON sa.__id = c.a\n" +
+      s"${ind}JOIN sh sb ON sb.__id = c.b\n${ind}WHERE $j >= $NearDupTau"
   }
+
+  /** [[nearDupCtes]] then `edges`, the verified pairs. */
+  private def nearDupEdgesSql(withJaccard: Boolean): String =
+    s"""$nearDupCtes,
+       |edges AS (
+       |  ${verifiedSql(withJaccard, "  ")})""".stripMargin
+
+  /** [[nearDupEdgesSql]] then the transitive closure `reach(src, dst)`
+    * of the undirected edge set (a RECURSIVE CTE). */
+  private def nearDupReachSql: String =
+    s"""${nearDupEdgesSql(withJaccard = false)},
+       |sym AS (SELECT a AS src, b AS dst FROM edges
+       |        UNION SELECT b, a FROM edges),
+       |reach(src, dst) AS (
+       |  SELECT src, dst FROM sym
+       |  UNION
+       |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src)""".stripMargin
+
+  /** The oracle of [[nearDupLabels]]: [[nearDupReachSql]] then
+    * `labels(node, label)`, each node's minimum reachable id. */
+  private def nearDupLabelsSql: String =
+    s"""$nearDupReachSql,
+       |labels AS (
+       |  SELECT src AS node, least(src, min(dst)) AS label
+       |  FROM reach GROUP BY src)""".stripMargin
 
   /** Band configurations of `dedup_band_sweep`: every divisor split of
     * the K=12 signature into (bands × rows-per-band). More bands /
@@ -131,12 +175,8 @@ object DedupQueries {
     * alone, not bucket capping. */
   private def bandSweepCtes: String = SweepBands.map { nb =>
     val r = K / nb
-    val bandKeys = (0 until nb).map { j =>
-      val cols = (j * r until (j + 1) * r).map(i => s"s$i")
-      s"concat_ws(',', $j, ${cols.mkString(", ")})"
-    }.mkString("[", ", ", "]")
     s"""bands$nb AS (
-       |  SELECT id, unnest($bandKeys) AS bk FROM signedsl),
+       |  SELECT id, unnest(${bandKeysSql(nb)}) AS bk FROM signedsl),
        |cand$nb AS (
        |  SELECT DISTINCT x.id AS a, y.id AS b
        |  FROM bands$nb x JOIN bands$nb y ON x.bk = y.bk AND x.id < y.id),
@@ -158,8 +198,8 @@ object DedupQueries {
     * composes the trained NB argmax admission (pred = en) beside the
     * perplexity ratio — the full quality stack CCNet-style recipes
     * run; both variants register as capstone rows. */
-  private def pipelineFrame(s: org.apache.spark.sql.SparkSession,
-      d: String, classifierGate: Boolean): org.apache.spark.sql.DataFrame =
+  private def pipelineFrame(s: SparkSession, d: String,
+      classifierGate: Boolean): DataFrame =
     pipelineDocsMemo(s, d, classifierGate)
       .groupBy(col("source"), col("split"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
@@ -177,8 +217,8 @@ object DedupQueries {
     * upstream `curate_pipeline_cls` already paid). Kilobytes per
     * entry; the bench clears it per pass, so each pass still pays
     * each variant's chain exactly once (the FrameCache doctrine). */
-  private def pipelineDocsMemo(s: org.apache.spark.sql.SparkSession,
-      d: String, classifierGate: Boolean): org.apache.spark.sql.DataFrame = {
+  private def pipelineDocsMemo(s: SparkSession, d: String,
+      classifierGate: Boolean): DataFrame = {
     val variant = if (classifierGate) "cls" else "ratio"
     // probe-then-build (FrameCache.get): pipelineDocs CONSTRUCTION is
     // eager (the survivors' checkpoint inside it fires the whole
@@ -201,9 +241,7 @@ object DedupQueries {
     * tokenize+quality window) per pass. Prewarmed by [[prewarmShared]]
     * so the bench itemizes the build on the shared-frames line instead
     * of charging it to whichever capstone row runs first. */
-  private def pipelineGatedMemo(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private def pipelineGatedMemo(s: SparkSession, d: String): DataFrame =
     FrameCache.memo(s, d, "pipeline_gated") {
       // stage 1: exact-dedup keepers
       val keepers = Tables.documents(s, d)
@@ -211,24 +249,14 @@ object DedupQueries {
         .agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))
       // stage 2: per-source top-quartile quality gate over keepers
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("quality").desc, col("doc_id"))
-      Tables.documents(s, d)
-        .join(keepers, Seq("doc_id"), "left_semi")
-        .select(col("source"), col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .withColumn("qt", ntile(4).over(w))
-        .filter(col("qt") === 1)
+      TextQueries.topQualityQuartile(
+          Tables.documents(s, d).join(keepers, Seq("doc_id"), "left_semi"),
+          nTokens)
         .select(col("source"), col("doc_id"), col("n_tokens"))
     }
-  }
 
-  private def pipelineDocs(s: org.apache.spark.sql.SparkSession,
-      d: String, classifierGate: Boolean): org.apache.spark.sql.DataFrame = {
-        import org.apache.spark.sql.expressions.Window
-        import graft.functions.PortableHash
-        import graft.operators.PrefixSum
+  private def pipelineDocs(s: SparkSession, d: String,
+      classifierGate: Boolean): DataFrame = {
         val gated = pipelineGatedMemo(s, d)
         // stage 3: LM admission on the FULL CCNet discriminator — the
         // target-vs-background perplexity ratio (the target-only
@@ -265,62 +293,37 @@ object DedupQueries {
         val clean = clsGated.join(semDrops, Seq("doc_id"), "left_anti")
           .localCheckpoint(true)
         // stage 5: DSIR importance resampling of the survivors
-        val rl = dsirWeightTable(s, d)
-          .agg(sort_array(collect_list(struct(col("b"), col("r"))))
-            .as("ws"))
-          .select(transform(col("ws"), x => x.getField("r")).as("rl"))
-        val h = PortableHash.hash60(
-          concat(col("doc_id").cast("string"), lit("|dsir")))
-        val scored = Tables.documents(s, d)
-          .join(clean.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), Dedup.hashedShingles(col("text"), 2).as("gs"))
-          .crossJoin(broadcast(rl))
-          .select(col("doc_id"),
-            graft.functions.TextHashFunctions
-              .weightedBucketSum(col("gs"), col("rl")).as("wgt"),
-            (h % 64).as("bkt"), h.as("ord"))
-        val sampled = PrefixSum.bucketedRunningSum(scored, Seq.empty, "bkt",
-            Seq(col("ord"), col("doc_id")), "wgt", "cum_weight")
-          .filter(expr(s"cum_weight div $PipelineStep") >
-            expr(s"(cum_weight - wgt) div $PipelineStep"))
+        val sampled = dsirResampled(s, d, Tables.documents(s, d)
+            .join(clean.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+            "wgt", PipelineStep)
           .select(col("doc_id"))
         // stage 6: split tag + audit manifest
-        val b = PortableHash.hash60(
-          concat(col("doc_id").cast("string"), lit("|split"))) % 100
-        val split = when(b < 80, "train").when(b < 90, "val")
-          .otherwise("test")
         clean.join(sampled, Seq("doc_id"), "left_semi")
           .select(col("source"), col("doc_id"), col("n_tokens"),
-            split.as("split"))
+            HashSplit.label(col("doc_id")).as("split"))
   }
+
+  /** The layout of a multi-line split CASE in the oracles. */
+  private val CaseLines = "\n       "
 
   /** Oracle text for [[pipelineFrame]], with the nb* CTE blocks and
     * the classifier predicate appended for the `_cls` variant (the
     * nb* blocks read the SAME `lmex` bigram fan-out the ratio gate's
     * CTEs define — one bigram pipeline feeds both gates). */
-  private def splitBucketSql(e: String) =
-    s"(${graft.functions.PortableHash.hash60Sql(
-      s"CAST($e AS VARCHAR) || '|split'")} % 100)"
-
-  private def pipelineSql(classifierGate: Boolean): String = {
-        def bucketSql(e: String) = splitBucketSql(e)
-        s"""WITH ${pipelineCtes(classifierGate)}
-           |SELECT c.source,
-           |  CASE WHEN ${bucketSql("c.doc_id")} < 80 THEN 'train'
-           |       WHEN ${bucketSql("c.doc_id")} < 90 THEN 'val'
-           |       ELSE 'test' END AS split,
-           |  COUNT(*) AS n_docs, CAST(SUM(c.n_tokens) AS BIGINT) AS n_tokens
-           |FROM pclean c JOIN psel ON psel.doc_id = c.doc_id
-           |GROUP BY 1, 2""".stripMargin
-  }
+  private def pipelineSql(classifierGate: Boolean): String =
+    s"""WITH ${pipelineCtes(classifierGate)}
+       |SELECT c.source,
+       |  ${HashSplit.labelSql("c.doc_id", CaseLines)} AS split,
+       |  COUNT(*) AS n_docs, CAST(SUM(c.n_tokens) AS BIGINT) AS n_tokens
+       |FROM pclean c JOIN psel ON psel.doc_id = c.doc_id
+       |GROUP BY 1, 2""".stripMargin
 
   /** The capstone's CTE chain (everything through `psel`, no WITH/final
     * select) — shared by [[pipelineSql]] and the shard-export capstone
     * oracle, which appends its own shard CTEs over the same admitted
     * set. */
   private def pipelineCtes(classifierGate: Boolean): String = {
-        import graft.functions.PortableHash
-        val hSql = PortableHash.hash60Sql("CAST(doc_id AS VARCHAR) || '|dsir'")
+        val hSql = PortableHash.saltedSql("doc_id", "|dsir")
         val nbBlocks =
           if (classifierGate) s"${TextQueries.nbCtesBody},\n" else ""
         s"""${TextQueries.lmRatioCtes},
@@ -354,11 +357,10 @@ object DedupQueries {
            |  FROM gb JOIN w USING (b)
            |  WHERE gb.doc_id IN (SELECT doc_id FROM pclean)
            |  GROUP BY gb.doc_id),
-           |pt AS (SELECT doc_id, wgt, $hSql % 64 AS bkt, $hSql AS ord FROM psc),
+           |pt AS (SELECT doc_id, wgt, ${hashOrderSql(hSql)} FROM psc),
            |pcum AS (
            |  SELECT doc_id, wgt,
-           |    CAST(SUM(wgt) OVER (ORDER BY bkt, ord, doc_id
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cw
+           |    ${runningSumSql("wgt", "doc_id", wrap = false)} AS cw
            |  FROM pt),
            |psel AS (SELECT doc_id FROM pcum
            |  WHERE cw // $PipelineStep > (cw - wgt) // $PipelineStep)"""
@@ -382,15 +384,12 @@ object DedupQueries {
     * over `src` (a sub-select with source, doc_id, n_tokens): `shp` is
     * the per-unit assignment — the flat sequential window the
     * distributed two-level prefix sum must equal. */
-  private def shardCtes(src: String): String = {
-    import graft.functions.PortableHash
-    val hSql = PortableHash.hash60Sql("CAST(doc_id AS VARCHAR) || '|shard'")
+  private def shardCtes(src: String): String =
     s"""sht AS (SELECT source, doc_id, n_tokens,
-       |    $hSql % 64 AS bkt, $hSql AS ord
+       |    ${hashOrderSql(PortableHash.saltedSql("doc_id", "|shard"))}
        |  FROM $src),
        |shc AS (SELECT source, doc_id, n_tokens,
-       |    CAST(SUM(n_tokens) OVER (ORDER BY bkt, ord, doc_id
-       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
+       |    ${runningSumSql("n_tokens", "doc_id", wrap = false)} AS cum_tokens
        |  FROM sht),
        |shtot AS (SELECT CAST(GREATEST(SUM(n_tokens), 1) AS BIGINT)
        |    AS total FROM sht),
@@ -398,7 +397,24 @@ object DedupQueries {
        |    CAST(((cum_tokens - n_tokens) * $ShardN) // total AS BIGINT)
        |      AS shard
        |  FROM shc, shtot)""".stripMargin
-  }
+
+  /** The shard plan of the whole corpus, one unit per document. */
+  private def docShards(s: SparkSession, d: String): DataFrame =
+    ShardExport.shardPlan(docTokens(s, d), "doc_id", "n_tokens",
+      nShards = ShardN)
+
+  /** A document's token count. */
+  private def nTokens: Column =
+    TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")
+
+  /** The documents' token units (source, doc_id, n_tokens). */
+  private def docTokens(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(col("source"), col("doc_id"), nTokens)
+
+  /** Oracle sub-select of [[docTokens]]. */
+  private val docTokensSql: String =
+    s"(SELECT source, doc_id, CAST(len(${tokens("text")}) AS BIGINT)" +
+      " AS n_tokens FROM documents)"
 
   private val shardManifestSelect: String =
     s"""SELECT shard, COUNT(*) AS n_units,
@@ -425,8 +441,7 @@ object DedupQueries {
 
   /** The maximal-repeated-span manifest, shared by the manifest row
     * and the cleaned-corpus row (one gram-index build, not two). */
-  private def substringSpans(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+  private def substringSpans(s: SparkSession, d: String): DataFrame =
     FrameCache.memo(s, d, "substring_spans") {
       graft.operators.SpanDedup.repeatedSpans(Tables.documents(s, d),
         "doc_id", "text", k = SpanK, minLen = SpanMinLen,
@@ -442,7 +457,7 @@ object DedupQueries {
     s"""sst AS (SELECT doc_id, ${tokens("text")} AS toks FROM documents),
        |ssg0 AS (
        |  SELECT doc_id, u.i AS off,
-       |    ${graft.functions.PortableHash.hash60Sql(
+       |    ${PortableHash.hash60Sql(
              s"array_to_string(toks[u.i:u.i+${k - 1}], ' ')")}
        |      AS gram
        |  FROM sst, LATERAL unnest(CASE WHEN len(toks) >= $k
@@ -467,6 +482,55 @@ object DedupQueries {
        |  HAVING max(oa) + ${k - 1} - min(oa) + 1 >= $SpanMinLen)"""
       .stripMargin
   }
+
+  /** Oracle CTEs merging the per-document removal intervals (doc_id, s,
+    * e) of CTE `${p}0` under a running max: `${p}m` holds each merged
+    * (ms, me) interval. */
+  private def intervalMergeSql(p: String): String =
+    s"""${p}w AS (SELECT doc_id, s, e, max(e) OVER (
+       |    PARTITION BY doc_id ORDER BY s, e
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+       |  FROM ${p}0),
+       |${p}g AS (SELECT doc_id, s, e,
+       |    sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
+       |      OVER (PARTITION BY doc_id ORDER BY s, e
+       |        ROWS UNBOUNDED PRECEDING) AS grp
+       |  FROM ${p}w),
+       |${p}m AS (SELECT doc_id, min(s) AS ms, max(e) AS me
+       |  FROM ${p}g GROUP BY doc_id, grp)""".stripMargin
+
+  /** `dedup_spans`' tile width in tokens. */
+  private val TileK = 8
+
+  /** `curate_chunk_overlap`'s window and stride in tokens. */
+  private val ChunkWin = 32
+  private val ChunkStride = 16
+
+  /** The context window of the packing rows, in tokens. */
+  private val PackCtx = 512L
+
+  /** `curate_token_budget`'s per-source token budget. */
+  private val Budget = 20000L
+
+  /** The per-source running token count in the `salt` hash order —
+    * (source, doc_id, n_tokens, cum_tokens) — shared by the budget and
+    * packing rows; [[sourceCumSql]] is its oracle. */
+  private def sourceCum(s: SparkSession, d: String, salt: String): DataFrame =
+    PrefixSum.hashOrderedRunningSum(docTokens(s, d),
+      PortableHash.salted(col("doc_id"), salt), Seq("source"),
+      Seq(col("doc_id")), "n_tokens", "cum_tokens")
+
+  /** Oracle CTEs of [[sourceCum]]: `c` holds the running count. */
+  private def sourceCumSql(salt: String): String =
+    s"""WITH t AS (
+       |  SELECT source, doc_id,
+       |    CAST(len(${tokens("text")}) AS BIGINT) AS n_tokens,
+       |    ${hashOrderSql(PortableHash.saltedSql("doc_id", salt))}
+       |  FROM documents),
+       |c AS (
+       |  SELECT source, doc_id, n_tokens,
+       |    ${runningSumSql("n_tokens", "doc_id", "source")} AS cum_tokens
+       |  FROM t)""".stripMargin
 
   lazy val defs: Map[String, QueryDef] = Map(
 
@@ -494,7 +558,6 @@ object DedupQueries {
     "dedup_spans" -> QueryDef(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val spanK = 8
         val base = Tables.documents(s, d).select(
           col("doc_id"), col("source"),
           TextAnalysis.tokens(col("text")).as("w"))
@@ -502,9 +565,9 @@ object DedupQueries {
           .select(col("doc_id"), col("source"),
             posexplode(transform(
               sequence(lit(0),
-                ((size(col("w")) + lit(spanK - 1)) / lit(spanK))
+                ((size(col("w")) + lit(TileK - 1)) / lit(TileK))
                   .cast("int") - 1),
-              i => array_join(slice(col("w"), i * spanK + 1, lit(spanK)), " "))))
+              i => array_join(slice(col("w"), i * TileK + 1, lit(TileK)), " "))))
           .withColumnRenamed("pos", "idx")
           .withColumnRenamed("col", "span")
         val firstWin = Window.partitionBy(md5(col("span")))
@@ -524,8 +587,8 @@ object DedupQueries {
          |  SELECT doc_id, source, ${tokens("text")} AS w FROM documents),
          |spans AS (
          |  SELECT doc_id, source, i - 1 AS idx,
-         |    array_to_string(w[(i-1)*8+1 : i*8], ' ') AS span
-         |  FROM base, UNNEST(generate_series(1, (len(w) + 7) // 8)) AS t(i)),
+         |    array_to_string(w[(i-1)*$TileK+1 : i*$TileK], ' ') AS span
+         |  FROM base, UNNEST(generate_series(1, (len(w) + ${TileK - 1}) // $TileK)) AS t(i)),
          |flagged AS (
          |  SELECT *, ROW_NUMBER() OVER (
          |    PARTITION BY span ORDER BY doc_id, idx) AS rn
@@ -563,17 +626,7 @@ object DedupQueries {
       s"""WITH $substringCtes,
          |ssiv0 AS (SELECT DISTINCT doc_b AS doc_id, b_start AS s,
          |    b_start + span_toks - 1 AS e FROM sspan),
-         |ssivw AS (SELECT doc_id, s, e, max(e) OVER (
-         |    PARTITION BY doc_id ORDER BY s, e
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-         |  FROM ssiv0),
-         |ssivg AS (SELECT doc_id, s, e,
-         |    sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-         |      OVER (PARTITION BY doc_id ORDER BY s, e
-         |        ROWS UNBOUNDED PRECEDING) AS grp
-         |  FROM ssivw),
-         |ssivm AS (SELECT doc_id, min(s) AS ms, max(e) AS me
-         |  FROM ssivg GROUP BY doc_id, grp),
+         |${intervalMergeSql("ssiv")},
          |sspos AS (SELECT doc_id, u.i AS pos, toks[u.i] AS tok,
          |    len(toks) AS n_toks
          |  FROM sst, LATERAL unnest(range(1, len(toks) + 1)) AS u(i)),
@@ -607,15 +660,9 @@ object DedupQueries {
     // decontaminated train corpus per source.
     "curate_substring_decontam" -> QueryDef(
       (s, d) => {
-        import graft.functions.PortableHash
-        def split(c: org.apache.spark.sql.Column) = {
-          val b = PortableHash.hash60(
-            concat(c.cast("string"), lit("|split"))) % 100
-          when(b < 80, "train").when(b < 90, "val").otherwise("test")
-        }
         val spans = substringSpans(s, d)
-          .withColumn("split_a", split(col("doc_a")))
-          .withColumn("split_b", split(col("doc_b")))
+          .withColumn("split_a", HashSplit.label(col("doc_a")))
+          .withColumn("split_b", HashSplit.label(col("doc_b")))
         // spans-shaped frame whose (doc_b, b_start) is ALWAYS the
         // train side of a train×test pair — both pair orientations
         val leak = spans
@@ -626,7 +673,7 @@ object DedupQueries {
             .filter(col("split_a") === "test" && col("split_b") === "train")
             .select(col("doc_b"), col("b_start"), col("span_toks")))
         val train = Tables.documents(s, d)
-          .filter(split(col("doc_id")) === "train")
+          .filter(HashSplit.label(col("doc_id")) === "train")
         graft.operators.SpanDedup.stripSpans(train, "doc_id", "text", leak)
           .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
             Seq("doc_id"))
@@ -635,61 +682,44 @@ object DedupQueries {
             sum(col("n_toks")).as("n_tokens"),
             sum(col("n_removed")).as("n_removed"),
             count(when(col("n_removed") > 0, 1)).as("n_docs_hit"))
-      }, {
-        def bkt(e: String) =
-          s"(${graft.functions.PortableHash.hash60Sql(
-            s"CAST($e AS VARCHAR) || '|split'")} % 100)"
-        def splitOf(e: String) =
-          s"CASE WHEN ${bkt(e)} < 80 THEN 'train' " +
-            s"WHEN ${bkt(e)} < 90 THEN 'val' ELSE 'test' END"
-        s"""WITH $substringCtes,
-           |sdsp AS (SELECT *, ${splitOf("doc_a")} AS split_a,
-           |    ${splitOf("doc_b")} AS split_b FROM sspan),
-           |sdiv0 AS (
-           |  SELECT DISTINCT doc_id, s, e FROM (
-           |    SELECT doc_a AS doc_id, a_start AS s,
-           |      a_start + span_toks - 1 AS e
-           |    FROM sdsp WHERE split_a = 'train' AND split_b = 'test'
-           |    UNION ALL
-           |    SELECT doc_b AS doc_id, b_start AS s,
-           |      b_start + span_toks - 1 AS e
-           |    FROM sdsp WHERE split_a = 'test' AND split_b = 'train')),
-           |sdivw AS (SELECT doc_id, s, e, max(e) OVER (
-           |    PARTITION BY doc_id ORDER BY s, e
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-           |  FROM sdiv0),
-           |sdivg AS (SELECT doc_id, s, e,
-           |    sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-           |      OVER (PARTITION BY doc_id ORDER BY s, e
-           |        ROWS UNBOUNDED PRECEDING) AS grp
-           |  FROM sdivw),
-           |sdivm AS (SELECT doc_id, min(s) AS ms, max(e) AS me
-           |  FROM sdivg GROUP BY doc_id, grp),
-           |sdpos AS (SELECT t.doc_id, u.i AS pos
-           |  FROM sst t, LATERAL unnest(range(1, len(toks) + 1)) AS u(i)
-           |  WHERE ${splitOf("t.doc_id")} = 'train'),
-           |sdcov AS (SELECT DISTINCT p.doc_id, p.pos
-           |  FROM sdpos p JOIN sdivm v
-           |  ON p.doc_id = v.doc_id AND p.pos BETWEEN v.ms AND v.me),
-           |sdrm AS (SELECT doc_id, count(*) AS n_rm
-           |  FROM sdcov GROUP BY doc_id),
-           |-- stats from sst (LEFT JOIN), not from the position frame:
-           |-- a ZERO-token train document enumerates no positions but
-           |-- must still count toward its source's n_docs, as Spark's
-           |-- stripSpans output does
-           |sdstat AS (
-           |  SELECT t.doc_id, len(t.toks) AS n_toks,
-           |    COALESCE(r.n_rm, 0) AS n_rm
-           |  FROM sst t LEFT JOIN sdrm r ON t.doc_id = r.doc_id
-           |  WHERE ${splitOf("t.doc_id")} = 'train')
-           |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(st.n_toks) AS BIGINT) AS n_tokens,
-           |  CAST(sum(st.n_rm) AS BIGINT) AS n_removed,
-           |  CAST(count(CASE WHEN st.n_rm > 0 THEN 1 END) AS BIGINT)
-           |    AS n_docs_hit
-           |FROM sdstat st JOIN documents d ON d.doc_id = st.doc_id
-           |GROUP BY d.source""".stripMargin
-      }),
+      },
+      s"""WITH $substringCtes,
+         |sdsp AS (SELECT *, ${HashSplit.labelSql("doc_a")} AS split_a,
+         |    ${HashSplit.labelSql("doc_b")} AS split_b FROM sspan),
+         |sdiv0 AS (
+         |  SELECT DISTINCT doc_id, s, e FROM (
+         |    SELECT doc_a AS doc_id, a_start AS s,
+         |      a_start + span_toks - 1 AS e
+         |    FROM sdsp WHERE split_a = 'train' AND split_b = 'test'
+         |    UNION ALL
+         |    SELECT doc_b AS doc_id, b_start AS s,
+         |      b_start + span_toks - 1 AS e
+         |    FROM sdsp WHERE split_a = 'test' AND split_b = 'train')),
+         |${intervalMergeSql("sdiv")},
+         |sdpos AS (SELECT t.doc_id, u.i AS pos
+         |  FROM sst t, LATERAL unnest(range(1, len(toks) + 1)) AS u(i)
+         |  WHERE ${HashSplit.labelSql("t.doc_id")} = 'train'),
+         |sdcov AS (SELECT DISTINCT p.doc_id, p.pos
+         |  FROM sdpos p JOIN sdivm v
+         |  ON p.doc_id = v.doc_id AND p.pos BETWEEN v.ms AND v.me),
+         |sdrm AS (SELECT doc_id, count(*) AS n_rm
+         |  FROM sdcov GROUP BY doc_id),
+         |-- stats from sst (LEFT JOIN), not from the position frame:
+         |-- a ZERO-token train document enumerates no positions but
+         |-- must still count toward its source's n_docs, as Spark's
+         |-- stripSpans output does
+         |sdstat AS (
+         |  SELECT t.doc_id, len(t.toks) AS n_toks,
+         |    COALESCE(r.n_rm, 0) AS n_rm
+         |  FROM sst t LEFT JOIN sdrm r ON t.doc_id = r.doc_id
+         |  WHERE ${HashSplit.labelSql("t.doc_id")} = 'train')
+         |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(st.n_toks) AS BIGINT) AS n_tokens,
+         |  CAST(sum(st.n_rm) AS BIGINT) AS n_removed,
+         |  CAST(count(CASE WHEN st.n_rm > 0 THEN 1 END) AS BIGINT)
+         |    AS n_docs_hit
+         |FROM sdstat st JOIN documents d ON d.doc_id = st.doc_id
+         |GROUP BY d.source""".stripMargin),
 
     // MinHash + LSH banding near-dup: map-only signatures, equi-join on
     // band keys, exact Jaccard verification on candidates only — over
@@ -703,12 +733,8 @@ object DedupQueries {
     // pinned by PlanSpec against the un-memoized operator).
     "dedup_minhash_pairs" -> QueryDef(
       (s, d) => nearDupPairs(s, d),
-      s"""WITH ${minhashCtes(1, "doc_id >= 0", 48)}
-         |SELECT c.a, c.b, ${jaccard("sa.__sh", "sb.__sh")} AS jaccard
-         |FROM cand c
-         |JOIN sh sa ON sa.__id = c.a
-         |JOIN sh sb ON sb.__id = c.b
-         |WHERE ${jaccard("sa.__sh", "sb.__sh")} >= 0.9""".stripMargin),
+      s"""WITH $nearDupCtes
+         |${verifiedSql(withJaccard = true, "")}""".stripMargin),
 
     // SimHash fingerprints: one 16-bit signature per document, map-only.
     "dedup_simhash" -> QueryDef(
@@ -732,8 +758,7 @@ object DedupQueries {
         "doc_id", "source", "sh2", band = 32, cap = 64, threshold = 0.08),
       s"""WITH sh AS (
          |  SELECT doc_id, source,
-         |    list_transform(${shingles(tokens("text"), 2)},
-         |      s -> ${graft.functions.PortableHash.hash60Sql("s")}) AS sh2
+         |    ${hashedShinglesSql(2)} AS sh2
          |  FROM documents WHERE doc_id % 2 = 0),
          |blk AS (
          |  SELECT *, concat_ws(':', source, len(sh2) // 32) AS b FROM sh),
@@ -821,16 +846,14 @@ object DedupQueries {
       },
       s"""WITH sl AS (
          |  SELECT doc_id AS id,
-         |    list_transform(${shingles(tokens("text"), 1)},
-         |      s -> ${graft.functions.PortableHash.hash60Sql("s")}) AS sh
+         |    ${hashedShinglesSql(1)} AS sh
          |  FROM documents WHERE doc_id % 4 = 0),
          |truth AS (
          |  SELECT p.id AS a, q.id AS b
          |  FROM sl p JOIN sl q ON p.id < q.id
          |  WHERE ${jaccard("p.sh", "q.sh")} >= 0.9),
          |signedsl AS (
-         |  SELECT id, ${(0 until K).map(i => s"${minhash("sh", i)} AS s$i")
-        .mkString(", ")} FROM sl),
+         |  SELECT id, ${sigsSql("sh")} FROM sl),
          |$bandSweepCtes
          |SELECT bands, rows_per_band, n_truth, n_cand, n_hit,
          |  n_hit / n_cand AS prec, n_hit / n_truth AS recall
@@ -845,18 +868,7 @@ object DedupQueries {
     // capped candidate graph.
     "dedup_components" -> QueryDef(
       (s, d) => nearDupLabels(s, d),
-      s"""WITH RECURSIVE ${minhashCtes(1, "doc_id >= 0", 48)},
-         |edges AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sh sa ON sa.__id = c.a
-         |  JOIN sh sb ON sb.__id = c.b
-         |  WHERE ${jaccard("sa.__sh", "sb.__sh")} >= 0.9),
-         |sym AS (SELECT a AS src, b AS dst FROM edges
-         |        UNION SELECT b, a FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src)
+      s"""WITH RECURSIVE $nearDupReachSql
          |SELECT src AS node, least(src, min(dst)) AS label
          |FROM reach GROUP BY src""".stripMargin),
 
@@ -886,21 +898,7 @@ object DedupQueries {
             col("n_clusters").cast("long").as("n_clusters"),
             (col("cluster_size") * col("n_clusters")).cast("long").as("n_docs"))
       },
-      s"""WITH RECURSIVE ${minhashCtes(1, "doc_id >= 0", 48)},
-         |edges AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sh sa ON sa.__id = c.a
-         |  JOIN sh sb ON sb.__id = c.b
-         |  WHERE ${jaccard("sa.__sh", "sb.__sh")} >= 0.9),
-         |sym AS (SELECT a AS src, b AS dst FROM edges
-         |        UNION SELECT b, a FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-         |labels AS (
-         |  SELECT src AS node, least(src, min(dst)) AS label
-         |  FROM reach GROUP BY src),
+      s"""WITH RECURSIVE $nearDupLabelsSql,
          |cl AS (
          |  SELECT label, COUNT(*) AS cluster_size FROM labels GROUP BY label),
          |multi AS (
@@ -931,7 +929,6 @@ object DedupQueries {
     "curate_scorecard" -> QueryDef(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        import graft.operators.TextAnalysis
         val base = Tables.documents(s, d).select(
           col("source"), col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok"),
@@ -970,21 +967,7 @@ object DedupQueries {
               col("n_docs").cast("double")).as("neardup_rate"),
             col("dominant_lang"))
       },
-      s"""WITH RECURSIVE ${minhashCtes(1, "doc_id >= 0", 48)},
-         |edges AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sh sa ON sa.__id = c.a
-         |  JOIN sh sb ON sb.__id = c.b
-         |  WHERE ${jaccard("sa.__sh", "sb.__sh")} >= 0.9),
-         |sym AS (SELECT a AS src, b AS dst FROM edges
-         |        UNION SELECT b, a FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-         |labels AS (
-         |  SELECT src AS node, least(src, min(dst)) AS label
-         |  FROM reach GROUP BY src),
+      s"""WITH RECURSIVE $nearDupLabelsSql,
          |base AS (
          |  SELECT source, doc_id,
          |    CAST(len(${tokens("text")}) AS BIGINT) AS n_tok,
@@ -1037,7 +1020,7 @@ object DedupQueries {
         val docs = Tables.documents(s, d)
         val labels = nearDupLabels(s, d)
         val quality = docs.select(col("doc_id"),
-          graft.operators.TextAnalysis.qualityScore(col("text")).as("quality"))
+          TextAnalysis.qualityScore(col("text")).as("quality"))
         val members = labels
           .join(quality, labels("node") === quality("doc_id"))
           .select(col("label"), col("node"), col("quality"))
@@ -1051,21 +1034,7 @@ object DedupQueries {
           .select(col("label"), col("n_members"),
             col("keeper_id"), col("keeper_quality"))
       },
-      s"""WITH RECURSIVE ${minhashCtes(1, "doc_id >= 0", 48)},
-         |edges AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sh sa ON sa.__id = c.a
-         |  JOIN sh sb ON sb.__id = c.b
-         |  WHERE ${jaccard("sa.__sh", "sb.__sh")} >= 0.9),
-         |sym AS (SELECT a AS src, b AS dst FROM edges
-         |        UNION SELECT b, a FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM sym
-         |  UNION
-         |  SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-         |labels AS (
-         |  SELECT src AS node, least(src, min(dst)) AS label
-         |  FROM reach GROUP BY src),
+      s"""WITH RECURSIVE $nearDupLabelsSql,
          |q AS (
          |  SELECT doc_id,
          |    round((
@@ -1103,8 +1072,7 @@ object DedupQueries {
           "doc_id", "text", n = 3, minShared = 3)
       },
       s"""WITH sh AS (
-         |  SELECT doc_id, unnest(list_transform(${shingles(tokens("text"), 3)},
-         |    s -> ${graft.functions.PortableHash.hash60Sql("s")})) AS h
+         |  SELECT doc_id, unnest(${hashedShinglesSql(3, "\n    ")}) AS h
          |  FROM documents),
          |b AS (SELECT DISTINCT h FROM sh WHERE doc_id % 50 = 0),
          |t AS (SELECT doc_id, h FROM sh WHERE doc_id % 50 <> 0)
@@ -1120,8 +1088,8 @@ object DedupQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val gated = docs.filter(
-          graft.operators.TextAnalysis.langId(col("text")) === "en" &&
-            graft.operators.TextAnalysis.qualityScore(col("text")) >= 0.5)
+          TextAnalysis.langId(col("text")) === "en" &&
+            TextAnalysis.qualityScore(col("text")) >= 0.5)
         // keep-first-per-digest via one window pass (single shuffle on
         // the digest) instead of agg + semi-join, which would compute
         // the gated subtree twice and shuffle twice.
@@ -1132,10 +1100,10 @@ object DedupQueries {
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       }, {
         val toks = s"${tokens("text")}"
-        val scores = graft.operators.TextAnalysis.langMarkers.map { case (l, ms) =>
+        val scores = TextAnalysis.langMarkers.map { case (l, ms) =>
           s"len(list_filter(w, t -> list_contains(${ms.map(m => s"'$m'").mkString("[", ", ", "]")}, t))) AS s_$l"
         }.mkString(", ")
-        val langs = graft.operators.TextAnalysis.langMarkers.map(_._1)
+        val langs = TextAnalysis.langMarkers.map(_._1)
         val best = s"greatest(${langs.map(l => s"s_$l").mkString(", ")})"
         val pick = langs.map(l => s"WHEN s_$l = $best THEN '$l'").mkString(" ")
         val qual =
@@ -1177,8 +1145,7 @@ object DedupQueries {
         "doc_id", "sh2", threshold = 0.8),
       s"""WITH sh AS (
          |  SELECT doc_id, list_sort(list_distinct(
-         |    list_transform(${shingles(tokens("text"), 2)},
-         |      s -> ${graft.functions.PortableHash.hash60Sql("s")}))) AS sh2
+         |    ${hashedShinglesSql(2)})) AS sh2
          |  FROM documents WHERE doc_id % 2 = 0),
          |sized AS (SELECT doc_id, sh2, len(sh2) AS sz FROM sh),
          |pref AS (
@@ -1206,38 +1173,12 @@ object DedupQueries {
     // flat window, and the hash-match proves the distributed scan equal
     // to the sequential one.
     "curate_token_budget" -> QueryDef(
-      (s, d) => {
-        import graft.functions.PortableHash
-        import graft.operators.{PrefixSum, TextAnalysis}
-        val budget = 20000L
-        val buckets = 64
-        val h = PortableHash.hash60(
-          concat(col("doc_id").cast("string"), lit("|budget")))
-        val base = Tables.documents(s, d).select(
-          col("source"), col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          (h % buckets).as("bkt"), h.as("ord"))
-        PrefixSum.bucketedRunningSum(base, Seq("source"), "bkt",
-            Seq(col("ord"), col("doc_id")), "n_tokens", "cum_tokens")
-          .filter(col("cum_tokens") - col("n_tokens") < budget)
-          .select(col("source"), col("doc_id"), col("n_tokens"), col("cum_tokens"))
-      }, {
-        import graft.functions.PortableHash
-        val hSql = PortableHash.hash60Sql("CAST(doc_id AS VARCHAR) || '|budget'")
-        s"""WITH t AS (
-           |  SELECT source, doc_id,
-           |    CAST(len(${OracleSql.tokens("text")}) AS BIGINT) AS n_tokens,
-           |    $hSql % 64 AS bkt, $hSql AS ord
-           |  FROM documents),
-           |c AS (
-           |  SELECT source, doc_id, n_tokens,
-           |    CAST(SUM(n_tokens) OVER (
-           |      PARTITION BY source ORDER BY bkt, ord, doc_id
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-           |  FROM t)
-           |SELECT source, doc_id, n_tokens, cum_tokens FROM c
-           |WHERE cum_tokens - n_tokens < 20000""".stripMargin
-      }),
+      (s, d) => sourceCum(s, d, "|budget")
+        .filter(col("cum_tokens") - col("n_tokens") < Budget)
+        .select(col("source"), col("doc_id"), col("n_tokens"), col("cum_tokens")),
+      s"""${sourceCumSql("|budget")}
+         |SELECT source, doc_id, n_tokens, cum_tokens FROM c
+         |WHERE cum_tokens - n_tokens < $Budget""".stripMargin),
 
     // Deterministic train/val/test split — the other half of the
     // training-data recipe: every document gets a STABLE split
@@ -1247,27 +1188,13 @@ object DedupQueries {
     // Map-only assignment + one tiny (source × split) manifest
     // aggregate; the audit artifact a 100 TB curation run ships with.
     "curate_split" -> QueryDef(
-      (s, d) => {
-        import graft.functions.PortableHash
-        val bucket = PortableHash.hash60(
-          concat(col("doc_id").cast("string"), lit("|split"))) % 100
-        val split = when(bucket < 80, "train")
-          .when(bucket < 90, "val").otherwise("test")
-        Tables.documents(s, d)
-          .groupBy(col("source"), split.as("split"))
-          .agg(count(lit(1)).as("n_docs"),
-            min(col("doc_id")).as("min_doc_id"))
-      }, {
-        import graft.functions.PortableHash
-        val bucketSql =
-          s"(${PortableHash.hash60Sql("CAST(doc_id AS VARCHAR) || '|split'")} % 100)"
-        s"""SELECT source,
-           |  CASE WHEN $bucketSql < 80 THEN 'train'
-           |       WHEN $bucketSql < 90 THEN 'val'
-           |       ELSE 'test' END AS split,
-           |  COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
-           |FROM documents GROUP BY 1, 2""".stripMargin
-      }),
+      (s, d) => Tables.documents(s, d)
+        .groupBy(col("source"), HashSplit.label(col("doc_id")).as("split"))
+        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc_id")),
+      s"""SELECT source,
+         |  ${HashSplit.labelSql("doc_id", CaseLines)} AS split,
+         |  COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
+         |FROM documents GROUP BY 1, 2""".stripMargin),
 
     // Split decontamination — the step BETWEEN curate_split and
     // training: a train-split document that is a near-duplicate of any
@@ -1282,47 +1209,30 @@ object DedupQueries {
     // (tiny vs the corpus) and anti-joins against train in one pass.
     "curate_decontaminate" -> QueryDef(
       (s, d) => {
-        import graft.functions.PortableHash
-        def bucket(idc: org.apache.spark.sql.Column) =
-          PortableHash.hash60(
-            concat(idc.cast("string"), lit("|split"))) % 100
-        val pairs = nearDupPairs(s, d)
         // classify each (a,b) pair in ONE pass over the SHARED pair
         // frame (recomputing the MinHash pipeline here would run the
         // corpus family's most expensive subtree a second time —
         // PlanSpec pins the checkpoint-scan shape): a pair is
         // train-side t / holdout-side h or irrelevant, decided by pure
         // arithmetic on the endpoint ids
-        val ba = bucket(col("a"))
-        val bb = bucket(col("b"))
-        pairs
-          .filter((ba < 80 && bb >= 80) || (ba >= 80 && bb < 80))
-          .select(when(ba < 80, col("a")).otherwise(col("b")).as("t"),
-            when(ba < 80, col("b")).otherwise(col("a")).as("h"),
-            col("jaccard"))
+        val (a, b) = (col("a"), col("b"))
+        nearDupPairs(s, d)
+          .filter(HashSplit.straddles(a, b))
+          .select(HashSplit.trainEnd(a, b).as("t"),
+            HashSplit.heldOutEnd(a, b).as("h"), col("jaccard"))
           .groupBy(col("t").as("train_doc_id"))
           .agg(count(lit(1)).as("n_holdout_matches"),
             max(col("jaccard")).as("max_jaccard"),
             min(col("h")).as("first_holdout_id"))
-      }, {
-        import graft.functions.PortableHash
-        def bucketSql(e: String) =
-          s"(${PortableHash.hash60Sql(s"CAST($e AS VARCHAR) || '|split'")} % 100)"
-        s"""WITH ${minhashCtes(1, "doc_id >= 0", 48)},
-           |edges AS (
-           |  SELECT c.a, c.b, ${jaccard("sa.__sh", "sb.__sh")} AS jaccard
-           |  FROM cand c
-           |  JOIN sh sa ON sa.__id = c.a
-           |  JOIN sh sb ON sb.__id = c.b
-           |  WHERE ${jaccard("sa.__sh", "sb.__sh")} >= 0.9),
-           |sym AS (SELECT a AS t, b AS h, jaccard FROM edges
-           |        UNION ALL SELECT b, a, jaccard FROM edges)
-           |SELECT t AS train_doc_id, COUNT(*) AS n_holdout_matches,
-           |  MAX(jaccard) AS max_jaccard, MIN(h) AS first_holdout_id
-           |FROM sym
-           |WHERE ${bucketSql("t")} < 80 AND ${bucketSql("h")} >= 80
-           |GROUP BY t""".stripMargin
-      }),
+      },
+      s"""WITH ${nearDupEdgesSql(withJaccard = true)},
+         |sym AS (SELECT a AS t, b AS h, jaccard FROM edges
+         |        UNION ALL SELECT b, a, jaccard FROM edges)
+         |SELECT t AS train_doc_id, COUNT(*) AS n_holdout_matches,
+         |  MAX(jaccard) AS max_jaccard, MIN(h) AS first_holdout_id
+         |FROM sym
+         |WHERE ${HashSplit.isTrainSql("t")} AND ${HashSplit.isHeldOutSql("h")}
+         |GROUP BY t""".stripMargin),
 
     // Sketch-based decontamination PRE-CHECK — what a 100 TB pipeline
     // runs BEFORE curate_decontaminate's candidate join: per-split KMV
@@ -1346,19 +1256,16 @@ object DedupQueries {
     // aggregates.
     "curate_kmv_decontam" -> QueryDef(
       (s, d) => {
-        import graft.functions.PortableHash
         // the sketch half IS the shared kernel the streaming twin runs
         // (graft.operators.Sketch.kmvDecontam — the serve-twin doctrine,
         // so batch row and per-micro-batch monitor can never drift);
         // the exact sides exist only to GRADE it (corpus_hll_card
         // doctrine) and stay batch-only by nature.
-        val sk = graft.operators.Sketch.kmvDecontam(Tables.documents(s, d))
-        val bucket = PortableHash.hash60(
-          concat(col("doc_id").cast("string"), lit("|split"))) % 100
+        val sk = Sketch.kmvDecontam(Tables.documents(s, d))
         val ex = Tables.documents(s, d)
-          .select((bucket < 80).as("is_train"),
-            explode(Dedup.shingles(col("text"),
-              graft.operators.Sketch.DecontamShingleN)).as("sh"))
+          .select(HashSplit.isTrain(col("doc_id")).as("is_train"),
+            explode(Dedup.shingles(col("text"), Sketch.DecontamShingleN))
+              .as("sh"))
           .groupBy(col("sh"))
           .agg(max(when(col("is_train"), 1L).otherwise(0L)).as("in_tr"),
             max(when(!col("is_train"), 1L).otherwise(0L)).as("in_ho"))
@@ -1371,21 +1278,19 @@ object DedupQueries {
             expr("exact_inter * 10000 DIV exact_union").as("jac_exact_bp"),
             col("needs_scan"))
       }, {
-        import graft.functions.PortableHash
-        val bucketSql =
-          s"(${PortableHash.hash60Sql("CAST(doc_id AS VARCHAR) || '|split'")} % 100)"
+        val k = Sketch.DecontamK
         s"""WITH t AS (
-           |  SELECT $bucketSql < 80 AS is_train,
-           |    unnest(${shingles(tokens("text"), 8)}) AS tok
+           |  SELECT ${HashSplit.isTrainSql("doc_id")} AS is_train,
+           |    unnest(${shingles(tokens("text"), Sketch.DecontamShingleN)}) AS tok
            |  FROM documents),
            |hh AS (SELECT is_train, ${PortableHash.hash60Sql("tok")} AS h
            |       FROM t),
            |ma AS (SELECT h FROM (SELECT DISTINCT h FROM hh WHERE is_train)
-           |       ORDER BY h LIMIT 1024),
+           |       ORDER BY h LIMIT $k),
            |mb AS (SELECT h FROM (SELECT DISTINCT h FROM hh WHERE NOT is_train)
-           |       ORDER BY h LIMIT 1024),
+           |       ORDER BY h LIMIT $k),
            |mm AS (SELECT h FROM (SELECT h FROM ma UNION SELECT h FROM mb)
-           |       ORDER BY h LIMIT 1024),
+           |       ORDER BY h LIMIT $k),
            |sk AS (
            |  SELECT CAST((SELECT COUNT(*) FROM mm) AS BIGINT) AS k_m,
            |    CAST((SELECT COUNT(*) FROM mm
@@ -1425,46 +1330,20 @@ object DedupQueries {
     // `straddles` marks docs split across a window boundary (the
     // packing loss a recipe reports).
     "curate_pack_chunks" -> QueryDef(
-      (s, d) => {
-        import graft.functions.PortableHash
-        import graft.operators.{PrefixSum, TextAnalysis}
-        val ctx = 512L
-        val buckets = 64
-        val h = PortableHash.hash60(
-          concat(col("doc_id").cast("string"), lit("|pack")))
-        val base = Tables.documents(s, d).select(
-          col("source"), col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          (h % buckets).as("bkt"), h.as("ord"))
-        PrefixSum.bucketedRunningSum(base, Seq("source"), "bkt",
-            Seq(col("ord"), col("doc_id")), "n_tokens", "cum_tokens")
-          .withColumn("first_chunk",
-            expr(s"(cum_tokens - n_tokens) div $ctx"))
-          .withColumn("last_chunk", expr(s"(cum_tokens - 1) div $ctx"))
-          .select(col("source"), col("doc_id"), col("n_tokens"),
-            col("first_chunk"), col("last_chunk"),
-            (col("first_chunk") =!= col("last_chunk")).as("straddles"))
-      }, {
-        import graft.functions.PortableHash
-        val hSql = PortableHash.hash60Sql("CAST(doc_id AS VARCHAR) || '|pack'")
-        s"""WITH t AS (
-           |  SELECT source, doc_id,
-           |    CAST(len(${tokens("text")}) AS BIGINT) AS n_tokens,
-           |    $hSql % 64 AS bkt, $hSql AS ord
-           |  FROM documents),
-           |c AS (
-           |  SELECT source, doc_id, n_tokens,
-           |    CAST(SUM(n_tokens) OVER (
-           |      PARTITION BY source ORDER BY bkt, ord, doc_id
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-           |  FROM t)
-           |SELECT source, doc_id, n_tokens,
-           |  (cum_tokens - n_tokens) // 512 AS first_chunk,
-           |  (cum_tokens - 1) // 512 AS last_chunk,
-           |  (cum_tokens - n_tokens) // 512 <> (cum_tokens - 1) // 512
-           |    AS straddles
-           |FROM c""".stripMargin
-      }),
+      (s, d) => sourceCum(s, d, "|pack")
+        .withColumn("first_chunk",
+          expr(s"(cum_tokens - n_tokens) div $PackCtx"))
+        .withColumn("last_chunk", expr(s"(cum_tokens - 1) div $PackCtx"))
+        .select(col("source"), col("doc_id"), col("n_tokens"),
+          col("first_chunk"), col("last_chunk"),
+          (col("first_chunk") =!= col("last_chunk")).as("straddles")),
+      s"""${sourceCumSql("|pack")}
+         |SELECT source, doc_id, n_tokens,
+         |  (cum_tokens - n_tokens) // $PackCtx AS first_chunk,
+         |  (cum_tokens - 1) // $PackCtx AS last_chunk,
+         |  (cum_tokens - n_tokens) // $PackCtx <> (cum_tokens - 1) // $PackCtx
+         |    AS straddles
+         |FROM c""".stripMargin),
 
     // Sliding-window chunking with overlap — the long-context prep
     // step: windows of 32 tokens at stride 16, so every token pair
@@ -1477,15 +1356,13 @@ object DedupQueries {
     // and dedup_spans (disjoint-span dedup) as the third chunking form.
     "curate_chunk_overlap" -> QueryDef(
       (s, d) => {
-        val win = 32
-        val stride = 16
         val base = Tables.documents(s, d).select(
           col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-        val nChunks = ((greatest(size(col("toks")) - win, lit(0))
-          + lit(stride - 1)) / lit(stride)).cast("int") + 1
+        val nChunks = ((greatest(size(col("toks")) - ChunkWin, lit(0))
+          + lit(ChunkStride - 1)) / lit(ChunkStride)).cast("int") + 1
         base.select(col("doc_id"),
             posexplode(transform(sequence(lit(0), nChunks - 1),
-              k => slice(col("toks"), k * stride + 1, lit(win)))))
+              k => slice(col("toks"), k * ChunkStride + 1, lit(ChunkWin)))))
           .select(col("doc_id"), col("pos").as("idx"),
             size(col("col")).cast("long").as("n_tok"),
             array_join(col("col"), " ").as("chunk"))
@@ -1494,9 +1371,9 @@ object DedupQueries {
          |  SELECT doc_id, ${tokens("text")} AS w FROM documents),
          |c AS (
          |  SELECT doc_id, i - 1 AS idx,
-         |    w[(i-1)*16+1 : (i-1)*16+32] AS chunk
+         |    w[(i-1)*$ChunkStride+1 : (i-1)*$ChunkStride+$ChunkWin] AS chunk
          |  FROM base, UNNEST(generate_series(1,
-         |    (GREATEST(len(w) - 32, 0) + 15) // 16 + 1)) AS t(i))
+         |    (GREATEST(len(w) - $ChunkWin, 0) + ${ChunkStride - 1}) // $ChunkStride + 1)) AS t(i))
          |SELECT doc_id, idx, CAST(len(chunk) AS BIGINT) AS n_tok,
          |  array_to_string(chunk, ' ') AS chunk
          |FROM c""".stripMargin),
@@ -1517,73 +1394,45 @@ object DedupQueries {
     // compose, not just pass individually.
     "curate_recipe" -> QueryDef(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        import graft.functions.PortableHash
-        import graft.operators.TextAnalysis
-        def bucket(idc: org.apache.spark.sql.Column) =
-          PortableHash.hash60(
-            concat(idc.cast("string"), lit("|split"))) % 100
         // stage 1: per-source top-quartile quality gate
-        val w = Window.partitionBy(col("source"))
-          .orderBy(col("quality").desc, col("doc_id"))
-        val gated = Tables.documents(s, d)
-          .select(col("source"), col("doc_id"),
-            TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-            TextAnalysis.qualityScore(col("text")).as("quality"))
-          .withColumn("qt", ntile(4).over(w))
-          .filter(col("qt") === 1)
+        val gated = TextQueries.topQualityQuartile(Tables.documents(s, d),
+          nTokens)
         // stage 2: cross-split near-dup drop list (train side of any
         // train↔holdout pair) from the SHARED pair frame, applied as
         // an anti-join
-        val pairs = nearDupPairs(s, d)
-        val ba = bucket(col("a"))
-        val bb = bucket(col("b"))
-        val drops = pairs
-          .filter((ba < 80 && bb >= 80) || (ba >= 80 && bb < 80))
-          .select(when(ba < 80, col("a")).otherwise(col("b")).as("doc_id"))
+        val (a, b) = (col("a"), col("b"))
+        val drops = nearDupPairs(s, d)
+          .filter(HashSplit.straddles(a, b))
+          .select(HashSplit.trainEnd(a, b).as("doc_id"))
           .distinct()
         val clean = gated.join(drops, Seq("doc_id"), "left_anti")
         // stage 3: split tag + audit manifest
-        val b = bucket(col("doc_id"))
-        val split = when(b < 80, "train").when(b < 90, "val").otherwise("test")
-        clean.groupBy(col("source"), split.as("split"))
+        clean.groupBy(col("source"), HashSplit.label(col("doc_id")).as("split"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-      }, {
-        import graft.functions.PortableHash
-        def bucketSql(e: String) =
-          s"(${PortableHash.hash60Sql(s"CAST($e AS VARCHAR) || '|split'")} % 100)"
-        s"""WITH ${minhashCtes(1, "doc_id >= 0", 48)},
-           |edges AS (
-           |  SELECT c.a, c.b FROM cand c
-           |  JOIN sh sa ON sa.__id = c.a
-           |  JOIN sh sb ON sb.__id = c.b
-           |  WHERE ${jaccard("sa.__sh", "sb.__sh")} >= 0.9),
-           |drops AS (
-           |  SELECT DISTINCT CASE WHEN ${bucketSql("a")} < 80 THEN a ELSE b END AS doc_id
-           |  FROM edges
-           |  WHERE (${bucketSql("a")} < 80 AND ${bucketSql("b")} >= 80)
-           |     OR (${bucketSql("a")} >= 80 AND ${bucketSql("b")} < 80)),
-           |q AS (
-           |  SELECT source, doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-           |    ${TextQueries.qualitySql} AS quality
-           |  FROM (SELECT source, doc_id, text, ${tokens("text")} AS w
-           |        FROM documents)),
-           |gated AS (
-           |  SELECT source, doc_id, n_tokens FROM (
-           |    SELECT *, ntile(4) OVER (PARTITION BY source
-           |      ORDER BY quality DESC, doc_id) AS qt
-           |    FROM q)
-           |  WHERE qt = 1),
-           |clean AS (
-           |  SELECT g.* FROM gated g
-           |  WHERE g.doc_id NOT IN (SELECT doc_id FROM drops))
-           |SELECT source,
-           |  CASE WHEN ${bucketSql("doc_id")} < 80 THEN 'train'
-           |       WHEN ${bucketSql("doc_id")} < 90 THEN 'val'
-           |       ELSE 'test' END AS split,
-           |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-           |FROM clean GROUP BY 1, 2""".stripMargin
-      }),
+      },
+      s"""WITH ${nearDupEdgesSql(withJaccard = false)},
+         |drops AS (
+         |  SELECT DISTINCT CASE WHEN ${HashSplit.isTrainSql("a")} THEN a ELSE b END AS doc_id
+         |  FROM edges
+         |  WHERE ${HashSplit.straddlesSql("a", "b", "\n     ")}),
+         |q AS (
+         |  SELECT source, doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
+         |    ${TextQueries.qualitySql} AS quality
+         |  FROM (SELECT source, doc_id, text, ${tokens("text")} AS w
+         |        FROM documents)),
+         |gated AS (
+         |  SELECT source, doc_id, n_tokens FROM (
+         |    SELECT *, ntile(4) OVER (PARTITION BY source
+         |      ORDER BY quality DESC, doc_id) AS qt
+         |    FROM q)
+         |  WHERE qt = 1),
+         |clean AS (
+         |  SELECT g.* FROM gated g
+         |  WHERE g.doc_id NOT IN (SELECT doc_id FROM drops))
+         |SELECT source,
+         |  ${HashSplit.labelSql("doc_id", CaseLines)} AS split,
+         |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
+         |FROM clean GROUP BY 1, 2""".stripMargin),
 
     // The FULL curation pipeline — six operator families composed in
     // production order, the capstone of capstones: (1) exact dedup
@@ -1632,13 +1481,8 @@ object DedupQueries {
     // offset, shard) — N writers can stream their slices
     // independently and byte-identically on any cluster.
     "curate_shard_plan" -> QueryDef(
-      (s, d) => graft.operators.ShardExport.shardPlan(
-        Tables.documents(s, d).select(col("source"), col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "doc_id", "n_tokens", nShards = ShardN),
-      s"""WITH ${shardCtes(
-             s"(SELECT source, doc_id, CAST(len(${tokens("text")}) AS BIGINT)" +
-             " AS n_tokens FROM documents)")}
+      (s, d) => docShards(s, d),
+      s"""WITH ${shardCtes(docTokensSql)}
          |SELECT source, doc_id, n_tokens, cum_tokens, shard
          |FROM shp""".stripMargin),
 
@@ -1647,15 +1491,8 @@ object DedupQueries {
     // [start_pos, end_pos] token slice of the interleaved stream —
     // what a 100 TB run ships to the trainer next to the shard files.
     "curate_shard_manifest" -> QueryDef(
-      (s, d) => graft.operators.ShardExport.shardManifest(
-        graft.operators.ShardExport.shardPlan(
-          Tables.documents(s, d).select(col("source"), col("doc_id"),
-            TextAnalysis.tokenCount(col("text")).cast("long")
-              .as("n_tokens")),
-          "doc_id", "n_tokens", nShards = ShardN), "n_tokens"),
-      s"""WITH ${shardCtes(
-             s"(SELECT source, doc_id, CAST(len(${tokens("text")}) AS BIGINT)" +
-             " AS n_tokens FROM documents)")}
+      (s, d) => ShardExport.shardManifest(docShards(s, d), "n_tokens"),
+      s"""WITH ${shardCtes(docTokensSql)}
          |$shardManifestSelect""".stripMargin),
 
     // Chunk-level shard export — the pack → export composition at the
@@ -1670,8 +1507,6 @@ object DedupQueries {
     // tightens to ± one context window.
     "curate_pack_shards" -> QueryDef(
       (s, d) => {
-        import graft.functions.PortableHash
-        val ctx = 512L
         val totals = Tables.documents(s, d)
           .groupBy(col("source"))
           .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long"))
@@ -1679,23 +1514,21 @@ object DedupQueries {
           .filter(col("t") > 0)
         val chunks = totals
           .select(col("source"), col("t"),
-            explode(sequence(lit(0L), expr(s"(t - 1) div $ctx")))
+            explode(sequence(lit(0L), expr(s"(t - 1) div $PackCtx")))
               .as("chunk_id"))
           .select(col("source"),
             PortableHash.hash60(concat(col("source"), lit(":"),
               col("chunk_id").cast("string"))).as("chunk_uid"),
-            least(lit(ctx), col("t") - lit(ctx) * col("chunk_id"))
+            least(lit(PackCtx), col("t") - lit(PackCtx) * col("chunk_id"))
               .cast("long").as("n_tokens"))
           // chunk-space-sized (sources × chunks, kilobytes):
           // checkpointing it makes the per-source totals aggregate run
           // and plan once instead of once per shard-kernel branch
           .localCheckpoint(true)
-        graft.operators.ShardExport.shardManifest(
-          graft.operators.ShardExport.shardPlan(
-            chunks, "chunk_uid", "n_tokens", nShards = ShardN),
+        ShardExport.shardManifest(
+          ShardExport.shardPlan(chunks, "chunk_uid", "n_tokens", nShards = ShardN),
           "n_tokens")
       }, {
-        import graft.functions.PortableHash
         val uidSql = PortableHash.hash60Sql(
           "source || ':' || CAST(u.i AS VARCHAR)")
         s"""WITH pct AS (
@@ -1705,8 +1538,8 @@ object DedupQueries {
              tokens("text")})) > 0),
            |pch AS (
            |  SELECT source, $uidSql AS doc_id,
-           |    CAST(LEAST(512, t - 512 * u.i) AS BIGINT) AS n_tokens
-           |  FROM pct, LATERAL unnest(range(0, (t - 1) // 512 + 1))
+           |    CAST(LEAST($PackCtx, t - $PackCtx * u.i) AS BIGINT) AS n_tokens
+           |  FROM pct, LATERAL unnest(range(0, (t - 1) // $PackCtx + 1))
            |    AS u(i)),
            |${shardCtes("pch")}
            |$shardManifestSelect""".stripMargin
@@ -1731,24 +1564,15 @@ object DedupQueries {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("epoch"), col("shard"))
           .orderBy(col("epoch_ord"), col("doc_id"))
-        graft.operators.ShardExport.epochOrder(
-            graft.operators.ShardExport.shardPlan(
-              Tables.documents(s, d).select(col("source"), col("doc_id"),
-                TextAnalysis.tokenCount(col("text")).cast("long")
-                  .as("n_tokens")),
-              "doc_id", "n_tokens", nShards = ShardN),
-            "doc_id", nEpochs = ShardEpochs)
+        ShardExport.epochOrder(docShards(s, d), "doc_id", nEpochs = ShardEpochs)
           .withColumn("rnk", row_number().over(w).cast("long"))
           .filter(col("rnk") <= 3)
           .select(col("epoch"), col("shard"), col("rnk"), col("doc_id"),
             col("n_tokens"))
       }, {
-        import graft.functions.PortableHash
         val eordSql = PortableHash.hash60Sql(
           "CAST(doc_id AS VARCHAR) || '|shard|' || CAST(ep.epoch AS VARCHAR)")
-        s"""WITH ${shardCtes(
-               s"(SELECT source, doc_id, CAST(len(${tokens("text")}) AS BIGINT)" +
-               " AS n_tokens FROM documents)")},
+        s"""WITH ${shardCtes(docTokensSql)},
            |eo AS (
            |  SELECT ep.epoch, shp.shard, shp.doc_id, shp.n_tokens,
            |    row_number() OVER (PARTITION BY ep.epoch, shp.shard
@@ -1768,8 +1592,8 @@ object DedupQueries {
     // one CTE chain off the shared pipeline CTEs — the hash-match
     // proves curation and export compose, not just pass separately.
     "curate_pipeline_shards" -> QueryDef(
-      (s, d) => graft.operators.ShardExport.shardManifest(
-        graft.operators.ShardExport.shardPlan(
+      (s, d) => ShardExport.shardManifest(
+        ShardExport.shardPlan(
           // the admitted-train manifest is the MEMOIZED per-document
           // pipeline checkpoint (r16: this row re-ran the whole
           // six-family chain curate_pipeline_cls had already paid;
@@ -1785,7 +1609,7 @@ object DedupQueries {
          |${shardCtes(
              "(SELECT c.source, c.doc_id, c.n_tokens FROM pclean c" +
              " JOIN psel ON psel.doc_id = c.doc_id" +
-             s" WHERE ${splitBucketSql("c.doc_id")} < 80)")}
+             s" WHERE ${HashSplit.isTrainSql("c.doc_id")})")}
          |$shardManifestSelect""".stripMargin),
 
     // Deterministic weighted source mixing — the training-data recipe
@@ -1797,7 +1621,6 @@ object DedupQueries {
     // the per-source (total, kept, rate) manifest.
     "curate_source_mix" -> QueryDef(
       (s, d) => {
-        import graft.functions.PortableHash
         val rate = PortableHash.hash60(
           concat(col("source"), lit("|rate"))) % 5000 + 2500
         val kept = PortableHash.hash60(
@@ -1807,7 +1630,6 @@ object DedupQueries {
             count(when(kept, 1)).as("n_kept"),
             max(rate).cast("long").as("rate_bps"))
       }, {
-        import graft.functions.PortableHash
         val rateSql =
           s"(${PortableHash.hash60Sql("source || '|rate'")} % 5000 + 2500)"
         val keptSql =
@@ -1838,19 +1660,10 @@ object DedupQueries {
     // all after the counting pass, and resampling by the score is
     // op_pps_sample's prefix-sum kernel downstream.
     "curate_dsir_weights" -> QueryDef(
-      (s, d) => {
-        val rl = dsirWeightTable(s, d)
-          .agg(sort_array(collect_list(struct(col("b"), col("r"))))
-            .as("ws"))
-          .select(transform(col("ws"), x => x.getField("r")).as("rl"))
-        Tables.documents(s, d)
-          .select(col("doc_id"), Dedup.hashedShingles(col("text"), 2).as("gs"))
-          .crossJoin(broadcast(rl))
-          .filter(pmod(col("doc_id"), lit(5)) === 0)
-          .select(col("doc_id"), size(col("gs")).cast("long").as("n_feats"),
-            graft.functions.TextHashFunctions
-              .weightedBucketSum(col("gs"), col("rl")).as("imp_score"))
-      },
+      (s, d) => dsirScoring(s, d, Tables.documents(s, d))
+        .filter(pmod(col("doc_id"), lit(5)) === 0)
+        .select(col("doc_id"), size(col("gs")).cast("long").as("n_feats"),
+          dsirImportance.as("imp_score")),
       s"""WITH $dsirCtes
          |SELECT gb.doc_id, CAST(count(*) AS BIGINT) AS n_feats,
          |  CAST(sum(w.r) AS BIGINT) AS imp_score
@@ -1870,47 +1683,21 @@ object DedupQueries {
     // map-only (weight-array broadcast), cumsummed by the bucketed
     // kernel, and the step-crossing filter is a pure column predicate.
     "curate_dsir_resample" -> QueryDef(
-      (s, d) => {
-        import graft.functions.PortableHash
-        import graft.operators.PrefixSum
-        val rl = dsirWeightTable(s, d)
-          .agg(sort_array(collect_list(struct(col("b"), col("r"))))
-            .as("ws"))
-          .select(transform(col("ws"), x => x.getField("r")).as("rl"))
-        val h = PortableHash.hash60(
-          concat(col("doc_id").cast("string"), lit("|dsir")))
-        val scored = Tables.documents(s, d)
-          .select(col("doc_id"), Dedup.hashedShingles(col("text"), 2).as("gs"))
-          .crossJoin(broadcast(rl))
-          .select(col("doc_id"),
-            graft.functions.TextHashFunctions
-              .weightedBucketSum(col("gs"), col("rl")).as("w"),
-            (h % 64).as("bkt"), h.as("ord"))
-        PrefixSum.bucketedRunningSum(scored, Seq.empty, "bkt",
-            Seq(col("ord"), col("doc_id")), "w", "cum_weight")
-          .filter(expr(s"cum_weight div $DsirStep") >
-            expr(s"(cum_weight - w) div $DsirStep"))
-          .select(col("doc_id"), col("w").as("imp_score"), col("cum_weight"))
-      }, {
-        import graft.functions.PortableHash
-        val hSql = PortableHash.hash60Sql(
-          "CAST(doc_id AS VARCHAR) || '|dsir'")
-        s"""WITH $dsirCtes,
-           |sc AS (
-           |  SELECT gb.doc_id, CAST(sum(w.r) AS BIGINT) AS w
-           |  FROM gb JOIN w USING (b) GROUP BY gb.doc_id),
-           |t AS (
-           |  SELECT doc_id, w, $hSql % 64 AS bkt, $hSql AS ord FROM sc),
-           |c AS (
-           |  SELECT doc_id, w,
-           |    CAST(SUM(w) OVER (
-           |      ORDER BY bkt, ord, doc_id
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_weight
-           |  FROM t)
-           |SELECT doc_id, w AS imp_score, cum_weight
-           |FROM c
-           |WHERE cum_weight // $DsirStep > (cum_weight - w) // $DsirStep""".stripMargin
-      }),
+      (s, d) => dsirResampled(s, d, Tables.documents(s, d), "w", DsirStep)
+        .select(col("doc_id"), col("w").as("imp_score"), col("cum_weight")),
+      s"""WITH $dsirCtes,
+         |sc AS (
+         |  SELECT gb.doc_id, CAST(sum(w.r) AS BIGINT) AS w
+         |  FROM gb JOIN w USING (b) GROUP BY gb.doc_id),
+         |t AS (
+         |  SELECT doc_id, w, ${hashOrderSql(PortableHash.saltedSql("doc_id", "|dsir"))} FROM sc),
+         |c AS (
+         |  SELECT doc_id, w,
+         |    ${runningSumSql("w", "doc_id")} AS cum_weight
+         |  FROM t)
+         |SELECT doc_id, w AS imp_score, cum_weight
+         |FROM c
+         |WHERE cum_weight // $DsirStep > (cum_weight - w) // $DsirStep""".stripMargin),
 
     // Embedding-cosine near-dup: random-hyperplane LSH candidates, exact
     // cosine verification. Vectors quantized to integer-valued doubles so
@@ -1940,8 +1727,7 @@ object DedupQueries {
     * target/background counts, smoothed totals, and the 64-row weight
     * table (`w`) — consumed by both the weight query and the resampler. */
   private def dsirCtes: String = {
-    val hs = s"list_transform(${shingles(tokens("text"), 2)}, " +
-      s"s -> ${graft.functions.PortableHash.hash60Sql("s")})"
+    val hs = hashedShinglesSql(2, " ")
     s"""gb AS (
        |  SELECT doc_id, lang, g0 % 64 AS b
        |  FROM (SELECT doc_id, lang, unnest($hs) AS g0 FROM documents)),
@@ -1965,8 +1751,7 @@ object DedupQueries {
     * rational importance ratios of the target (en) slice vs the full
     * corpus — see `curate_dsir_weights` for the formula and bounds.
     * 64 rows; two corpus count aggregates + a seeded left join. */
-  private[graft] def dsirWeightTable(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+  private[graft] def dsirWeightTable(s: SparkSession, d: String): DataFrame =
     // memoized since r16 — the weight table is a TRAINED artifact (the
     // 64-long grid every serving consumer folds in as plan literals),
     // but each of its four batch consumers re-ran the bigram explosion
@@ -1996,8 +1781,37 @@ object DedupQueries {
   /** The weight table as a 64-long array ordered by bucket — the
     * trained index metadata the STREAMING scorer folds into its plan
     * as literals (the StreamingIndex broadcast-to-writers shape). */
-  private[graft] def dsirWeightArray(s: org.apache.spark.sql.SparkSession,
-      d: String): Seq[Long] =
+  private[graft] def dsirWeightArray(s: SparkSession, d: String): Seq[Long] =
     dsirWeightTable(s, d).collect()
       .sortBy(_.getAs[Long]("b")).map(_.getAs[Long]("r")).toIndexedSeq
+
+  /** `docs`' DSIR scoring frame (doc_id, gs, rl): each document's hashed
+    * distinct 2-grams `gs` beside `rl`, the weight table folded into
+    * one 64-long array ordered by bucket (a 1-row broadcast). */
+  private def dsirScoring(s: SparkSession, d: String,
+      docs: DataFrame): DataFrame = {
+    val rl = dsirWeightTable(s, d)
+      .agg(sort_array(collect_list(struct(col("b"), col("r")))).as("ws"))
+      .select(transform(col("ws"), x => x.getField("r")).as("rl"))
+    docs.select(col("doc_id"), Dedup.hashedShingles(col("text"), 2).as("gs"))
+      .crossJoin(broadcast(rl))
+  }
+
+  /** A document's DSIR importance over [[dsirScoring]]: the exact int64
+    * sum of its 2-grams' bucket weights (map-only, compiled). */
+  private def dsirImportance: Column =
+    graft.functions.TextHashFunctions.weightedBucketSum(col("gs"), col("rl"))
+
+  /** DSIR resampling of `docs`: systematic PPS over their importance
+    * (named `w`), summed in the "|dsir" hash order; a document is kept
+    * when its (cum_weight - w, cum_weight] interval crosses a multiple
+    * of `step`. Rows (doc_id, `w`, cum_weight). */
+  private def dsirResampled(s: SparkSession, d: String, docs: DataFrame,
+      w: String, step: Long): DataFrame =
+    PrefixSum.hashOrderedRunningSum(
+        dsirScoring(s, d, docs).select(col("doc_id"), dsirImportance.as(w)),
+        PortableHash.salted(col("doc_id"), "|dsir"), Seq.empty,
+        Seq(col("doc_id")), w, "cum_weight")
+      .filter(expr(s"cum_weight div $step") >
+        expr(s"(cum_weight - $w) div $step"))
 }

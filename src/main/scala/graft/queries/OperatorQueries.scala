@@ -13,6 +13,10 @@ import graft.operators.{AsOfJoin, RangeJoin}
   */
 object OperatorQueries {
 
+  /** `op_pps_sample`'s systematic step: one row kept per 4,096 units of
+    * running weight. */
+  private val PpsStep = 4096L
+
   private val funnelSql: String =
     """WITH v AS (
       |  SELECT user_id, MIN(ts) AS t_view FROM events
@@ -309,20 +313,16 @@ object OperatorQueries {
       (s, d) => {
         import graft.functions.PortableHash
         import graft.operators.PrefixSum
-        val step = 4096L
-        val buckets = 64
         val h = PortableHash.hash60(concat(
           col("l_orderkey").cast("string"), lit("|"),
           col("l_linenumber").cast("string"), lit("|pps")))
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").cast("long").as("w"),
-          (h % buckets).as("bkt"), h.as("ord"))
-        PrefixSum.bucketedRunningSum(base, Seq.empty, "bkt",
-            Seq(col("ord"), col("l_orderkey"), col("l_linenumber")),
-            "w", "cum_weight")
-          .filter(expr(s"cum_weight div $step") >
-            expr(s"(cum_weight - w) div $step"))
+          col("l_quantity").cast("long").as("w"))
+        PrefixSum.hashOrderedRunningSum(base, h, Seq.empty,
+            Seq(col("l_orderkey"), col("l_linenumber")), "w", "cum_weight")
+          .filter(expr(s"cum_weight div $PpsStep") >
+            expr(s"(cum_weight - w) div $PpsStep"))
           .select(col("l_orderkey"), col("l_linenumber").cast("long")
             .as("l_linenumber"), col("w").as("weight"), col("cum_weight"))
       }, {
@@ -332,17 +332,15 @@ object OperatorQueries {
         s"""WITH t AS (
            |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
            |    CAST(l_quantity AS BIGINT) AS w,
-           |    $hSql % 64 AS bkt, $hSql AS ord
+           |    ${OracleSql.hashOrderSql(hSql)}
            |  FROM lineitem),
            |c AS (
            |  SELECT l_orderkey, l_linenumber, w,
-           |    CAST(SUM(w) OVER (
-           |      ORDER BY bkt, ord, l_orderkey, l_linenumber
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_weight
+           |    ${OracleSql.runningSumSql("w", "l_orderkey, l_linenumber")} AS cum_weight
            |  FROM t)
            |SELECT l_orderkey, l_linenumber, w AS weight, cum_weight
            |FROM c
-           |WHERE cum_weight // 4096 > (cum_weight - w) // 4096""".stripMargin
+           |WHERE cum_weight // $PpsStep > (cum_weight - w) // $PpsStep""".stripMargin
       }),
 
     // Z-order layout: interleave the bits of two clustering dimensions

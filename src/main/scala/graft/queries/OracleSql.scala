@@ -29,6 +29,11 @@ object OracleSql {
         s"i -> array_to_string($w[i:i+${n - 1}], ' '))) " +
         s"ELSE [array_to_string($w, ' ')] END)"
 
+  /** `Dedup.hashedShingles` over the `text` column: the hash60 of each
+    * distinct n-gram. `sep` goes before the lambda. */
+  def hashedShinglesSql(n: Int, sep: String = "\n      "): String =
+    s"list_transform(${shingles(tokens("text"), n)},${sep}s -> ${hash60Sql("s")})"
+
   /** `Dedup.jaccard` of two distinct-list expressions. */
   def jaccard(a: String, b: String): String =
     s"(len(list_intersect($a, $b)) / len(list_distinct($a || $b)))"
@@ -114,4 +119,21 @@ object OracleSql {
       s"(CASE WHEN ${dot(v, hyperplaneLit(t, p, dims), dims)} > 0 " +
         s"THEN ${1L << p} ELSE 0 END)"
     }.mkString("(", " + ", ")")
+
+  /** `PrefixSum.hashOrdered`'s `bkt` and `ord` select items over hash
+    * text `h`. */
+  def hashOrderSql(h: String): String =
+    s"$h % ${graft.operators.PrefixSum.Buckets} AS bkt, $h AS ord"
+
+  /** `PrefixSum.hashOrderedRunningSum` as the flat sequential window its
+    * two-level decomposition must equal: the running SUM of `value` in
+    * (bkt, ord, `ids`) order, per `partBy` group when given. `wrap`
+    * breaks the line after `OVER (`. */
+  def runningSumSql(value: String, ids: String, partBy: String = "",
+      wrap: Boolean = true): String = {
+    val part = if (partBy.isEmpty) "" else s"PARTITION BY $partBy "
+    val lead = if (wrap) "\n      " else ""
+    s"CAST(SUM($value) OVER ($lead${part}ORDER BY bkt, ord, $ids\n" +
+      "      ROWS UNBOUNDED PRECEDING) AS BIGINT)"
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
-import graft.operators.Similarity
+import graft.operators.{HashSplit, Similarity}
 
 /** Similarity-search query surface over the `embeddings` fixture.
   * Vectors are quantized (`round(x*1000)` as integer-valued doubles) so
@@ -1626,16 +1626,12 @@ object SimilarityQueries {
     // within trained cells — Σ|cell|², never |corpus|²); a pair is
     // contaminating when its exact cosine clears the threshold and the
     // two sides land in DIFFERENT split groups under the shared
-    // "|split" hash (train <80 / holdout ≥80 — the same buckets every
+    // HashSplit (train <80 / holdout ≥80 — the same buckets every
     // split consumer uses); the TRAIN side is the drop. Output is the
     // per-cell audit: candidate pairs checked, contaminating pairs,
     // distinct train docs to drop.
     "curate_sem_decontaminate" -> QueryDef(
       (s, d) => {
-        import graft.functions.PortableHash
-        def bucket(idc: org.apache.spark.sql.Column) =
-          PortableHash.hash60(
-            concat(idc.cast("string"), lit("|split"))) % 100
         val m = semAssigned(s, d)
         val pairs = m.as("x").join(m.as("y"),
             col("x.cell_id") === col("y.cell_id") &&
@@ -1644,8 +1640,8 @@ object SimilarityQueries {
             col("x.__id").as("a"), col("y.__id").as("b"),
             (Similarity.cosine(col("x.__v"), col("y.__v")) >= SemTau)
               .as("near"),
-            (bucket(col("x.__id")) < 80).as("ta"),
-            (bucket(col("y.__id")) < 80).as("tb"))
+            HashSplit.isTrain(col("x.__id")).as("ta"),
+            HashSplit.isTrain(col("y.__id")).as("tb"))
           .withColumn("cross", col("ta") =!= col("tb"))
         pairs.groupBy(col("cell_id"))
           .agg(count(when(col("cross"), 1)).as("n_cross_pairs"),
@@ -1655,16 +1651,13 @@ object SimilarityQueries {
               when(col("ta"), col("a")).otherwise(col("b"))))
               .as("n_train_drops"))
       }, {
-        import graft.functions.PortableHash
-        def bucketSql(e: String) =
-          s"(${PortableHash.hash60Sql(s"CAST($e AS VARCHAR) || '|split'")} % 100)"
         s"""WITH e AS (SELECT vec_id, ${quantVec("embedding")} AS v FROM embeddings),
            |$semAsgCtes,
            |pp AS (
            |  SELECT x.cell_id, x.vec_id AS a, y.vec_id AS b,
            |    (${cosine("x.v", "y.v", Dims)} >= $SemTau) AS near,
-           |    (${bucketSql("x.vec_id")} < 80) AS ta,
-           |    (${bucketSql("y.vec_id")} < 80) AS tb
+           |    (${HashSplit.isTrainSql("x.vec_id")}) AS ta,
+           |    (${HashSplit.isTrainSql("y.vec_id")}) AS tb
            |  FROM sasg x JOIN sasg y
            |  ON x.cell_id = y.cell_id AND x.vec_id < y.vec_id)
            |SELECT cell_id,

@@ -34,6 +34,21 @@ object TextQueries {
        |        / greatest(len(w)::DOUBLE, 1.0)) * 4.0, 1.0)
        |  ) / 3.0, 6)""".stripMargin
 
+  /** Each source's top quality quartile of `docs`: rows (source, doc_id,
+    * `cols`..., quality, qt) with qt = 1 of NTILE(4) over the
+    * deterministic (quality DESC, doc_id) order — ties broken by id, so
+    * the admitted set is replay-identical. Shared by
+    * `curate_quality_gate` and the curation capstones. */
+  private[queries] def topQualityQuartile(docs: DataFrame,
+      cols: Column*): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("source"))
+      .orderBy(col("quality").desc, col("doc_id"))
+    docs.select(Seq(col("source"), col("doc_id")) ++ cols :+
+        TextAnalysis.qualityScore(col("text")).as("quality"): _*)
+      .withColumn("qt", ntile(4).over(w))
+      .filter(col("qt") === 1)
+  }
+
   /** Merge rounds for the BPE training/apply pair. */
   private val BpeSteps = 5
 
@@ -1178,17 +1193,8 @@ object TextQueries {
     // against the broadcast cutoffs; the NTILE form is the exactness
     // baseline that gate would be verified against.
     "curate_quality_gate" -> QueryDef(
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("source"))
-          .orderBy(col("quality").desc, col("doc_id"))
-        Tables.documents(s, d)
-          .select(col("source"), col("doc_id"),
-            TextAnalysis.qualityScore(col("text")).as("quality"))
-          .withColumn("qt", ntile(4).over(w))
-          .filter(col("qt") === 1)
-          .select(col("source"), col("doc_id"), col("quality"))
-      },
+      (s, d) => topQualityQuartile(Tables.documents(s, d))
+        .select(col("source"), col("doc_id"), col("quality")),
       s"""WITH q AS (
          |  SELECT source, doc_id, $qualitySql AS quality
          |  FROM (SELECT source, doc_id, text, ${tokens("text")} AS w
@@ -1225,8 +1231,7 @@ object TextQueries {
       (s, d) => Tables.documents(s, d).select(
         col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp")),
       s"""SELECT doc_id,
-         |  list_min(list_transform(${shingles(tokens("text"), 5)},
-         |    s -> ${graft.functions.PortableHash.hash60Sql("s")})) AS fp
+         |  list_min(${hashedShinglesSql(5, "\n    ")}) AS fp
          |FROM documents""".stripMargin),
 
     // Intra-document repetition score: fraction of 3-gram positions that

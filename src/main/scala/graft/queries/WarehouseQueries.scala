@@ -306,8 +306,7 @@ object WarehouseQueries {
         import OracleSql._
         s"""WITH sh AS (
            |  SELECT doc_id, source,
-           |    list_transform(${shingles(tokens("text"), 2)},
-           |      s -> ${graft.functions.PortableHash.hash60Sql("s")}) AS sh2
+           |    ${hashedShinglesSql(2)} AS sh2
            |  FROM documents WHERE doc_id % 3 = 0),
            |capped AS (
            |  SELECT * FROM (

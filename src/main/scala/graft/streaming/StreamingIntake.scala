@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
-import graft.operators.TextAnalysis
+import graft.operators.{HashSplit, TextAnalysis}
 
 /** Composed streaming corpus intake — the streaming counterpart of the
   * batch `curate_recipe` composition proof: TWO stateful operators
@@ -108,11 +108,8 @@ object StreamingIntake {
       .filter(col("quality") > col("qcut") ||
         (col("quality") === col("qcut") && col("doc_id") <= col("dcut")))
     val admitted = StreamingDedup.dedupStreamPreHashed(gated, tsCol, delay)
-    val bucket = PortableHash.hash60(
-      concat(col("doc_id").cast("string"), lit("|split"))) % 100
     admitted.select(col("source"), col("doc_id"), col("n_tokens"),
-      when(bucket < 80, "train").when(bucket < 90, "val")
-        .otherwise("test").as("split"))
+      HashSplit.label(col("doc_id")).as("split"))
   }
 
   case class PipeDoc(source: String, doc_id: Long, n_tokens: Long, w: Long)
@@ -266,11 +263,9 @@ object StreamingIntake {
         col("n_tokens"), col("w"))
       .as[PipeDoc]
     val picked = resampleStream(weighted, step, resampleShards)
-    // stage 6: split tag (same "|split" buckets as the batch manifest)
+    // stage 6: split tag (the batch manifest's HashSplit, as a scalar)
     picked.map { d =>
-      val b = PortableHash.seedLong(s"${d.doc_id}|split") % 100
-      val split = if (b < 80) "train" else if (b < 90) "val" else "test"
-      Admit(d.source, d.doc_id, d.n_tokens, split)
+      Admit(d.source, d.doc_id, d.n_tokens, HashSplit.labelOf(d.doc_id))
     }
   }
 

@@ -1674,7 +1674,7 @@ class StreamingSpec extends SparkSpec {
     val lmTheta = graft.queries.TextQueries.lmCalibTheta(spark, d)
     val q = graft.streaming.StreamingIntake.pipelineStream(
         stream, cutoffs, semDrops, lmW, lmBg, lmTheta, dsirW,
-        graft.queries.DedupQueries.pipelineStep, "ts", "10 minutes")
+        graft.queries.DedupQueries.PipelineStep, "ts", "10 minutes")
       .writeStream.format("memory").queryName("spipe")
       .outputMode("append")
       .option("checkpointLocation", tmp("ckpt-pipe")).start()
