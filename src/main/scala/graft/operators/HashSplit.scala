@@ -12,8 +12,8 @@ import graft.functions.PortableHash
   * the batch/stream boundary.
   *
   * This object is the one owner of the salt and the cutoffs. It gives
-  * the Spark Column forms, the scalar a typed streaming map calls, and
-  * the DuckDB text of the oracles, all read from the same constants. */
+  * the Spark Column forms, batch and stream alike, and the DuckDB text
+  * of the oracles, all read from the same constants. */
 object HashSplit {
 
   val Salt = "|split"
@@ -30,18 +30,12 @@ object HashSplit {
   def isTrain(id: Column): Column = bucket(id) < TrainCut
 
   /** Val or test: the held-out side of the cut. */
-  def isHeldOut(id: Column): Column = bucket(id) >= TrainCut
+  private def isHeldOut(id: Column): Column = bucket(id) >= TrainCut
 
   /** "train", "val" or "test". */
   def label(id: Column): Column = {
     val b = bucket(id)
     when(b < TrainCut, "train").when(b < ValCut, "val").otherwise("test")
-  }
-
-  /** [[label]] as a plain Scala function, for typed streaming maps. */
-  def labelOf(id: Long): String = {
-    val b = PortableHash.seedLong(s"$id$Salt") % 100
-    if (b < TrainCut) "train" else if (b < ValCut) "val" else "test"
   }
 
   /** A pair whose ends fall on opposite sides of the train cut. */
@@ -56,14 +50,14 @@ object HashSplit {
     when(isTrain(a), b).otherwise(a)
 
   /** DuckDB twin of [[bucket]] over expression `e`. */
-  def bucketSql(e: String): String = s"(${PortableHash.saltedSql(e, Salt)} % 100)"
+  private def bucketSql(e: String): String = s"(${PortableHash.saltedSql(e, Salt)} % 100)"
 
   def isTrainSql(e: String): String = s"${bucketSql(e)} < $TrainCut"
 
   def isHeldOutSql(e: String): String = s"${bucketSql(e)} >= $TrainCut"
 
   /** DuckDB twin of [[straddles]]; `sep` goes before the `OR`. */
-  def straddlesSql(a: String, b: String, sep: String = " "): String =
+  def straddlesSql(a: String, b: String, sep: String): String =
     s"(${isTrainSql(a)} AND ${isHeldOutSql(b)})${sep}OR " +
       s"(${isHeldOutSql(a)} AND ${isTrainSql(b)})"
 

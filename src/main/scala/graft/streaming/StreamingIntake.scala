@@ -263,10 +263,10 @@ object StreamingIntake {
         col("n_tokens"), col("w"))
       .as[PipeDoc]
     val picked = resampleStream(weighted, step, resampleShards)
-    // stage 6: split tag (the batch manifest's HashSplit, as a scalar)
-    picked.map { d =>
-      Admit(d.source, d.doc_id, d.n_tokens, HashSplit.labelOf(d.doc_id))
-    }
+    // stage 6: split tag (the batch manifest's HashSplit)
+    picked.toDF().select(col("source"), col("doc_id"), col("n_tokens"),
+        HashSplit.label(col("doc_id")).as("split"))
+      .as[Admit]
   }
 
   /** The systematic-PPS resampler behind [[pipelineStream]] stage 5,
