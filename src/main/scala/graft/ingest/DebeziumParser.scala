@@ -2,7 +2,8 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.graft.CatalystBridge
+import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
 
 import graft.schemas.Schemas
 
@@ -24,9 +25,11 @@ import graft.schemas.Schemas
   *                       envelope-shaped DELETEs, which the insert-only
   *                       pipeline discards)
   *
-  * Everything is declarative (`from_json` + `coalesce`), so Catalyst can
-  * prune unused fields into the JSON parser (`JsonTuple`/schema pruning)
-  * and the whole parse stays inside whole-stage codegen.
+  * The parse is one compiled pass over each message's bytes
+  * ([[DebeziumEnvelope]]): it materializes only the declared row fields
+  * of whichever shape carries the row, and tags the error channel in the
+  * same pass. The tagged row is computed once per message and read by
+  * both outputs.
   */
 object DebeziumParser {
 
@@ -36,60 +39,27 @@ object DebeziumParser {
   final case class Parsed(rows: DataFrame, errors: DataFrame)
 
   /** Normalize a DataFrame holding raw message text in `valueCol` into the
-    * given row schema. Timestamp-typed fields in `rowSchema` should be
-    * declared as StringType and converted afterwards with
+    * given row schema (fields of type BIGINT, INT or STRING). Timestamp
+    * fields should be declared as StringType and converted afterwards with
     * [[parseTimestampMicros]] (the reference keeps timestamps as strings
     * until a hard-coded micro-precision parse; we parse tolerantly).
     *
-    * ONE `from_json` per row: the envelope member, the flattened row
-    * fields and the corrupt-record marker live in a single merged schema,
-    * so the JSON text is tokenized once — this is the hot path of the
-    * whole CDC pipeline (the reference also single-parses, Jackson
-    * `readTree`, `EngagementStreamingJob.java:219`).
+    * ONE parse per message, as in the reference (Jackson `readTree`,
+    * `EngagementStreamingJob.java:219`): this is the hot path of the whole
+    * CDC pipeline.
     */
   def parse(df: DataFrame, rowSchema: StructType, valueCol: String = "value"): Parsed = {
-    require(!rowSchema.fieldNames.contains("payload"),
-      "row schema may not declare a field named 'payload' (reserved for the envelope)")
     val v = col(valueCol).cast(StringType)
-    val merged = StructType(
-      Schemas.envelope(rowSchema).fields ++
-        Schemas.flattened(rowSchema).fields :+
-        StructField("__corrupt", StringType, nullable = true))
-    // EvalOnce pins the JSON tokenization to its own projection: without
-    // it, CollapseProject/PushDownPredicates inline this from_json into
-    // every downstream field extraction and the error predicate — one
-    // parse per row becomes N+2 (measured 25 copies in the plan, ~4×
-    // wall-clock on the parse path).
-    val parsed = graft.functions.EvalOnce(from_json(v, merged,
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "__corrupt")))
-
-    val tagged0 = df.withColumn("__p", parsed)
     val p = col("__p")
-
-    // A flattened record is "present" when any declared row field is
-    // non-null AND it is not an envelope (envelopes have a payload member).
-    val flatRow = struct(rowSchema.fieldNames.map(f => p.getField(f).as(f)).toSeq: _*)
-    val flatPresent = rowSchema.fieldNames
-      .map(f => p.getField(f).isNotNull)
-      .reduce(_ || _)
-
-    val isJson = v.isNotNull && p.getField("__corrupt").isNull
-    val envAfter = p.getField("payload").getField("after")
-    val after = when(envAfter.isNotNull, envAfter)
-      .when(p.getField("payload").isNull && flatPresent, flatRow)
-
-    val tagged = tagged0
-      .withColumn("__after", after)
-      .withColumn("__error",
-        when(!isJson, lit("json_error"))
-          .when(after.isNull, lit("missing_after")))
-
+    val error = p.getField(DebeziumEnvelope.ErrorField)
+    val tagged = df.withColumn("__p",
+      CatalystBridge.column(DebeziumEnvelope(CatalystBridge.expression(v), rowSchema)))
     val rows = tagged
-      .filter(col("__error").isNull)
-      .select(rowSchema.fieldNames.map(f => col("__after").getField(f).as(f)).toSeq: _*)
+      .filter(error.isNull)
+      .select(rowSchema.fieldNames.map(f => p.getField(f).as(f)).toSeq: _*)
     val errors = tagged
-      .filter(col("__error").isNotNull)
-      .select(v.as("value"), col("__error").as("error"))
+      .filter(error.isNotNull)
+      .select(v.as("value"), error.as("error"))
     Parsed(rows, errors)
   }
 

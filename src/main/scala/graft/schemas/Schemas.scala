@@ -36,29 +36,6 @@ object Schemas {
     StructField("device", StringType, nullable = true),         // NULLs possible (generator off-by-one)
     StructField("raw_payload", StringType, nullable = true)))   // opaque JSON
 
-  /** Debezium envelope (unflattened shape) around a row payload.
-    * The reference parser expects `payload.after`
-    * (`EngagementStreamingJob.java:219-227`). `before` is carried for
-    * completeness; deletes are dropped (insert-only pipeline, §1.4).
-    */
-  def envelope(row: StructType): StructType = StructType(Seq(
-    StructField("payload", StructType(Seq(
-      StructField("before", row, nullable = true),
-      StructField("after", row, nullable = true),
-      StructField("op", StringType, nullable = true),
-      StructField("ts_ms", LongType, nullable = true))), nullable = true)))
-
-  /** Flattened shape actually emitted by the deployed unwrap SMT
-    * (`debezium/postgres-connector.json:28-32`): row fields at top level
-    * plus `__op`/`__source_*` metadata.
-    */
-  def flattened(row: StructType): StructType = StructType(
-    row.fields ++ Seq(
-      StructField("__op", StringType, nullable = true),
-      StructField("__source_ts_ms", LongType, nullable = true),
-      StructField("__source_db", StringType, nullable = true),
-      StructField("__source_table", StringType, nullable = true)))
-
   /** Enriched output of the J1 join + P3/P4 derived columns — 15 columns
     * mirroring `model/EnrichedEvent.java:17-64` / `BigQuerySink.java:104-120`.
     */

@@ -42,6 +42,12 @@ class DebeziumParserSpec extends SparkSpec {
       Array("json_error", "missing_after")
   }
 
+  test("empty and whitespace-only values are not JSON: json_error") {
+    val p = DebeziumParser.parseEvents(Seq("", "  ", " \t\r\n").toDF("value"))
+    p.rows.count() shouldBe 0
+    p.errors.select("error").as[String].collect() shouldBe Array.fill(3)("json_error")
+  }
+
   test("timestamp parse is tolerant of fraction-digit count (P9 fragility)") {
     val df = Seq(
       "2025-08-08T10:00:00.123456", // the reference's only accepted shape
