@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Damped PageRank over an edge list, in integer fixed-point — the
@@ -17,11 +17,17 @@ import org.apache.spark.sql.functions._
   * Scale shape per iteration: one shuffle to join ranks onto edges (both
   * sides hash-partitioned by `src` — the degree join reuses the same
   * partitioning) and one hash aggregation by `dst` with map-side
-  * partials. State per round is one (node, rank) row per node; the edge
-  * list is computed once, persisted, and reused every round.
-  * `localCheckpoint` per round caps the logical-plan growth that OOMs
-  * Catalyst on iterative DataFrame algorithms (same doctrine as
-  * [[ConnectedComponents.run]]).
+  * partials. State per round is one (node, rank) row per node.
+  *
+  * Every iterated algorithm here (PageRank, LPA, BFS / weighted
+  * shortest paths, personalized PageRank, k-core) is a seed frame plus
+  * a step, driven by the one round loop [[rounds]] — the Pregel shape.
+  * The caller's [[Cut]] materializes each round before the next step
+  * reads it, which caps the logical-plan growth that OOMs Catalyst on
+  * iterative DataFrame algorithms (same doctrine as
+  * [[ConnectedComponents.run]]). The loop reads the edge frame it is
+  * given every round; callers pass an already-materialized one (the
+  * registry's memoized edge frames).
   */
 object Graph {
 
@@ -29,23 +35,55 @@ object Graph {
   val Damping = 0.85
   val BaseFp: Long = math.round((1 - Damping) * RankOne) // 150,000
 
+  /** How one round of an iteration is materialized: the round index and
+    * its still-unbuilt frame in, the lineage-cut frame out. The registry
+    * memoizes round `i` under a per-algorithm kind (`FrameCache.memo`),
+    * so every row reading the run shares its rounds; a direct caller
+    * passes [[checkpoint]]. */
+  type Cut = (Int, => DataFrame) => DataFrame
+
+  /** The eager cut: `localCheckpoint` each round as it is built. */
+  val checkpoint: Cut = (_, df) => df.localCheckpoint(true)
+
+  /** The one round loop of every iterated graph algorithm: round 0 is
+    * `seed`, round i is `step` of round i − 1, each materialized by `cut`
+    * before the next step reads it. Returns the whole trace r0..r`n`, so
+    * the final frame and the per-round audits of a run read the SAME
+    * materialized rounds instead of re-running the iteration. */
+  def rounds(seed: => DataFrame, n: Int, cut: Cut)(
+      step: DataFrame => DataFrame): IndexedSeq[DataFrame] =
+    (1 to n).scanLeft(cut(0, seed))((prev, i) => cut(i, step(prev)))
+
+  /** The node set of a directed (src, dst) edge list. */
+  private def nodesOf(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct()
+
+  /** PageRank's round 0: every node at [[RankOne]]. */
+  def pagerankSeed(edges: DataFrame): DataFrame =
+    nodesOf(edges).withColumn("rank_fp", lit(RankOne))
+
   /** One power-iteration step: every node's next rank from the current
     * `ranks` (node, rank_fp). Nodes with no in-edges keep the base term.
     * Dangling-source mass is dropped (not redistributed) — pinned,
     * documented semantics, identical in the oracle. */
   def pagerankStep(edges: DataFrame, ranks: DataFrame): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val share = edges
+    dampedRanks(edges, edges
       .join(deg, "src")
-      .join(ranks.withColumnRenamed("node", "src"), "src")
-      // exact operands, one IEEE division, floor: portable bit-for-bit
-      .select(col("dst"),
-        floor(col("rank_fp").cast("double") / col("deg")).cast("long").as("c"))
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
+      .join(ranks.withColumnRenamed("node", "src"), "src"))
+  }
+
+  /** The rank tail of a PageRank step, after its (dst, deg, rank_fp)
+    * edge join: each edge's share of its source's rank, the per-node
+    * in-mass, and the damped next rank of every node. */
+  private def dampedRanks(edges: DataFrame, joined: DataFrame): DataFrame = {
+    // exact operands, one IEEE division, floor: portable bit-for-bit
+    val share = joined.select(col("dst"),
+      floor(col("rank_fp").cast("double") / col("deg")).cast("long").as("c"))
     val sums = share.groupBy(col("dst").as("node"))
       .agg(sum(col("c")).as("in_mass"))
-    nodes.join(sums, Seq("node"), "left")
+    nodesOf(edges).join(sums, Seq("node"), "left")
       .select(col("node"),
         (lit(BaseFp) + floor(lit(Damping) * coalesce(col("in_mass"), lit(0L))))
           .cast("long").as("rank_fp"))
@@ -105,57 +143,43 @@ object Graph {
       hotKeys: DataFrame): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val dim = deg.join(ranks.withColumnRenamed("node", "src"), "src")
-    val share = skewSplitJoin(edges, dim, "src", hotKeys)
-      .select(col("dst"),
-        floor(col("rank_fp").cast("double") / col("deg")).cast("long").as("c"))
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-    val sums = share.groupBy(col("dst").as("node"))
-      .agg(sum(col("c")).as("in_mass"))
-    nodes.join(sums, Seq("node"), "left")
-      .select(col("node"),
-        (lit(BaseFp) + floor(lit(Damping) * coalesce(col("in_mass"), lit(0L))))
-          .cast("long").as("rank_fp"))
+    dampedRanks(edges, skewSplitJoin(edges, dim, "src", hotKeys))
   }
 
-  /** The full per-round trace of a training run — r0 (uniform start)
-    * through r`iters`, each eagerly `localCheckpoint`ed. Exposing the
-    * trace (not just the final frame) lets every consumer of the run —
-    * final ranks, the convergence audit, per-round diagnostics — read
-    * the SAME materialized rounds instead of re-running the power
-    * iteration (the duplication the r9 bench paid: train + converge
-    * each re-trained). */
-  def pagerankTrace(edges: DataFrame, iters: Int): IndexedSeq[DataFrame] = {
-    val e = edges.persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val r0 = nodes.withColumn("rank_fp", lit(RankOne)).localCheckpoint(true)
-    val trace = (1 to iters).foldLeft(IndexedSeq(r0)) { (acc, _) =>
-      acc :+ pagerankStep(e, acc.last).localCheckpoint(true)
-    }
-    e.unpersist()
-    trace
-  }
+  /** A PageRank training run: [[pagerankSeed]] then `iters` power-
+    * iteration rounds, r0..r`iters`. */
+  def pagerankTrace(edges: DataFrame, iters: Int,
+      cut: Cut): IndexedSeq[DataFrame] =
+    rounds(pagerankSeed(edges), iters, cut)(pagerankStep(edges, _))
 
-  /** `iters` full power-iteration rounds from a uniform start. */
-  def pagerank(edges: DataFrame, iters: Int): DataFrame =
-    pagerankTrace(edges, iters).last
-
-  /** The L1-delta audit derived from an already-materialized
-    * [[pagerankTrace]] — each row one node-keyed equi-join of two
-    * checkpointed (node, rank) frames plus a map-side-combined global
-    * sum. Callers holding a trace (e.g. one shared with the final-ranks
-    * consumer) pay NO training compute here. */
-  def convergenceOf(trace: Seq[DataFrame]): DataFrame = {
-    require(trace.size >= 2, "convergence needs at least rounds r0 and r1")
+  /** The consecutive-round audit of a trace: one row per round pair
+    * (i − 1, i), joined on node, with `n_nodes` and the `aggs` over the
+    * pair's `value` columns, named `${p}0` (round i − 1) and `${p}1`
+    * (round i). Each row is one node-keyed equi-join of two materialized
+    * frames plus a map-side-combined global aggregate, so a caller
+    * holding the trace pays no iteration compute here. */
+  def roundPairs(trace: Seq[DataFrame], value: String, p: String)(
+      aggs: Column*): DataFrame = {
+    require(trace.size >= 2, "a round-pair audit needs at least rounds 0 and 1")
     (1 until trace.size).map { i =>
-      trace(i - 1).select(col("node"), col("rank_fp").as("r0"))
-        .join(trace(i).select(col("node"), col("rank_fp").as("r1")), Seq("node"))
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(abs(col("r1") - col("r0"))).as("total_delta"))
-        .select(lit(i.toLong).as("iter"), col("n_nodes"), col("total_delta"))
+      trace(i - 1).select(col("node"), col(value).as(s"${p}0"))
+        .join(trace(i).select(col("node"), col(value).as(s"${p}1")),
+          Seq("node"))
+        .agg(count(lit(1)).as("n_nodes"), aggs: _*)
+        .select(lit(i.toLong).as("iter"), col("*"))
     }.reduce(_.union(_))
   }
+
+  /** The per-round audit of a trace: one row per round with its row
+    * count `n` and the sum of its `value` column as `total`. All-integer,
+    * order-free. */
+  def roundTotals(trace: Seq[DataFrame], n: String, value: String,
+      total: String): DataFrame =
+    trace.zipWithIndex.map { case (df, i) =>
+      df.agg(count(lit(1)).as(n), sum(col(value)).as(total))
+        .select(lit(i.toLong).as("iter"), col(n),
+          col(total).cast("long").as(total))
+    }.reduce(_.union(_))
 
   /** One synchronous round of weighted label propagation: every node
     * adopts the label carrying the largest total edge weight among its
@@ -186,33 +210,43 @@ object Graph {
       .agg(max(struct(col("wsum"), (-col("label")).as("nl"))).as("m"))
       .select(col("node"), (-col("m.nl")).as("label"))
 
-  /** Per-round label frames l0 (label = own node id) through l`iters`
-    * of one synchronous LPA run, each eagerly `localCheckpoint`ed —
-    * the same shared-trace doctrine as [[pagerankTrace]]: the final
-    * communities and the convergence audit read the SAME materialized
-    * rounds. */
-  def lpaTrace(edges: DataFrame, iters: Int): IndexedSeq[DataFrame] = {
-    val e = edges.persist()
-    val l0 = e.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(true)
-    val trace = (1 to iters).foldLeft(IndexedSeq(l0)) { (acc, _) =>
-      acc :+ lpaStep(e, acc.last).localCheckpoint(true)
-    }
-    e.unpersist()
-    trace
-  }
+  /** The node set of a symmetrized (u, v, w) adjacency — k-core's
+    * round 0. */
+  private def adjacencyNodes(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("node")).distinct()
 
-  /** One round of multi-source BFS distance relaxation: every node's
+  /** LPA's round 0: every node labelled with its own id. */
+  def lpaSeed(edges: DataFrame): DataFrame =
+    adjacencyNodes(edges).withColumn("label", col("node"))
+
+  /** A synchronous LPA run: [[lpaSeed]] then `iters` vote rounds. */
+  def lpaTrace(edges: DataFrame, iters: Int, cut: Cut): IndexedSeq[DataFrame] =
+    rounds(lpaSeed(edges), iters, cut)(lpaStep(edges, _))
+
+  /** The hop cost of BFS: every edge is one hop. */
+  val UnitHop: Column = lit(1L)
+
+  /** The hop cost of weighted shortest paths: an edge costs its `w`. */
+  val EdgeWeight: Column = col("w")
+
+  /** One round of multi-source distance relaxation: every node's
     * tentative (dist, src) is the minimum of its current value and
-    * every neighbor's value + 1 hop — lexicographic `min(struct(dist,
-    * src))`, so a node equidistant from two sources deterministically
-    * takes the SMALLEST source id (the same order-isomorphic argmin
-    * fold as [[lpaStep]]'s vote; no window sort). Synchronous rounds
-    * over the full distance table make the iteration order-free and
-    * replayable as unrolled oracle CTEs; after K rounds the table
-    * holds exact shortest hop-distances for every node within K hops
-    * of a source (unreached nodes are absent — honest K-hop
-    * neighborhoods, not infinities).
+    * every neighbor's (dist + `hop`, src) — lexicographic `min(struct(
+    * dist, src))`, so a node equidistant from two sources
+    * deterministically takes the SMALLEST source id (the same
+    * order-isomorphic argmin fold as [[lpaStep]]'s vote; no window
+    * sort). Synchronous rounds over the full distance table make the
+    * iteration order-free and replayable as unrolled oracle CTEs.
+    *
+    * With [[UnitHop]] this is BFS: after K rounds the table holds exact
+    * shortest hop-distances for every node within K hops of a source
+    * (unreached nodes are absent — honest K-hop neighborhoods, not
+    * infinities). With [[EdgeWeight]] it is the min-plus generalization,
+    * synchronous Bellman–Ford: after K rounds the table holds exact
+    * shortest WEIGHTED distances over all paths of ≤ K edges, so with
+    * positive weights the iteration reaches its fixed point once K
+    * covers the longest minimal-path hop count — two equal consecutive
+    * rounds certify it.
     *
     * `edges` must be the SYMMETRIZED (u, v, w) adjacency; `dists` is
     * (node, dist, src). Scale shape per round: ONE shuffle joining the
@@ -222,39 +256,30 @@ object Graph {
     * only newly-improved rows; the full-table relaxation keeps the
     * oracle replay exact and is the same asymptotic shuffle volume on
     * the small-diameter graphs co-purchase networks are. */
-  def bfsStep(edges: DataFrame, dists: DataFrame): DataFrame =
+  def relaxStep(edges: DataFrame, dists: DataFrame, hop: Column): DataFrame =
     dists.withColumnRenamed("node", "v")
       .join(edges, "v")
-      .select(col("u").as("node"), (col("dist") + lit(1L)).as("dist"),
+      .select(col("u").as("node"), (col("dist") + hop).as("dist"),
         col("src"))
       .unionAll(dists.select(col("node"), col("dist"), col("src")))
       .groupBy(col("node"))
       .agg(min(struct(col("dist"), col("src"))).as("m"))
       .select(col("node"), col("m.dist").as("dist"), col("m.src").as("src"))
 
-  /** Per-round distance frames d0 (sources at distance 0) through
-    * d`iters` of one multi-source BFS, each eagerly checkpointed —
-    * the [[pagerankTrace]] shared-trace doctrine: the final distances
-    * and the reach audit read the SAME materialized rounds. */
-  def bfsTrace(edges: DataFrame, sources: DataFrame,
-      iters: Int): IndexedSeq[DataFrame] = {
-    val e = edges.persist()
-    val d0 = sources.select(col("node"), lit(0L).as("dist"),
-      col("node").as("src")).localCheckpoint(true)
-    val trace = (1 to iters).foldLeft(IndexedSeq(d0)) { (acc, _) =>
-      acc :+ bfsStep(e, acc.last).localCheckpoint(true)
-    }
-    e.unpersist()
-    trace
-  }
+  /** A multi-source shortest-path run: round 0 puts every source at
+    * distance 0 (its own `src`), then `iters` [[relaxStep]] rounds. */
+  def relaxTrace(edges: DataFrame, sources: DataFrame, hop: Column,
+      iters: Int, cut: Cut): IndexedSeq[DataFrame] =
+    rounds(sources.select(col("node"), lit(0L).as("dist"),
+      col("node").as("src")), iters, cut)(relaxStep(edges, _, hop))
 
   /** One round of WEIGHTED personalized PageRank (random walk with
     * restart) over the symmetric (u, v, w) adjacency: the teleport
     * mass goes to the SEED set only — rank_next(v) = [v ∈ seeds]·
     * [[BaseFp]] + floor([[Damping]] · Σ_u floor(rank(u)·w(u,v) /
     * wdeg(u))) — so ranks measure random-walk proximity to the seeds
-    * (the classic recommendation/expansion score beside [[bfsStep]]'s
-    * hop metric and [[wspStep]]'s weighted-path metric). Shares are
+    * (the classic recommendation/expansion score beside
+    * [[relaxStep]]'s hop and weighted-path metrics). Shares are
     * weight-proportional; every op is floor of one IEEE division /
     * multiplication on exact integers (rank·w ≤ 2^53 by the mass
     * bound), so rounds replay bit-for-bit in the oracle. The rank
@@ -283,69 +308,12 @@ object Graph {
       .filter(col("rank_fp") > 0)
   }
 
-  /** Per-round rank frames p0 (seeds at [[RankOne]]) through p`iters`
-    * of one personalized-PageRank run, each eagerly checkpointed —
-    * the [[pagerankTrace]] shared-trace doctrine. */
-  def pprTrace(edges: DataFrame, seeds: DataFrame,
-      iters: Int): IndexedSeq[DataFrame] = {
-    val e = edges.persist()
-    val p0 = seeds.select(col("node"), lit(RankOne).as("rank_fp"))
-      .localCheckpoint(true)
-    val trace = (1 to iters).foldLeft(IndexedSeq(p0)) { (acc, _) =>
-      acc :+ pprStep(e, acc.last, seeds).localCheckpoint(true)
-    }
-    e.unpersist()
-    trace
-  }
-
-  /** One round of multi-source WEIGHTED shortest-path relaxation —
-    * [[bfsStep]]'s min-plus generalization: a neighbor's candidate is
-    * (dist + w, src) along the carried integer edge weight instead of
-    * (dist + 1, src), folded by the same order-isomorphic
-    * `min(struct(dist, src))` argmin (smallest source id on ties).
-    * These are synchronous Bellman–Ford rounds: after K of them the
-    * table holds exact shortest WEIGHTED distances over all paths of
-    * ≤ K edges, so with positive weights the iteration reaches its
-    * fixed point once K covers the longest minimal-path hop count —
-    * two equal consecutive rounds certify it. Same scale shape as
-    * [[bfsStep]]: ONE shuffle per round, map-side-combined argmin,
-    * state one row per reached node. */
-  def wspStep(edges: DataFrame, dists: DataFrame): DataFrame =
-    dists.withColumnRenamed("node", "v")
-      .join(edges, "v")
-      .select(col("u").as("node"), (col("dist") + col("w")).as("dist"),
-        col("src"))
-      .unionAll(dists.select(col("node"), col("dist"), col("src")))
-      .groupBy(col("node"))
-      .agg(min(struct(col("dist"), col("src"))).as("m"))
-      .select(col("node"), col("m.dist").as("dist"), col("m.src").as("src"))
-
-  /** Per-round distance frames of one multi-source weighted-shortest-
-    * path run, each eagerly checkpointed — [[bfsTrace]] with the
-    * min-plus relaxation. */
-  def wspTrace(edges: DataFrame, sources: DataFrame,
-      iters: Int): IndexedSeq[DataFrame] = {
-    val e = edges.persist()
-    val d0 = sources.select(col("node"), lit(0L).as("dist"),
-      col("node").as("src")).localCheckpoint(true)
-    val trace = (1 to iters).foldLeft(IndexedSeq(d0)) { (acc, _) =>
-      acc :+ wspStep(e, acc.last).localCheckpoint(true)
-    }
-    e.unpersist()
-    trace
-  }
-
-  /** The reach audit of a BFS run: one row per round with the reached-
-    * node count and the total hop distance — reach must grow
-    * monotonically (a relaxation can only add nodes) and a broken
-    * join key, lost union branch, or unstable tie-break bends the
-    * counters in round 1. All-integer, order-free. */
-  def bfsReachedOf(trace: Seq[DataFrame]): DataFrame =
-    trace.zipWithIndex.map { case (df, i) =>
-      df.agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("sum_dist"))
-        .select(lit(i.toLong).as("iter"), col("n_reached"),
-          col("sum_dist").cast("long").as("sum_dist"))
-    }.reduce(_.union(_))
+  /** A personalized-PageRank run: round 0 puts every seed at
+    * [[RankOne]], then `iters` [[pprStep]] rounds. */
+  def pprTrace(edges: DataFrame, seeds: DataFrame, iters: Int,
+      cut: Cut): IndexedSeq[DataFrame] =
+    rounds(seeds.select(col("node"), lit(RankOne).as("rank_fp")), iters,
+      cut)(pprStep(edges, _, seeds))
 
   /** One synchronous k-core peel round: keep every node whose degree
     * WITHIN the current induced subgraph is still ≥ k. Iterated to its
@@ -363,39 +331,28 @@ object Graph {
     * node-keyed semi-join-shaped equi-joins restricting the edge list
     * to the induced subgraph, then ONE map-side-combined degree
     * aggregation — state is one row per surviving node, shrinking
-    * monotonically, and the edge frame is computed once and persisted
-    * by the trace driver. */
+    * monotonically. */
   def kcoreStep(edges: DataFrame, surviving: DataFrame, k: Long): DataFrame =
-    edges
-      .join(surviving.select(col("node").as("u")), "u")
-      .join(surviving.select(col("node").as("v")), "v")
-      .groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= k)
-      .select("node")
+    kcoreDegrees(edges, surviving).filter(col("deg") >= k).select("node")
 
-  /** Per-round survivor frames s0 (all nodes) through s`iters` of one
-    * synchronous k-core peel, each eagerly checkpointed — the
-    * [[pagerankTrace]] shared-trace doctrine: the final core and the
-    * peel audit read the SAME materialized rounds. */
-  def kcoreTrace(edges: DataFrame, k: Long, iters: Int): IndexedSeq[DataFrame] = {
-    val e = edges.persist()
-    val s0 = e.select(col("u").as("node")).distinct().localCheckpoint(true)
-    val trace = (1 to iters).foldLeft(IndexedSeq(s0)) { (acc, _) =>
-      acc :+ kcoreStep(e, acc.last, k).localCheckpoint(true)
-    }
-    e.unpersist()
-    trace
-  }
+  /** A synchronous k-core peel: round 0 is every node
+    * ([[adjacencyNodes]]), then `iters` [[kcoreStep]] rounds. */
+  def kcoreTrace(edges: DataFrame, k: Long, iters: Int,
+      cut: Cut): IndexedSeq[DataFrame] =
+    rounds(adjacencyNodes(edges), iters, cut)(kcoreStep(edges, _, k))
+
+  /** The edges of the subgraph induced by the node set `s`. */
+  private def induced(edges: DataFrame, s: DataFrame): DataFrame =
+    edges
+      .join(s.select(col("node").as("u")), "u")
+      .join(s.select(col("node").as("v")), "v")
 
   /** The surviving core with each member's induced-subgraph degree —
     * the payload frame a consumer reads (deg ≥ k for every row once
-    * the peel has reached its fixed point). Same two-join + one-agg
-    * shape as a peel round, minus the filter. */
+    * the peel has reached its fixed point). A peel round minus its
+    * filter. */
   def kcoreDegrees(edges: DataFrame, core: DataFrame): DataFrame =
-    edges
-      .join(core.select(col("node").as("u")), "u")
-      .join(core.select(col("node").as("v")), "v")
+    induced(edges, core)
       .groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
 
@@ -410,31 +367,11 @@ object Graph {
     trace.zipWithIndex.map { case (s, i) =>
       val nn = s.agg(count(lit(1)).as("n_nodes"))
         .select(lit(i.toLong).as("iter"), col("n_nodes"))
-      val ne = edges
-        .join(s.select(col("node").as("u")), "u")
-        .join(s.select(col("node").as("v")), "v")
-        .agg(count(lit(1)).as("n_edges"))
+      val ne = induced(edges, s).agg(count(lit(1)).as("n_edges"))
       // 1-row × 1-row scalar cross (the wh_dq_checks shape): a literal-
       // key equi-join here constant-folds into an unregistered nested-
       // loop join and trips the registry-wide cartesian-absence guard
       nn.crossJoin(broadcast(ne))
     }.reduce(_.union(_))
 
-  /** The convergence audit of an LPA run: one row per round with the
-    * number of nodes that switched label and the surviving community
-    * count — synchronous LPA on a finite graph coarsens fast, and a
-    * broken vote join (wrong key, dropped weight, unstable tie-break)
-    * bends both counters immediately. All-integer, order-free. */
-  def lpaConvergenceOf(trace: Seq[DataFrame]): DataFrame = {
-    require(trace.size >= 2, "convergence needs at least rounds l0 and l1")
-    (1 until trace.size).map { i =>
-      trace(i - 1).select(col("node"), col("label").as("l0"))
-        .join(trace(i).select(col("node"), col("label").as("l1")), Seq("node"))
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(when(col("l1") =!= col("l0"), 1L).otherwise(0L)).as("n_changed"),
-          countDistinct(col("l1")).as("n_labels"))
-        .select(lit(i.toLong).as("iter"), col("n_nodes"),
-          col("n_changed"), col("n_labels"))
-    }.reduce(_.union(_))
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
-import graft.operators.{BloomJoin, Graph, Similarity, TextAnalysis}
+import graft.operators.{BloomJoin, Graph, TextAnalysis}
 
 /** Product-analytics and corpus-index operators layered on the engine
   * (SURVEY.md §2 extensions, round 3): graph authority ranking, dense
@@ -156,42 +156,58 @@ object AnalyticsQueries {
         col("user_id").as("dst"))
       .distinct()
 
-  /** The per-round rank frames r0..r[[PrIters]] of ONE training run,
-    * memoized — `graph_pagerank_train` reads the last frame and
+  /** The round cut of every graph run in the registry: round `i` is
+    * memoized as `$kind$i`, so a run's train and converge rows (and the
+    * prewarm) read rounds built once per bench pass instead of once per
+    * consumer (the `sim_kmeans_inertia` doctrine; the r9 bench's top-2
+    * entries were train and converge each re-running the same rounds),
+    * and Bench itemizes each round on the shared-frame line. */
+  private def memoRounds(s: org.apache.spark.sql.SparkSession, d: String,
+      kind: String): Graph.Cut =
+    (i, df) => FrameCache.memo(s, d, s"$kind$i")(df)
+
+  /** The rank frames r0..r[[PrIters]] of ONE PageRank training run —
+    * `graph_pagerank_train` reads the last frame and
     * `graph_pagerank_converge` derives its L1 deltas from consecutive
-    * pairs, so the power iteration is paid once per bench pass instead
-    * of once per consumer (the `sim_kmeans_inertia` doctrine; the r9
-    * bench's top-2 entries were train and converge each re-running the
-    * same three rounds). Each round is checkpointed by the memo;
-    * `prev`/`edges` are resolved before each memo call (no nesting). */
+    * pairs. */
   private def prRankTrace(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] = {
-    val edges = FrameCache.memo(s, d, "pagerank_edges")(engagementEdges(s, d))
-    val r0 = FrameCache.memo(s, d, "pagerank_r0") {
-      edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-        .withColumn("rank_fp", lit(Graph.RankOne))
-    }
-    (1 to PrIters).foldLeft(IndexedSeq(r0)) { (acc, i) =>
-      val prev = acc.last
-      acc :+ FrameCache.memo(s, d, s"pagerank_r$i")(
-        Graph.pagerankStep(edges, prev))
-    }
-  }
+      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] =
+    Graph.pagerankTrace(
+      FrameCache.memo(s, d, "pagerank_edges")(engagementEdges(s, d)),
+      PrIters, memoRounds(s, d, "pagerank_r"))
+
+  /** One CTE chain of an iterated oracle: `base` (ending in round 0),
+    * then `round(i)` for i in 1..`n`, comma-joined — the SQL twin of
+    * [[Graph.rounds]]. */
+  private def unroll(base: String, n: Int)(round: Int => String): String =
+    (base +: (1 to n).map(round)).mkString(",\n")
+
+  /** One audit row per round, `UNION ALL`ed — the SQL twin of a
+    * per-round Spark audit. */
+  private def perRound(rounds: Range)(row: Int => String): String =
+    rounds.map(row).mkString("\nUNION ALL\n")
+
+  /** SQL twin of [[Graph.roundTotals]] over the CTEs
+    * `$prefix`0..`$prefix$rounds`. */
+  private def roundTotalsSql(prefix: String, rounds: Int, n: String,
+      value: String, total: String): String =
+    perRound(0 to rounds)(i =>
+      s"""SELECT CAST($i AS BIGINT) AS iter,
+         |  CAST(COUNT(*) AS BIGINT) AS $n,
+         |  CAST(SUM($value) AS BIGINT) AS $total FROM $prefix$i""".stripMargin)
 
   /** Unrolled damped power-iteration CTEs: requires a preceding
     * `edges(src, dst)` CTE, defines `deg`/`nodes`/`r0`..`r$PrIters` —
     * each round exactly [[Graph.pagerankStep]]'s arithmetic (one IEEE
     * division + floor for the share, one `0.85 ×` + floor for the
     * damped sum, all other ops integer-exact). */
-  private def prCtes: String = {
-    val base =
+  private def prCtes: String =
+    unroll(
       s"""deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
          |nodes AS (SELECT src AS node FROM edges
          |          UNION SELECT dst FROM edges),
          |r0 AS (SELECT node, CAST(${Graph.RankOne} AS BIGINT) AS rank_fp
-         |       FROM nodes)""".stripMargin
-    val steps = (1 to PrIters).map { i =>
+         |       FROM nodes)""".stripMargin, PrIters) { i =>
       s"""sh$i AS (
          |  SELECT e.dst,
          |    CAST(FLOOR(CAST(r.rank_fp AS DOUBLE) / g.d) AS BIGINT) AS c
@@ -207,8 +223,6 @@ object AnalyticsQueries {
          |         AS BIGINT) AS rank_fp
          |  FROM nodes n LEFT JOIN sm$i s ON n.node = s.node)""".stripMargin
     }
-    (base +: steps).mkString(",\n")
-  }
 
   /** Synchronous LPA rounds — enough for the co-purchase graph to
     * coarsen visibly while keeping the unrolled oracle readable; each
@@ -246,7 +260,7 @@ object AnalyticsQueries {
     * run on — the SAME support ≥ 2 frame `graph_triangles` thresholds,
     * doubled into (u, v, w) both directions off the shared memoized
     * pair frame. */
-  private def lpaEdges(s: org.apache.spark.sql.SparkSession,
+  private[graft] def lpaEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val pairs = coPurchasePairs(s, d)
     FrameCache.memo(s, d, "lpa_edges") {
@@ -257,23 +271,12 @@ object AnalyticsQueries {
     }
   }
 
-  /** The per-round label frames l0..l[[LpaIters]] of ONE synchronous
-    * LPA run, memoized — `graph_lpa_train` reads the last frame and
-    * `graph_lpa_converge` derives its changed/community counters from
-    * consecutive pairs, so the vote rounds are paid once per bench pass
-    * (the [[prRankTrace]] doctrine). */
+  /** The label frames l0..l[[LpaIters]] of ONE synchronous LPA run —
+    * `graph_lpa_train` reads the last frame and `graph_lpa_converge`
+    * derives its changed/community counters from consecutive pairs. */
   private def lpaLabelTrace(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] = {
-    val edges = lpaEdges(s, d)
-    val l0 = FrameCache.memo(s, d, "lpa_l0") {
-      edges.select(col("u").as("node")).distinct()
-        .withColumn("label", col("node"))
-    }
-    (1 to LpaIters).foldLeft(IndexedSeq(l0)) { (acc, i) =>
-      val prev = acc.last
-      acc :+ FrameCache.memo(s, d, s"lpa_l$i")(Graph.lpaStep(edges, prev))
-    }
-  }
+      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] =
+    Graph.lpaTrace(lpaEdges(s, d), LpaIters, memoRounds(s, d, "lpa_l"))
 
   /** The [[BfsSources]] BFS source hubs: highest weighted degree on
     * the symmetrized co-purchase adjacency, node-ascending tie-break —
@@ -290,78 +293,41 @@ object AnalyticsQueries {
     }
   }
 
-  /** Per-round distance frames d0..d[[BfsIters]] of ONE multi-source
-    * BFS, memoized — `graph_bfs_dists` reads the last frame and
+  /** The distance frames d0..d[[BfsIters]] of ONE multi-source BFS
+    * from the hubs — `graph_bfs_dists` reads the last frame and
     * `graph_bfs_reach` derives its per-round counters from all of
-    * them, so the relaxation rounds are paid once per bench pass (the
-    * [[lpaLabelTrace]] doctrine). */
+    * them. */
   private def bfsDistTrace(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] = {
-    val edges = lpaEdges(s, d)
-    val srcs = bfsSourceFrame(s, d)
-    val d0 = FrameCache.memo(s, d, "bfs_d0") {
-      srcs.select(col("node"), org.apache.spark.sql.functions.lit(0L)
-        .as("dist"), col("node").as("src"))
-    }
-    (1 to BfsIters).foldLeft(IndexedSeq(d0)) { (acc, i) =>
-      val prev = acc.last
-      acc :+ FrameCache.memo(s, d, s"bfs_d$i")(Graph.bfsStep(edges, prev))
-    }
-  }
+      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] =
+    Graph.relaxTrace(lpaEdges(s, d), bfsSourceFrame(s, d), Graph.UnitHop,
+      BfsIters, memoRounds(s, d, "bfs_d"))
 
-  /** Per-round distance frames wd0..wd[[WspIters]] of ONE multi-source
+  /** The distance frames wd0..wd[[WspIters]] of ONE multi-source
     * WEIGHTED shortest-path run (min-plus Bellman–Ford rounds over the
-    * carried co-purchase edge weights), memoized off the same source
-    * hubs as the hop-BFS — `graph_wsp_dists` reads the last frame and
+    * carried co-purchase edge weights) from the same hubs as the
+    * hop-BFS — `graph_wsp_dists` reads the last frame and
     * `graph_wsp_converge` derives its per-round counters from all of
-    * them (the [[bfsDistTrace]] doctrine). Weighted minimal paths may
-    * use more hops than the hop-metric diameter, so the weighted run
-    * iterates deeper; GraphSpec pins the fixed point (one extra round
-    * changes nothing) on the fixture graph. */
+    * them. Weighted minimal paths may use more hops than the hop-metric
+    * diameter, so the weighted run iterates deeper; GraphSpec pins the
+    * fixed point (one extra round changes nothing) on the fixture
+    * graph. */
   private def wspDistTrace(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] = {
-    val edges = lpaEdges(s, d)
-    val srcs = bfsSourceFrame(s, d)
-    val d0 = FrameCache.memo(s, d, "wsp_d0") {
-      srcs.select(col("node"), org.apache.spark.sql.functions.lit(0L)
-        .as("dist"), col("node").as("src"))
-    }
-    (1 to WspIters).foldLeft(IndexedSeq(d0)) { (acc, i) =>
-      val prev = acc.last
-      acc :+ FrameCache.memo(s, d, s"wsp_d$i")(Graph.wspStep(edges, prev))
-    }
-  }
+      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] =
+    Graph.relaxTrace(lpaEdges(s, d), bfsSourceFrame(s, d), Graph.EdgeWeight,
+      WspIters, memoRounds(s, d, "wsp_d"))
 
-  /** Per-round rank frames p0..p[[PprIters]] of ONE weighted
-    * personalized-PageRank run from the same hubs as the BFS/WSP —
-    * random-walk proximity to the bestseller cluster, the third
-    * hub-proximity measure of the family. Memoized per the
-    * [[bfsDistTrace]] doctrine; `graph_ppr_train` reads the last
-    * frame, `graph_ppr_converge` the per-round reach/mass counters. */
-  private def pprRankTrace(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] = {
-    val edges = lpaEdges(s, d)
-    val srcs = bfsSourceFrame(s, d)
-    val p0 = FrameCache.memo(s, d, "ppr_p0") {
-      srcs.select(col("node"),
-        org.apache.spark.sql.functions.lit(Graph.RankOne).as("rank_fp"))
-    }
-    (1 to PprIters).foldLeft(IndexedSeq(p0)) { (acc, i) =>
-      val prev = acc.last
-      acc :+ FrameCache.memo(s, d, s"ppr_p$i")(
-        Graph.pprStep(edges, prev, srcs))
-    }
-  }
-
-  /** The symmetric co-purchase adjacency and the converged PPR rank
-    * frame, package-visible so the streaming recommendation twin can
-    * checkpoint exactly the frames the batch `corpus_graph_rrf` reads
-    * (the LexIndex doctrine — serving probes static, once-built
-    * index structures). */
-  private[graft] def coPurchaseEdgesFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = lpaEdges(s, d)
-  private[graft] def pprFinalFrame(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = pprRankTrace(s, d).last
+  /** The rank frames p0..p[[PprIters]] of ONE weighted personalized-
+    * PageRank run from the same hubs as the BFS/WSP — random-walk
+    * proximity to the bestseller cluster, the third hub-proximity
+    * measure of the family. `graph_ppr_train` reads the last frame,
+    * `graph_ppr_converge` the per-round reach/mass counters, and the
+    * streaming recommendation twin checkpoints the last frame as its
+    * static rank table (beside [[lpaEdges]]), exactly what the batch
+    * `corpus_graph_rrf` reads. */
+  private[graft] def pprRankTrace(s: org.apache.spark.sql.SparkSession,
+      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] =
+    Graph.pprTrace(lpaEdges(s, d), bfsSourceFrame(s, d), PprIters,
+      memoRounds(s, d, "ppr_p"))
 
   /** The graph branch of recommendation fusion — the ONE
     * implementation shared by the batch `corpus_graph_rrf` and the
@@ -396,24 +362,14 @@ object AnalyticsQueries {
       .select(col("query_doc"), col("doc_id"), col("rk").as("lex_rk"))
   }
 
-  /** Per-round survivor frames s0..s[[KcoreIters]] of ONE synchronous
-    * k-core peel over the co-purchase adjacency, memoized —
-    * `graph_kcore` reads the last frame (with induced degrees) and
-    * `graph_kcore_peel` derives its per-round counters from all of
-    * them, so the peel rounds are paid once per bench pass (the
-    * [[bfsDistTrace]] doctrine). */
+  /** The survivor frames s0..s[[KcoreIters]] of ONE synchronous k-core
+    * peel over the co-purchase adjacency — `graph_kcore` reads the last
+    * frame (with induced degrees) and `graph_kcore_peel` derives its
+    * per-round counters from all of them. */
   private def kcoreSurvTrace(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] = {
-    val edges = lpaEdges(s, d)
-    val s0 = FrameCache.memo(s, d, "kcore_s0") {
-      edges.select(col("u").as("node")).distinct()
-    }
-    (1 to KcoreIters).foldLeft(IndexedSeq(s0)) { (acc, i) =>
-      val prev = acc.last
-      acc :+ FrameCache.memo(s, d, s"kcore_s$i")(
-        Graph.kcoreStep(edges, prev, KcoreK))
-    }
-  }
+      d: String): IndexedSeq[org.apache.spark.sql.DataFrame] =
+    Graph.kcoreTrace(lpaEdges(s, d), KcoreK, KcoreIters,
+      memoRounds(s, d, "kcore_s"))
 
   /** Unrolled k-core peel CTEs: requires a preceding `edges(u, v, w)`
     * CTE (symmetric), defines `s0`..`s$KcoreIters` — each round
@@ -421,99 +377,64 @@ object AnalyticsQueries {
     * to the surviving induced subgraph, keep nodes of degree ≥ k).
     * MATERIALIZED because each s_t is referenced twice by s_{t+1} and
     * by the peel audit. */
-  private def kcoreCtes: String = {
-    val base =
-      """s0 AS MATERIALIZED (SELECT DISTINCT u AS node FROM edges)"""
-    val rounds = (1 to KcoreIters).map { t =>
+  private def kcoreCtes: String =
+    unroll("""s0 AS MATERIALIZED (SELECT DISTINCT u AS node FROM edges)""",
+        KcoreIters) { t =>
       s"""s$t AS MATERIALIZED (
          |  SELECT e.u AS node FROM edges e
          |  JOIN s${t - 1} a ON e.u = a.node
          |  JOIN s${t - 1} b ON e.v = b.node
          |  GROUP BY e.u HAVING COUNT(*) >= $KcoreK)""".stripMargin
     }
-    (base +: rounds).mkString(",\n")
-  }
 
-  /** Unrolled multi-source-BFS CTEs: requires a preceding
-    * `edges(u, v, w)` CTE (symmetric), defines `srcs` and
-    * `d0`..`d$BfsIters` — each round exactly [[Graph.bfsStep]]'s
-    * semantics (neighbor distance + 1 unioned with the carried table,
-    * per-node argmin with min-source tie-break), expressed as a
-    * row_number pick instead of Spark's order-isomorphic
-    * `min(struct(dist, src))`: identical argmin semantics.
-    * MATERIALIZED because each d_t is referenced by d_{t+1} (twice)
-    * and by the reach audit — the MMR-CTE inlining lesson. */
-  private def bfsCtes: String = {
-    val base =
-      s"""srcs AS MATERIALIZED (
-         |  SELECT u AS node FROM edges GROUP BY u
-         |  ORDER BY SUM(w) DESC, u ASC LIMIT $BfsSources),
-         |d0 AS MATERIALIZED (
-         |  SELECT node, CAST(0 AS BIGINT) AS dist, node AS src
-         |  FROM srcs)""".stripMargin
-    val rounds = (1 to BfsIters).map { t =>
-      s"""d$t AS MATERIALIZED (
-         |  SELECT node, dist, src FROM (
-         |    SELECT node, dist, src, row_number() OVER (
-         |      PARTITION BY node ORDER BY dist ASC, src ASC) AS rn
-         |    FROM (
-         |      SELECT e.u AS node, p.dist + 1 AS dist, p.src
-         |      FROM d${t - 1} p JOIN edges e ON e.v = p.node
-         |      UNION ALL
-         |      SELECT node, dist, src FROM d${t - 1}))
-         |  WHERE rn = 1)""".stripMargin
-    }
-    (base +: rounds).mkString(",\n")
-  }
-
-  /** Unrolled weighted-shortest-path CTEs — [[bfsCtes]] with the
-    * min-plus relaxation (p.dist + e.w) and its own `wd` prefix;
-    * reuses the `srcs` hub CTE, so must appear AFTER [[bfsCtes]] in
-    * the WITH chain (or the srcs block is emitted here when used
-    * standalone via [[wspCtes]]). */
-  private def wspRoundCtes: String = {
-    val rounds = (1 to WspIters).map { t =>
-      s"""wd$t AS MATERIALIZED (
-         |  SELECT node, dist, src FROM (
-         |    SELECT node, dist, src, row_number() OVER (
-         |      PARTITION BY node ORDER BY dist ASC, src ASC) AS rn
-         |    FROM (
-         |      SELECT e.u AS node, p.dist + e.w AS dist, p.src
-         |      FROM wd${t - 1} p JOIN edges e ON e.v = p.node
-         |      UNION ALL
-         |      SELECT node, dist, src FROM wd${t - 1}))
-         |  WHERE rn = 1)""".stripMargin
-    }
-    rounds.mkString(",\n")
-  }
-
-  /** Standalone WSP chain: the hub pick + wd0 + the rounds. */
-  private def wspCtes: String =
+  /** The [[BfsSources]] hub pick as the `srcs` CTE (requires a preceding
+    * symmetric `edges(u, v, w)` CTE) — [[bfsSourceFrame]]'s order. */
+  private val hubsSql =
     s"""srcs AS MATERIALIZED (
        |  SELECT u AS node FROM edges GROUP BY u
-       |  ORDER BY SUM(w) DESC, u ASC LIMIT $BfsSources),
-       |wd0 AS MATERIALIZED (
-       |  SELECT node, CAST(0 AS BIGINT) AS dist, node AS src
-       |  FROM srcs),
-       |$wspRoundCtes""".stripMargin
+       |  ORDER BY SUM(w) DESC, u ASC LIMIT $BfsSources)""".stripMargin
+
+  /** Unrolled multi-source relaxation CTEs: requires a preceding
+    * `edges(u, v, w)` CTE (symmetric), defines `srcs` and
+    * `$prefix`0..`$prefix$n` — each round exactly [[Graph.relaxStep]]'s
+    * semantics (neighbor distance + `hop` unioned with the carried
+    * table, per-node argmin with min-source tie-break), expressed as a
+    * row_number pick instead of Spark's order-isomorphic
+    * `min(struct(dist, src))`: identical argmin semantics. `hop` is `1`
+    * for BFS and `e.w` for weighted shortest paths. MATERIALIZED because
+    * each round is referenced by the next (twice) and by the audit — the
+    * MMR-CTE inlining lesson. */
+  private def relaxCtes(prefix: String, hop: String, n: Int): String =
+    unroll(
+      s"""$hubsSql,
+         |${prefix}0 AS MATERIALIZED (
+         |  SELECT node, CAST(0 AS BIGINT) AS dist, node AS src
+         |  FROM srcs)""".stripMargin, n) { t =>
+      s"""$prefix$t AS MATERIALIZED (
+         |  SELECT node, dist, src FROM (
+         |    SELECT node, dist, src, row_number() OVER (
+         |      PARTITION BY node ORDER BY dist ASC, src ASC) AS rn
+         |    FROM (
+         |      SELECT e.u AS node, p.dist + $hop AS dist, p.src
+         |      FROM $prefix${t - 1} p JOIN edges e ON e.v = p.node
+         |      UNION ALL
+         |      SELECT node, dist, src FROM $prefix${t - 1}))
+         |  WHERE rn = 1)""".stripMargin
+    }
 
   /** Unrolled weighted-PPR CTEs: requires a preceding `edges(u, v, w)`
-    * CTE (symmetric); defines `srcs` (the hub pick — shared form with
-    * [[wspCtes]]), `pwdeg`, and `p0`..`p$PprIters` — each round
-    * exactly [[Graph.pprStep]]'s arithmetic: weight-proportional
-    * integer shares (floor of one IEEE division on exact operands),
-    * damped in-mass (floor of one IEEE multiply), teleport to seeds
-    * only, zero-rank rows absent. */
-  private def pprCtes: String = {
-    val base =
-      s"""srcs AS MATERIALIZED (
-         |  SELECT u AS node FROM edges GROUP BY u
-         |  ORDER BY SUM(w) DESC, u ASC LIMIT $BfsSources),
+    * CTE (symmetric); defines `srcs` ([[hubsSql]]), `pwdeg`, and
+    * `p0`..`p$PprIters` — each round exactly [[Graph.pprStep]]'s
+    * arithmetic: weight-proportional integer shares (floor of one IEEE
+    * division on exact operands), damped in-mass (floor of one IEEE
+    * multiply), teleport to seeds only, zero-rank rows absent. */
+  private def pprCtes: String =
+    unroll(
+      s"""$hubsSql,
          |pwdeg AS (SELECT u, CAST(SUM(w) AS BIGINT) AS wd
          |          FROM edges GROUP BY u),
          |p0 AS (SELECT node, CAST(${Graph.RankOne} AS BIGINT) AS rank_fp
-         |       FROM srcs)""".stripMargin
-    val steps = (1 to PprIters).map { i =>
+         |       FROM srcs)""".stripMargin, PprIters) { i =>
       s"""psh$i AS (
          |  SELECT e.v,
          |    CAST(FLOOR(CAST(r.rank_fp * e.w AS DOUBLE) / g.wd) AS BIGINT) AS c
@@ -533,8 +454,6 @@ object AnalyticsQueries {
          |    FULL OUTER JOIN psm$i m ON m.node = s.node)
          |  WHERE rank_fp > 0)""".stripMargin
     }
-    (base +: steps).mkString(",\n")
-  }
 
   /** Unrolled synchronous-LPA CTEs: requires a preceding
     * `edges(u, v, w)` CTE (symmetric), defines `l0`..`l$LpaIters` —
@@ -543,10 +462,9 @@ object AnalyticsQueries {
     * as a max-join + MIN instead of Spark's order-isomorphic
     * `max(struct(wsum, -label))` fold: identical argmax semantics,
     * all-integer, so the rounds replay bit-for-bit. */
-  private def lpaCtes: String = {
-    val base =
-      """l0 AS (SELECT DISTINCT u AS node, u AS label FROM edges)"""
-    val steps = (1 to LpaIters).map { i =>
+  private def lpaCtes: String =
+    unroll("""l0 AS (SELECT DISTINCT u AS node, u AS label FROM edges)""",
+        LpaIters) { i =>
       s"""v$i AS (
          |  SELECT e.u AS node, l.label, SUM(e.w) AS wsum
          |  FROM edges e JOIN l${i - 1} l ON l.node = e.v
@@ -557,8 +475,6 @@ object AnalyticsQueries {
          |  FROM v$i v JOIN m$i m ON v.node = m.node AND v.wsum = m.mw
          |  GROUP BY v.node)""".stripMargin
     }
-    (base +: steps).mkString(",\n")
-  }
 
   /** The shared items/pairs/edges preamble of both LPA oracles. */
   private def lpaEdgesSql: String =
@@ -603,16 +519,17 @@ object AnalyticsQueries {
     "graph_pagerank_converge" -> QueryDef(
       // L1 movement between consecutive frames of the SAME training run
       // graph_pagerank_train serves — not a second run.
-      (s, d) => Graph.convergenceOf(prRankTrace(s, d)),
+      (s, d) => Graph.roundPairs(prRankTrace(s, d), "rank_fp", "r")(
+        sum(abs(col("r1") - col("r0"))).as("total_delta")),
       s"""WITH ${CdcMapping.factSql},
          |edges AS (
          |  SELECT DISTINCT user_id AS src, content_id AS dst FROM fact),
          |$prCtes
-         |${(1 to PrIters).map(i =>
+         |${perRound(1 to PrIters)(i =>
              s"""SELECT CAST($i AS BIGINT) AS iter, COUNT(*) AS n_nodes,
                 |  CAST(SUM(ABS(a.rank_fp - b.rank_fp)) AS BIGINT) AS total_delta
                 |FROM r$i a JOIN r${i - 1} b ON a.node = b.node""".stripMargin)
-           .mkString("\nUNION ALL\n")}""".stripMargin),
+           }""".stripMargin),
 
     // One damped PageRank power-iteration step over the user→content
     // engagement graph the reference pipeline materializes — content
@@ -621,9 +538,7 @@ object AnalyticsQueries {
     "graph_pagerank_step" -> QueryDef(
       (s, d) => {
         val edges = engagementEdges(s, d)
-        val nodes = edges.select(col("src").as("node"))
-          .union(edges.select(col("dst").as("node"))).distinct()
-        Graph.pagerankStep(edges, nodes.withColumn("rank_fp", lit(Graph.RankOne)))
+        Graph.pagerankStep(edges, Graph.pagerankSeed(edges))
       },
       s"""WITH ${CdcMapping.factSql},
          |edges AS (
@@ -899,16 +814,18 @@ object AnalyticsQueries {
     // join, dropped weight, or unstable tie-break bends both counters
     // in round 1. All-integer, order-free.
     "graph_lpa_converge" -> QueryDef(
-      (s, d) => Graph.lpaConvergenceOf(lpaLabelTrace(s, d)),
+      (s, d) => Graph.roundPairs(lpaLabelTrace(s, d), "label", "l")(
+        sum(when(col("l1") =!= col("l0"), 1L).otherwise(0L)).as("n_changed"),
+        countDistinct(col("l1")).as("n_labels")),
       s"""WITH $lpaEdgesSql,
          |$lpaCtes
-         |${(1 to LpaIters).map(i =>
+         |${perRound(1 to LpaIters)(i =>
              s"""SELECT CAST($i AS BIGINT) AS iter, COUNT(*) AS n_nodes,
                 |  CAST(SUM(CASE WHEN a.label <> b.label THEN 1 ELSE 0 END)
                 |       AS BIGINT) AS n_changed,
                 |  CAST(COUNT(DISTINCT a.label) AS BIGINT) AS n_labels
                 |FROM l$i a JOIN l${i - 1} b ON a.node = b.node""".stripMargin)
-           .mkString("\nUNION ALL\n")}""".stripMargin),
+           }""".stripMargin),
 
     // Multi-source BFS shortest hop-distances from the top-4 weighted-
     // degree hubs of the co-purchase graph — "how far is every product
@@ -923,7 +840,7 @@ object AnalyticsQueries {
           col("dist").cast("long").as("dist"),
           col("src").cast("long").as("src")),
       s"""WITH $lpaEdgesSql,
-         |$bfsCtes
+         |${relaxCtes("d", "1", BfsIters)}
          |SELECT CAST(node AS BIGINT) AS node, CAST(dist AS BIGINT) AS dist,
          |  CAST(src AS BIGINT) AS src FROM d$BfsIters""".stripMargin),
 
@@ -932,15 +849,12 @@ object AnalyticsQueries {
     // monotonically (a relaxation only adds nodes); a broken join key,
     // lost union branch, or unstable tie-break bends round 1.
     "graph_bfs_reach" -> QueryDef(
-      (s, d) => Graph.bfsReachedOf(bfsDistTrace(s, d)),
+      (s, d) => Graph.roundTotals(bfsDistTrace(s, d), "n_reached", "dist",
+        "sum_dist"),
       s"""WITH $lpaEdgesSql,
-         |$bfsCtes
-         |${(0 to BfsIters).map(i =>
-             s"""SELECT CAST($i AS BIGINT) AS iter,
-                |  CAST(COUNT(*) AS BIGINT) AS n_reached,
-                |  CAST(SUM(dist) AS BIGINT) AS sum_dist FROM d$i"""
-               .stripMargin)
-           .mkString("\nUNION ALL\n")}""".stripMargin),
+         |${relaxCtes("d", "1", BfsIters)}
+         |${roundTotalsSql("d", BfsIters,
+             "n_reached", "dist", "sum_dist")}""".stripMargin),
 
     // Multi-source WEIGHTED shortest paths from the same bestseller
     // hubs — bfs's min-plus generalization (Bellman–Ford rounds over
@@ -956,7 +870,7 @@ object AnalyticsQueries {
           col("dist").cast("long").as("dist"),
           col("src").cast("long").as("src")),
       s"""WITH $lpaEdgesSql,
-         |$wspCtes
+         |${relaxCtes("wd", "e.w", WspIters)}
          |SELECT CAST(node AS BIGINT) AS node, CAST(dist AS BIGINT) AS dist,
          |  CAST(src AS BIGINT) AS src FROM wd$WspIters""".stripMargin),
 
@@ -965,15 +879,12 @@ object AnalyticsQueries {
     // monotonically and total distance per node only ever falls; the
     // final rounds repeating IS the Bellman–Ford convergence proof.
     "graph_wsp_converge" -> QueryDef(
-      (s, d) => Graph.bfsReachedOf(wspDistTrace(s, d)),
+      (s, d) => Graph.roundTotals(wspDistTrace(s, d), "n_reached", "dist",
+        "sum_dist"),
       s"""WITH $lpaEdgesSql,
-         |$wspCtes
-         |${(0 to WspIters).map(i =>
-             s"""SELECT CAST($i AS BIGINT) AS iter,
-                |  CAST(COUNT(*) AS BIGINT) AS n_reached,
-                |  CAST(SUM(dist) AS BIGINT) AS sum_dist FROM wd$i"""
-               .stripMargin)
-           .mkString("\nUNION ALL\n")}""".stripMargin),
+         |${relaxCtes("wd", "e.w", WspIters)}
+         |${roundTotalsSql("wd", WspIters,
+             "n_reached", "dist", "sum_dist")}""".stripMargin),
 
     // Weighted personalized PageRank from the same bestseller hubs —
     // the random-walk proximity measure beside the hop metric (BFS)
@@ -998,20 +909,12 @@ object AnalyticsQueries {
     // geometric series — GraphSpec pins seeds ranked ≥ the teleport
     // floor every round and the documented mass bound.
     "graph_ppr_converge" -> QueryDef(
-      (s, d) => pprRankTrace(s, d).zipWithIndex.map { case (df, i) =>
-        df.agg(count(lit(1)).as("n_ranked"),
-            sum(col("rank_fp")).as("mass_fp"))
-          .select(lit(i.toLong).as("iter"), col("n_ranked"),
-            col("mass_fp").cast("long").as("mass_fp"))
-      }.reduce(_.union(_)),
+      (s, d) => Graph.roundTotals(pprRankTrace(s, d), "n_ranked", "rank_fp",
+        "mass_fp"),
       s"""WITH $lpaEdgesSql,
          |$pprCtes
-         |${(0 to PprIters).map(i =>
-             s"""SELECT CAST($i AS BIGINT) AS iter,
-                |  CAST(COUNT(*) AS BIGINT) AS n_ranked,
-                |  CAST(SUM(rank_fp) AS BIGINT) AS mass_fp FROM p$i"""
-               .stripMargin)
-           .mkString("\nUNION ALL\n")}""".stripMargin),
+         |${roundTotalsSql("p", PprIters,
+             "n_ranked", "rank_fp", "mass_fp")}""".stripMargin),
 
     // Graph-augmented retrieval — the "recommendations = content
     // similarity × graph proximity" capstone every production
@@ -1036,12 +939,8 @@ object AnalyticsQueries {
         val e = Tables.embeddings(s, d).select(col("vec_id"),
           transform(col("embedding"),
             x => round(x.cast("double") * 1000)).as("qv"))
-        val den = Similarity.knnBruteForce(
-            e.filter(pmod(col("vec_id"), lit(100)) === 0), e,
-            "vec_id", "qv", 5)
-          .select(col("query_id").as("query_doc"),
-            col("neighbor_id").as("doc_id"),
-            col("rank").cast("long").as("dense_rk"))
+        val den = TextQueries.denseRanks(
+          e.filter(pmod(col("vec_id"), lit(100)) === 0), e, "vec_id", "qv", 5)
         val qs = Tables.embeddings(s, d)
           .filter(pmod(col("vec_id"), lit(100)) === 0)
           .select(col("vec_id").as("query_doc"))
@@ -1252,10 +1151,7 @@ object AnalyticsQueries {
         val hubs = deg.crossJoin(broadcast(tot))
           .filter(col("key_rows") * 32 > col("total_rows") * 5)
           .select(col("src"))
-        val r0 = e.select(col("src").as("node"))
-          .union(e.select(col("dst").as("node"))).distinct()
-          .withColumn("rank_fp", lit(Graph.RankOne))
-        Graph.pagerankStepSkewSplit(e, r0, hubs)
+        Graph.pagerankStepSkewSplit(e, Graph.pagerankSeed(e), hubs)
           .select(col("node").cast("long").as("node"),
             col("rank_fp").cast("long").as("rank_fp"))
       },
@@ -1305,13 +1201,13 @@ object AnalyticsQueries {
       (s, d) => Graph.kcorePeelOf(lpaEdges(s, d), kcoreSurvTrace(s, d)),
       s"""WITH $lpaEdgesSql,
          |$kcoreCtes
-         |${(0 to KcoreIters).map(i =>
+         |${perRound(0 to KcoreIters)(i =>
              s"""SELECT CAST($i AS BIGINT) AS iter,
                 |  (SELECT CAST(COUNT(*) AS BIGINT) FROM s$i) AS n_nodes,
                 |  (SELECT CAST(COUNT(*) AS BIGINT) FROM edges e
                 |   JOIN s$i a ON e.u = a.node
                 |   JOIN s$i b ON e.v = b.node) AS n_edges""".stripMargin)
-           .mkString("\nUNION ALL\n")}""".stripMargin),
+           }""".stripMargin),
 
     // Bloom-prefiltered fact→dim join: the sketch of the filtered
     // orders keys drops non-matching lineitem rows before the shuffle;

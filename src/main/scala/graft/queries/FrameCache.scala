@@ -20,8 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * compute cost entirely.
   *
   * NOTE: do not nest [[memo]] calls directly — resolve inner frames
-  * BEFORE entering the outer memo (a nested computeIfAbsent on the same
-  * map is a recursive update and throws).
+  * BEFORE entering the outer memo. A nested build runs inside the outer
+  * build's timed window, so [[buildSeconds]] (and with it Bench's
+  * shared-frame line) would count the inner build twice: once under its
+  * own kind and again inside the outer one.
   */
 private[graft] object FrameCache {
 
@@ -66,8 +68,9 @@ private[graft] object FrameCache {
     * CONSTRUCTION is itself eager (e.g. a builder chain containing its
     * own `localCheckpoint`): `memo`'s by-name argument only defers
     * evaluation to the miss path when the caller can construct lazily;
-    * when it can't (the no-nesting rule forces pre-resolution), probe
-    * with [[get]] first and construct only on a miss. */
+    * when it can't (construction that resolves other memos must run
+    * before this memo's timed build — the no-nesting rule), probe with
+    * [[get]] first and construct only on a miss. */
   def get(s: SparkSession, d: String, kind: String): Option[DataFrame] =
     Option(cache.get((s, d, kind)))
 

@@ -210,12 +210,9 @@ object MultimodalQueries {
           .select(col("media_id"),
             transform(col("features"),
               x => round(x.cast("double") * 1000)).as("qv"))
-        val den = graft.operators.Similarity.knnBruteForce(
-            feats.filter(pmod(col("media_id"), lit(25)) === 0), feats,
-            "media_id", "qv", 5)
-          .select(col("query_id").as("query_doc"),
-            col("neighbor_id").as("doc_id"),
-            col("rank").cast("long").as("dense_rk"))
+        val den = TextQueries.denseRanks(
+          feats.filter(pmod(col("media_id"), lit(25)) === 0), feats,
+          "media_id", "qv", 5)
         TextQueries.rrfFuse(lex, den)
           .withColumnRenamed("dense_rk", "feat_rk")
       },

@@ -2271,8 +2271,8 @@ object SimilarityQueries {
       d: String): org.apache.spark.sql.DataFrame = {
     // Resolve the rerank chain BEFORE entering the memo: its plan
     // construction touches the trained-model memos (quantized,
-    // codebooks), and a nested computeIfAbsent throws (FrameCache
-    // doctrine).
+    // codebooks), whose builds would otherwise be timed twice
+    // (FrameCache's no-nesting rule).
     val built = ivfpqRerankSpark(s, d, finalK = MmrPool)
       .select(col("query_id"), col("rank"), col("vec_id"), col("d2"))
     FrameCache.memo(s, d, "mmr_pool")(built)

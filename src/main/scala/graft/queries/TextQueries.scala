@@ -887,6 +887,18 @@ object TextQueries {
         col("lex_rk"), col("dense_rk"), col("rrf"))
   }
 
+  /** The dense branch of every RRF fusion: exact cosine top-`k`
+    * ([[Similarity.knnBruteForce]]) of `queries` against `corpus` on
+    * their (`id`, `vec`) columns, as the `(query_doc, doc_id, dense_rk)`
+    * ranking [[rrfFuse]] reads — one expression for each batch row and
+    * its streaming twin. */
+  private[graft] def denseRanks(queries: DataFrame, corpus: DataFrame,
+      id: String, vec: String, k: Int): DataFrame =
+    Similarity.knnBruteForce(queries, corpus, id, vec, k)
+      .select(col("query_id").as("query_doc"),
+        col("neighbor_id").as("doc_id"),
+        col("rank").cast("long").as("dense_rk"))
+
   /** The static lexical serving index — tf/df/dl frames plus the two
     * scalars (corpus size, integer avgdl) the BM25 weight needs. Built
     * ONCE from the corpus (the same one token explosion the batch
@@ -1579,12 +1591,8 @@ object TextQueries {
         val e = Tables.embeddings(s, d).select(col("vec_id"),
           transform(col("embedding"),
             x => round(x.cast("double") * 1000)).as("qv"))
-        val den = Similarity.knnBruteForce(
-            e.filter(pmod(col("vec_id"), lit(100)) === 0), e,
-            "vec_id", "qv", 5)
-          .select(col("query_id").as("query_doc"),
-            col("neighbor_id").as("doc_id"),
-            col("rank").cast("long").as("dense_rk"))
+        val den = denseRanks(
+          e.filter(pmod(col("vec_id"), lit(100)) === 0), e, "vec_id", "qv", 5)
         rrfFuse(lex, den)
       },
       s"""WITH ${bm25CtesFor(CorpusQueryWhere)},

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.TextAnalysis
 import graft.queries.TextQueries
 
 /** HYBRID retrieval serving — the fusion twin next to the filtered and
@@ -19,7 +19,7 @@ import graft.queries.TextQueries
   * from the same tokenizer the corpus index was built with, the
   * qterms/candidate/rank construction is [[TextQueries.bm25Serve]]
   * (the `corpus_bm25` chain with the query tf as a parameter), the
-  * dense branch is [[Similarity.knnBruteForce]], and the fusion is
+  * dense branch is [[TextQueries.denseRanks]], and the fusion is
   * [[TextQueries.rrfFuse]] — the ONE implementation the batch
   * `corpus_hybrid_rrf` also calls, so serving can never drift from
   * the oracle-checked ranking. StreamingSpec pins streamed results
@@ -49,13 +49,10 @@ object StreamingHybrid {
           .groupBy(col("query_doc"), col("term"))
           .agg(count(lit(1)).as("tf"))
         val lex = TextQueries.bm25Serve(qtf, ix)
-        val den = Similarity.knnBruteForce(
-            batch.filter(col("qv").isNotNull)
-              .select(col("query_doc").as("vec_id"), col("qv")),
-            corpusVecs, "vec_id", "qv", k)
-          .select(col("query_id").as("query_doc"),
-            col("neighbor_id").as("doc_id"),
-            col("rank").cast("long").as("dense_rk"))
+        val den = TextQueries.denseRanks(
+          batch.filter(col("qv").isNotNull)
+            .select(col("query_doc").as("vec_id"), col("qv")),
+          corpusVecs, "vec_id", "qv", k)
         sink(TextQueries.rrfFuse(lex, den))
       }
 
@@ -84,12 +81,9 @@ object StreamingHybrid {
           .groupBy(col("query_doc"), col("term"))
           .agg(count(lit(1)).as("tf"))
         val lex = TextQueries.bm25Serve(qtf, ix)
-        val den = Similarity.knnBruteForce(
-            batch.select(col("query_doc").as("vec_id"), col("qv")),
-            featCorpus, "vec_id", "qv", k)
-          .select(col("query_id").as("query_doc"),
-            col("neighbor_id").as("doc_id"),
-            col("rank").cast("long").as("dense_rk"))
+        val den = TextQueries.denseRanks(
+          batch.select(col("query_doc").as("vec_id"), col("qv")),
+          featCorpus, "vec_id", "qv", k)
         sink(TextQueries.rrfFuse(lex, den)
           .withColumnRenamed("dense_rk", "feat_rk"))
       }
@@ -113,12 +107,9 @@ object StreamingHybrid {
       sink: DataFrame => Unit): DataStreamWriter[Row] =
     queries.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val den = Similarity.knnBruteForce(
-            batch.select(col("query_doc").as("vec_id"), col("qv")),
-            corpusVecs, "vec_id", "qv", k)
-          .select(col("query_id").as("query_doc"),
-            col("neighbor_id").as("doc_id"),
-            col("rank").cast("long").as("dense_rk"))
+        val den = TextQueries.denseRanks(
+          batch.select(col("query_doc").as("vec_id"), col("qv")),
+          corpusVecs, "vec_id", "qv", k)
         val graph = graft.queries.AnalyticsQueries.graphAuthorityServe(
           batch.select(col("query_doc")), edges, ppr)
         sink(TextQueries.rrfFuse(graph, den)

@@ -16,7 +16,7 @@ class GraphSpec extends SparkSpec {
 
   test("one step on a 3-cycle with a chord matches hand arithmetic") {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val ranks = Graph.pagerank(edges, 1).collect()
+    val ranks = Graph.pagerankTrace(edges, 1, Graph.checkpoint).last.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // deg(1)=2, deg(2)=1, deg(3)=1; uniform start 1e6
     ranks(1L) shouldBe step(1000000L)           // from 3
@@ -26,7 +26,7 @@ class GraphSpec extends SparkSpec {
 
   test("dangling sink keeps receiving, contributes nothing (pinned)") {
     val edges = Seq((1L, 2L)).toDF("src", "dst")
-    val ranks = Graph.pagerank(edges, 2).collect()
+    val ranks = Graph.pagerankTrace(edges, 2, Graph.checkpoint).last.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     ranks(1L) shouldBe Graph.BaseFp // no in-edges after round 1
     ranks(2L) shouldBe step(Graph.BaseFp) // round 2: receives 1's base rank
@@ -60,8 +60,10 @@ class GraphSpec extends SparkSpec {
   test("iteration is deterministic and total (every node ranked)") {
     val edges = Seq.tabulate(200)(i => (i.toLong % 23, (i * 7L) % 31))
       .filter { case (a, b) => a != b }.toDF("src", "dst")
-    val a = Graph.pagerank(edges, 3).orderBy("node").collect().toSeq
-    val b = Graph.pagerank(edges, 3).orderBy("node").collect().toSeq
+    val a = Graph.pagerankTrace(edges, 3, Graph.checkpoint).last
+      .orderBy("node").collect().toSeq
+    val b = Graph.pagerankTrace(edges, 3, Graph.checkpoint).last
+      .orderBy("node").collect().toSeq
     a shouldBe b
     val nNodes = edges.select(col("src").as("n"))
       .union(edges.select(col("dst"))).distinct().count()
@@ -81,7 +83,7 @@ class GraphSpec extends SparkSpec {
     // round 2, and round 3 is the fixed point {1,2,3}→1, {4,5,6}→4
     val edges = sym(Seq((1L, 2L, 2L), (1L, 3L, 2L), (2L, 3L, 2L),
       (4L, 5L, 2L), (5L, 6L, 2L), (4L, 6L, 2L), (3L, 4L, 1L)))
-    val labels = Graph.lpaTrace(edges, 3).last.collect()
+    val labels = Graph.lpaTrace(edges, 3, Graph.checkpoint).last.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     labels shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 4L, 5L -> 4L, 6L -> 4L)
@@ -92,13 +94,11 @@ class GraphSpec extends SparkSpec {
     // at weight 2: total weight wins, not neighbor count... and with
     // all weights equal, the min label wins the tie
     val weighted = sym(Seq((10L, 1L, 5L), (10L, 2L, 2L), (10L, 3L, 2L)))
-    val w1 = Graph.lpaStep(weighted, weighted.select(col("u").as("node"))
-        .distinct().withColumn("label", col("node")))
+    val w1 = Graph.lpaStep(weighted, Graph.lpaSeed(weighted))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     w1(10L) shouldBe 1L // 5 > 2 + nothing: per-label totals, 5 vs 2 vs 2
     val tied = sym(Seq((10L, 7L, 1L), (10L, 2L, 1L), (10L, 5L, 1L)))
-    val t1 = Graph.lpaStep(tied, tied.select(col("u").as("node"))
-        .distinct().withColumn("label", col("node")))
+    val t1 = Graph.lpaStep(tied, Graph.lpaSeed(tied))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     t1(10L) shouldBe 2L
   }
@@ -107,8 +107,9 @@ class GraphSpec extends SparkSpec {
     val edges = sym(Seq.tabulate(300)(i =>
       ((i.toLong % 29), (i * 11L) % 37 + 29, (i % 3) + 1L))
       .distinct)
-    val a = Graph.lpaTrace(edges, 3).last.orderBy("node").collect().toSeq
-    val b = Graph.lpaTrace(edges.repartition(7), 3).last
+    val a = Graph.lpaTrace(edges, 3, Graph.checkpoint).last
+      .orderBy("node").collect().toSeq
+    val b = Graph.lpaTrace(edges.repartition(7), 3, Graph.checkpoint).last
       .orderBy("node").collect().toSeq
     a shouldBe b
     // the registry audit on real data: label space must shrink
@@ -132,18 +133,18 @@ class GraphSpec extends SparkSpec {
   test("BFS on a path graph walks exact hop distances, truncates at K") {
     // 1-2-3-4-5 chain from source 1: after 2 rounds nodes 4, 5 are
     // honestly absent, not infinite
-    val dists = Graph.bfsTrace(
+    val dists = Graph.relaxTrace(
         sym(Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L), (4L, 5L, 1L))),
-        Seq(1L).toDF("node"), 2).last
+        Seq(1L).toDF("node"), Graph.UnitHop, 2, Graph.checkpoint).last
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     dists shouldBe Map(1L -> (0L, 1L), 2L -> (1L, 1L), 3L -> (2L, 1L))
   }
 
   test("BFS equidistant node takes the smallest source id") {
     // 1-2-3 and 5-4-3: node 3 is 2 hops from both sources 1 and 5
-    val trace = Graph.bfsTrace(
+    val trace = Graph.relaxTrace(
       sym(Seq((1L, 2L, 1L), (2L, 3L, 1L), (5L, 4L, 1L), (4L, 3L, 1L))),
-      Seq(1L, 5L).toDF("node"), 2)
+      Seq(1L, 5L).toDF("node"), Graph.UnitHop, 2, Graph.checkpoint)
     val d = trace.last.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     d(3L) shouldBe (2L, 1L)  // min-source tie-break
@@ -157,7 +158,7 @@ class GraphSpec extends SparkSpec {
     // fixed point is the triangle with every induced degree exactly 2
     val edges = sym(Seq((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 1L),
       (3L, 4L, 1L), (4L, 5L, 1L)))
-    val trace = Graph.kcoreTrace(edges, 2L, 3)
+    val trace = Graph.kcoreTrace(edges, 2L, 3, Graph.checkpoint)
     trace.map(_.count()) shouldBe IndexedSeq(5L, 4L, 3L, 3L)
     val degs = Graph.kcoreDegrees(edges, trace.last).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -195,16 +196,19 @@ class GraphSpec extends SparkSpec {
     // and the min-plus answer (2 hops, dist 2) must differ — the
     // constructed case that proves the generalization is doing work
     val edges = sym(Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 2L, 1L)))
-    val wsp = Graph.wspTrace(edges, Seq(1L).toDF("node"), 3).last
+    val wsp = Graph.relaxTrace(edges, Seq(1L).toDF("node"), Graph.EdgeWeight, 3,
+      Graph.checkpoint).last
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     wsp(2L) shouldBe (2L, 1L) // via 3, total weight 2 — not the direct 10
     wsp(3L) shouldBe (1L, 1L)
-    val bfs = Graph.bfsTrace(edges, Seq(1L).toDF("node"), 3).last
+    val bfs = Graph.relaxTrace(edges, Seq(1L).toDF("node"), Graph.UnitHop, 3,
+      Graph.checkpoint).last
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     bfs(2L) shouldBe 1L // the hop metric takes the direct edge
     // equidistant-by-weight node takes the smallest source id
     val tied = sym(Seq((1L, 3L, 2L), (5L, 3L, 2L)))
-    val t = Graph.wspTrace(tied, Seq(1L, 5L).toDF("node"), 2).last
+    val t = Graph.relaxTrace(tied, Seq(1L, 5L).toDF("node"), Graph.EdgeWeight,
+      2, Graph.checkpoint).last
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     t(3L) shouldBe (2L, 1L)
   }
@@ -237,7 +241,7 @@ class GraphSpec extends SparkSpec {
     val edges = pairs.unionAll(
       pairs.select(col("v").as("u"), col("u").as("v"), col("w")))
     val fin = SparkEntry.queries("graph_wsp_dists")(spark, d)
-    val changed = Graph.wspStep(edges, fin)
+    val changed = Graph.relaxStep(edges, fin, Graph.EdgeWeight)
       .withColumnRenamed("dist", "dist2").withColumnRenamed("src", "src2")
       .join(fin, Seq("node"), "full_outer")
       .filter(col("dist2").isNull || col("dist").isNull ||
@@ -252,14 +256,15 @@ class GraphSpec extends SparkSpec {
     // 1: 150,000 + floor(.85·425,000) = 511,250; 2: floor(.85·150,000)
     // = 127,500; 3: floor(.85·425,000) = 361,250.
     val edges = sym(Seq((1L, 2L, 1L), (2L, 3L, 1L)))
-    val t = Graph.pprTrace(edges, Seq(1L).toDF("node"), 2)
+    val t = Graph.pprTrace(edges, Seq(1L).toDF("node"), 2, Graph.checkpoint)
     t(1).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
       Map(1L -> 150000L, 2L -> 850000L)
     t(2).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
       Map(1L -> 511250L, 2L -> 127500L, 3L -> 361250L)
     // weights steer the walk: tripling 1—2's weight starves 3
     val wEdges = sym(Seq((1L, 2L, 3L), (2L, 3L, 1L)))
-    val w2 = Graph.pprTrace(wEdges, Seq(1L).toDF("node"), 2)(2)
+    val w2 = Graph.pprTrace(wEdges, Seq(1L).toDF("node"), 2,
+        Graph.checkpoint)(2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     w2(1L) should be > t(2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap.apply(1L)
@@ -330,11 +335,33 @@ class GraphSpec extends SparkSpec {
     val edges = pairs.unionAll(
       pairs.select(col("v").as("u"), col("u").as("v"), col("w")))
     val fin = SparkEntry.queries("graph_bfs_dists")(spark, d)
-    val changed = Graph.bfsStep(edges, fin)
+    val changed = Graph.relaxStep(edges, fin, Graph.UnitHop)
       .withColumnRenamed("dist", "dist2").withColumnRenamed("src", "src2")
       .join(fin, "node")
       .filter(col("dist2") =!= col("dist") || col("src2") =!= col("src"))
     changed.count() shouldBe 0L
+  }
+
+  test("graph rounds are shared frames built once by the prewarm, then reused") {
+    import graft.queries.{AnalyticsQueries, FrameCache}
+    val d = "/root/testdata/sf0.001"
+    def rounds(kind: String, n: Int) = (0 to n).map(i => s"$kind$i")
+    FrameCache.clearAll()
+    AnalyticsQueries.prewarmShared(spark, d)
+    val built = FrameCache.buildSeconds
+    // one memo kind per round of each run, beside the edge and pair frames
+    built.map(_._1).toSet shouldBe Set("basket_items", "copurchase_pairs",
+      "pagerank_edges", "lpa_edges", "bfs_src") ++
+      rounds("pagerank_r", 3) ++ rounds("lpa_l", 3) ++ rounds("bfs_d", 3) ++
+      rounds("wsp_d", 10) ++ rounds("ppr_p", 3) ++ rounds("kcore_s", 6)
+    // every train/converge pair (and the PPR-fed recommendation row)
+    // reads the prewarmed rounds: no new kind, and no kind rebuilt
+    Seq("graph_pagerank_train", "graph_pagerank_converge", "graph_lpa_train",
+      "graph_lpa_converge", "graph_bfs_dists", "graph_bfs_reach",
+      "graph_wsp_dists", "graph_wsp_converge", "graph_ppr_train",
+      "graph_ppr_converge", "graph_kcore", "graph_kcore_peel",
+      "corpus_graph_rrf").foreach(q => SparkEntry.queries(q)(spark, d))
+    FrameCache.buildSeconds shouldBe built
   }
 
   test("skew audit: shares, flag threshold, and ordering are internally consistent") {
@@ -402,9 +429,7 @@ class GraphSpec extends SparkSpec {
     hubsOf(benign).count() shouldBe 0L
     hubsOf(pl).count() should be > 0L
     for (e <- Seq(benign, pl)) {
-      val ranks = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .withColumn("rank_fp", lit(Graph.RankOne))
+      val ranks = Graph.pagerankSeed(e)
       val plain = Graph.pagerankStep(e, ranks).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       val split = Graph.pagerankStepSkewSplit(e, ranks, hubsOf(e)).collect()

@@ -1431,9 +1431,9 @@ class StreamingSpec extends SparkSpec {
     // static once-built serving structures, checkpointed (LexIndex
     // doctrine): the adjacency, the converged PPR table, the corpus
     val edges = graft.queries.AnalyticsQueries
-      .coPurchaseEdgesFrame(spark, d).localCheckpoint()
+      .lpaEdges(spark, d).localCheckpoint()
     val ppr = graft.queries.AnalyticsQueries
-      .pprFinalFrame(spark, d).localCheckpoint()
+      .pprRankTrace(spark, d).last.localCheckpoint()
     val corpusVecs = graft.ingest.Tables.embeddings(spark, d)
       .select(col("vec_id").cast("long"),
         transform(col("embedding"), x => round(x.cast("double") * 1000))

@@ -14,7 +14,9 @@ runs of the same plan:
   - the counter suffix of lambda variables (`lambda x_17`) and the
     JVM's generated lambda class names and instance identity hashes
     (`$$Lambda$3132/0x00007fb580ecdbb8@6d3a56ea`) in typed-operator
-    arguments.
+    arguments;
+  - the identity hash of any other object printed by its default
+    `toString` (`graft.functions.TopKAggregator@74ea1cd0`).
 sbt's own `[info]`/`[warn]`/`[error]` lines and Spark's log4j lines are
 ignored.
 
@@ -33,6 +35,7 @@ NORMALIZE = [
     (re.compile(r"(\w+\.scala):\d+"), r"\1"),
     (re.compile(r"(lambda \w+?)_\d+"), r"\1_"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+(@[0-9a-f]+)?"), "$Lambda$"),
+    (re.compile(r"\b((?:[A-Za-z_]\w*\.)+[A-Za-z_$][\w$]*)@[0-9a-f]+\b"), r"\1@"),
 ]
 EXCHANGE = re.compile(r"^\(\d+\) (?:Broadcast)?Exchange\b", re.M)
 SBT_LOG = re.compile(r"^\[(info|warn|error|success)\]")
