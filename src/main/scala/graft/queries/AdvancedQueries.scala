@@ -14,9 +14,7 @@ import graft.ingest.Tables
   */
 object AdvancedQueries {
   import OracleSql.tokens
-
-  private def sqlBoth(q: String): QueryDef =
-    QueryDef((s, d) => { Tables.registerAll(s, d); s.sql(q) }, q)
+  import QueryDef.sqlBoth
 
   private def cubeSql(table: String) =
     s"""SELECT l_returnflag, l_linestatus,

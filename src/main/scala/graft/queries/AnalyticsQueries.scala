@@ -18,9 +18,7 @@ import graft.operators.{BloomJoin, Graph, TextAnalysis}
   */
 object AnalyticsQueries {
 
-  /** Query whose SQL runs identically on Spark and DuckDB. */
-  private def sqlBoth(q: String): QueryDef =
-    QueryDef((s, d) => { Tables.registerAll(s, d); s.sql(q) }, q)
+  import QueryDef.sqlBoth
 
   // Cohort retention: users bucketed by first-active week, counted in
   // each later week. `ua` is already (user, week)-distinct, so the final
@@ -556,15 +554,13 @@ object AnalyticsQueries {
          |FROM nodes n LEFT JOIN sums s ON n.node = s.node""".stripMargin),
 
     // Time-series gap fill / resampling to a dense minute grid.
-    "ts_gapfill" -> QueryDef(
-      (s, d) => { Tables.registerAll(s, d)
-        s.sql(gapfillSql("EXPLODE(SEQUENCE(t0, t1, INTERVAL 1 MINUTE))")) },
+    "ts_gapfill" -> QueryDef.sql(
+      gapfillSql("EXPLODE(SEQUENCE(t0, t1, INTERVAL 1 MINUTE))"),
       gapfillSql("UNNEST(GENERATE_SERIES(t0, t1, INTERVAL 1 MINUTE))")),
 
     // Weekly cohort retention matrix.
-    "analytics_retention" -> QueryDef(
-      (s, d) => { Tables.registerAll(s, d)
-        s.sql(retentionSql("DATEDIFF(CAST(u.wk AS DATE), CAST(c.cohort_wk AS DATE))")) },
+    "analytics_retention" -> QueryDef.sql(
+      retentionSql("DATEDIFF(CAST(u.wk AS DATE), CAST(c.cohort_wk AS DATE))"),
       retentionSql("DATE_DIFF('day', CAST(c.cohort_wk AS DATE), CAST(u.wk AS DATE))")),
 
     // Exact z-score outliers per event type (shared SQL text).

@@ -197,14 +197,10 @@ object MultimodalQueries {
     // nothing corpus-sized moves.
     "mm_hybrid_rrf" -> QueryDef(
       (s, d) => {
-        import graft.operators.TextAnalysis
         val ix = TextQueries.lexIndex(s, d)
-        val qtf = Tables.documents(s, d)
-          .filter(pmod(col("doc_id"), lit(25)) === 0)
-          .select(col("doc_id").as("query_doc"),
-            explode(TextAnalysis.tokens(col("text"))).as("term"))
-          .groupBy(col("query_doc"), col("term"))
-          .agg(count(lit(1)).as("tf"))
+        val qtf = TextQueries.termTf(
+          Tables.documents(s, d).filter(pmod(col("doc_id"), lit(25)) === 0),
+          col("doc_id").as("query_doc"))
         val lex = TextQueries.bm25Serve(qtf, ix)
         val feats = mmFeats(s, d)
           .select(col("media_id"),

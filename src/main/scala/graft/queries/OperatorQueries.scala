@@ -230,9 +230,7 @@ object OperatorQueries {
     // analytics as three keyed min-aggregations chained by time
     // predicates (each stage one shuffle on user_id; no window sort,
     // no self-cartesian). Same SQL text on both engines.
-    "op_funnel" -> QueryDef(
-      (s, d) => { Tables.registerAll(s, d); s.sql(funnelSql) },
-      funnelSql),
+    "op_funnel" -> QueryDef.sqlBoth(funnelSql),
 
     // GROUPED top-K via the incremental UDAF: top-3 users by exact
     // integer-quantized engagement per event type, each group maintained

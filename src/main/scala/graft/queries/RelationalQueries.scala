@@ -20,9 +20,7 @@ import graft.ingest.Tables
   */
 object RelationalQueries {
 
-  /** Query whose SQL runs identically on Spark and DuckDB. */
-  private def sqlBoth(q: String): QueryDef =
-    QueryDef((s, d) => { Tables.registerAll(s, d); s.sql(q) }, q)
+  import QueryDef.sqlBoth
 
   val defs: Map[String, QueryDef] = Map(
 
@@ -285,12 +283,11 @@ object RelationalQueries {
     // construction: collect_list order is partition-dependent, so the
     // portable form is sorted-distinct-then-join. Same doctrine as every
     // "latest": an aggregate must not depend on arrival order.
-    "rel_string_agg" -> QueryDef(
-      (s, d) => { Tables.registerAll(s, d); s.sql(
-        """SELECT o_orderstatus,
-          |  array_join(array_sort(collect_set(o_orderpriority)), '|') AS prios,
-          |  COUNT(DISTINCT o_orderpriority) AS n_prios
-          |FROM orders GROUP BY o_orderstatus""".stripMargin) },
+    "rel_string_agg" -> QueryDef.sql(
+      """SELECT o_orderstatus,
+        |  array_join(array_sort(collect_set(o_orderpriority)), '|') AS prios,
+        |  COUNT(DISTINCT o_orderpriority) AS n_prios
+        |FROM orders GROUP BY o_orderstatus""".stripMargin,
       """SELECT o_orderstatus,
         |  array_to_string(list_sort(list(DISTINCT o_orderpriority)), '|') AS prios,
         |  COUNT(DISTINCT o_orderpriority) AS n_prios

@@ -920,13 +920,15 @@ object TextQueries {
   // arrays contribute 0 rows to the explode and 0 to the sum).
   private def lexTf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    FrameCache.memo(s, d, "lex_tf") {
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(TextAnalysis.tokens(col("text"))).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-    }
+    FrameCache.memo(s, d, "lex_tf")(termTf(Tables.documents(s, d), col("doc_id")))
+
+  /** `(key, term, tf)`: each row's `text` tokenized, counted per term —
+    * the corpus tf index above and the query-term frame every lexical
+    * ranker ([[bm25Serve]]) takes, batch and streaming alike. */
+  private[graft] def termTf(texts: DataFrame, key: Column): DataFrame = {
+    val terms = texts.select(key, explode(TextAnalysis.tokens(col("text"))).as("term"))
+    terms.groupBy(col(terms.columns.head), col("term")).agg(count(lit(1)).as("tf"))
+  }
 
   private def lexDf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {

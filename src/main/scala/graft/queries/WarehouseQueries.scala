@@ -18,9 +18,7 @@ import graft.operators.Dedup
   */
 object WarehouseQueries {
 
-  /** Query whose SQL runs identically on Spark and DuckDB. */
-  private def sqlBoth(q: String): QueryDef =
-    QueryDef((s, d) => { Tables.registerAll(s, d); s.sql(q) }, q)
+  import QueryDef.sqlBoth
 
   // MERGE INTO's source batch: updates for every 10th order key, inserts
   // (keys beyond the existing range) derived from every 17th. The offset

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.TextAnalysis
 import graft.queries.TextQueries
 
 /** HYBRID retrieval serving — the fusion twin next to the filtered and
@@ -15,8 +14,8 @@ import graft.queries.TextQueries
   * an exact dense-cosine ranking against the static vector corpus via
   * reciprocal-rank fusion.
   *
-  * Every stage is the BATCH kernel verbatim: the query-side tf comes
-  * from the same tokenizer the corpus index was built with, the
+  * Every stage is the BATCH kernel verbatim: the query-side tf is
+  * [[TextQueries.termTf]], which also builds the corpus index, the
   * qterms/candidate/rank construction is [[TextQueries.bm25Serve]]
   * (the `corpus_bm25` chain with the query tf as a parameter), the
   * dense branch is [[TextQueries.denseRanks]], and the fusion is
@@ -43,12 +42,7 @@ object StreamingHybrid {
       sink: DataFrame => Unit): DataStreamWriter[Row] =
     queries.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val qtf = batch
-          .select(col("query_doc"),
-            explode(TextAnalysis.tokens(col("text"))).as("term"))
-          .groupBy(col("query_doc"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-        val lex = TextQueries.bm25Serve(qtf, ix)
+        val lex = TextQueries.bm25Serve(TextQueries.termTf(batch, col("query_doc")), ix)
         val den = TextQueries.denseRanks(
           batch.filter(col("qv").isNotNull)
             .select(col("query_doc").as("vec_id"), col("qv")),
@@ -75,12 +69,7 @@ object StreamingHybrid {
       sink: DataFrame => Unit): DataStreamWriter[Row] =
     queries.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val qtf = batch
-          .select(col("query_doc"),
-            explode(TextAnalysis.tokens(col("text"))).as("term"))
-          .groupBy(col("query_doc"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-        val lex = TextQueries.bm25Serve(qtf, ix)
+        val lex = TextQueries.bm25Serve(TextQueries.termTf(batch, col("query_doc")), ix)
         val den = TextQueries.denseRanks(
           batch.select(col("query_doc").as("vec_id"), col("qv")),
           featCorpus, "vec_id", "qv", k)

@@ -22,6 +22,12 @@ partner is left out of the verdict and counted in the header line.
 
 `--trace 1` runs traced and judges the per-layer metrics. The tool reads
 each checkout's `perfbench/` and `BENCHMARK.json` and writes nothing there.
+
+For `cdc_pipeline` it also prints each run's tail micro-batch count (the
+`<tag>.batches` notes of the context line) and warns when a run reaches
+BATCH_WARN: the tail's output check reads the stream's recent progress, which
+keeps the last 100 records (`spark.sql.streaming.numRecentProgressUpdates`),
+so the batches before those drop out of the check and read as mismatches.
 """
 import argparse
 import json
@@ -30,6 +36,15 @@ import statistics
 import subprocess
 import sys
 import time
+
+
+BATCH_WARN = 98
+
+
+def tail_batches(rec):
+    """The run's tail micro-batch counts by segment tag, from its notes."""
+    notes = rec.get("context", {}).get("notes", {})
+    return {k[:-len(".batches")]: int(v) for k, v in notes.items() if k.endswith(".batches")}
 
 
 def seeds(spec):
@@ -97,6 +112,18 @@ def summarize(records, bench):
               f"{len(pairs)} pairs (seeds {','.join(str(s) for s, _, _ in pairs)}); "
               f"runs failed {len(bad_runs)}, incorrect {len(incorrect)}, "
               f"left out unpaired {len(left)}")
+        if workload == "cdc_pipeline":
+            for side in ("parent", "change"):
+                counts = [(r["seed"], tail_batches(r)) for r in ok if r["side"] == side]
+                print(f"  tail batches, {side}: " +
+                      " ".join(f"{seed}:{'/'.join(str(n) for n in b.values())}"
+                               for seed, b in counts))
+                for seed, b in counts:
+                    for tag, n in b.items():
+                        if n >= BATCH_WARN:
+                            print(f"  WARN seed {seed} {side}: {tag} tail ran {n} micro-batches, "
+                                  "near the 100 progress records the check reads; batches "
+                                  "before those drop out and their keys read as mismatched")
         if not pairs:
             continue
         names = list(pairs[0][1]["result"]["metrics"])
@@ -152,9 +179,11 @@ def main():
                     with open(a.out, "a") as fh:
                         fh.write(json.dumps(rec) + "\n")
                     m = rec.get("result", {}).get("metrics", {})
+                    batches = "".join(f" {tag}.batches={n}{' WARN' if n >= BATCH_WARN else ''}"
+                                      for tag, n in tail_batches(rec).items())
                     print(f"{workload} seed {seed} {side}: rc={rec['rc']} " +
                           " ".join(f"{n}={v['value']:.4g}" for n, v in m.items()
-                                   if a.trace == 0), flush=True)
+                                   if a.trace == 0) + batches, flush=True)
 
     with open(a.out) as fh:
         records = [json.loads(l) for l in fh if l.strip()]

@@ -32,7 +32,9 @@ NORMALIZE = [
     (re.compile(r"\bplan_id=\d+"), "plan_id="),
     (re.compile(r"\bid=\d+"), "id="),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
-    (re.compile(r"(\w+\.scala):\d+"), r"\1"),
+    # Anchored at a word start: unanchored, every offset of a long hex
+    # literal (a bloom filter's bytes) rescans it, quadratic in its length.
+    (re.compile(r"\b(\w+\.scala):\d+"), r"\1"),
     (re.compile(r"(lambda \w+?)_\d+"), r"\1_"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+(@[0-9a-f]+)?"), "$Lambda$"),
     (re.compile(r"\b((?:[A-Za-z_]\w*\.)+[A-Za-z_$][\w$]*)@[0-9a-f]+\b"), r"\1@"),
