@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * schema with a job (30–55 ms on a 4-core host), so a file's schema is
   * read from its footer on the driver, as that job reads it: the schema
   * Spark's writer stored there, else the parquet schema through Spark's
-  * converter under the session conf. A directory keeps
-  * `spark.read.parquet`.
+  * converter under the session conf.
   *
   * `events.ts` is normalized to the session TIMESTAMP type regardless of
   * how the fixture was written: TIMESTAMP(NANOS) (read as long nanos
@@ -67,20 +66,16 @@ object Tables {
     }
   }
 
-  /** A parquet file (schema from its footer) or directory as a lazy
-    * scan. A missing path throws. */
+  /** A parquet file as a lazy scan, its schema read from its footer. A
+    * missing file throws FileNotFoundException. */
   private def open(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    if (p.getFileSystem(conf).getFileStatus(p).isDirectory) spark.read.parquet(path)
-    else {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      val meta = try reader.getFooter.getFileMetaData finally reader.close()
-      val schema = Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
-      spark.read.schema(schema).parquet(path)
-    }
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    val schema = Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+    spark.read.schema(schema).parquet(path)
   }
 
   def events(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "events")

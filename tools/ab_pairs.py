@@ -23,11 +23,21 @@ partner is left out of the verdict and counted in the header line.
 `--trace 1` runs traced and judges the per-layer metrics. The tool reads
 each checkout's `perfbench/` and `BENCHMARK.json` and writes nothing there.
 
-For `cdc_pipeline` it also prints each run's tail micro-batch count (the
-`<tag>.batches` notes of the context line) and warns when a run reaches
-BATCH_WARN: the tail's output check reads the stream's recent progress, which
-keeps the last 100 records (`spark.sql.streaming.numRecentProgressUpdates`),
-so the batches before those drop out of the check and read as mismatches.
+For `cdc_pipeline` it also prints each run's tail notes from the context
+line and warns on any sign that the tail's output check lost batches. That
+check reads the stream's recent progress, which keeps the last 100 records
+(`spark.sql.streaming.numRecentProgressUpdates`); batches before those drop
+out of it, and their keys read as mismatched. The notes:
+- `<tag>.batches`, the micro-batch count. It is counted from those same 100
+  records (the non-empty ones), so it never passes 100 and, once early
+  batches have dropped out, reads only the retained count. Reaching
+  BATCH_WARN is an early hint that the tail is near the window; staying
+  below it proves nothing.
+- `<tag>.unseen`, timed events that no retained batch committed: nonzero when
+  a dropped batch held events after the lead-in.
+- `kv_mismatched`, the keys whose final KV state differs from the batch view:
+  nonzero when a dropped batch held the last write of a key (the run is then
+  incorrect). These two survive the truncation.
 """
 import argparse
 import json
@@ -41,10 +51,20 @@ import time
 BATCH_WARN = 98
 
 
-def tail_batches(rec):
-    """The run's tail micro-batch counts by segment tag, from its notes."""
+def tail_notes(rec):
+    """The run's tail notes: `<tag>.batches` and `<tag>.unseen` in tag order,
+    then `kv_mismatched`, as (name, value) pairs."""
     notes = rec.get("context", {}).get("notes", {})
-    return {k[:-len(".batches")]: int(v) for k, v in notes.items() if k.endswith(".batches")}
+    tags = sorted(k[:-len(".batches")] for k in notes if k.endswith(".batches"))
+    names = [f"{t}.{n}" for t in tags for n in ("batches", "unseen")] + ["kv_mismatched"]
+    return [(n, int(notes[n])) for n in names if n in notes]
+
+
+def tail_warning(rec):
+    """Why the run's tail check may have lost batches, or an empty string."""
+    return "; ".join(
+        f"{n}={v}" for n, v in tail_notes(rec)
+        if (n.endswith(".batches") and v >= BATCH_WARN) or (not n.endswith(".batches") and v))
 
 
 def seeds(spec):
@@ -114,16 +134,15 @@ def summarize(records, bench):
               f"left out unpaired {len(left)}")
         if workload == "cdc_pipeline":
             for side in ("parent", "change"):
-                counts = [(r["seed"], tail_batches(r)) for r in ok if r["side"] == side]
-                print(f"  tail batches, {side}: " +
-                      " ".join(f"{seed}:{'/'.join(str(n) for n in b.values())}"
-                               for seed, b in counts))
-                for seed, b in counts:
-                    for tag, n in b.items():
-                        if n >= BATCH_WARN:
-                            print(f"  WARN seed {seed} {side}: {tag} tail ran {n} micro-batches, "
-                                  "near the 100 progress records the check reads; batches "
-                                  "before those drop out and their keys read as mismatched")
+                runs = [r for r in ok if r["side"] == side]
+                print(f"  tail batches, {side}: " + " ".join(
+                    f"{r['seed']}:" + "/".join(str(v) for n, v in tail_notes(r)
+                                               if n.endswith(".batches")) for r in runs))
+                for r in runs:
+                    if tail_warning(r):
+                        print(f"  WARN seed {r['seed']} {side}: {tail_warning(r)}; the check "
+                              "reads the last 100 progress records, and batches before "
+                              "those drop out of it")
         if not pairs:
             continue
         names = list(pairs[0][1]["result"]["metrics"])
@@ -179,11 +198,11 @@ def main():
                     with open(a.out, "a") as fh:
                         fh.write(json.dumps(rec) + "\n")
                     m = rec.get("result", {}).get("metrics", {})
-                    batches = "".join(f" {tag}.batches={n}{' WARN' if n >= BATCH_WARN else ''}"
-                                      for tag, n in tail_batches(rec).items())
+                    tail = "".join(f" {n}={v}" for n, v in tail_notes(rec))
                     print(f"{workload} seed {seed} {side}: rc={rec['rc']} " +
                           " ".join(f"{n}={v['value']:.4g}" for n, v in m.items()
-                                   if a.trace == 0) + batches, flush=True)
+                                   if a.trace == 0) + tail +
+                          (" WARN" if tail_warning(rec) else ""), flush=True)
 
     with open(a.out) as fh:
         records = [json.loads(l) for l in fh if l.strip()]
