@@ -3,10 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.ingest.Tables
 import graft.streaming.{StatefulEnricher, StreamingAnomaly, StreamingBudget,
@@ -25,11 +27,11 @@ import graft.streaming.{StatefulEnricher, StreamingAnomaly, StreamingBudget,
   * `MemoryStream` in `Chunks` slices with `processAllAvailable` after
   * each, so every section runs a real multi-micro-batch schedule. The
   * clock covers feed → last batch drained; query start/stop and data
-  * prep sit outside it. All sections use state-TTL-free operator
-  * variants (`NoTimeout`/event-time timeouts), so `processAllAvailable`
-  * terminates — the `ProcessingTimeTimeout` enricher variant needs
-  * sink-polling (see StreamingSpec) and is a semantics spec, not a
-  * throughput path.
+  * prep sit outside it. All sections but the two TTL ones use
+  * state-TTL-free operator variants (`NoTimeout`/event-time timeouts),
+  * so `processAllAvailable` terminates; the TTL sections (`enrich_ttl`,
+  * `content_stats`) never settle and are drained by polling instead
+  * ([[poll]]).
   *
   * Volume floor: the documents fixture is small (5k rows at sf0.1), and
   * ~5k rows over 8 micro-batches times the ~0.6 s/batch scheduling
@@ -43,12 +45,11 @@ object StreamBench {
 
   /** `chunkSec` (per feed-chunk wall seconds) and `queryBatch` (per
     * named query, the engine-reported per-batch `triggerExecution`
-    * seconds) are populated only for sections that opt into detailed
-    * driving — they exist so a regressed section's time can be
-    * ATTRIBUTED (which query, which batch) from the artifact alone
-    * instead of demanding a re-run under a profiler (the round-9
-    * `pipeline` section regressed 3.7× between two same-code runs with
-    * no way to tell which of its two concurrent queries was at fault). */
+    * seconds) exist so a regressed section's time can be ATTRIBUTED
+    * (which query, which batch) from the artifact alone instead of
+    * demanding a re-run under a profiler (the round-9 `pipeline`
+    * section regressed 3.7× between two same-code runs with no way to
+    * tell which of its two concurrent queries was at fault). */
   /** `calibSec`: the constant-work CPU probe ([[Bench.calibrate]]) run
     * UNTIMED immediately before the section — the ambient-attribution
     * signal. Streaming throughput on this host class swings up to ~8×
@@ -70,11 +71,6 @@ object StreamBench {
     def rps: Double = if (sec > 0) rows / sec else 0.0
   }
 
-  /** Section off a [[Drive]], carrying the per-chunk attribution. */
-  private def sect(name: String, rows: Long, d: Drive): Section =
-    Section(name, rows, d.sec, d.batches, chunkSec = d.chunkSec,
-      chunkCalib = d.chunkCalib, chunkRows = d.chunkRows)
-
   private val Chunks = 8
 
   /** Rows each section should process — see "Volume floor" above. */
@@ -85,76 +81,162 @@ object StreamBench {
     xs.grouped(size).toSeq
   }
 
-  /** Replicate `xs` until it reaches `floor` rows. `make(row, replica)`
-    * must mint globally fresh ids (and fresh digests where the operator
-    * keys state on content) so replicas are new work, not replays;
-    * replica 0 is the unmodified fixture. */
-  private def replicate[T](xs: IndexedSeq[T], floor: Int)(
-      make: (T, Int) => T): IndexedSeq[T] = {
+  /** Collect `ds` and replicate it until it reaches `floor` rows.
+    * Replica 0 is the unmodified fixture; replica i rebuilds each row
+    * with `make(row, freshId, i)`, where `freshId` is the row's `id`
+    * plus i × (the fixture's largest id + 1), so no two replicas share
+    * an id. `make` also varies the text where the operator keys state
+    * on content, so replicas are new work, not replays. */
+  private def replicate[T](ds: Dataset[T], floor: Int)(id: T => Long)(
+      make: (T, Long, Int) => T): IndexedSeq[T] = {
+    val xs = ds.collect().toIndexedSeq
     if (xs.isEmpty) xs
     else {
+      val span = xs.map(id).max + 1L
       val copies = math.max(1, (floor + xs.length - 1) / xs.length)
       (0 until copies).flatMap { i =>
-        if (i == 0) xs else xs.map(make(_, i))
+        if (i == 0) xs else xs.map(r => make(r, id(r) + i * span, i))
       }
     }
   }
 
-  case class Drive(sec: Double, batches: Int,
-      chunkSec: Seq[Double], queryBatch: Seq[(String, Seq[Double])],
+  /** One drained feed: `done` is how many chunks the queries drained. */
+  private case class Drive(sec: Double, batches: Int, done: Int,
+      chunkSec: Seq[Double] = Nil,
+      queryBatch: Seq[(String, Seq[Double])] = Nil,
       chunkCalib: Seq[Double] = Nil, chunkRows: Seq[Long] = Nil)
 
   /** Feed `chunks` through `add`, draining every query after each chunk;
     * returns elapsed, batch count of the first query, per-chunk wall
-    * times, and each query's engine-reported per-batch
-    * `triggerExecution` seconds (captured from `recentProgress` BEFORE
-    * stop — stop clears nothing, but a dead query can be left without
-    * progress). Queries are stopped in a finally — a feed failure must
-    * not leave a live streaming query contending with the next timed
-    * section. */
-  private def driveDetailed[T](chunks: Seq[IndexedSeq[T]],
-      add: Seq[T] => Unit, queries: Seq[StreamingQuery]): Drive = {
+    * times, and each named query's engine-reported per-batch
+    * `triggerExecution` seconds (captured from `recentProgress` before
+    * [[section]] stops the queries). */
+  private def driveDetailed[T](spark: SparkSession,
+      chunks: Seq[IndexedSeq[T]], add: Seq[T] => Unit,
+      queries: Seq[StreamingQuery]): Drive = {
+    val chunkSec = Vector.newBuilder[Double]
+    val chunkCalib = Vector.newBuilder[Double]
+    val chunkRows = Vector.newBuilder[Long]
+    var sec = 0.0
+    chunks.foreach { c =>
+      // ambient probe per CHUNK, untimed (excluded from the section
+      // wall): the per-chunk ratio is what lets a mid-section host-
+      // contention phase be attributed from the artifact alone
+      chunkCalib += (try Bench.calibrate(spark) catch { case _: Throwable => -1.0 })
+      chunkRows += c.length.toLong
+      val c0 = System.nanoTime()
+      add(c)
+      queries.foreach(_.processAllAvailable())
+      val w = (System.nanoTime() - c0) / 1e9
+      chunkSec += w
+      sec += w
+    }
+    val batches = queries.headOption.flatMap(q => Option(q.lastProgress))
+      .map(_.batchId.toInt + 1).getOrElse(chunks.size)
+    val perQuery = queries.filter(_.name != null).map { q =>
+      q.name -> q.recentProgress.toIndexedSeq.map { p =>
+        Option(p.durationMs.get("triggerExecution"))
+          .map(_.longValue / 1e3).getOrElse(0.0)
+      }
+    }
+    Drive(sec, batches, chunks.size, chunkSec.result(), perQuery,
+      chunkCalib.result(), chunkRows.result())
+  }
+
+  /** The TTL sections' drain. A `ProcessingTimeTimeout` or TTL'd
+    * operator schedules continuous housekeeping batches, so
+    * `processAllAvailable` never settles — completion is observed by
+    * polling the query's OWN progress metrics (in-process, no Spark
+    * job: a sink-count poll would steal cores from the query being
+    * measured and its cost grows with drained rows). Completion is
+    * tracked by the memory source's `endOffset` in the query progress —
+    * MemoryStream's offset is the 0-based index of the last addData
+    * chunk consumed, and a batch only appears in progress once it
+    * committed, so offset ≥ k−1 means the k'th fed chunk drained.
+    * (Progress entries are NOT keyed uniquely by batchId here: timeout
+    * housekeeping emits duplicate-batchId entries, so per-batch row
+    * summation double-counts or misses — the offset high-water mark is
+    * the race-free signal.) `batches` counts distinct batchIds with
+    * numInputRows > 0, not the empty housekeeping batches. No per-chunk
+    * probe: the clock runs across the whole feed. */
+  private def poll[T](chunks: Seq[IndexedSeq[T]], add: Seq[T] => Unit,
+      q: StreamingQuery): Drive = {
+    val deadline = System.currentTimeMillis() + 300000
+    var done = 0L
+    val dataBatches = mutable.Set[Long]()
+    // recentProgress is a bounded ring (default 100 entries); under
+    // continuous timeout-housekeeping batches an entry can rotate out
+    // between polls, so lastProgress is folded in as well — the
+    // high-water mark only needs SOME surviving observation.
+    def pump(): Unit = (q.recentProgress ++ Option(q.lastProgress)).foreach { p =>
+      p.sources.headOption
+        .flatMap(s => Option(s.endOffset))
+        .flatMap(_.trim.toLongOption)
+        .foreach(o => done = math.max(done, o + 1))
+      if (p.numInputRows > 0) dataBatches += p.batchId
+    }
+    val t0 = System.nanoTime()
+    chunks.zipWithIndex.foreach { case (c, k) =>
+      add(c)
+      while ({ pump(); done <= k } && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    }
+    Drive((System.nanoTime() - t0) / 1e9, dataBatches.size, done.toInt)
+  }
+
+  /** Every section's scaffold: a fresh MemoryStream, each of `queries`
+    * started over it INSIDE the try that stops them all (a query whose
+    * start throws cannot leave an earlier one running into the next
+    * section), then the feed — [[driveDetailed]], or [[poll]] for a
+    * `polled` (TTL) section. `rows` counts the drained chunks after the
+    * first `lead` (the enricher's dimension snapshot: pipeline work, but
+    * not the throughput unit); a short drain warns. Queries are
+    * stopped in the finally, so a feed failure cannot leave a live
+    * streaming query contending with the next timed section. */
+  private[graft] def section[T: Encoder](spark: SparkSession, name: String,
+      chunks: Seq[IndexedSeq[T]], lead: Int = 0, polled: Boolean = false)(
+      queries: (Dataset[T] => DataStreamWriter[_])*): Section = {
+    val in = MemoryStream[T](implicitly[Encoder[T]], spark.sqlContext)
+    val started = mutable.ArrayBuffer[StreamingQuery]()
     try {
-      val chunkSec = Vector.newBuilder[Double]
-      val chunkCalib = Vector.newBuilder[Double]
-      val chunkRows = Vector.newBuilder[Long]
-      val spark = queries.headOption.map(_.sparkSession)
-      var sec = 0.0
-      chunks.foreach { c =>
-        // ambient probe per CHUNK, untimed (excluded from the section
-        // wall): the per-chunk ratio is what lets a mid-section host-
-        // contention phase be attributed from the artifact alone
-        chunkCalib += spark.map(s =>
-          try Bench.calibrate(s) catch { case _: Throwable => -1.0 })
-          .getOrElse(-1.0)
-        chunkRows += c.length.toLong
-        val c0 = System.nanoTime()
-        add(c)
-        queries.foreach(_.processAllAvailable())
-        val w = (System.nanoTime() - c0) / 1e9
-        chunkSec += w
-        sec += w
+      val ds = in.toDS()
+      queries.foreach { q =>
+        started += q(ds).option("checkpointLocation", tmp("sb_" + name)).start()
       }
-      val batches = queries.headOption.flatMap(q => Option(q.lastProgress))
-        .map(_.batchId.toInt + 1).getOrElse(chunks.size)
-      val perQuery = queries.map { q =>
-        val name = Option(q.name).getOrElse(q.id.toString)
-        val ms = q.recentProgress.toIndexedSeq.map { p =>
-          Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue / 1e3).getOrElse(0.0)
-        }
-        name -> ms
-      }
-      Drive(sec, batches, chunkSec.result(), perQuery,
-        chunkCalib.result(), chunkRows.result())
-    } finally queries.foreach { q =>
+      val d =
+        if (polled) poll[T](chunks, in.addData(_), started.head)
+        else driveDetailed[T](spark, chunks, in.addData(_), started.toSeq)
+      val expected = chunks.drop(lead).map(_.length.toLong).sum
+      val rows = chunks.take(d.done).drop(lead).map(_.length.toLong).sum
+      if (rows < expected)
+        System.err.println(
+          s"WARN stream bench: $name drained $rows/$expected events")
+      Section(name, rows, d.sec, d.batches, d.chunkSec, d.queryBatch,
+        chunkCalib = d.chunkCalib, chunkRows = d.chunkRows)
+    } finally started.foreach { q =>
       try q.stop() catch { case _: Throwable => () }
     }
   }
 
-  private def drive[T](chunks: Seq[IndexedSeq[T]],
-      add: Seq[T] => Unit, queries: Seq[StreamingQuery]): Drive =
-    driveDetailed(chunks, add, queries)
+  /** Runs `body` with `kvs` set in the session conf and restores each
+    * key's prior value (or unsets it) after, whether `body` returns or
+    * throws. */
+  private[graft] def withConf[R](spark: SparkSession, kvs: (String, String)*)(
+      body: => R): R = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  private def noop(ds: Dataset[_], mode: String): DataStreamWriter[_] =
+    ds.writeStream.outputMode(mode).format("noop")
+
+  private val noopSink: DataFrame => Unit =
+    out => out.write.format("noop").mode("overwrite").save()
 
   /** Checkpoint dirs are tracked and deleted at the end of [[run]] —
     * eight-plus state-store/checkpoint trees per bench invocation must
@@ -182,84 +264,52 @@ object StreamBench {
     * → broadcast enrich → the four views (leaderboard / content stats /
     * user-latest via per-batch KV upserts, minute windows as a
     * watermarked streaming aggregation). One source, two concurrent
-    * queries — the reference's single Flink dataflow fan-out. */
-  private[graft] def pipelineSection(spark: SparkSession, sfDir: String): Section = {
+    * queries — the reference's single Flink dataflow fan-out. Runs
+    * under [[run]]'s section-wide conf: 8 shuffle partitions, and no
+    * watermark-advance (no-data) micro-batches — those of the windows
+    * query would each pay a full state-store commit cycle (~0.5 s here)
+    * CONCURRENTLY with the kv query's data batches, while in update
+    * mode the closed windows still emit on the next data batch. */
+  private def pipelineSection(spark: SparkSession, sfDir: String): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val msgs = graft.queries.CdcQueries.jsonMessages(
         graft.queries.CdcMapping.fact(spark, sfDir))
       .select(col("value")).as[String].collect().toIndexedSeq
     val dim = graft.queries.CdcMapping.dim(spark, sfDir)
-    val in = MemoryStream[String]
     // A MemoryStream batch arrives as ONE partition (the whole chunk
     // rides in a single task binary — Spark warns at 2.7 MB/task), so
     // without a repartition the JSON parse + enrich of every micro-batch
     // runs on one core in each of the two queries. A Kafka source would
     // arrive already spread over its topic partitions; spread the raw
     // values the same way before the parse.
-    val enriched = StreamingPipeline.enrichStream(in.toDF().repartition(8), dim)
-    val sink = new StreamingPipeline.InMemoryKvSink
-    // T6 parallelism mapping, applied per-load: a 12.5k-row micro-batch
-    // across 32 shuffle/state partitions pays 32 task schedules and 32
-    // state-store commits per batch for partitions of ~400 rows. Size
-    // the section's partitioning to its micro-batch volume (the
-    // reference's setParallelism knob); restore the session conf after.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf.get(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // The watermark-advance (no-data) micro-batches of the windows query
-    // each pay a full state-store commit cycle (~0.5 s here) and run
-    // CONCURRENTLY with the kv query's data batches — in update mode the
-    // closed windows still emit on the next data batch, so for the
-    // drained-after-each-chunk protocol they are pure contention.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      // Untimed section warm-up: run a couple of rows through throwaway
-      // queries with the SAME plans so whole-stage-codegen JIT for the
-      // streaming aggregate / foreachBatch views is paid off the clock
-      // (same doctrine as the batch bench's untimed cdc_enrich warm-up).
-      locally {
-        val wIn = MemoryStream[String]
-        val wEnriched = StreamingPipeline.enrichStream(
-          wIn.toDF().repartition(8), dim)
-        val wSink = new StreamingPipeline.InMemoryKvSink
-        val wKv = StreamingPipeline.kvViewsWriter(wEnriched, wSink)(tmp("sb_kvw")).start()
-        val wWin = StreamingPipeline.minuteWindowsStream(wEnriched)
-          .writeStream.outputMode("update").format("noop")
-          .option("checkpointLocation", tmp("sb_winw")).start()
-        try {
-          wIn.addData(msgs.take(64))
-          wKv.processAllAvailable(); wWin.processAllAvailable()
-        } finally {
-          try wKv.stop() catch { case _: Throwable => () }
-          try wWin.stop() catch { case _: Throwable => () }
-          wSink.close()
-        }
-      }
-      val qKv = StreamingPipeline.kvViewsWriter(enriched, sink)(tmp("sb_kv"))
-        .queryName("kv_views").start()
-      val qWin = StreamingPipeline.minuteWindowsStream(enriched)
-        .writeStream.queryName("minute_windows")
-        .outputMode("update").format("noop")
-        .option("checkpointLocation", tmp("sb_win")).start()
-      val d = driveDetailed[String](chunked(msgs), in.addData(_), Seq(qKv, qWin))
-      Section("pipeline", msgs.length.toLong, d.sec, d.batches,
-        d.chunkSec, d.queryBatch,
-        chunkCalib = d.chunkCalib, chunkRows = d.chunkRows)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      sink.close()
+    def enriched(in: Dataset[String]) =
+      StreamingPipeline.enrichStream(in.toDF().repartition(8), dim)
+    def views(chunks: Seq[IndexedSeq[String]]): Section = {
+      val sink = new StreamingPipeline.InMemoryKvSink
+      // kvViewsWriter takes a checkpoint dir; [[section]]'s own
+      // checkpointLocation option replaces it
+      try section(spark, "pipeline", chunks)(
+        in => StreamingPipeline.kvViewsWriter(enriched(in), sink)(tmp("sb_kv"))
+          .queryName("kv_views"),
+        in => noop(StreamingPipeline.minuteWindowsStream(enriched(in)), "update")
+          .queryName("minute_windows"))
+      finally sink.close()
     }
+    // Untimed section warm-up: run a couple of rows through throwaway
+    // queries with the SAME plans so whole-stage-codegen JIT for the
+    // streaming aggregate / foreachBatch views is paid off the clock
+    // (same doctrine as the batch bench's untimed cdc_enrich warm-up).
+    views(Seq(msgs.take(64)))
+    views(chunked(msgs))
   }
 
   /** Shared prep for both enricher sections: the CdcRecord chunk
-    * schedule (dimension snapshot first — the reference's initial-load
-    * phase — then the event chunks) plus the event count. Both sections
-    * must measure the SAME input or their numbers aren't comparable. */
+    * schedule, dimension snapshot first — the reference's initial-load
+    * phase, fed but not counted (`lead = 1`) — then the event chunks.
+    * Both sections must measure the SAME input or their numbers aren't
+    * comparable. */
   private def enrichChunks(spark: SparkSession, sfDir: String)
-      : (Seq[IndexedSeq[StatefulEnricher.CdcRecord]], Long) = {
+      : Seq[IndexedSeq[StatefulEnricher.CdcRecord]] = {
     import spark.implicits._
     val evs = graft.queries.CdcMapping.fact(spark, sfDir).select(
         col("id").cast("long"), col("content_id").cast("string"),
@@ -272,25 +322,16 @@ object StreamBench {
         col("title").cast("string"), col("content_type").cast("string"),
         col("length_seconds").cast("int"), col("publish_ts").cast("timestamp"))
       .as[StatefulEnricher.ContentRec].collect()
-    val chunks =
-      dims.map(c => StatefulEnricher.CdcRecord(c.id, None, Some(c))).toIndexedSeq +:
-        chunked(evs.map(e => StatefulEnricher.CdcRecord(e.content_id, Some(e), None)))
-    (chunks, evs.length.toLong)
+    dims.map(c => StatefulEnricher.CdcRecord(c.id, None, Some(c))).toIndexedSeq +:
+      chunked(evs.map(e => StatefulEnricher.CdcRecord(e.content_id, Some(e), None)))
   }
 
   /** Reference-exact stateful enrichment (J1 option (c)): dimension rows
     * land first, then the event stream point-looks-up per-key state. */
   private def enrichSection(spark: SparkSession, sfDir: String): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val (chunks, nEvents) = enrichChunks(spark, sfDir)
-    val in = MemoryStream[StatefulEnricher.CdcRecord]
-    val q = StatefulEnricher.enrich(in.toDS())
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_enr")).start()
-    val d = drive[StatefulEnricher.CdcRecord](
-      chunks, in.addData(_), Seq(q))
-    sect("enrich_state", nEvents, d)
+    section(spark, "enrich_state", enrichChunks(spark, sfDir), lead = 1)(
+      in => noop(StatefulEnricher.enrich(in), "append"))
   }
 
   case class FunnelIn(key: String, step: Int, ts: Timestamp)
@@ -299,7 +340,6 @@ object StreamBench {
     * the same step predicates as the batch `op_funnel`. */
   private def funnelSection(spark: SparkSession, sfDir: String): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val evs = Tables.events(spark, sfDir).select(
         col("user_id").cast("string").as("key"),
         when(col("event_type") === "view", 0)
@@ -308,30 +348,83 @@ object StreamBench {
           .otherwise(-1).cast("int").as("step"),
         col("ts").cast("timestamp").as("ts"))
       .as[FunnelIn].collect().toIndexedSeq
-    val in = MemoryStream[FunnelIn]
-    val q = StreamingFunnel.funnelStream(in.toDF(), nSteps = 3)
-      .writeStream.outputMode("update").format("noop")
-      .option("checkpointLocation", tmp("sb_fun")).start()
-    val d = drive[FunnelIn](chunked(evs), in.addData(_), Seq(q))
-    sect("funnel", evs.length.toLong, d)
+    section(spark, "funnel", chunked(evs))(
+      in => noop(StreamingFunnel.funnelStream(in.toDF(), nSteps = 3), "update"))
   }
 
   case class BudgetIn(source: String, doc_id: Long, n_tokens: Long)
 
-  /** The (source, doc_id, n_tokens) slice both token-stream sections
-    * consume, replicated to the volume floor with fresh doc ids (the
-    * id span offsets each replica past the fixture's range). Per-source
-    * state stays one long regardless of replication. */
+  /** The (source, doc_id, n_tokens) slice the token-stream sections
+    * consume, replicated to the volume floor with fresh doc ids.
+    * Per-source state stays one long regardless of replication. */
   private def budgetDocs(spark: SparkSession, sfDir: String,
       floor: Int): IndexedSeq[BudgetIn] = {
     import spark.implicits._
-    val docs = Tables.documents(spark, sfDir).select(
+    replicate(Tables.documents(spark, sfDir).select(
         col("source").cast("string"), col("doc_id").cast("long"),
         graft.operators.TextAnalysis.tokenCount(col("text"))
           .cast("long").as("n_tokens"))
-      .as[BudgetIn].collect().toIndexedSeq
-    val span = if (docs.isEmpty) 1L else docs.map(_.doc_id).max + 1L
-    replicate(docs, floor)((b, i) => b.copy(doc_id = b.doc_id + i * span))
+      .as[BudgetIn], floor)(_.doc_id)((b, id, _) => b.copy(doc_id = id))
+  }
+
+  case class ScoreIn(doc_id: Long, text: String)
+
+  /** (doc_id, text) of `docs`, replicated to `floor` with fresh ids. */
+  private def docText(spark: SparkSession, docs: DataFrame,
+      floor: Int): IndexedSeq[ScoreIn] = {
+    import spark.implicits._
+    replicate(docs.select(col("doc_id").cast("long"), col("text").cast("string"))
+      .as[ScoreIn], floor)(_.doc_id)((r, id, _) => r.copy(doc_id = id))
+  }
+
+  case class LmScoreIn(doc_id: Long, lang: String, text: String)
+
+  /** (doc_id, lang, text) of the documents fixture, replicated to
+    * `floor` with fresh ids. */
+  private def docLangText(spark: SparkSession, sfDir: String,
+      floor: Int): IndexedSeq[LmScoreIn] = {
+    import spark.implicits._
+    replicate(Tables.documents(spark, sfDir).select(col("doc_id").cast("long"),
+        col("lang").cast("string"), col("text").cast("string"))
+      .as[LmScoreIn], floor)(_.doc_id)((r, id, _) => r.copy(doc_id = id))
+  }
+
+  case class IndexIn(vec_id: Long, qv: Seq[Double])
+
+  /** The embeddings fixture quantized to integer-valued doubles (×1000),
+    * replicated to `floor` with fresh ids only — the vector operators
+    * are content-agnostic, so replica vectors are full-cost new work
+    * as-is. */
+  private def quantized(spark: SparkSession, sfDir: String,
+      floor: Int): IndexedSeq[IndexIn] = {
+    import spark.implicits._
+    replicate(Tables.embeddings(spark, sfDir).select(col("vec_id").cast("long"),
+        transform(col("embedding"), x => round(x.cast("double") * 1000)).as("qv"))
+      .as[IndexIn], floor)(_.vec_id)((r, id, _) => r.copy(vec_id = id))
+  }
+
+  case class PipeIn(source: String, doc_id: Long, lang: String,
+    text: String, ts: Timestamp)
+
+  private val DedupEpoch = 1704067200L
+
+  /** Documents with fresh ids, per-replica text variation (each replica
+    * mints NEW digests, so a gate's state table takes one insert per
+    * distinct text — replicated rows are new work, not free drops) and
+    * monotone synthetic event time (one second per id, so the watermark
+    * advances and evicts: the bench exercises bounded state, not an
+    * ever-growing digest table). */
+  private def timedDocs(spark: SparkSession, sfDir: String,
+      floor: Int): IndexedSeq[PipeIn] = {
+    import spark.implicits._
+    replicate(Tables.documents(spark, sfDir)
+      .select(col("source").cast("string"), col("doc_id").cast("long"),
+        col("lang").cast("string"), col("text").cast("string"),
+        (lit(DedupEpoch) + col("doc_id")).cast("timestamp").as("ts"))
+      .as[PipeIn], floor)(_.doc_id) { (r, id, i) =>
+      r.copy(doc_id = id, text = r.text + " ~r" + i,
+        ts = new Timestamp((DedupEpoch + id) * 1000L))
+    }
   }
 
   /** Per-source token-budget admission — the same quota as the batch
@@ -340,15 +433,9 @@ object StreamBench {
   private def budgetSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val docs = budgetDocs(spark, sfDir, floor)
-    val in = MemoryStream[BudgetIn]
-    val q = StreamingBudget.admitStream(in.toDF(),
-        budget = math.max(20000L, docs.map(_.n_tokens).sum / 2))
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_bud")).start()
-    val d = drive[BudgetIn](chunked(docs), in.addData(_), Seq(q))
-    sect("budget", docs.length.toLong, d)
+    section(spark, "budget", chunked(docs))(in => noop(StreamingBudget.admitStream(
+      in.toDF(), budget = math.max(20000L, docs.map(_.n_tokens).sum / 2)), "append"))
   }
 
   /** Per-source context-window chunk packing — the same ctx as the
@@ -356,17 +443,9 @@ object StreamBench {
   private def packSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = budgetDocs(spark, sfDir, floor)
-    val in = MemoryStream[BudgetIn]
-    val q = StreamingPack.packStream(in.toDF(), ctx = 512L)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_pack")).start()
-    val d = drive[BudgetIn](chunked(docs), in.addData(_), Seq(q))
-    sect("pack", docs.length.toLong, d)
+    section(spark, "pack", chunked(budgetDocs(spark, sfDir, floor)))(
+      in => noop(StreamingPack.packStream(in.toDF(), ctx = 512L), "append"))
   }
-
-  case class ScoreIn(doc_id: Long, text: String)
 
   /** Streaming DSIR importance scoring ([[graft.streaming.StreamingScore]]):
     * arriving documents scored against the TRAINED 64-long weight array
@@ -376,20 +455,10 @@ object StreamBench {
   private def scoreSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[ScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor)((r, i) => r.copy(doc_id = r.doc_id + i * span))
+    val docs = docText(spark, Tables.documents(spark, sfDir), floor)
     val weights = graft.queries.DedupQueries.dsirWeightArray(spark, sfDir)
-    val in = MemoryStream[ScoreIn]
-    val q = graft.streaming.StreamingScore.scoreStream(
-        in.toDF().toDF("doc_id", "text"), weights)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_score")).start()
-    val d = drive[ScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("score", docs.length.toLong, d)
+    section(spark, "score", chunked(docs))(in => noop(
+      graft.streaming.StreamingScore.scoreStream(in.toDF(), weights), "append"))
   }
 
   /** Streaming count-min maintenance ([[graft.operators.Sketch]]): the
@@ -402,18 +471,9 @@ object StreamBench {
   private def cmsSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[ScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor)((r, i) => r.copy(doc_id = r.doc_id + i * span))
-    val in = MemoryStream[ScoreIn]
-    val q = graft.operators.Sketch.cmsSketch(in.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("update").format("noop")
-      .option("checkpointLocation", tmp("sb_cms")).start()
-    val d = drive[ScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("cms", docs.length.toLong, d)
+    section(spark, "cms",
+        chunked(docText(spark, Tables.documents(spark, sfDir), floor)))(
+      in => noop(graft.operators.Sketch.cmsSketch(in.toDF()), "update"))
   }
 
   /** Streaming HLL cardinality sketch over the 3-gram shingle space —
@@ -427,18 +487,9 @@ object StreamBench {
   private def hllSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[ScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor)((r, i) => r.copy(doc_id = r.doc_id + i * span))
-    val in = MemoryStream[ScoreIn]
-    val q = graft.operators.Sketch.hllRegisters(in.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("update").format("noop")
-      .option("checkpointLocation", tmp("sb_hll")).start()
-    val d = drive[ScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("hll", docs.length.toLong, d)
+    section(spark, "hll",
+        chunked(docText(spark, Tables.documents(spark, sfDir), floor)))(
+      in => noop(graft.operators.Sketch.hllRegisters(in.toDF()), "update"))
   }
 
   /** Streaming decontamination monitor ([[graft.operators.Sketch
@@ -452,18 +503,9 @@ object StreamBench {
   private def decontamSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[ScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor)((r, i) => r.copy(doc_id = r.doc_id + i * span))
-    val in = MemoryStream[ScoreIn]
-    val q = graft.operators.Sketch.kmvDecontam(in.toDF().toDF("doc_id", "text"))
-      .writeStream.outputMode("update").format("noop")
-      .option("checkpointLocation", tmp("sb_dec")).start()
-    val d = drive[ScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("decontam", docs.length.toLong, d)
+    section(spark, "decontam",
+        chunked(docText(spark, Tables.documents(spark, sfDir), floor)))(
+      in => noop(graft.operators.Sketch.kmvDecontam(in.toDF()), "update"))
   }
 
   /** Streaming span decontamination
@@ -479,7 +521,6 @@ object StreamBench {
   private def xstripSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     import graft.operators.HashSplit
     val docs0 = Tables.documents(spark, sfDir)
     val refGrams = graft.operators.SpanDedup.cappedGrams(
@@ -490,24 +531,14 @@ object StreamBench {
     // sketch drops them scan-side before the join's exchange
     // (docs/AB_r15.md measured it on vs off)
     val refSketch = graft.operators.SpanDedup.refGramSketch(refGrams)
-    val base = docs0.filter(HashSplit.label(col("doc_id")) === "train")
-      .select(col("doc_id").cast("long"), col("text").cast("string"))
-      .as[ScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val dFloor = math.min(floor, 25000)
-    val docs = replicate(base, dFloor)(
-      (r, i) => r.copy(doc_id = r.doc_id + i * span))
-    val in = MemoryStream[ScoreIn]
-    val q = graft.streaming.StreamingSpanDedup.decontamStripWriter(
-        in.toDF().toDF("doc_id", "text"), refGrams,
-        "doc_id", "text", k = 8, minLen = 10, refSketch)(
-        out => out.write.format("noop").mode("overwrite").save())
-      .option("checkpointLocation", tmp("sb_xstrip")).start()
-    val d = drive[ScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("xstrip", docs.length.toLong, d)
+    val docs = docText(spark,
+      docs0.filter(HashSplit.label(col("doc_id")) === "train"),
+      math.min(floor, 25000))
+    section(spark, "xstrip", chunked(docs))(
+      in => graft.streaming.StreamingSpanDedup.decontamStripWriter(
+        in.toDF(), refGrams, "doc_id", "text", k = 8, minLen = 10,
+        refSketch)(noopSink))
   }
-
-  case class LmScoreIn(doc_id: Long, lang: String, text: String)
 
   /** Streaming NB classification
     * ([[graft.streaming.StreamingScore.nbScoreStream]]): arriving
@@ -521,21 +552,10 @@ object StreamBench {
   private def nbScoreSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id").cast("long"), col("lang").cast("string"),
-        col("text").cast("string"))
-      .as[LmScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor)((r, i) => r.copy(doc_id = r.doc_id + i * span))
+    val docs = docLangText(spark, sfDir, floor)
     val meta = graft.queries.TextQueries.nbClassMeta(spark, sfDir)
-    val in = MemoryStream[LmScoreIn]
-    val q = graft.streaming.StreamingScore.nbScoreStream(
-        in.toDF().toDF("doc_id", "lang", "text"), meta)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_nbscore")).start()
-    val d = drive[LmScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("nb_score", docs.length.toLong, d)
+    section(spark, "nb_score", chunked(docs))(in => noop(
+      graft.streaming.StreamingScore.nbScoreStream(in.toDF(), meta), "append"))
   }
 
   /** Streaming LM perplexity scoring
@@ -547,21 +567,10 @@ object StreamBench {
   private def lmScoreSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id").cast("long"), col("lang").cast("string"),
-        col("text").cast("string"))
-      .as[LmScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor)((r, i) => r.copy(doc_id = r.doc_id + i * span))
+    val docs = docLangText(spark, sfDir, floor)
     val wbits = graft.queries.TextQueries.lmWeightArray(spark, sfDir)
-    val in = MemoryStream[LmScoreIn]
-    val q = graft.streaming.StreamingScore.lmScoreStream(
-        in.toDF().toDF("doc_id", "lang", "text"), wbits)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_lmscore")).start()
-    val d = drive[LmScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("lm_score", docs.length.toLong, d)
+    section(spark, "lm_score", chunked(docs))(in => noop(
+      graft.streaming.StreamingScore.lmScoreStream(in.toDF(), wbits), "append"))
   }
 
   /** Streaming multimodal ingest
@@ -574,20 +583,12 @@ object StreamBench {
   private def mediaSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = graft.operators.Multimodal.fakeMediaFromDocuments(
-        Tables.documents(spark, sfDir)).collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.media_id).max + 1L
-    val docs = replicate(base, floor)((r, i) =>
-      r.copy(media_id = r.media_id + i * span))
+    val docs = replicate(graft.operators.Multimodal.fakeMediaFromDocuments(
+        Tables.documents(spark, sfDir)), floor)(_.media_id)(
+      (r, id, _) => r.copy(media_id = id))
     val dec = new graft.operators.Multimodal.FakeDecoder(8)
-    val in = MemoryStream[graft.operators.Multimodal.MediaRecord]
-    val q = graft.streaming.StreamingMedia.ingestStream(in.toDS(), dec)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_media")).start()
-    val d = drive[graft.operators.Multimodal.MediaRecord](
-      chunked(docs), in.addData(_), Seq(q))
-    sect("media", docs.length.toLong, d)
+    section(spark, "media", chunked(docs))(in =>
+      noop(graft.streaming.StreamingMedia.ingestStream(in, dec), "append"))
   }
 
   /** Streaming CCNet RATIO scoring
@@ -601,26 +602,13 @@ object StreamBench {
   private def lmRatioSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("doc_id").cast("long"), col("lang").cast("string"),
-        col("text").cast("string"))
-      .as[LmScoreIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor)((r, i) => r.copy(doc_id = r.doc_id + i * span))
+    val docs = docLangText(spark, sfDir, floor)
     val wT = graft.queries.TextQueries.lmWeightArray(spark, sfDir)
     val wB = graft.queries.TextQueries.lmBgWeightArray(spark, sfDir)
-    val in = MemoryStream[LmScoreIn]
-    val q = graft.streaming.StreamingScore.lmRatioScoreStream(
-        in.toDF().toDF("doc_id", "lang", "text"), wT, wB)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_lmratio")).start()
-    val d = drive[LmScoreIn](chunked(docs), in.addData(_), Seq(q))
-    sect("lm_ratio", docs.length.toLong, d)
+    section(spark, "lm_ratio", chunked(docs))(in => noop(
+      graft.streaming.StreamingScore.lmRatioScoreStream(in.toDF(), wT, wB),
+      "append"))
   }
-
-  case class PipeIn(source: String, doc_id: Long, lang: String,
-    text: String, ts: Timestamp)
 
   /** The FULL streaming curation pipeline
     * ([[graft.streaming.StreamingIntake.pipelineStream]]): dedup gate →
@@ -630,23 +618,12 @@ object StreamBench {
     * clock — they are the batch-trained metadata the admission service
     * broadcasts — so the section times exactly the serving path: two
     * stateful stages plus compiled map-only gates. Replicas mint fresh
-    * ids and varied text (the dedupDocs doctrine: replicated rows are
-    * new admission work, not free digest drops). */
+    * ids and varied text ([[timedDocs]]: replicated rows are new
+    * admission work, not free digest drops). */
   private def curationSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir)
-      .select(col("source").cast("string"), col("doc_id").cast("long"),
-        col("lang").cast("string"), col("text").cast("string"),
-        (lit(DedupEpoch) + col("doc_id")).cast("timestamp").as("ts"))
-      .as[PipeIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor) { (r, i) =>
-      val id = r.doc_id + i * span
-      r.copy(doc_id = id, text = r.text + " ~r" + i,
-        ts = new Timestamp((DedupEpoch + id) * 1000L))
-    }
+    val docs = timedDocs(spark, sfDir, floor)
     // pipelineStream's contract: cutoffs train over the exact-dedup
     // KEEPERS (min id per normalized-text digest), exactly as the
     // batch capstone derives them — not over the raw corpus.
@@ -665,58 +642,26 @@ object StreamBench {
     val lmBg = graft.queries.TextQueries.lmBgWeightArray(spark, sfDir)
     val lmTheta = graft.queries.TextQueries.lmCalibTheta(spark, sfDir)
     val dsirW = graft.queries.DedupQueries.dsirWeightArray(spark, sfDir)
-    val in = MemoryStream[PipeIn]
-    val q = graft.streaming.StreamingIntake.pipelineStream(
-        in.toDF().toDF("source", "doc_id", "lang", "text", "ts"),
+    section(spark, "curation", chunked(docs))(in => noop(
+      graft.streaming.StreamingIntake.pipelineStream(in.toDF(),
         cutoffs, semDrops, lmW, lmBg, lmTheta,
         dsirW, graft.queries.DedupQueries.PipelineStep,
         // 64-way sharded resampler: at the section's replicated volume
         // every stratum's weight is far above the step, so the
         // stratified scale path is healthy here (see resampleStream)
-        "ts", "10 minutes", resampleShards = 64)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_pipe")).start()
-    val d = drive[PipeIn](chunked(docs), in.addData(_), Seq(q))
-    sect("curation", docs.length.toLong, d)
+        "ts", "10 minutes", resampleShards = 64), "append"))
   }
 
   case class DedupIn(doc_id: Long, text: String, ts: Timestamp)
-
-  private val DedupEpoch = 1704067200L
-
-  /** Documents with fresh ids, per-replica text variation (each replica
-    * mints NEW digests, so the gate's state table takes one insert per
-    * distinct text — replicated rows are new work, not free drops) and
-    * monotone synthetic event time (one second per id, so the watermark
-    * advances and evicts: the bench exercises bounded state, not an
-    * ever-growing digest table). */
-  private def dedupDocs(spark: SparkSession, sfDir: String,
-      floor: Int): IndexedSeq[DedupIn] = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir).select(
-        col("doc_id").cast("long"), col("text"),
-        (lit(DedupEpoch) + col("doc_id")).cast("timestamp").as("ts"))
-      .as[DedupIn].collect().toIndexedSeq
-    val span = if (docs.isEmpty) 1L else docs.map(_.doc_id).max + 1L
-    replicate(docs, floor) { (r, i) =>
-      val id = r.doc_id + i * span
-      DedupIn(id, r.text + " ~r" + i,
-        new Timestamp((DedupEpoch + id) * 1000L))
-    }
-  }
 
   /** Watermark-bounded streaming exact-dedup gate. */
   private def dedupSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = dedupDocs(spark, sfDir, floor)
-    val in = MemoryStream[DedupIn]
-    val q = StreamingDedup.dedupStream(in.toDF(), "ts", "60 seconds")
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_ded")).start()
-    val d = drive[DedupIn](chunked(docs), in.addData(_), Seq(q))
-    sect("dedup", docs.length.toLong, d)
+    val docs = timedDocs(spark, sfDir, floor)
+      .map(r => DedupIn(r.doc_id, r.text, r.ts))
+    section(spark, "dedup", chunked(docs))(in => noop(
+      StreamingDedup.dedupStream(in.toDF(), "ts", "60 seconds"), "append"))
   }
 
   case class IntakeIn(source: String, doc_id: Long, text: String,
@@ -729,25 +674,11 @@ object StreamBench {
   private def intakeSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.documents(spark, sfDir).select(
-        col("source").cast("string"), col("doc_id").cast("long"),
-        col("text"),
-        (lit(DedupEpoch) + col("doc_id")).cast("timestamp").as("ts"))
-      .as[IntakeIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.doc_id).max + 1L
-    val docs = replicate(base, floor) { (r, i) =>
-      val id = r.doc_id + i * span
-      IntakeIn(r.source, id, r.text + " ~r" + i,
-        new Timestamp((DedupEpoch + id) * 1000L))
-    }
-    val in = MemoryStream[IntakeIn]
-    val q = StreamingIntake.intakeStream(in.toDF(), "ts", "60 seconds",
-        ctx = 512L)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_int")).start()
-    val d = drive[IntakeIn](chunked(docs), in.addData(_), Seq(q))
-    sect("intake", docs.length.toLong, d)
+    val docs = timedDocs(spark, sfDir, floor)
+      .map(r => IntakeIn(r.source, r.doc_id, r.text, r.ts))
+    section(spark, "intake", chunked(docs))(in => noop(
+      StreamingIntake.intakeStream(in.toDF(), "ts", "60 seconds", ctx = 512L),
+      "append"))
   }
 
   /** Streaming systematic-PPS sampling ([[graft.streaming.StreamingSample]]):
@@ -757,21 +688,13 @@ object StreamBench {
   private def sampleSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.StreamingSample
     val docs = budgetDocs(spark, sfDir, floor)
-      .map(b => graft.streaming.StreamingSample.WeightedDoc(
-        b.source, b.doc_id, b.n_tokens))
+      .map(b => StreamingSample.WeightedDoc(b.source, b.doc_id, b.n_tokens))
     val step = math.max(1L, docs.map(_.w).sum / 200)
-    val in = MemoryStream[graft.streaming.StreamingSample.WeightedDoc]
-    val q = graft.streaming.StreamingSample.sampleStream(in.toDF(), step)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_pps")).start()
-    val d = drive[graft.streaming.StreamingSample.WeightedDoc](
-      chunked(docs), in.addData(_), Seq(q))
-    sect("pps_sample", docs.length.toLong, d)
+    section(spark, "pps_sample", chunked(docs))(
+      in => noop(StreamingSample.sampleStream(in.toDF(), step), "append"))
   }
-
-  case class IndexIn(vec_id: Long, qv: Seq[Double])
 
   /** Streaming ANN index maintenance ([[graft.streaming.StreamingIndex]]):
     * arriving vectors assigned IVF cell + packed PQ codes against the
@@ -781,26 +704,11 @@ object StreamBench {
   private def indexSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id").cast("long"),
-        transform(col("embedding"), x => round(x.cast("double") * 1000))
-          .as("qv"))
-      .as[IndexIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.vec_id).max + 1L
-    // fresh ids only — the operator is stateless and content-agnostic,
-    // so replica vectors are full-cost new work as-is
-    val vecs = replicate(base, floor) { (r, i) =>
-      IndexIn(r.vec_id + i * span, r.qv)
-    }
+    val vecs = quantized(spark, sfDir, floor)
     val cents = graft.queries.SimilarityQueries.trainedCentroidRows(spark, sfDir)
     val cb = graft.queries.SimilarityQueries.trainedCodebookRows(spark, sfDir)
-    val in = MemoryStream[IndexIn]
-    val q = graft.streaming.StreamingIndex.indexStream(in.toDF(), cents, cb)
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_idx")).start()
-    val d = drive[IndexIn](chunked(vecs), in.addData(_), Seq(q))
-    sect("index", vecs.length.toLong, d)
+    section(spark, "index", chunked(vecs))(in => noop(
+      graft.streaming.StreamingIndex.indexStream(in.toDF(), cents, cb), "append"))
   }
 
   /** Streaming ANN serving ([[graft.streaming.StreamingSearch]]): query
@@ -809,40 +717,27 @@ object StreamBench {
     * each query ADC-scores only its nprobe probed cells' codes, not the
     * full corpus). The static side (cell-tagged codes + codebook +
     * centroids) is materialized BEFORE the clock — index build cost is
-    * the `index` section's job, this one times serving. */
+    * the `index` section's job, this one times serving.
+    *
+    * Per-query work is ~corpus·nprobe/k_cells code rows (pruned, no
+    * longer the full-corpus scan the round-8 section capped at ~50×
+    * the others' work), but it still scales with the CORPUS, unlike
+    * the O(1)-per-row operators the flat floor is sized for — so the
+    * query volume keeps a cap; rps is per-QUERY either way, and the
+    * section's rows field reports the capped count honestly. */
   private def searchSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id").cast("long"),
-        transform(col("embedding"), x => round(x.cast("double") * 1000))
-          .as("qv"))
-      .as[IndexIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.vec_id).max + 1L
-    // Per-query work is ~corpus·nprobe/k_cells code rows (pruned, no
-    // longer the full-corpus scan the round-8 section capped at ~50×
-    // the others' work), but it still scales with the CORPUS, unlike
-    // the O(1)-per-row operators the flat floor is sized for — so the
-    // query volume keeps a cap; rps is per-QUERY either way, and the
-    // section's rows field reports the capped count honestly.
-    val qFloor = math.min(floor, 5000)
-    val queries = replicate(base, qFloor) { (r, i) =>
-      IndexIn(r.vec_id + i * span, r.qv)
-    }
+    val queries = quantized(spark, sfDir, math.min(floor, 5000))
     val cellCodes = graft.queries.SimilarityQueries
       .indexedCodes(spark, sfDir).localCheckpoint()
     val cb = graft.queries.SimilarityQueries.trainedCodebookFrame(spark, sfDir)
     val cents = graft.queries.SimilarityQueries
       .trainedCentroidsFrame(spark, sfDir)
-    val in = MemoryStream[IndexIn]
-    val q = graft.streaming.StreamingSearch.servePrunedWriter(
-        in.toDF().toDF("query_id", "qv"), cellCodes, cb, cents,
-        nprobe = 3, k = 10)(
-        out => out.write.format("noop").mode("overwrite").save())
-      .option("checkpointLocation", tmp("sb_srch")).start()
-    val d = drive[IndexIn](chunked(queries), in.addData(_), Seq(q))
-    sect("search", queries.length.toLong, d)
+    section(spark, "search", chunked(queries))(
+      in => graft.streaming.StreamingSearch.servePrunedWriter(
+        in.toDF("query_id", "qv"), cellCodes, cb, cents,
+        nprobe = 3, k = 10)(noopSink))
   }
 
   /** FILTERED serving ([[graft.streaming.StreamingSearch.serveFilteredWriter]]):
@@ -855,29 +750,14 @@ object StreamBench {
   private def filteredSearchSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id").cast("long"),
-        transform(col("embedding"), x => round(x.cast("double") * 1000))
-          .as("qv"))
-      .as[IndexIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.vec_id).max + 1L
-    val qFloor = math.min(floor, 5000)
-    val queries = replicate(base, qFloor) { (r, i) =>
-      IndexIn(r.vec_id + i * span, r.qv)
-    }
+    val queries = quantized(spark, sfDir, math.min(floor, 5000))
     val nbrs = graft.queries.SimilarityQueries
       .filteredAssignedFrame(spark, sfDir).localCheckpoint()
     val cents = graft.queries.SimilarityQueries
       .trainedCentroidsFrame(spark, sfDir)
-    val in = MemoryStream[IndexIn]
-    val q = graft.streaming.StreamingSearch.serveFilteredWriter(
-        in.toDF().toDF("query_id", "qv"), nbrs, cents,
-        nprobe = 3, k = 10)(
-        out => out.write.format("noop").mode("overwrite").save())
-      .option("checkpointLocation", tmp("sb_fsrch")).start()
-    val d = drive[IndexIn](chunked(queries), in.addData(_), Seq(q))
-    sect("fsearch", queries.length.toLong, d)
+    section(spark, "fsearch", chunked(queries))(
+      in => graft.streaming.StreamingSearch.serveFilteredWriter(
+        in.toDF("query_id", "qv"), nbrs, cents, nprobe = 3, k = 10)(noopSink))
   }
 
   case class AnomalyIn(key: String, event_id: Long, ts: Timestamp, x: Long)
@@ -887,7 +767,6 @@ object StreamBench {
     * `analytics_rolling_zscore`. */
   private def anomalySection(spark: SparkSession, sfDir: String): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val evs = Tables.events(spark, sfDir)
       .filter(col("value").isNotNull)
       .select(col("event_type").cast("string").as("key"),
@@ -895,84 +774,20 @@ object StreamBench {
         col("ts").cast("timestamp"),
         floor(col("value")).cast("long").as("x"))
       .as[AnomalyIn].collect().toIndexedSeq
-    val in = MemoryStream[AnomalyIn]
-    val q = StreamingAnomaly.rollingZScoreStream(in.toDF())
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_ano")).start()
-    val d = drive[AnomalyIn](chunked(evs), in.addData(_), Seq(q))
-    sect("anomaly", evs.length.toLong, d)
+    section(spark, "anomaly", chunked(evs))(
+      in => noop(StreamingAnomaly.rollingZScoreStream(in.toDF()), "append"))
   }
 
-  /** The TTL variant of the stateful enricher (`ProcessingTimeTimeout`)
-    * schedules continuous housekeeping batches, so `processAllAvailable`
-    * never settles — completion is observed by polling the query's OWN
-    * progress metrics (driver-side, no Spark job: a sink-count poll
-    * would steal cores from the query being measured and its cost grows
-    * with drained rows). Every event emits exactly one enriched or miss
-    * or miss row; completion is tracked by the memory source's
-    * `endOffset` in the query progress — MemoryStream's offset is the
-    * 0-based index of the last addData chunk consumed, and a batch only
-    * appears in progress once it committed, so offset ≥ k−1 means the
-    * k'th fed chunk drained. (Progress entries are NOT keyed uniquely
-    * by batchId here: timeout housekeeping emits duplicate-batchId
-    * entries, so per-batch row summation double-counts or misses —
-    * the offset high-water mark is the race-free signal.) `batches`
-    * counts distinct batchIds with numInputRows > 0, not the empty
-    * housekeeping batches. The TTL is
-    * set far above the section's wall time so no state evicts
-    * mid-measurement — this times the timeout-managed state path's
-    * throughput, not eviction races. */
+  /** The TTL variant of the stateful enricher (`ProcessingTimeTimeout`):
+    * completion by [[poll]]. Every event emits exactly one enriched or
+    * miss row. The TTL is set far above the section's wall time so no
+    * state evicts mid-measurement — this times the timeout-managed
+    * state path's throughput, not eviction races. */
   private def enrichTtlSection(spark: SparkSession, sfDir: String): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val (chunks, expected) = enrichChunks(spark, sfDir)
-    val in = MemoryStream[StatefulEnricher.CdcRecord]
-    val q = StatefulEnricher.enrich(in.toDS(), stateTtlMs = Some(3600L * 1000))
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", tmp("sb_ttl")).start()
-    try {
-      val deadline = System.currentTimeMillis() + 300000
-      var chunksDone = 0L
-      var dataBatches = 0
-      val countedBatches = scala.collection.mutable.Set[Long]()
-      def fold(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Unit = {
-        p.sources.headOption
-          .flatMap(s => Option(s.endOffset))
-          .flatMap(_.trim.toLongOption)
-          .foreach(o => chunksDone = math.max(chunksDone, o + 1))
-        if (p.numInputRows > 0 && countedBatches.add(p.batchId))
-          dataBatches += 1
-      }
-      // recentProgress is a bounded ring (default 100 entries); under
-      // continuous timeout-housekeeping batches an entry can rotate out
-      // between polls, so lastProgress is folded in as well — the
-      // high-water mark only needs SOME surviving observation.
-      def pump(): Unit = {
-        q.recentProgress.foreach(fold)
-        Option(q.lastProgress).foreach(fold)
-      }
-      val t0 = System.nanoTime()
-      var fedChunks = 0L
-      chunks.foreach { c =>
-        in.addData(c)
-        fedChunks += 1
-        while ({ pump(); chunksDone < fedChunks }
-          && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // event units on BOTH sides of the accounting: chunk 0 is the
-      // dimension snapshot — pipeline work, but not the throughput unit,
-      // and counting it in `drained` would overstate events on a partial
-      // drain (records vs events unit mix).
-      val drained = chunks.take(chunksDone.toInt).drop(1)
-        .map(_.length.toLong).sum
-      if (drained < expected)
-        System.err.println(
-          s"WARN stream bench: enrich_ttl drained $drained/$expected events")
-      Section("enrich_ttl", math.min(expected, drained), sec, dataBatches)
-    } finally {
-      try q.stop() catch { case _: Throwable => () }
-    }
+    section(spark, "enrich_ttl", enrichChunks(spark, sfDir), lead = 1,
+        polled = true)(in => noop(
+      StatefulEnricher.enrich(in, stateTtlMs = Some(3600L * 1000)), "append"))
   }
 
   /** The TTL'd content-stats view (`StatefulViews.contentStatsTtl` —
@@ -980,21 +795,17 @@ object StreamBench {
     * the Redis-EXPIRE analogue): the ONE stateful-operator class
     * (`transformWithState`) that previously had correctness pins but no
     * perf signal next to the flatMapGroupsWithState twins. Same
-    * completion doctrine as [[enrichTtlSection]]: ProcessingTime mode
-    * schedules continuous housekeeping batches, so
-    * `processAllAvailable` never settles — completion is the memory
-    * source's endOffset high-water mark, `batches` counts distinct
-    * data-carrying batchIds, and the TTL sits far above the section's
-    * wall time so no state evicts mid-measurement. Replicas keep the
-    * fixture's content keys (the view's key space IS the content
-    * dimension; extra per-key updates are exactly what the serving
-    * view absorbs) and mint fresh event ids. */
+    * completion doctrine as [[enrichTtlSection]] ([[poll]]), and the
+    * TTL sits far above the section's wall time so no state evicts
+    * mid-measurement. Replicas keep the fixture's content keys (the
+    * view's key space IS the content dimension; extra per-key updates
+    * are exactly what the serving view absorbs) and mint fresh event
+    * ids. */
   private def contentStatsSection(spark: SparkSession, sfDir: String,
       floor: Int): Section = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StatefulViews
-    val base = graft.views.EngagementViews.validOnly(
+    val events = replicate(graft.views.EngagementViews.validOnly(
         graft.queries.CdcMapping.enriched(spark, sfDir))
       .select(col("content_id").cast("string").as("content_id"),
         col("engagement_pct").cast("double").as("engagement_pct"),
@@ -1004,58 +815,12 @@ object StreamBench {
         col("device").cast("string").as("device"),
         col("event_ts").cast("timestamp").as("event_ts"),
         col("event_id").cast("long").as("event_id"))
-      .as[StatefulViews.StatIn].collect().toIndexedSeq
-    val span = if (base.isEmpty) 1L else base.map(_.event_id).max + 1L
-    val events = replicate(base, floor) { (r, i) =>
-      r.copy(event_id = r.event_id + i * span)
-    }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[StatefulViews.StatIn]
-    val q = StatefulViews.contentStatsTtl(in.toDS(), java.time.Duration.ofHours(1))
-      .writeStream.outputMode("update").format("noop")
-      .option("checkpointLocation", tmp("sb_cstats")).start()
-    try {
-      val chunks = chunked(events)
-      val deadline = System.currentTimeMillis() + 300000
-      var chunksDone = 0L
-      var dataBatches = 0
-      val countedBatches = scala.collection.mutable.Set[Long]()
-      def fold(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Unit = {
-        p.sources.headOption
-          .flatMap(s => Option(s.endOffset))
-          .flatMap(_.trim.toLongOption)
-          .foreach(o => chunksDone = math.max(chunksDone, o + 1))
-        if (p.numInputRows > 0 && countedBatches.add(p.batchId))
-          dataBatches += 1
-      }
-      def pump(): Unit = {
-        q.recentProgress.foreach(fold)
-        Option(q.lastProgress).foreach(fold)
-      }
-      val t0 = System.nanoTime()
-      var fedChunks = 0L
-      chunks.foreach { c =>
-        in.addData(c)
-        fedChunks += 1
-        while ({ pump(); chunksDone < fedChunks }
-          && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val drained = chunks.take(chunksDone.toInt).map(_.length.toLong).sum
-      if (drained < events.length)
-        System.err.println(
-          s"WARN stream bench: content_stats drained $drained/${events.length} events")
-      Section("content_stats", math.min(events.length.toLong, drained), sec,
-        dataBatches)
-    } finally {
-      try q.stop() catch { case _: Throwable => () }
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+      .as[StatefulViews.StatIn], floor)(_.event_id)(
+      (r, id, _) => r.copy(event_id = id))
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      section(spark, "content_stats", chunked(events), polled = true)(in => noop(
+        StatefulViews.contentStatsTtl(in, java.time.Duration.ofHours(1)), "update"))
     }
   }
 
@@ -1070,41 +835,13 @@ object StreamBench {
       volumeFloor: Int = DefaultVolumeFloor,
       only: Option[Set[String]] = None): Seq[Section] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // untimed warm-up: first streaming query pays micro-batch engine +
     // state-store + codegen init once
     try {
-      val in = MemoryStream[BudgetIn]
-      val q = StreamingBudget.admitStream(in.toDF(), budget = 100L)
-        .writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", tmp("sb_warm")).start()
-      in.addData((1 to 10).map(i => BudgetIn("w", i.toLong, 1L)))
-      q.processAllAvailable()
-      q.stop()
+      section(spark, "warm", Seq((1 to 10).map(i => BudgetIn("w", i.toLong, 1L))))(
+        in => noop(StreamingBudget.admitStream(in.toDF(), budget = 100L), "append"))
+      ()
     } catch { case _: Throwable => () }
-    // T6 parallelism mapping, section-wide: every section feeds ~12.5k-row
-    // micro-batches, and a stateful stage at the session's 32
-    // shuffle/state partitions pays 32 task schedules + 32 state-store
-    // commits per batch for ~400-row partitions — commit overhead, not
-    // operator work. Size the whole bench's streaming partitioning to
-    // the micro-batch volume (8, the same figure pipelineSection
-    // derived); restore the session conf after. Map-only sections are
-    // unaffected (a MemoryStream batch has no shuffle), stateful ones
-    // stop paying 4× the commit schedule.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // No-data (watermark-advance) micro-batches OFF section-wide, for
-    // the same reason pipelineSection disables them locally: under the
-    // drained-after-each-chunk protocol every data batch was followed
-    // by a ~0.3 s zero-row batch paying a full state-store commit cycle
-    // (measured: ~1/3 of the intake section's wall clock) — pure
-    // contention here, since the watermarked operators emit admitted
-    // rows in the data batch itself and eviction just waits for the
-    // next one. StreamingSpec's semantics pins run under the session
-    // default, where eviction timing matters.
-    val prevNoData = spark.conf.get(
-      "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val sections = Seq[(String, (SparkSession, String) => Section)](
       "pipeline" -> pipelineSection,
       "enrich_state" -> enrichSection,
@@ -1130,26 +867,40 @@ object StreamBench {
       "media" -> (mediaSection(_, _, volumeFloor)),
       "curation" -> (curationSection(_, _, volumeFloor)),
       "anomaly" -> anomalySection)
+    // T6 parallelism mapping, section-wide: every section feeds ~12.5k-row
+    // micro-batches, and a stateful stage at the session's 32
+    // shuffle/state partitions pays 32 task schedules + 32 state-store
+    // commits per batch for ~400-row partitions — commit overhead, not
+    // operator work. Size the whole bench's streaming partitioning to
+    // the micro-batch volume (8, the reference's setParallelism knob).
+    // Map-only sections are unaffected (a MemoryStream batch has no
+    // shuffle), stateful ones stop paying 4× the commit schedule.
+    // No-data (watermark-advance) micro-batches OFF section-wide: under
+    // the drained-after-each-chunk protocol every data batch was
+    // followed by a ~0.3 s zero-row batch paying a full state-store
+    // commit cycle (measured: ~1/3 of the intake section's wall clock)
+    // — pure contention here, since the watermarked operators emit
+    // admitted rows in the data batch itself and eviction just waits
+    // for the next one. StreamingSpec's semantics pins run under the
+    // session default, where eviction timing matters.
     // `only`: the dev filter from [[main]]'s argument; Bench passes
     // none, so the official metric line always times the full board
-    try sections.filter { case (n, _) => only.forall(_.contains(n)) }
-      .flatMap { case (name, fn) =>
-      try {
-        // untimed ambient probe immediately before the section clock
-        val cs = try Bench.calibrate(spark) catch { case _: Throwable => -1.0 }
-        Some(fn(spark, sfDir).copy(calibSec = cs))
-      } catch {
-        case e: Throwable =>
-          System.err.println(
-            s"WARN stream bench: section $name failed: ${e.getClass.getName}: ${e.getMessage}")
-          None
+    try withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      sections.filter { case (n, _) => only.forall(_.contains(n)) }
+        .flatMap { case (name, fn) =>
+        try {
+          // untimed ambient probe immediately before the section clock
+          val cs = try Bench.calibrate(spark) catch { case _: Throwable => -1.0 }
+          Some(fn(spark, sfDir).copy(calibSec = cs))
+        } catch {
+          case e: Throwable =>
+            System.err.println(
+              s"WARN stream bench: section $name failed: ${e.getClass.getName}: ${e.getMessage}")
+            None
+        }
       }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        prevNoData)
-      deleteTmpDirs()
-    }
+    } finally deleteTmpDirs()
   }
 
   /** Stream-section profiler: `runMain graft.StreamBench [section,...]`

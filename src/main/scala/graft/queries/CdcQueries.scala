@@ -30,6 +30,23 @@ object CdcQueries {
        |valid AS (SELECT * FROM enriched
        |          WHERE engagement_pct IS NOT NULL AND engagement_pct >= 0)""".stripMargin
 
+  /** Top-100 members by latest valid engagement: the oracle of both
+    * leaderboard rows. */
+  private val leaderboardSql =
+    s"""$validSql,
+       |member_latest AS (
+       |  SELECT member, engagement_pct AS score FROM (
+       |    SELECT concat_ws(':', coalesce(content_id, 'null'), coalesce(content_type, 'null'), coalesce(content_title, 'null')) AS member,
+       |           engagement_pct,
+       |           ROW_NUMBER() OVER (
+       |             PARTITION BY concat_ws(':', coalesce(content_id, 'null'), coalesce(content_type, 'null'), coalesce(content_title, 'null'))
+       |             ORDER BY event_ts DESC, event_id DESC) AS rn
+       |    FROM valid) t WHERE rn = 1)
+       |SELECT member, score FROM (
+       |  SELECT member, score,
+       |         ROW_NUMBER() OVER (ORDER BY score DESC, member ASC) AS rk
+       |  FROM member_latest) t WHERE rk <= 100""".stripMargin
+
   val defs: Map[String, QueryDef] = Map(
 
     // J1 + P3 + P4 + P5 — the full 15-column enrichment.
@@ -93,19 +110,7 @@ object CdcQueries {
     // A1 — top-100 leaderboard of latest engagement per member.
     "cdc_leaderboard" -> QueryDef(
       (s, d) => pctAsDouble(EngagementViews.leaderboard(CdcMapping.enriched(s, d), 100)),
-      s"""$validSql,
-         |member_latest AS (
-         |  SELECT member, engagement_pct AS score FROM (
-         |    SELECT concat_ws(':', coalesce(content_id, 'null'), coalesce(content_type, 'null'), coalesce(content_title, 'null')) AS member,
-         |           engagement_pct,
-         |           ROW_NUMBER() OVER (
-         |             PARTITION BY concat_ws(':', coalesce(content_id, 'null'), coalesce(content_type, 'null'), coalesce(content_title, 'null'))
-         |             ORDER BY event_ts DESC, event_id DESC) AS rn
-         |    FROM valid) t WHERE rn = 1)
-         |SELECT member, score FROM (
-         |  SELECT member, score,
-         |         ROW_NUMBER() OVER (ORDER BY score DESC, member ASC) AS rk
-         |  FROM member_latest) t WHERE rk <= 100""".stripMargin),
+      leaderboardSql),
 
     // A1 via the incremental top-K UDAF (functions.TopKAggregator):
     // identical contract to cdc_leaderboard, maintained by a k-bounded
@@ -124,19 +129,7 @@ object CdcQueries {
           .select(explode(col("tk")).as("e"))
           .select(col("e._1").as("member"), col("e._2").as("score"))
       },
-      s"""$validSql,
-         |member_latest AS (
-         |  SELECT member, engagement_pct AS score FROM (
-         |    SELECT concat_ws(':', coalesce(content_id, 'null'), coalesce(content_type, 'null'), coalesce(content_title, 'null')) AS member,
-         |           engagement_pct,
-         |           ROW_NUMBER() OVER (
-         |             PARTITION BY concat_ws(':', coalesce(content_id, 'null'), coalesce(content_type, 'null'), coalesce(content_title, 'null'))
-         |             ORDER BY event_ts DESC, event_id DESC) AS rn
-         |    FROM valid) t WHERE rn = 1)
-         |SELECT member, score FROM (
-         |  SELECT member, score,
-         |         ROW_NUMBER() OVER (ORDER BY score DESC, member ASC) AS rk
-         |  FROM member_latest) t WHERE rk <= 100""".stripMargin),
+      leaderboardSql),
 
     // A2 — per-content stats: six last-value fields + valid-event count.
     "cdc_content_stats" -> QueryDef(

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Tables
@@ -58,26 +59,37 @@ object OperatorQueries {
        |FROM keyed GROUP BY 1""".stripMargin
   }
 
+  /** The as-of rows' two sides: click events, and per (user, ts) the
+    * latest view event id. */
+  private def clicksViews(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = Tables.events(s, d)
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val views = e.filter(col("event_type") === "view")
+      .groupBy(col("user_id").as("v_user"), col("ts").as("view_ts"))
+      .agg(max(col("event_id")).as("view_event_id"))
+    (clicks, views)
+  }
+
+  /** [[clicksViews]] as the oracle's two CTEs. */
+  private val clicksViewsSql: String =
+    """WITH clicks AS (
+      |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+      |views AS (
+      |  SELECT user_id AS v_user, ts AS view_ts, MAX(event_id) AS view_event_id
+      |  FROM events WHERE event_type = 'view' GROUP BY 1, 2)""".stripMargin
+
   val defs: Map[String, QueryDef] = Map(
 
     // Backward as-of join: each click is matched to the user's latest
     // preceding (or simultaneous) view.
     "op_asof_join" -> QueryDef(
       (s, d) => {
-        val e = Tables.events(s, d)
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val views = e.filter(col("event_type") === "view")
-          .groupBy(col("user_id").as("v_user"), col("ts").as("view_ts"))
-          .agg(max(col("event_id")).as("view_event_id"))
+        val (clicks, views) = clicksViews(s, d)
         AsOfJoin.backward(clicks, "user_id", "ts", views, "v_user", "view_ts")
           .select("event_id", "user_id", "ts", "view_event_id", "view_ts")
       },
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |views AS (
-        |  SELECT user_id AS v_user, ts AS view_ts, MAX(event_id) AS view_event_id
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2)
+      s"""$clicksViewsSql
         |SELECT c.event_id, c.user_id, c.ts, v.view_event_id, v.view_ts
         |FROM clicks c
         |ASOF LEFT JOIN views v ON c.user_id = v.v_user AND c.ts >= v.view_ts""".stripMargin),
@@ -110,21 +122,12 @@ object OperatorQueries {
     // preceding one, so out-of-horizon implies no candidate qualifies).
     "op_asof_tolerance" -> QueryDef(
       (s, d) => {
-        val e = Tables.events(s, d)
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val views = e.filter(col("event_type") === "view")
-          .groupBy(col("user_id").as("v_user"), col("ts").as("view_ts"))
-          .agg(max(col("event_id")).as("view_event_id"))
+        val (clicks, views) = clicksViews(s, d)
         AsOfJoin.backwardWithin(clicks, "user_id", "ts",
             views, "v_user", "view_ts", toleranceSeconds = 1800L)
           .select("event_id", "user_id", "ts", "view_event_id", "view_ts")
       },
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |views AS (
-        |  SELECT user_id AS v_user, ts AS view_ts, MAX(event_id) AS view_event_id
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2)
+      s"""$clicksViewsSql
         |SELECT c.event_id, c.user_id, c.ts,
         |  CASE WHEN v.view_ts >= c.ts - INTERVAL 30 MINUTE
         |       THEN v.view_event_id END AS view_event_id,

@@ -9,6 +9,34 @@ package graft
   * reviewer diffing bench_detail.json across rounds. */
 class StreamBenchSpec extends SparkSpec {
 
+  test("a section whose second query fails to start leaves nothing running") {
+    import spark.implicits._
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = spark.conf.getOption(key)
+    var starts = 0
+    val counter = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = starts += 1
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(counter)
+    try {
+      an[org.apache.spark.sql.AnalysisException] should be thrownBy
+        StreamBench.withConf(spark, key ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+          StreamBench.section(spark, "leak", Seq(IndexedSeq(1L, 2L)))(
+            _.writeStream.format("noop"),
+            // a batch frame cannot stream: this start throws
+            _ => spark.range(1).writeStream)
+        }
+    } finally spark.streams.removeListener(counter)
+    // the first query did start, and the failed second start stopped it
+    starts shouldBe 1
+    spark.streams.active shouldBe empty
+    spark.conf.getOption(key) shouldBe prior
+  }
+
   test("every stream bench section runs and fully drains at sf0.001") {
     // small volume floor: exercises the replication path (sf0.001 has
     // ~50 docs, so the doc sections must replicate to reach it) without
@@ -49,5 +77,34 @@ class StreamBenchSpec extends SparkSpec {
     // floor so raising the spec floor past the cap can't fail spuriously
     byName("search").rows should be >= math.min(floor, 5000).toLong
     byName("fsearch").rows should be >= math.min(floor, 5000).toLong
+  }
+
+  test("each section's clock is its per-chunk walls; TTL sections poll") {
+    // The timed window: per chunk, add → processAllAvailable on the
+    // clock, the ambient probe off it. So `sec` is exactly the sum of
+    // the chunk walls, and every chunk carries its rows and its probe.
+    // The TTL sections complete by polling and carry no chunk fields.
+    val sections = StreamBench.run(spark, "/root/testdata/sf0.001", 500)
+    sections should have size 24
+    val polled = Set("enrich_ttl", "content_stats")
+    sections.foreach { s =>
+      withClue(s"section ${s.name}: ") {
+        if (polled(s.name)) {
+          s.chunkSec shouldBe empty
+          s.chunkRows shouldBe empty
+          s.chunkCalib shouldBe empty
+        } else {
+          s.chunkSec should not be empty
+          s.chunkRows should have size s.chunkSec.size.toLong
+          s.chunkCalib should have size s.chunkSec.size.toLong
+          s.sec shouldBe s.chunkSec.sum +- 1e-9
+          // enrich_state's first chunk is the dimension snapshot, fed
+          // but not counted in the section's event rows
+          val counted =
+            if (s.name == "enrich_state") s.chunkRows.tail else s.chunkRows
+          counted.sum shouldBe s.rows
+        }
+      }
+    }
   }
 }
